@@ -199,8 +199,9 @@ def _write(dirpath: str, name: str, cols: dict) -> None:
 
 def write_analytics_tables(dirpath: str, seed: int, sf: float) -> dict[str, int]:
     """Write the ten sf tables for scale factor ``sf`` under ``dirpath``;
-    returns the row count of each. Shapes follow the driver-generated test
-    data (TPC-H-style star schema, ``events``, ``documents``, ``embeddings``)."""
+    returns the row count of each. Schemas and value ranges follow the
+    repository's sf test tables (TPC-H-style star schema, ``events``,
+    ``documents``, ``embeddings``)."""
     rng = np.random.default_rng(seed)
     os.makedirs(dirpath, exist_ok=True)
     n_li = int(6_000_000 * sf)
