@@ -439,9 +439,9 @@ class Analytics:
 
     SF = 0.01
     CYCLE_MIX = {q: 1 for q in ANALYTICS_QUERIES}
-    #: passes per unit. The second pass after the warm-up one still runs
-    #: faster than the first, so a unit holds both and every run measures
-    #: the same passes whether one fits into its time or two do.
+    #: passes per unit. The first passes after the warm-up one still speed
+    #: up, so a unit holds two and every run measures the same two passes:
+    #: a unit outlasts the run's measuring time.
     PASSES_PER_UNIT = 2
 
     def __init__(self, spark, work: str, seed: int, ops: Ops):
