@@ -40,8 +40,7 @@ class KeyedRows:
         self.next_key = 0
         self.model: dict[str, tuple] = {}
         self.changed_at: dict[str, int] = {}
-        self._live: list[int] = []  # key numbers ever issued and still live
-        self._live_set: set[int] = set()
+        self._live: set[int] = set()  # key numbers issued and still live
 
     @staticmethod
     def key(k: int) -> str:
@@ -61,92 +60,60 @@ class KeyedRows:
     def _put(self, k: int, row: tuple, seq: int) -> None:
         self.model[row[0]] = row
         self.changed_at[row[0]] = seq
-        if k not in self._live_set:
-            self._live_set.add(k)
-            self._live.append(k)
+        self._live.add(k)
 
     def _drop(self, k: int) -> None:
         key = self.key(k)
         del self.model[key]
         self.changed_at.pop(key, None)
-        self._live_set.discard(k)
+        self._live.discard(k)
 
     def _live_keys(self) -> list[int]:
-        if len(self._live) > 2 * len(self._live_set):
-            self._live = [k for k in self._live if k in self._live_set]
-        return self._live
+        return sorted(self._live)
+
+    def _insert(self, seq: int) -> tuple:
+        k = self.next_key
+        self.next_key += 1
+        row = self._row(k, seq)
+        self._put(k, row, seq)
+        return row
 
     def preload(self, n: int, seq: int = 0) -> list[tuple]:
-        rows = []
-        for _ in range(n):
-            k = self.next_key
-            self.next_key += 1
+        return [self._insert(seq) for _ in range(n)]
+
+    def cdc_batch(self, seq: int, inserts: int, updates: int, deletes: int) -> list[tuple]:
+        """One CDC micro-batch: rows in ``TABLE_COLS`` order plus an ``_op``
+        of I/U/D, one row per key. ``inserts`` new keys; ``updates`` and
+        ``deletes`` distinct keys drawn from the ``inserts`` newest keys
+        issued before the batch (the previous batch's inserts), so a batch
+        changes the newest partition and adds the next one."""
+        recent = [k for k in range(max(0, self.next_key - inserts), self.next_key)
+                  if k in self._live]
+        changed = self.rng.sample(recent, updates + deletes)
+        out = [self._insert(seq) + ("I",) for _ in range(inserts)]
+        for k in changed[:updates]:
             row = self._row(k, seq)
             self._put(k, row, seq)
-            rows.append(row)
-        return rows
-
-    def cdc_batch(self, n: int, seq: int, insert_share: float, delete_share: float) -> list[tuple]:
-        """One CDC micro-batch: rows in ``TABLE_COLS`` order plus an ``_op``
-        of I/U/D, one row per key. Updates and deletes favour recent keys
-        (an exponential offset below the newest key), so most of a batch
-        touches the newest few partitions."""
-        out: list[tuple] = []
-        used: set[int] = set()
-        scale = 2.0 * self.keys_per_day
-        for _ in range(n):
-            u = self.rng.random()
-            if u < insert_share:
-                k = self.next_key
-                self.next_key += 1
-                row = self._row(k, seq)
-                self._put(k, row, seq)
-                out.append(row + ("I",))
-                used.add(k)
-                continue
-            for _attempt in range(50):
-                k = self.next_key - 1 - int(self.rng.expovariate(1.0 / scale))
-                if k >= 0 and k in self._live_set and k not in used:
-                    break
-            else:
-                continue
-            used.add(k)
-            if u < insert_share + delete_share:
-                out.append(self.model[self.key(k)][:1] + (seq,) + self.model[self.key(k)][2:] + ("D",))
-                self._drop(k)
-            else:
-                row = self._row(k, seq)
-                self._put(k, row, seq)
-                out.append(row + ("U",))
+            out.append(row + ("U",))
+        for k in changed[updates:]:
+            old = self.model[self.key(k)]
+            out.append(old[:1] + (seq,) + old[2:] + ("D",))
+            self._drop(k)
         return out
 
-    def merge_batch(self, n: int, seq: int, new_share: float) -> list[tuple]:
-        """One MERGE source batch: keys drawn uniformly from the live keys,
-        plus a share of new keys (the NOT MATCHED → INSERT branch)."""
-        out: list[tuple] = []
-        used: set[int] = set()
-        live = self._live_keys()
-        for _ in range(n):
-            if self.rng.random() < new_share:
-                k = self.next_key
-                self.next_key += 1
-            else:
-                k = live[self.rng.randrange(len(live))]
-                if k not in self._live_set or k in used:
-                    continue
-            used.add(k)
+    def merge_batch(self, seq: int, matched: int, new: int) -> list[tuple]:
+        """One MERGE source batch: ``matched`` distinct keys drawn uniformly
+        from the live keys (the MATCHED → UPDATE branch) plus ``new`` new
+        keys (the NOT MATCHED → INSERT branch)."""
+        out = []
+        for k in self.rng.sample(self._live_keys(), matched):
             row = self._row(k, seq)
-            out.append((k, row))
-        for k, row in out:
             self._put(k, row, seq)
-        return [row for _, row in out]
+            out.append(row)
+        return out + [self._insert(seq) for _ in range(new)]
 
     def pick_live_key(self) -> str:
-        live = self._live_keys()
-        while True:
-            k = live[self.rng.randrange(len(live))]
-            if k in self._live_set:
-                return self.key(k)
+        return self.key(self.rng.choice(self._live_keys()))
 
 
 def row_digest(row) -> int:

@@ -53,8 +53,8 @@ def test_inputs_depend_only_on_the_seed(tmp_path):
     a, b = datagen.KeyedRows(7, 100), datagen.KeyedRows(7, 100)
     a.preload(300)
     b.preload(300)
-    assert a.cdc_batch(50, 1, 0.2, 0.1) == b.cdc_batch(50, 1, 0.2, 0.1)
-    assert a.merge_batch(50, 2, 0.1) == b.merge_batch(50, 2, 0.1)
+    assert a.cdc_batch(1, 100, 10, 2) == b.cdc_batch(1, 100, 10, 2)
+    assert a.merge_batch(2, 10, 30) == b.merge_batch(2, 10, 30)
     assert a.model == b.model
     datagen.write_analytics_tables(str(tmp_path / "x"), 3, 0.001)
     datagen.write_analytics_tables(str(tmp_path / "y"), 3, 0.001)
@@ -98,7 +98,11 @@ def tiny(monkeypatch):
     for cls in (workloads.IngestCow, workloads.MorMixed):
         monkeypatch.setattr(cls, "PRELOAD", 300)
         monkeypatch.setattr(cls, "KEYS_PER_DAY", 100)
-        monkeypatch.setattr(cls, "BATCH", 40)
+    monkeypatch.setattr(workloads.IngestCow, "INSERTS", 100)
+    monkeypatch.setattr(workloads.IngestCow, "UPDATES", 10)
+    monkeypatch.setattr(workloads.IngestCow, "DELETES", 2)
+    monkeypatch.setattr(workloads.MorMixed, "MATCHED", 10)
+    monkeypatch.setattr(workloads.MorMixed, "NEW", 30)
     monkeypatch.setattr(workloads.Analytics, "SF", 0.001)
 
 
@@ -121,6 +125,9 @@ def test_workload_prints_every_metric_with_its_unit(spark, tiny, tmp_path, workl
             m["name"]: m["unit"] for m in listed
         }
         json.dumps(result)  # one JSON line
+        if workload == "ingest_cow" and trace:
+            # set-up fills the retention window, so every measured clean deletes
+            assert result["metrics"]["services.clean_files_deleted"]["value"] > 0
 
 
 def test_traced_spans_nest_and_self_times_are_not_negative(spark, tiny, tmp_path, monkeypatch):

@@ -107,7 +107,9 @@ class KeyedTableWorkload:
     byte accounting and the end-of-run snapshot check."""
 
     TABLE_TYPE = "cow"
-    PRELOAD = 20_000
+    #: the table starts with ten batches' worth of inserts (see ``IngestCow``)
+    PRELOAD = 10_000
+    #: one day partition per batch of inserts, so a batch adds one partition
     KEYS_PER_DAY = 1_000
     #: the operation kind that commits the workload's writes
     COMMIT_KIND = ""
@@ -205,14 +207,12 @@ class IngestCow(KeyedTableWorkload):
 
     TABLE_TYPE = "cow"
     COMMIT_KIND = "ingest_cycle"
-    PRELOAD = 10_000
-    KEYS_PER_DAY = 500
     CYCLE_MIX = {"ingest_cycle": 1}
-    BATCH = 500
-    INSERT_SHARE = 0.2
-    DELETE_SHARE = 0.05
-    #: cycle times keep falling for the first few cycles of a fresh JVM
-    WARMUP_CYCLES = 6
+    #: the reference's batch schedule (FIXTURES.md §3, its differential
+    #: harness): 1000 inserts + 100 updates + 10 deletes per batch
+    INSERTS = 1_000
+    UPDATES = 100
+    DELETES = 10
 
     def setup(self) -> dict[str, float]:
         from hudi_examples_spark.streaming.ingestion import DeltaStreamer
@@ -224,14 +224,17 @@ class IngestCow(KeyedTableWorkload):
 
         def source():
             self._seq += 1
-            rows = self.gen.cdc_batch(self.BATCH, self._seq, self.INSERT_SHARE, self.DELETE_SHARE)
+            rows = self.gen.cdc_batch(self._seq, self.INSERTS, self.UPDATES, self.DELETES)
             self._batch_rows = len(rows)
             return self.spark.createDataFrame(rows, cdc_ddl)
 
         # the engine's default retention; clean runs at the end of every cycle
         self.streamer = DeltaStreamer(self.table, source, op_col="_op")
+        # warm up until the retention window is full, so the clean of every
+        # measured cycle deletes files; cycle times of a fresh JVM settle
+        # within the first five or so of these ten cycles
         t0 = time.perf_counter()
-        for _ in range(self.WARMUP_CYCLES):
+        while len(self.table.timeline.completed_data_instants()) <= self.streamer.clean_retain:
             self.streamer.run_once()
         warmup = time.perf_counter() - t0
         self.start_accounting()
@@ -252,20 +255,22 @@ class IngestCow(KeyedTableWorkload):
 
 class MorMixed(KeyedTableWorkload):
     """SQL MERGE, snapshot aggregate, incremental read and record-index point
-    lookup on a keyed MOR table, with inline compaction and clean once per
-    compaction period."""
+    lookup on a keyed MOR table, with inline compaction once per compaction
+    period."""
 
     TABLE_TYPE = "mor"
     COMMIT_KIND = "merge"
-    PRELOAD = 10_000
-    KEYS_PER_DAY = 5_000
-    BATCH = 300
-    NEW_SHARE = 0.1
-    COMPACT_EVERY = 2
+    #: as many matched keys as a reference batch updates (FIXTURES.md §3),
+    #: and three new keys per matched one, as in the reference's MERGE source
+    #: (FIXTURES.md §2: one matching key, three new)
+    MATCHED = 100
+    NEW = 300
+    #: the reference's compaction cadence in delta commits (SURVEY.md,
+    #: BASELINE.md), also the engine's ``compact_every`` default
+    COMPACT_EVERY = 5
     CYCLE_MIX = {"merge": 1, "snapshot_read": 1, "incremental_read": 1, "point_lookup": 1,
                  "compaction": 1 / COMPACT_EVERY}
     INCREMENTAL_BACK = 3
-    CLEAN_RETAIN = 4
     READ_KINDS = ("snapshot_read", "incremental_read", "point_lookup")
     MERGE_SQL = (
         "MERGE INTO t AS target USING src AS source ON target.id = source.id "
@@ -284,13 +289,13 @@ class MorMixed(KeyedTableWorkload):
         # (instant, write seq) of the preload and of every MERGE since
         self.writes = [(self.table.latest_instant(), 0)]
         self._seq = 0
-        # one cycle and one services pass warm every code path and leave the
+        # one cycle and one compaction warm every code path and leave the
         # table freshly compacted, where each measured period starts; they
         # are checked like measured operations but timed nowhere
         measured, self.ops = self.ops, Ops()
         t0 = time.perf_counter()
         self._cycle()
-        self._services()
+        self._compact()
         warmup = time.perf_counter() - t0
         measured.attempted += self.ops.attempted
         measured.failed += self.ops.failed
@@ -301,16 +306,16 @@ class MorMixed(KeyedTableWorkload):
 
     def unit(self) -> None:
         """One whole compaction period: ``COMPACT_EVERY`` cycles, then the
-        table services. Runs stop only between periods, so every run sees
-        the log-file counts of a whole period in the same proportions."""
+        compaction. Runs stop only between periods, so every run sees the
+        log-file counts of a whole period in the same proportions."""
         for _ in range(self.COMPACT_EVERY):
             self._cycle()
-        self._services()
+        self._compact()
 
     def _cycle(self) -> None:
         ops, t, gen = self.ops, self.table, self.gen
         self._seq += 1
-        rows = gen.merge_batch(self.BATCH, self._seq, self.NEW_SHARE)
+        rows = gen.merge_batch(self._seq, self.MATCHED, self.NEW)
         self.spark.createDataFrame(rows, datagen.TABLE_DDL).createOrReplaceTempView("src")
         with ops.op("merge") as sp:
             self.engine.sql(self.MERGE_SQL)
@@ -354,12 +359,11 @@ class MorMixed(KeyedTableWorkload):
         ops.check([tuple(r) for r in hit] == [gen.model[key]], f"lookup {key}: {hit} != {gen.model[key]}")
         self.account_bytes()
 
-    def _services(self) -> None:
-        """Inline compaction, then clean: the table services of one period."""
+    def _compact(self) -> None:
+        """Inline compaction of every log file written since the last one."""
         t = self.table
         with self.ops.op("compaction") as sp:
             inst = t.compact()
-            t.clean(retain_commits=self.CLEAN_RETAIN)
         if sp is not None and inst is not None:
             added = next(i for i in t.timeline.instants() if i.instant == inst).files_added
             sp.tags["bytes_rewritten"] = sum(os.path.getsize(os.path.join(t.base, r)) for r in added)
