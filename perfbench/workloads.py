@@ -213,6 +213,11 @@ class IngestCow(KeyedTableWorkload):
     INSERTS = 1_000
     UPDATES = 100
     DELETES = 10
+    #: clean retention in commits, half the engine's default of 10: the five
+    #: warm-up cycles a fresh JVM needs before cycle times settle then also
+    #: fill the window, where ten would double the warm-up. Clean's own cost
+    #: is a few milliseconds a cycle at either size.
+    CLEAN_RETAIN = 5
 
     def setup(self) -> dict[str, float]:
         from hudi_examples_spark.streaming.ingestion import DeltaStreamer
@@ -228,13 +233,13 @@ class IngestCow(KeyedTableWorkload):
             self._batch_rows = len(rows)
             return self.spark.createDataFrame(rows, cdc_ddl)
 
-        # the engine's default retention; clean runs at the end of every cycle
-        self.streamer = DeltaStreamer(self.table, source, op_col="_op")
+        # clean runs at the end of every cycle
+        self.streamer = DeltaStreamer(self.table, source, op_col="_op",
+                                      clean_retain=self.CLEAN_RETAIN)
         # warm up until the retention window is full, so the clean of every
-        # measured cycle deletes files; cycle times of a fresh JVM settle
-        # within the first five or so of these ten cycles
+        # measured cycle deletes files
         t0 = time.perf_counter()
-        while len(self.table.timeline.completed_data_instants()) <= self.streamer.clean_retain:
+        while len(self.table.timeline.completed_data_instants()) <= self.CLEAN_RETAIN:
             self.streamer.run_once()
         warmup = time.perf_counter() - t0
         self.start_accounting()
@@ -443,10 +448,6 @@ class Analytics:
 
     SF = 0.01
     CYCLE_MIX = {q: 1 for q in ANALYTICS_QUERIES}
-    #: passes per unit. The first passes after the warm-up one still speed
-    #: up, so a unit holds two and every run measures the same two passes:
-    #: a unit outlasts the run's measuring time.
-    PASSES_PER_UNIT = 2
 
     def __init__(self, spark, work: str, seed: int, ops: Ops):
         self.spark = spark
@@ -471,8 +472,8 @@ class Analytics:
         return {"datagen_s": datagen_s, "warmup_s": time.perf_counter() - t0}
 
     def unit(self) -> None:
-        """``PASSES_PER_UNIT`` passes over the 16 queries."""
-        for spec in self.specs * self.PASSES_PER_UNIT:
+        """One pass over the 16 queries."""
+        for spec in self.specs:
             with self.ops.op(spec.name, span_name="op.query", query=spec.name) as sp:
                 df = spec.fn(self.spark, self.sf_dir)
                 _plan_done(sp)
