@@ -109,8 +109,9 @@ class KeyedTableWorkload:
     TABLE_TYPE = "cow"
     #: the table starts with ten batches' worth of inserts (see ``IngestCow``)
     PRELOAD = 10_000
-    #: one day partition per batch of inserts, so a batch adds one partition
+    #: one day per batch of inserts, so a batch adds one day
     KEYS_PER_DAY = 1_000
+    PARTITION_BY = ["day"]
     #: the operation kind that commits the workload's writes
     COMMIT_KIND = ""
 
@@ -130,7 +131,7 @@ class KeyedTableWorkload:
 
         return Table.create(
             self.spark, path, datagen.TABLE_DDL,
-            TableConfig(record_key=["id"], precombine="ts", partition_by=["day"],
+            TableConfig(record_key=["id"], precombine="ts", partition_by=self.PARTITION_BY,
                         table_type=self.TABLE_TYPE),
         )
 
@@ -264,6 +265,10 @@ class MorMixed(KeyedTableWorkload):
     period."""
 
     TABLE_TYPE = "mor"
+    #: the non-partitioned corner of the reference's test matrix (FIXTURES.md
+    #: §1: {cow, mor} x {partitioned, non}); uniformly drawn keys leave
+    #: partition pruning nothing to skip
+    PARTITION_BY: list[str] = []
     COMMIT_KIND = "merge"
     #: as many matched keys as a reference batch updates (FIXTURES.md §3),
     #: and three new keys per matched one, as in the reference's MERGE source
