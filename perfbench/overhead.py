@@ -1,6 +1,6 @@
 """Tracing overhead: traced median minus untraced median of each end-to-end metric.
 
-    python3 perfbench/overhead.py --workload mor_mixed --seeds 1,2,3 --seconds 5
+    python3 perfbench/overhead.py --workload mor_mixed --seeds 1,2,3 --seconds 10
 
 Runs ``perfbench/run.py`` once per seed with ``--trace 0`` and once with
 ``--trace 1``, alternating which goes first, and prints one JSON line per
@@ -34,7 +34,7 @@ def main(argv=None) -> int:
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
     ap.add_argument("--workload", required=True)
     ap.add_argument("--seeds", required=True, help="comma-separated")
-    ap.add_argument("--seconds", default="5")
+    ap.add_argument("--seconds", default="10")
     args = ap.parse_args(argv)
     values: dict[int, dict[str, list[float]]] = {0: {}, 1: {}}
     for i, seed in enumerate(int(s) for s in args.seeds.split(",")):

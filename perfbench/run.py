@@ -1,6 +1,6 @@
 """Run one benchmark workload and print its result.
 
-    python3 perfbench/run.py --workload ingest_cow --seed 1 --seconds 5 --trace 0
+    python3 perfbench/run.py --workload ingest_cow --seed 1 --seconds 10 --trace 0
 
 Run from the root of a checkout. The run starts one local Spark session with
 one core per CPU this process may use, builds its inputs from ``--seed`` in a
