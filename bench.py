@@ -467,7 +467,10 @@ def main() -> None:
         },
         "calibration": {"micro_agg_sec": micro_min, "loadavg_1m": _loadavg()},
         "passes": n_passes,
-        "cpus": os.cpu_count(),
+        # the cores this process may run on (cgroup/affinity-limited, unlike
+        # os.cpu_count) and the master Spark actually resolved
+        "cpus": len(os.sched_getaffinity(0)),
+        "master": spark.sparkContext.master,
         "attempts": len(attempts),
         "quiet_waits": quiet_waits,
     }

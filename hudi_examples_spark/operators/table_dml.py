@@ -24,7 +24,7 @@ from pyspark.sql import functions as F
 
 from hudi_examples_spark.operators.spec import QuerySpec
 from hudi_examples_spark.sources.readers import load_sf_table as t
-from hudi_examples_spark.table import Table, TableConfig
+from hudi_examples_spark.table import MergeClause, Table, TableConfig
 
 CUST_SCHEMA = "c_custkey BIGINT, c_name STRING, acctbal DOUBLE, seg STRING, v INT"
 
@@ -143,11 +143,10 @@ def tbl_merge_mixed(spark: SparkSession, sf: str) -> DataFrame:
     tbl.merge(
         src,
         on={"c_custkey": "c_custkey"},
-        when_matched={"acctbal": "__src_new_bal", "v": "2"},
-        when_not_matched=None,
+        clauses=[MergeClause("matched", "update", {"acctbal": "source.new_bal", "v": "2"})],
     )
     del_src = _cust_df(spark, sf).filter(F.col("c_custkey") % 5 == 0).select("c_custkey")
-    tbl.merge(del_src, on={"c_custkey": "c_custkey"}, when_matched="delete", when_not_matched=None)
+    tbl.merge(del_src, on={"c_custkey": "c_custkey"}, clauses=[MergeClause("matched", "delete")])
     return _final_snapshot(tbl)
 
 

@@ -6,11 +6,15 @@ cow/mor via tblproperties), INSERT VALUES/SELECT, UPDATE, DELETE, MERGE INTO,
 CTAS, ``TIMESTAMP AS OF`` time travel, the ``hudi_table_changes`` TVF, and hivevar
 ``${var}`` templating.
 
-Architecture: DML verbs are recognized by a small dispatcher and routed to the
-table-layer API (where Catalyst plans the underlying joins/rewrites); SELECTs run on
-``spark.sql`` over temp views of snapshot reads — we extend the *frontier*, not the
-parser internals (the reference does the same via HoodieSparkSessionExtension,
-``spark/scripts/utils.sh:4-8``).
+Architecture: every statement is parsed once by Spark's own parser
+(``sessionState().sqlParser().parsePlan``) and dispatched on the class of the
+typed plan it returns; DML and DDL route to the table-layer API, queries run
+on Spark over snapshot views of the catalog tables they name. The reference
+parses the same way, with Spark's parser plus Hudi's session extension
+(``spark/scripts/utils.sh:4-8``). Two Hudi-only shapes that Spark's grammar
+rejects keep one anchored regex each (``CREATE INDEX`` and ``SHOW INDEXES``);
+any other statement Spark cannot parse, and any parsed command this module
+does not implement, raises ``ValueError``.
 """
 
 from __future__ import annotations
@@ -19,9 +23,57 @@ import json
 import os
 import re
 
+from py4j.java_gateway import is_instance_of
+from pyspark.errors import ParseException
 from pyspark.sql import DataFrame, SparkSession
 
-from hudi_examples_spark.table import Table, TableConfig
+from hudi_examples_spark.table import MergeClause, Table, TableConfig
+
+#: Hudi index DDL: ``CREATE INDEX record_index ON t [(key cols)]`` and
+#: ``CREATE INDEX name ON t USING secondary_index(col | expression)``
+_CREATE_INDEX = re.compile(
+    r"CREATE\s+INDEX\s+(\w+)\s+ON\s+(\w+)\s*(?:USING\s+(\w+)\s*)?(?:\((.*)\))?\s*$", re.I | re.S
+)
+_SHOW_INDEXES = re.compile(r"SHOW\s+INDEXES\s+(?:FROM|ON|IN)\s+(\w+)\s*$", re.I)
+#: engine sugar expanded into fresh temp views before parsing
+_TIME_TRAVEL = re.compile(r"FROM\s+(\w+)\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'", re.I)
+_TVF = re.compile(r"\b(hudi_table_changes|hudi_metadata)\s*\(([^)]*)\)", re.I)
+
+_MERGE_ACTIONS = {
+    "DeleteAction": "delete",
+    "UpdateAction": "update",
+    "UpdateStarAction": "update",
+    "InsertAction": "insert",
+    "InsertStarAction": "insert",
+}
+_COMMAND = "org.apache.spark.sql.catalyst.plans.logical.Command"
+
+
+def _seq(s) -> list:
+    """A Scala ``Seq`` from the JVM as a Python list."""
+    return [s.apply(i) for i in range(s.size())]
+
+
+def _kind(node) -> str:
+    return node.getClass().getSimpleName()
+
+
+def _relation(node) -> tuple[str, str | None]:
+    """(table name, alias) of a parsed table reference."""
+    alias = None
+    if _kind(node) == "SubqueryAlias":
+        alias, node = node.alias(), node.child()
+    return ".".join(_seq(node.multipartIdentifier())), alias
+
+
+def _column(attr) -> str:
+    """Column name of a (possibly alias-qualified) attribute."""
+    return _seq(attr.nameParts())[-1]
+
+
+def _field(field) -> str:
+    """Column name of an ALTER TABLE field reference."""
+    return _seq(field.name())[-1]
 
 
 class Engine:
@@ -42,6 +94,8 @@ class Engine:
         self.tables: dict[str, Table] = {}
         self._view_seq = 0
         self._locations: dict[str, str] = self._load_catalog()
+        self._jss = spark._jsparkSession
+        self._parser = self._jss.sessionState().sqlParser()
 
     # ------------------------------------------------------------------ catalog
 
@@ -49,8 +103,6 @@ class Engine:
         return os.path.join(self.warehouse, self.CATALOG_FILE)
 
     def _load_catalog(self) -> dict[str, str]:
-        import json
-
         p = self._catalog_path()
         if not os.path.exists(p):
             return {}
@@ -58,8 +110,6 @@ class Engine:
             return json.load(f)
 
     def _save_catalog(self) -> None:
-        import json
-
         os.makedirs(self.warehouse, exist_ok=True)
         tmp = self._catalog_path() + ".tmp"
         with open(tmp, "w") as f:
@@ -96,14 +146,34 @@ class Engine:
         df.createOrReplaceTempView(name)
         return name
 
-    def _register_snapshots(self) -> None:
-        # catalog-known names resolve too: a table registered by a PREVIOUS
-        # session is SELECTable here without any re-registration
+    def _register_snapshots(self, text: str) -> None:
+        """Snapshot views of the catalog tables ``text`` names (any whole
+        word that is a table name — a superset is harmless). Catalog-known
+        names resolve too: a table registered by a PREVIOUS session is
+        SELECTable here without any re-registration."""
+        words = {w.lower() for w in re.findall(r"\w+", text)}
         for name in sorted(set(self.tables) | set(self._locations)):
+            if name.lower() not in words:
+                continue
             try:
                 self.table(name).read().createOrReplaceTempView(name)
             except KeyError:
                 continue  # catalog entry whose files were removed externally
+
+    def _table_of(self, plan) -> Table:
+        """The engine table a parsed DDL/DML plan's ``table`` names."""
+        return self.table(_relation(plan.table())[0])
+
+    def _frame(self, node, text: str) -> DataFrame:
+        """DataFrame of a parsed query, resolved over snapshot views of the
+        catalog tables its own text names."""
+        o = node.origin()
+        start, stop = o.startIndex(), o.stopIndex()
+        if start.isDefined() and stop.isDefined():
+            text = text[start.get() : stop.get() + 1]
+        self._register_snapshots(text)
+        jdf = self.spark._jvm.org.apache.spark.sql.classic.Dataset.ofRows(self._jss, node)
+        return DataFrame(jdf, self.spark)
 
     # ---------------------------------------------------------------------- sql
 
@@ -147,226 +217,304 @@ class Engine:
         return stmts
 
     def _execute(self, stmt: str) -> DataFrame | None:
-        s = stmt.strip()
-        head = s.split(None, 3)
-        verb = head[0].upper() if head else ""
-        if verb == "CREATE":
-            # Hudi 1.0 index DDL: CREATE INDEX name ON t USING
-            # secondary_index(col | expr(col)) — a bare in-schema identifier
-            # makes a plain secondary index, anything else a functional one
-            # Hudi 1.0 RLI DDL: CREATE INDEX record_index ON t (key_col) —
+        s = self._expand(stmt.strip())
+        m = _CREATE_INDEX.match(s)
+        if m:
+            return self._create_index(*m.groups())
+        m = _SHOW_INDEXES.match(s)
+        if m:
+            return self._show_indexes(self.table(m.group(1)))
+        try:
+            plan = self._parser.parsePlan(s)
+        except ParseException as e:
+            raise ValueError(f"unsupported statement: {s[:120]}\n{e}") from e
+        kind = _kind(plan)
+        handler = self._HANDLERS.get(kind)
+        if handler is not None:
+            return handler(self, plan, s)
+        if is_instance_of(self.spark.sparkContext._gateway, plan, _COMMAND):
+            raise ValueError(f"unsupported statement ({kind}): {s[:120]}")
+        return self._frame(plan, s)  # a query: SELECT, VALUES, WITH, set operations
+
+    def _expand(self, s: str) -> str:
+        """Replace ``FROM t TIMESTAMP AS OF '...'`` and the table-valued
+        functions with fresh temp views of the table reads they stand for."""
+        s = _TIME_TRAVEL.sub(
+            lambda m: "FROM " + self._fresh_view(self.table(m[1]).read(as_of=m[2]), "asof"), s
+        )
+        return _TVF.sub(self._tvf_view, s)
+
+    def _tvf_view(self, m: re.Match) -> str:
+        """``hudi_table_changes('t', 'latest_state' | 'latest_state_completion'
+        | 'cdc', '<begin>'[, '<end>'])`` — incremental, completion-time
+        incremental and CDC (before/after images) reads; ``hudi_metadata('t',
+        'files' | 'partitions' | 'column_stats' | 'bloom_filters' |
+        'record_index' | ...)`` — the metadata-table partitions."""
+        fn = m[1].lower()
+        args = [a.strip().strip("'\"") for a in m[2].split(",")]
+        if len(args) < (2 if fn == "hudi_metadata" else 3):
+            raise ValueError(f"too few arguments: {m[0]}")
+        tbl, mode, bounds = self.table(args[0]), args[1], args[2:] + [None]
+        if fn == "hudi_metadata":
+            df = tbl.metadata(mode)
+        elif mode == "latest_state":
+            df = tbl.table_changes(start=bounds[0], end=bounds[1])
+        elif mode == "latest_state_completion":
+            # bounds by publish stamps, closing the NBCC begin-cursor hole
+            df = tbl.table_changes_by_completion(
+                float(bounds[0]), float(bounds[1]) if bounds[1] else None
+            )
+        elif mode == "cdc":
+            df = tbl.table_changes_cdc(start=bounds[0], end=bounds[1])
+        else:
+            raise ValueError(f"unsupported hudi_table_changes mode {mode!r}")
+        return self._fresh_view(df, fn)
+
+    # -------------------------------------------------------------------- index
+
+    def _create_index(self, index: str, name: str, using: str | None, cols: str | None) -> None:
+        tbl = self.table(name)
+        if index.lower() == "record_index" and using is None:
             # the index NAME selects the type, per the Hudi SQL surface; the
             # column list is optional and validated against the record key
-            m = re.match(
-                r"CREATE\s+INDEX\s+record_index\s+ON\s+(\w+)\s*(?:\((.*?)\))?\s*$",
-                s,
-                re.I,
+            if cols is not None and [c.strip() for c in cols.split(",")] != tbl.config.record_key:
+                raise ValueError(
+                    f"record_index must cover the record key {tbl.config.record_key}, got {cols}"
+                )
+            tbl.create_record_index()
+        elif (using or "").lower() == "secondary_index" and cols:
+            # a bare in-schema identifier makes a plain secondary index,
+            # anything else a functional one; always keyed by the index NAME
+            # (so DROP INDEX name works) — Table.lookup(col, v) still finds a
+            # plain index by resolving its defining expression
+            tbl.create_expression_index(index, cols.strip())
+        else:
+            raise ValueError(f"unsupported CREATE INDEX {index} ON {name} USING {using}")
+
+    def _show_indexes(self, tbl: Table) -> DataFrame:
+        """Hudi 1.0 SHOW INDEXES: every index kind with its defining
+        expression, generation, and validity (invalid = rollback invalidated
+        it; probes fall back to scans until rebuilt)."""
+        rows = []
+        rmeta = tbl._record_index_meta()
+        if rmeta is not None:
+            rows.append(
+                (
+                    "record_index",
+                    "record_index",
+                    ",".join(tbl.config.record_key),
+                    int(rmeta.get("gen", 0)),
+                    bool(rmeta.get("valid", True)),
+                )
             )
-            if m:
-                tbl = self.table(m.group(1))
-                if m.group(2):
-                    cols = [c.strip() for c in m.group(2).split(",")]
-                    if cols != tbl.config.record_key:
-                        raise ValueError(
-                            f"record_index must cover the record key {tbl.config.record_key}, got {cols}"
-                        )
-                tbl.create_record_index()
-                return None
-            m = re.match(
-                r"CREATE\s+INDEX\s+(\w+)\s+ON\s+(\w+)\s+USING\s+secondary_index\s*\((.+)\)\s*$",
-                s,
-                re.I,
+        for name in tbl.secondary_index_cols():
+            meta = tbl._index_meta(name)
+            if meta is None:
+                continue
+            kind = (
+                "secondary_index"
+                if meta["expr"].strip() in tbl.schema.names
+                else "expression_index"
             )
-            if m:
-                name, tname, target = m.group(1), m.group(2), m.group(3).strip()
-                # always keyed by the index NAME (so DROP INDEX name works);
-                # Table.lookup(col, v) still finds a plain index by resolving
-                # its defining expression
-                self.table(tname).create_expression_index(name, target)
-                return None
-            return self._create(s)
-        if verb == "INSERT":
-            return self._insert(s)
-        if verb == "UPDATE":
-            return self._update(s)
-        if verb == "DELETE":
-            return self._delete(s)
-        if verb == "MERGE":
-            return self._merge(s)
-        if verb == "ALTER":
-            m = re.match(
-                r"ALTER\s+TABLE\s+(\w+)\s+ADD\s+COLUMNS?\s*\((.*)\)\s*$", s, re.I | re.S
+            rows.append(
+                (name, kind, meta["expr"], int(meta.get("gen", 0)), bool(meta.get("valid", True)))
             )
-            if m:
-                self.table(m.group(1)).add_columns(m.group(2))
-                return None
-            # Hudi delete_partition via the Spark-SQL surface:
-            # ALTER TABLE t DROP PARTITION (seg='s0'[, dt='2024-01-01'])
-            m = re.match(
-                r"ALTER\s+TABLE\s+(\w+)\s+DROP\s+PARTITION\s*\((.+)\)\s*$", s, re.I
-            )
-            if m:
-                # quote-aware split: partition VALUES may legally contain
-                # commas/quotes (seg='a,b'); the naive split mis-parsed them
-                spec = {}
-                for kv in self._split_commas(m.group(2)):
-                    k, eq, v = kv.partition("=")
-                    if not eq:
-                        raise ValueError(f"malformed partition spec entry: {kv!r}")
-                    v = v.strip()
-                    if len(v) >= 2 and v[0] == v[-1] and v[0] in ("'", '"'):
-                        v = v[1:-1]
-                    spec[k.strip()] = v
-                self.table(m.group(1)).delete_partition(spec)
-                return None
-            m = re.match(  # parenthesized or bare column list, parens balanced
-                r"ALTER\s+TABLE\s+(\w+)\s+DROP\s+COLUMNS?"
-                r"(?:\s*\(\s*([\w\s,]+?)\s*\)|\s+([\w\s,]+?))\s*$",
-                s,
-                re.I,
-            )
-            if m:
-                cols = [c.strip() for c in (m.group(2) or m.group(3)).split(",") if c.strip()]
-                self.table(m.group(1)).drop_columns(cols)
-                return None
-            m = re.match(
-                r"ALTER\s+TABLE\s+(\w+)\s+RENAME\s+COLUMN\s+(\w+)\s+TO\s+(\w+)\s*$", s, re.I
-            )
-            if m:
-                self.table(m.group(1)).rename_column(m.group(2), m.group(3))
-                return None
-            raise ValueError(
-                "only ALTER TABLE t ADD COLUMNS (...) | DROP COLUMN(S) c[, ...] | "
-                "DROP PARTITION (k=v[, ...]) | "
-                f"RENAME COLUMN a TO b are supported: {s[:120]}"
-            )
-        if verb == "DROP":
-            m = re.match(r"DROP\s+INDEX\s+(\w+)\s+ON\s+(\w+)\s*$", s, re.I)
-            if m and m.group(1).lower() == "record_index":
-                self.table(m.group(2)).drop_record_index()
-                return None
-            if m:
-                self.table(m.group(2)).drop_secondary_index(m.group(1))
-                return None
-            m = re.match(r"DROP\s+TABLE\s+(?:IF\s+EXISTS\s+)?(\w+)", s, re.I)
-            if m:
-                name = m.group(1)
-                try:
-                    self.table(name).drop()
-                except KeyError:
-                    pass
-                self.unregister(name)
-                return None
+        return self.spark.createDataFrame(
+            rows,
+            "indexName STRING, indexType STRING, expr STRING, generation INT, valid BOOLEAN",
+        )
+
+    def _drop_index(self, plan, s: str) -> None:
+        tbl = self._table_of(plan)
+        index = plan.indexName()
+        if index.lower() == "record_index":
+            tbl.drop_record_index()
+        else:
+            tbl.drop_secondary_index(index)
+
+    # ---------------------------------------------------------------------- DDL
+
+    def _create(self, plan, s: str) -> None:
+        """CREATE TABLE [IF NOT EXISTS] t (cols) | AS SELECT, with the table
+        config in TBLPROPERTIES or OPTIONS (quickstarts use the first, the
+        datasource form the second), PARTITIONED BY and LOCATION."""
+        name = ".".join(_seq(plan.name().nameParts()))
+        spec = plan.tableSpec()
+        provider = spec.provider()
+        if provider.isDefined() and provider.get().lower() != "hudi":
+            raise ValueError(f"only USING hudi tables are supported, got {provider.get()}")
+        location = spec.location()
+        base = location.get() if location.isDefined() else os.path.join(self.warehouse, name)
+        if plan.ignoreIfExists() and Table.exists(base):
             return None
-        if verb == "SHOW" and re.match(r"SHOW\s+TABLES\s*$", s, re.I):
-            return self.spark.createDataFrame(
-                [(n, self._locations.get(n, "")) for n in self.table_names()],
-                "tableName STRING, location STRING",
+        props = {
+            k.lower(): v
+            for k, v in self.spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava(
+                spec.properties()
+            ).items()
+        }
+        for opt in _seq(spec.optionExpression().options()):
+            props[opt._1().lower()] = opt._2().toString()
+        partition_by = []
+        for t in _seq(plan.partitioning()):
+            if _kind(t) != "IdentityTransform":
+                raise ValueError(f"unsupported partition transform {t.describe()}")
+            partition_by.append(t.describe())
+        cfg = TableConfig(
+            record_key=[k.strip() for k in props.get("primarykey", "").split(",") if k.strip()],
+            precombine=props.get("precombinefield") or None,
+            partition_by=partition_by,
+            table_type=props.get("type", "cow"),
+        )
+        if _kind(plan) == "CreateTableAsSelect":
+            tbl = Table.create_as(self.spark, base, self._frame(plan.query(), s), cfg)
+        else:
+            ddl = plan.tableSchema().toDDL()
+            if not ddl:
+                raise ValueError(f"CREATE TABLE {name} needs a column list or AS SELECT")
+            tbl = Table.create(self.spark, base, ddl, cfg)
+        self.register(name, tbl)
+
+    def _drop_table(self, plan, s: str) -> None:
+        name = ".".join(_seq(plan.child().nameParts()))
+        try:
+            self.table(name).drop()
+        except KeyError:
+            if not plan.ifExists():
+                raise
+        finally:
+            self.unregister(name)
+
+    def _add_columns(self, plan, s: str) -> None:
+        ddl = ", ".join(f"`{c.colName()}` {c.dataType().sql()}" for c in _seq(plan.columnsToAdd()))
+        self._table_of(plan).add_columns(ddl)
+
+    def _drop_columns(self, plan, s: str) -> None:
+        self._table_of(plan).drop_columns([_field(c) for c in _seq(plan.columnsToDrop())])
+
+    def _rename_column(self, plan, s: str) -> None:
+        self._table_of(plan).rename_column(_field(plan.column()), plan.newName())
+
+    def _drop_partitions(self, plan, s: str) -> None:
+        """Hudi delete_partition: ALTER TABLE t DROP PARTITION (k=v[, ...])."""
+        tbl = self._table_of(plan)
+        to_java = self.spark._jvm.scala.jdk.javaapi.CollectionConverters.asJava
+        for part in _seq(plan.parts()):
+            tbl.delete_partition(dict(to_java(part.spec()).items()))
+
+    def _show_tables(self, plan, s: str) -> DataFrame:
+        return self.spark.createDataFrame(
+            [(n, self._locations.get(n, "")) for n in self.table_names()],
+            "tableName STRING, location STRING",
+        )
+
+    def _show_partitions(self, plan, s: str) -> DataFrame:
+        tbl = self._table_of(plan)
+        parts = sorted({tbl._partition_of(r) for r in tbl.timeline.live_files()[0]} - {""})
+        return self.spark.createDataFrame([(p,) for p in parts], "partition STRING")
+
+    # ---------------------------------------------------------------------- DML
+
+    def _insert(self, plan, s: str) -> None:
+        """INSERT INTO | OVERWRITE [TABLE] t [(cols)] VALUES ... | SELECT ...;
+        on a keyed table INSERT INTO upserts (the Hudi spark-sql default)."""
+        name, _ = _relation(plan.table())
+        if not plan.partitionSpec().isEmpty():
+            raise ValueError(f"INSERT ... PARTITION (...) is unsupported: {s[:120]}")
+        tbl = self.table(name)
+        cols = list(_seq(plan.userSpecifiedCols())) or tbl.data_cols
+        df = self._frame(plan.query(), s).toDF(*cols)
+        df = df.select(*[df[c].cast(tbl.schema[c].dataType) for c in cols])
+        if plan.overwrite():
+            tbl.insert_overwrite(df)
+        elif tbl.config.record_key:
+            tbl.upsert(df)
+        else:
+            tbl.insert(df)
+
+    def _update(self, plan, s: str) -> None:
+        name, alias = _relation(plan.table())
+        if alias is not None:
+            raise ValueError(f"UPDATE with a table alias is unsupported: {s[:120]}")
+        cond = plan.condition()
+        self.table(name).update_where(
+            cond.get().sql() if cond.isDefined() else "true",
+            {_column(a.key()): a.value().sql() for a in _seq(plan.assignments())},
+        )
+
+    def _delete(self, plan, s: str) -> None:
+        name, alias = _relation(plan.table())
+        if alias is not None:
+            raise ValueError(f"DELETE with a table alias is unsupported: {s[:120]}")
+        self.table(name).delete_where(plan.condition().sql())
+
+    def _merge(self, plan, s: str) -> None:
+        """MERGE INTO t [[AS] a] USING table | (query) [[AS] b] ON a.k = b.k
+        [AND ...] followed by WHEN [NOT] MATCHED [BY SOURCE] [AND cond] THEN
+        clauses, run in order by ``Table.merge``."""
+        name, talias = _relation(plan.targetTable())
+        talias = talias or name
+        src = plan.sourceTable()
+        if _kind(src) == "SubqueryAlias":
+            salias, src = src.alias(), src.child()
+        elif _kind(src) == "UnresolvedRelation":
+            salias = _relation(src)[0]
+        else:
+            raise ValueError(f"a MERGE source query needs an alias: {s[:120]}")
+        on = self._merge_keys(plan.mergeCondition(), talias, salias)
+        clauses = [
+            self._merge_clause(when, action)
+            for when, actions in (
+                ("matched", plan.matchedActions()),
+                ("not_matched", plan.notMatchedActions()),
+                ("not_matched_by_source", plan.notMatchedBySourceActions()),
             )
-        m = re.match(r"SHOW\s+INDEXES\s+(?:FROM|ON|IN)\s+(\w+)\s*$", s, re.I)
-        if verb == "SHOW" and m:
-            # Hudi 1.0 SHOW INDEXES: every index kind with its defining
-            # expression, generation, and validity (invalid = rollback
-            # invalidated it; probes fall back to scans until rebuilt)
-            tbl = self.table(m.group(1))
-            rows = []
-            rmeta = tbl._record_index_meta()
-            if rmeta is not None:
-                rows.append(
-                    (
-                        "record_index",
-                        "record_index",
-                        ",".join(tbl.config.record_key),
-                        int(rmeta.get("gen", 0)),
-                        bool(rmeta.get("valid", True)),
-                    )
-                )
-            for name in tbl.secondary_index_cols():
-                meta = tbl._index_meta(name)
-                if meta is None:
-                    continue
-                kind = (
-                    "secondary_index"
-                    if meta["expr"].strip() in tbl.schema.names
-                    else "expression_index"
-                )
-                rows.append(
-                    (
-                        name,
-                        kind,
-                        meta["expr"],
-                        int(meta.get("gen", 0)),
-                        bool(meta.get("valid", True)),
-                    )
-                )
-            return self.spark.createDataFrame(
-                rows,
-                "indexName STRING, indexType STRING, expr STRING, generation INT, valid BOOLEAN",
-            )
-        m = re.match(r"SHOW\s+PARTITIONS\s+(\w+)\s*$", s, re.I)
-        if verb == "SHOW" and m:
-            tbl = self.table(m.group(1))
-            parts = sorted(
-                {tbl._partition_of(r) for r in tbl.timeline.live_files()[0]} - {""}
-            )
-            return self.spark.createDataFrame(
-                [(p,) for p in parts], "partition STRING"
-            )
-        if verb == "CALL":
-            return self._call(s)
-        # SELECT / SHOW / narration — rewrite engine sugar then hand to spark.sql
-        return self._select(s)
+            for action in _seq(actions)
+        ]
+        self.table(name).merge(
+            self._frame(src, s), on=on, clauses=clauses, aliases=(talias, salias)
+        )
+
+    @staticmethod
+    def _merge_keys(cond, talias: str, salias: str) -> dict[str, str]:
+        """Target column → source column of an ON clause that is a
+        conjunction of ``target.col = source.col`` equalities."""
+        on: dict[str, str] = {}
+        todo = [cond]
+        while todo:
+            e = todo.pop()
+            if _kind(e) == "And":
+                todo += [e.left(), e.right()]
+                continue
+            cols = {}
+            for side in (e.left(), e.right()) if _kind(e) == "EqualTo" else ():
+                parts = _seq(side.nameParts()) if _kind(side) == "UnresolvedAttribute" else []
+                if len(parts) == 2:
+                    cols[parts[0].lower()] = parts[1]
+            if set(cols) != {talias.lower(), salias.lower()}:
+                raise ValueError(f"unsupported MERGE ON clause: {e.sql()}")
+            on[cols[talias.lower()]] = cols[salias.lower()]
+        return on
+
+    @staticmethod
+    def _merge_clause(when: str, action) -> MergeClause:
+        kind = _kind(action)
+        if kind not in _MERGE_ACTIONS:
+            raise ValueError(f"unsupported MERGE action {kind}")
+        cond = action.condition()
+        assignments = None
+        if kind in ("UpdateAction", "InsertAction"):
+            assignments = {_column(a.key()): a.value().sql() for a in _seq(action.assignments())}
+        return MergeClause(
+            when, _MERGE_ACTIONS[kind], assignments, cond.get().sql() if cond.isDefined() else None
+        )
 
     # --------------------------------------------------------------- CALL procs
 
-    def _run_bootstrap(self, name: str, arg: str | None) -> DataFrame:
-        """``CALL run_bootstrap('t', '<source_path>'[, 'record_key=a/b',
-        'precombine=v', 'partition_by=p', 'table_type=cow|mor',
-        'mode=metadata_only|full_record'])`` — the SQL face of Hudi's
-        ``run_bootstrap`` procedure. Creates the table at
-        ``{warehouse}/{name}`` from the existing parquet dataset (no rewrite
-        in the default mode) and registers it in the catalog. Multi-column
-        lists use ``/`` separators (commas delimit CALL arguments)."""
-        toks = [t.strip().strip("'") for t in (arg or "").split(",") if t.strip()]
-        if not toks:
-            raise ValueError("run_bootstrap requires a source path argument")
-        source, opts = toks[0], {}
-        for tk in toks[1:]:
-            if "=" not in tk:
-                raise ValueError(f"run_bootstrap option {tk!r} must be key=value")
-            k, v = tk.split("=", 1)
-            opts[k.strip()] = v.strip()
-        config = TableConfig(
-            record_key=[c for c in opts.get("record_key", "").split("/") if c],
-            precombine=opts.get("precombine") or None,
-            partition_by=[c for c in opts.get("partition_by", "").split("/") if c],
-            table_type=opts.get("table_type", "cow"),
-        )
-        tbl = Table.bootstrap(
-            self.spark,
-            os.path.join(self.warehouse, name),
-            source,
-            config,
-            mode=opts.get("mode", "metadata_only"),
-        )
-        self.register(name, tbl)
-        boot = tbl.timeline.completed_data_instants()[0]
-        return self.spark.createDataFrame(
-            [
-                (
-                    name,
-                    boot.instant,
-                    boot.meta.get("mode", "full_record"),
-                    len(boot.files_added),
-                    boot.meta.get("files_linked", 0),
-                )
-            ],
-            "table STRING, instant STRING, mode STRING, n_files INT, n_linked INT",
-        )
-
-    def _call(self, s: str) -> DataFrame | None:
-        """Hudi Spark-SQL procedures (the SQL face of the table services):
-        CALL run_compaction('t'[, 'schedule'|'execute']) |
+    def _call(self, plan, s: str) -> DataFrame | None:
+        """Hudi Spark-SQL procedures (the SQL face of the table services);
+        every argument is a positional literal and the first names the table.
+        CALL run_compaction('t'[, 'schedule'|'execute'[, max_io_bytes]]) |
         show_compaction('t') — pending plans | run_clustering('t'[, buckets]) |
         run_clustering_sort('t'[, 'schedule'|'execute'], 'c1'[, 'c2', ...]) |
         run_clustering_zorder('t'[, 'schedule'|'execute'], 'c1', 'c2'[, ...]) |
@@ -375,6 +523,8 @@ class Engine:
         show_clustering('t') — pending clustering plans |
         run_log_compaction('t'[, min_logs]) — stitch small MOR logs |
         run_clean('t'[, retain]) | rebuild_index('t', 'name') |
+        run_indexing('t', 'schedule', kind[, name[, expr]]) | run_indexing('t'[, 'execute']) |
+        show_indexing('t') | validate('t') |
         run_services('t') — the full policy-driven maintenance pass |
         rollback_to_instant('t'[, instant]) |
         create_savepoint('t') | restore_to_savepoint('t', instant) |
@@ -388,31 +538,35 @@ class Engine:
         The sort/zorder forms are
         incremental: already-in-layout partitions are skipped (see
         ``Table._cluster_rewrite``)."""
-        m = re.match(r"CALL\s+(\w+)\s*\(\s*'(\w+)'\s*(?:,\s*([^)]+))?\)\s*$", s, re.I)
-        if not m:
-            raise ValueError(f"cannot parse CALL: {s[:120]}")
-        proc, name, arg = m.group(1).lower(), m.group(2), m.group(3)
+        proc = ".".join(_seq(plan.procedure().nameParts())).lower()
+        args = []
+        for a in _seq(plan.args()):
+            if _kind(a) != "Literal":
+                raise ValueError(f"CALL {proc} takes positional literal arguments: {s[:120]}")
+            args.append(a.toString())
+        if not args:
+            raise ValueError(f"CALL {proc} needs the table name as its first argument")
+        name, rest = args[0], args[1:]
         if proc == "run_bootstrap":
-            return self._run_bootstrap(name, arg)
+            return self._run_bootstrap(name, rest)
         tbl = self.table(name)
+        arg = rest[0] if rest else None
         if proc == "run_compaction":
-            # Hudi's op switch: CALL run_compaction('t'[, 'schedule'|'execute'])
-            # — 'schedule' cuts a compactionplan instant for an async executor,
-            # 'execute' runs the oldest pending plan; no arg = inline both.
-            # optional trailing number = max_io_bytes for the schedule form
-            # (the bounded-IO / LogFileSizeBased strategy budget)
-            parts = [a.strip().strip("'") for a in self._split_commas(arg or "")]
-            op = parts[0].lower() if parts else ""
+            # Hudi's op switch: 'schedule' cuts a compactionplan instant for
+            # an async executor, 'execute' runs the oldest pending plan; no
+            # arg = inline both. A trailing number is max_io_bytes for the
+            # schedule form (the bounded-IO / LogFileSizeBased strategy budget)
+            op = rest[0].lower() if rest else ""
             budget = None
-            if len(parts) > 1:
+            if len(rest) > 1:
                 # a malformed budget must ERROR, not silently schedule an
                 # unbounded compaction ('128MB' is a typo, not "no budget")
-                if not parts[1].isdigit() or int(parts[1]) <= 0:
+                if not rest[1].isdigit() or int(rest[1]) <= 0:
                     raise ValueError(
                         f"run_compaction budget must be a positive integer "
-                        f"(bytes), got {parts[1]!r}"
+                        f"(bytes), got {rest[1]!r}"
                     )
-                budget = int(parts[1])
+                budget = int(rest[1])
             if op == "schedule":
                 tbl.schedule_compaction(max_io_bytes=budget)
             elif op in ("execute", "run"):
@@ -429,41 +583,36 @@ class Engine:
                 rows, "plan_instant STRING, n_log_files INT, n_base_files INT"
             )
         if proc == "run_clustering":
-            tbl.cluster(int(arg)) if arg else tbl.cluster(tbl.config.n_buckets or 4)
+            tbl.cluster(int(arg) if arg else tbl.config.n_buckets or 4)
             return None
         if proc == "validate":
             # CALL validate('t') — integrity report (one row per check)
             return tbl.validate()
         if proc == "export_snapshot":
-            # CALL export_snapshot('t', '<dest>'[, 'hudi'|'parquet'][, '<as_of>'])
-            parts = [a.strip().strip("'") for a in self._split_commas(arg or "")]
-            if not parts:
+            if not rest:
                 raise ValueError("export_snapshot requires a destination path")
-            dest, rest = parts[0], parts[1:]
-            emode = next((a for a in rest if a in ("hudi", "parquet")), "hudi")
-            as_of = next((a for a in rest if a not in ("hudi", "parquet")), None)
+            dest, opts = rest[0], rest[1:]
+            emode = next((a for a in opts if a in ("hudi", "parquet")), "hudi")
+            as_of = next((a for a in opts if a not in ("hudi", "parquet")), None)
             tbl.export_snapshot(dest, as_of=as_of, mode=emode)
             return None
         if proc == "run_clustering_smallfiles":
-            # CALL run_clustering_smallfiles('t'[, target_bytes]) — bin-pack
-            # small base files into ~target-size files (Hudi's small-file
-            # clustering strategy; see Table.cluster_small_files)
-            tbl.cluster_small_files(int(arg.strip().strip("'"))) if arg else tbl.cluster_small_files()
+            # bin-pack small base files into ~target-size files (Hudi's
+            # small-file clustering strategy; see Table.cluster_small_files)
+            tbl.cluster_small_files(int(arg)) if arg else tbl.cluster_small_files()
             return None
         if proc in ("run_clustering_sort", "run_clustering_zorder", "run_clustering_hilbert"):
-            cols = [c.strip().strip("'") for c in (arg or "").split(",") if c.strip()]
-            if not cols:
+            if not rest:
                 raise ValueError(f"{proc} requires a column list")
             # curve build switch (Hudi's sample build): a 'build=sample' /
             # 'build=uniform' element anywhere in the list
             build = "uniform"
-            kept = []
-            for c in cols:
+            cols = []
+            for c in rest:
                 if c.lower().startswith("build="):
                     build = c.split("=", 1)[1].lower()
                 else:
-                    kept.append(c)
-            cols = kept
+                    cols.append(c)
             # async split: a leading 'schedule' cuts a clusteringplan instead
             # of rewriting inline; 'execute' runs the oldest pending plan
             if cols and cols[0].lower() == "schedule":
@@ -510,17 +659,13 @@ class Engine:
             return self.spark.createDataFrame(rows, "service STRING, result STRING")
         if proc == "run_indexing":
             # Hudi 1.0 async indexing (HoodieIndexer schedule/execute split):
-            # CALL run_indexing('t', 'schedule', 'record_index') |
-            # CALL run_indexing('t', 'schedule', 'secondary', '<col>') |
-            # CALL run_indexing('t', 'schedule', 'expression', '<name>', '<expr>') |
-            # CALL run_indexing('t'[, 'execute'])  — run the oldest pending plan
-            parts = [p.strip().strip("'") for p in (arg or "").split(",") if p.strip()]
-            if parts and parts[0].lower() == "schedule":
-                kind = parts[1] if len(parts) > 1 else "record_index"
+            # 'schedule', 'record_index' | 'secondary', '<col>' |
+            # 'expression', '<name>', '<expr>'; otherwise run the oldest plan
+            if rest and rest[0].lower() == "schedule":
                 tbl.schedule_indexing(
-                    kind,
-                    name=parts[2] if len(parts) > 2 else None,
-                    expr=parts[3] if len(parts) > 3 else None,
+                    rest[1] if len(rest) > 1 else "record_index",
+                    name=rest[2] if len(rest) > 2 else None,
+                    expr=rest[3] if len(rest) > 3 else None,
                 )
             else:
                 tbl.run_indexing()
@@ -536,11 +681,10 @@ class Engine:
         if proc == "rebuild_index":
             if not arg:
                 raise ValueError("rebuild_index requires the index name")
-            iname = arg.strip().strip("'")
-            if iname.lower() == "record_index":
+            if arg.lower() == "record_index":
                 tbl.rebuild_record_index()
             else:
-                tbl.rebuild_index(iname)
+                tbl.rebuild_index(arg)
             return None
         if proc == "run_archival":
             tbl.archive_timeline(retain_instants=int(arg) if arg else 20)
@@ -552,15 +696,15 @@ class Engine:
             tbl.convert_to_ranges(int(arg))
             return None
         if proc == "rollback_to_instant":
-            tbl.rollback(arg.strip().strip("'") if arg else None)
+            tbl.rollback(arg)
             return None
         if proc == "create_savepoint":
-            tbl.savepoint(arg.strip().strip("'") if arg else None)
+            tbl.savepoint(arg)
             return None
         if proc == "restore_to_savepoint":
             if not arg:
                 raise ValueError("restore_to_savepoint requires an instant argument")
-            tbl.restore_to_savepoint(arg.strip().strip("'"))
+            tbl.restore_to_savepoint(arg)
             return None
         if proc == "show_commits":
             rows = [
@@ -576,283 +720,65 @@ class Engine:
             )
         raise ValueError(f"unknown procedure {proc}")
 
-    # ------------------------------------------------------------------- CREATE
-
-    _CREATE_RE = re.compile(
-        r"CREATE\s+TABLE\s+(?:IF\s+NOT\s+EXISTS\s+)?(?P<name>\w+)\s*"
-        r"(?:\((?P<cols>.*?)\)\s*)?"
-        r"(?:USING\s+(?P<using>\w+)\s*)?"
-        r"(?P<rest>.*)",
-        re.I | re.S,
-    )
-
-    def _create(self, s: str) -> DataFrame | None:
-        m = self._CREATE_RE.match(s)
-        if not m:
-            raise ValueError(f"cannot parse CREATE: {s[:120]}")
-        name = m.group("name")
-        rest = m.group("rest") or ""
-        props: dict[str, str] = {}
-        # Hudi SQL accepts the table config through either clause
-        # (quickstarts use TBLPROPERTIES; the datasource form uses OPTIONS)
-        for pm in re.finditer(
-            r"(?:TBLPROPERTIES|OPTIONS)\s*\((?P<body>.*?)\)", rest, re.I | re.S
-        ):
-            for k, v in re.findall(r"['\"]?([\w.]+)['\"]?\s*=\s*'([^']*)'", pm.group("body")):
-                props[k.lower()] = v
-        part = []
-        pb = re.search(r"PARTITIONED\s+BY\s*\(([^)]*)\)", rest, re.I)
-        if pb:
-            part = [c.strip() for c in pb.group(1).split(",") if c.strip()]
-        loc = re.search(r"LOCATION\s+'([^']+)'", rest, re.I)
-        base = loc.group(1) if loc else os.path.join(self.warehouse, name)
-        cfg = TableConfig(
-            record_key=[k.strip() for k in props.get("primarykey", "").split(",") if k.strip()],
-            precombine=props.get("precombinefield") or None,
-            partition_by=part,
-            table_type=props.get("type", "cow"),
+    def _run_bootstrap(self, name: str, args: list[str]) -> DataFrame:
+        """``CALL run_bootstrap('t', '<source_path>'[, 'record_key=a/b',
+        'precombine=v', 'partition_by=p', 'table_type=cow|mor',
+        'mode=metadata_only|full_record'])`` — the SQL face of Hudi's
+        ``run_bootstrap`` procedure. Creates the table at
+        ``{warehouse}/{name}`` from the existing parquet dataset (no rewrite
+        in the default mode) and registers it in the catalog. Multi-column
+        lists use ``/`` separators (commas delimit CALL arguments)."""
+        if not args:
+            raise ValueError("run_bootstrap requires a source path argument")
+        source, opts = args[0], {}
+        for tk in args[1:]:
+            if "=" not in tk:
+                raise ValueError(f"run_bootstrap option {tk!r} must be key=value")
+            k, v = tk.split("=", 1)
+            opts[k.strip()] = v.strip()
+        config = TableConfig(
+            record_key=[c for c in opts.get("record_key", "").split("/") if c],
+            precombine=opts.get("precombine") or None,
+            partition_by=[c for c in opts.get("partition_by", "").split("/") if c],
+            table_type=opts.get("table_type", "cow"),
         )
-        ctas = re.search(r"\bAS\s+(SELECT\b.*)$", rest, re.I | re.S)
-        if ctas:
-            df = self._select(ctas.group(1))
-            tbl = Table.create_as(self.spark, base, df, cfg)
-        else:
-            cols = m.group("cols")
-            if not cols:
-                raise ValueError(f"CREATE TABLE {name} needs a column list or AS SELECT")
-            tbl = Table.create(self.spark, base, cols.strip(), cfg)
+        tbl = Table.bootstrap(
+            self.spark,
+            os.path.join(self.warehouse, name),
+            source,
+            config,
+            mode=opts.get("mode", "metadata_only"),
+        )
         self.register(name, tbl)
-        return None
-
-    # ------------------------------------------------------------------- INSERT
-
-    def _insert(self, s: str) -> DataFrame | None:
-        m = re.match(
-            r"INSERT\s+(?P<mode>INTO|OVERWRITE)\s+(?:TABLE\s+)?(?P<name>\w+)\s+(?P<body>.*)$",
-            s,
-            re.I | re.S,
-        )
-        if not m:
-            raise ValueError(f"cannot parse INSERT: {s[:120]}")
-        tbl = self.table(m.group("name"))
-        body = m.group("body").strip()
-        if body.upper().startswith("VALUES"):
-            cols = ", ".join(tbl.data_cols)
-            df = self.spark.sql(f"SELECT * FROM ({body}) AS __v({cols})")
-        else:
-            df = self._select(body)
-            df = df.toDF(*tbl.data_cols)
-        for c, f in zip(tbl.data_cols, tbl.schema.fields):
-            df = df.withColumn(c, df[c].cast(f.dataType))
-        if m.group("mode").upper() == "OVERWRITE":
-            tbl.insert_overwrite(df)
-        else:
-            # SQL INSERT INTO on a keyed table upserts (Hudi spark-sql default)
-            tbl.upsert(df) if tbl.config.record_key else tbl.insert(df)
-        return None
-
-    # ------------------------------------------------------------------- UPDATE
-
-    def _update(self, s: str) -> None:
-        m = re.match(
-            r"UPDATE\s+(?P<name>\w+)\s+SET\s+(?P<sets>.*?)(?:\s+WHERE\s+(?P<where>.*))?$",
-            s,
-            re.I | re.S,
-        )
-        if not m:
-            raise ValueError(f"cannot parse UPDATE: {s[:120]}")
-        tbl = self.table(m.group("name"))
-        assignments = {}
-        for part in self._split_commas(m.group("sets")):
-            col, expr = part.split("=", 1)
-            assignments[col.strip()] = expr.strip()
-        tbl.update_where(m.group("where") or "true", assignments)
-
-    # ------------------------------------------------------------------- DELETE
-
-    def _delete(self, s: str) -> None:
-        m = re.match(
-            r"DELETE\s+FROM\s+(?P<name>\w+)(?:\s+WHERE\s+(?P<where>.*))?$", s, re.I | re.S
-        )
-        if not m:
-            raise ValueError(f"cannot parse DELETE: {s[:120]}")
-        self.table(m.group("name")).delete_where(m.group("where") or "true")
-
-    # -------------------------------------------------------------------- MERGE
-
-    _MERGE_RE = re.compile(
-        r"MERGE\s+INTO\s+(?P<target>\w+)(?:\s+AS\s+(?P<talias>\w+))?\s+"
-        r"USING\s+(?P<source>\(.*?\)|\w+)(?:\s+AS\s+(?P<salias>\w+))?\s+"
-        r"ON\s+(?P<on>.*?)\s+"
-        r"(?P<clauses>WHEN\s+.*)$",
-        re.I | re.S,
-    )
-
-    def _merge(self, s: str) -> None:
-        m = self._MERGE_RE.match(s)
-        if not m:
-            raise ValueError(f"cannot parse MERGE: {s[:120]}")
-        tbl = self.table(m.group("target"))
-        talias = m.group("talias") or m.group("target")
-        salias = m.group("salias") or "source"
-        src_spec = m.group("source")
-        if src_spec.startswith("("):
-            src_df = self._select(src_spec[1:-1])
-        elif src_spec in self.tables:
-            src_df = self.table(src_spec).read()
-        else:
-            self._register_snapshots()
-            src_df = self.spark.table(src_spec)
-
-        on: dict[str, str] = {}
-        for clause in re.split(r"\bAND\b", m.group("on"), flags=re.I):
-            cm = re.match(
-                rf"\s*(?:{talias}|{salias})\.(\w+)\s*=\s*(?:{talias}|{salias})\.(\w+)\s*",
-                clause,
-                re.I,
-            )
-            if not cm:
-                raise ValueError(f"unsupported MERGE ON clause: {clause!r}")
-            a, b = cm.group(1), cm.group(2)
-            tgt_col = a if re.match(rf"\s*{talias}\.", clause, re.I) else b
-            src_col = b if tgt_col == a else a
-            on[tgt_col] = src_col
-
-        clauses = m.group("clauses")
-        when_matched: str | dict = "update_all"
-        when_not_matched: str | None = None
-        wm = re.search(
-            r"WHEN\s+MATCHED\s+THEN\s+(?P<act>UPDATE\s+SET\s+\*|UPDATE\s+SET\s+.*?|DELETE)"
-            r"(?=\s+WHEN\s+|\s*$)",
-            clauses,
-            re.I | re.S,
-        )
-        if wm:
-            act = wm.group("act").strip()
-            if act.upper() == "DELETE":
-                when_matched = "delete"
-            elif re.match(r"UPDATE\s+SET\s+\*", act, re.I):
-                when_matched = "update_all"
-            else:
-                sets = re.sub(r"UPDATE\s+SET\s+", "", act, flags=re.I)
-                when_matched = {}
-                for part in self._split_commas(sets):
-                    col, expr = part.split("=", 1)
-                    col = re.sub(rf"\b{talias}\.", "", col.strip(), flags=re.I)
-                    when_matched[col] = self._rewrite_merge_expr(expr.strip(), talias, salias, on)
-        wnm = re.search(r"WHEN\s+NOT\s+MATCHED\s+THEN\s+INSERT\s+\*", clauses, re.I)
-        if wnm:
-            when_not_matched = "insert_all"
-        tbl.merge(src_df, on=on, when_matched=when_matched, when_not_matched=when_not_matched)
-
-    def _rewrite_merge_expr(self, expr: str, talias: str, salias: str, on: dict[str, str]) -> str:
-        """Translate target./source. qualifiers to the merge API's namespace
-        (target cols bare, non-key source cols as __src_<col>)."""
-        key_srcs = set(on.values())
-
-        def src_repl(mm):
-            col = mm.group(1)
-            return col if col in key_srcs else f"__src_{col}"
-
-        expr = re.sub(rf"\b{salias}\.(\w+)", src_repl, expr, flags=re.I)
-        expr = re.sub(rf"\b{talias}\.(\w+)", r"\1", expr, flags=re.I)
-        return expr
-
-    @staticmethod
-    def _split_commas(s: str) -> list[str]:
-        """Split on commas not inside parens/quotes."""
-        out, cur, depth, in_q = [], [], 0, None
-        for ch in s:
-            if in_q:
-                cur.append(ch)
-                if ch == in_q:
-                    in_q = None
-            elif ch in ("'", '"'):
-                in_q = ch
-                cur.append(ch)
-            elif ch == "(":
-                depth += 1
-                cur.append(ch)
-            elif ch == ")":
-                depth -= 1
-                cur.append(ch)
-            elif ch == "," and depth == 0:
-                out.append("".join(cur).strip())
-                cur = []
-            else:
-                cur.append(ch)
-        if cur:
-            out.append("".join(cur).strip())
-        return [p for p in out if p]
-
-    # ------------------------------------------------------------------- SELECT
-
-    def _select(self, s: str) -> DataFrame:
-        # M10: FROM tbl TIMESTAMP AS OF '...'
-        def tt_repl(mm):
-            view = self._fresh_view(self.table(mm.group(1)).read(as_of=mm.group(2)), "asof")
-            return f"FROM {view}"
-
-        s = re.sub(r"FROM\s+(\w+)\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'", tt_repl, s, flags=re.I)
-
-        # M11: hudi_table_changes('tbl', 'latest_state', 'begin'[, 'end'])
-        def tvf_repl(mm):
-            name, start, end = mm.group(1), mm.group(2), mm.group(3)
-            df = self.table(name).table_changes(start=start, end=end)
-            return self._fresh_view(df, "changes")
-
-        s = re.sub(
-            r"hudi_table_changes\(\s*'(\w+)'\s*,\s*'latest_state'\s*,\s*'([^']+)'"
-            r"(?:\s*,\s*'([^']+)')?\s*\)",
-            tvf_repl,
-            s,
-            flags=re.I,
+        boot = tbl.timeline.completed_data_instants()[0]
+        return self.spark.createDataFrame(
+            [
+                (
+                    name,
+                    boot.instant,
+                    boot.meta.get("mode", "full_record"),
+                    len(boot.files_added),
+                    boot.meta.get("files_linked", 0),
+                )
+            ],
+            "table STRING, instant STRING, mode STRING, n_files INT, n_linked INT",
         )
 
-        # Hudi 1.0 completion-time incremental form:
-        # hudi_table_changes('tbl', 'latest_state_completion', '<start_ct>'[, '<end_ct>'])
-        # — bounds by publish stamps, closing the NBCC begin-cursor hole
-        def ct_repl(mm):
-            name, start_ct, end_ct = mm.group(1), mm.group(2), mm.group(3)
-            df = self.table(name).table_changes_by_completion(
-                float(start_ct), float(end_ct) if end_ct else None
-            )
-            return self._fresh_view(df, "changes_ct")
-
-        s = re.sub(
-            r"hudi_table_changes\(\s*'(\w+)'\s*,\s*'latest_state_completion'\s*,"
-            r"\s*'([^']+)'(?:\s*,\s*'([^']+)')?\s*\)",
-            ct_repl,
-            s,
-            flags=re.I,
-        )
-
-        # M11/M13 CDC form: hudi_table_changes('tbl', 'cdc', 'begin'[, 'end'])
-        # — change type + before/after images (Hudi hoodie.table.cdc semantics)
-        def cdc_repl(mm):
-            name, start, end = mm.group(1), mm.group(2), mm.group(3)
-            df = self.table(name).table_changes_cdc(start=start, end=end)
-            return self._fresh_view(df, "cdc")
-
-        s = re.sub(
-            r"hudi_table_changes\(\s*'(\w+)'\s*,\s*'cdc'\s*,\s*'([^']+)'"
-            r"(?:\s*,\s*'([^']+)')?\s*\)",
-            cdc_repl,
-            s,
-            flags=re.I,
-        )
-
-        # Hudi 1.0 metadata-table TVF: hudi_metadata('tbl', 'files' |
-        # 'partitions' | 'column_stats' | 'bloom_filters' | 'record_index')
-        def meta_repl(mm):
-            df = self.table(mm.group(1)).metadata(mm.group(2))
-            return self._fresh_view(df, "metadata")
-
-        s = re.sub(
-            r"hudi_metadata\(\s*'(\w+)'\s*,\s*'(\w+)'\s*\)",
-            meta_repl,
-            s,
-            flags=re.I,
-        )
-        self._register_snapshots()
-        return self.spark.sql(s)
+    #: parsed plan class → handler(self, plan, statement text)
+    _HANDLERS = {
+        "MergeIntoTable": _merge,
+        "UpdateTable": _update,
+        "DeleteFromTable": _delete,
+        "InsertIntoStatement": _insert,
+        "CreateTable": _create,
+        "CreateTableAsSelect": _create,
+        "DropTable": _drop_table,
+        "DropIndex": _drop_index,
+        "AddColumns": _add_columns,
+        "DropColumns": _drop_columns,
+        "RenameColumn": _rename_column,
+        "DropPartitions": _drop_partitions,
+        "ShowTables": _show_tables,
+        "ShowPartitions": _show_partitions,
+        "Call": _call,
+    }

@@ -13,7 +13,12 @@ partitioned parquet + a JSON timeline — no Hudi jar, no custom file format:
 API: :class:`hudi_examples_spark.table.core.Table`.
 """
 
-from hudi_examples_spark.table.core import ConcurrentWriteConflict, Table, TableConfig
+from hudi_examples_spark.table.core import (
+    ConcurrentWriteConflict,
+    MergeClause,
+    Table,
+    TableConfig,
+)
 from hudi_examples_spark.table.services import ServiceScheduler
 
-__all__ = ["ConcurrentWriteConflict", "ServiceScheduler", "Table", "TableConfig"]
+__all__ = ["ConcurrentWriteConflict", "MergeClause", "ServiceScheduler", "Table", "TableConfig"]

@@ -301,6 +301,42 @@ class ConcurrentWriteConflict(RuntimeError):
     """
 
 
+#: the actions each kind of MERGE clause may take
+_MERGE_ACTIONS = {
+    "matched": ("update", "delete"),
+    "not_matched": ("insert",),
+    "not_matched_by_source": ("update", "delete"),
+}
+
+
+@dataclass(frozen=True)
+class MergeClause:
+    """One ``WHEN`` clause of :meth:`Table.merge`.
+
+    ``when`` is ``"matched"`` (a target row with a source row),
+    ``"not_matched"`` (a source row without a target row) or
+    ``"not_matched_by_source"`` (a target row without a source row).
+    ``action`` is ``"update"`` or ``"delete"`` for the first and last,
+    ``"insert"`` for ``not_matched``. ``assignments`` maps target columns to
+    SQL expressions; ``None`` means every column from the source
+    (``UPDATE SET *`` / ``INSERT *``). ``condition`` and the expressions name
+    columns through the merge's target and source aliases
+    (``target.fare``, ``source.fare``)."""
+
+    when: str
+    action: str
+    assignments: dict[str, str] | None = None
+    condition: str | None = None
+
+    def __post_init__(self):
+        if self.action not in _MERGE_ACTIONS.get(self.when, ()):
+            raise ValueError(f"unsupported MERGE clause: WHEN {self.when} THEN {self.action}")
+        if self.action == "delete" and self.assignments is not None:
+            raise ValueError("a MERGE DELETE takes no assignments")
+        if self.when == "not_matched_by_source" and self.action == "update" and not self.assignments:
+            raise ValueError("WHEN NOT MATCHED BY SOURCE THEN UPDATE needs explicit assignments")
+
+
 #: Highest table_version this engine can open (Hudi 1.0's own table version is
 #: 8). Features whose config is LOAD-BEARING (bootstrap_instant) set the
 #: table's version to their floor so older engines refuse rather than misread.
@@ -944,15 +980,13 @@ class Table:
                 if not fn.endswith(".parquet"):
                     continue
                 src = os.path.join(root, fn)
-                # Zero-row part files (an empty shuffle partition under static
-                # execution emits one) never become table files: they would
-                # inflate the file listing forever and carry no footer stats
-                # for the key-range index. The footer check only runs on files
-                # small enough to possibly be empty.
-                if (
-                    os.path.getsize(src) < 65536
-                    and pq.read_metadata(src).num_rows == 0
-                ):
+                # Every footer is read, whatever the file's size: a corrupt
+                # part file raises here, before any rename. Zero-row part
+                # files (an empty shuffle partition under static execution
+                # emits one) never become table files: they would inflate the
+                # file listing forever and carry no footer stats for the
+                # key-range index.
+                if pq.read_metadata(src).num_rows == 0:
                     continue
                 keep.append((root, src))
         rels: list[str] = []
@@ -3821,50 +3855,94 @@ class Table:
         self,
         source: DataFrame,
         on: dict[str, str] | None = None,
-        when_matched: str | dict[str, object] = "update_all",
-        when_not_matched: str | None = "insert_all",
-        matched_condition: str | None = None,
+        clauses: list[MergeClause] | None = None,
+        aliases: tuple[str, str] = ("target", "source"),
     ) -> str:
         """M5/J1-J3: MERGE INTO target USING source ON target.k = source.k.
 
-        ``on`` maps target key col -> source col (default: record key, same names).
-        ``when_matched``: "update_all" | "delete" | {col: sql_expr over source cols}.
-        ``when_not_matched``: "insert_all" | None.
+        ``on`` maps target key columns to source columns (default: the record
+        key, same names). ``clauses`` (default ``UPDATE SET *`` then
+        ``INSERT *``) have SQL semantics: a row is acted on by the first
+        clause of its kind whose condition holds, and a row no clause takes
+        stays as it is. Conditions and assignments name columns through
+        ``aliases`` (target, source). Changed rows go through the upsert
+        funnel, so the precombine field still orders the versions of a key.
         """
+        if not self.config.record_key:
+            # changed rows are upserted by key; a pk-less upsert appends
+            raise ValueError("MERGE needs a table with a record key")
         on = on or {k: k for k in self.config.record_key}
-        tgt_keys = list(on.keys())
-        src = source
-        # normalize source key col names onto target key names
-        for tk, sk in on.items():
-            if sk != tk:
-                src = src.withColumnRenamed(sk, tk)
-        current = self.read()
-        matched = current.join(src.select(*tgt_keys).distinct(), tgt_keys, "left_semi")
-        if matched_condition:
-            matched = matched.filter(matched_condition)
+        if clauses is None:
+            clauses = [MergeClause("matched", "update"), MergeClause("not_matched", "insert")]
+        cols = self.data_cols
+        unknown = {c for cl in clauses for c in (cl.assignments or {})} - set(cols)
+        if unknown:
+            raise ValueError(f"MERGE assigns unknown columns {sorted(unknown)}")
+        if (
+            len(clauses) == 2
+            and {(c.when, c.action) for c in clauses} == {("matched", "update"), ("not_matched", "insert")}
+            and all(c.assignments is None and c.condition is None for c in clauses)
+            and on == {k: k for k in self.config.record_key}
+        ):
+            # unconditional UPDATE SET * + INSERT * on the record key is an
+            # upsert by definition: no target read, no join
+            return self._write_changes(upserts=source.select(*cols), deletes=None, op="merge")
 
-        deletes = None
-        upserts = None
-        if when_matched == "delete":
-            deletes = matched
-        elif when_matched == "update_all":
-            upserts = src.select(*[F.col(c) for c in self.data_cols])
-        else:  # partial update: start from current matched rows, apply assignments
-            src_pref = src.select(
-                *tgt_keys, *[F.col(c).alias(f"__src_{c}") for c in src.columns if c not in tgt_keys]
+        ta, sa = aliases
+        kinds = {c.when for c in clauses}
+        how = {(False, False): "inner", (True, False): "left", (False, True): "right", (True, True): "full"}[
+            ("not_matched_by_source" in kinds, "not_matched" in kinds)
+        ]
+        joined = (
+            self.read()
+            .withColumn("__merge_t", F.lit(True))
+            .alias(ta)
+            .join(
+                source.withColumn("__merge_s", F.lit(True)).alias(sa),
+                [F.col(f"{ta}.`{t}`") == F.col(f"{sa}.`{s}`") for t, s in on.items()],
+                how,
             )
-            joined = matched.join(src_pref, tgt_keys, "inner")
-            for col, expr in when_matched.items():
-                col_expr = F.expr(expr) if isinstance(expr, str) else expr
-                joined = joined.withColumn(col, col_expr)
-            upserts = joined.select(*self.data_cols)
+        )
+        scope = {
+            "matched": "__merge_t IS NOT NULL AND __merge_s IS NOT NULL",
+            "not_matched": "__merge_t IS NULL",
+            "not_matched_by_source": "__merge_s IS NULL",
+        }
+        pick = " ".join(
+            f"WHEN {scope[c.when]}{f' AND ({c.condition})' if c.condition else ''} THEN {i}"
+            for i, c in enumerate(clauses)
+        )
 
-        if when_not_matched == "insert_all":
-            new_rows = src.join(current.select(*tgt_keys).distinct(), tgt_keys, "left_anti")
-            inserts = new_rows.select(*[F.col(c) for c in self.data_cols])
-            upserts = inserts if upserts is None else upserts.unionByName(inserts)
+        def value(c: MergeClause, col: str) -> str:
+            if c.action == "delete":
+                return f"{ta}.`{col}`"  # the deleted row's image
+            if c.assignments is None:
+                return f"{sa}.`{on.get(col, col)}`"  # SET * / INSERT *
+            if col in c.assignments:
+                return f"({c.assignments[col]})"
+            # an update keeps what it does not assign; INSERT (cols) nulls it
+            return f"{ta}.`{col}`" if c.action == "update" else "NULL"
 
-        return self._write_changes(upserts=upserts, deletes=deletes, op="merge")
+        acted = (
+            joined.withColumn("__merge_act", F.expr(f"CASE {pick} END"))
+            .filter("__merge_act IS NOT NULL")
+            .selectExpr(
+                "__merge_act",
+                *(
+                    "CASE __merge_act "
+                    + " ".join(f"WHEN {i} THEN {value(c, col)}" for i, c in enumerate(clauses))
+                    + f" END AS `{col}`"
+                    for col in cols
+                ),
+            )
+        )
+        return self._write_ops(
+            acted,
+            "__merge_act",
+            [i for i, c in enumerate(clauses) if c.action != "delete"],
+            [i for i, c in enumerate(clauses) if c.action == "delete"],
+            op="merge",
+        )
 
     def write_cdc(self, df: DataFrame, op_col: str = "_op", extra_meta: dict | None = None) -> str:
         """M13: CDC batch with row kinds — ``_op ∈ {I,U,D}`` interpreted by one sink
@@ -3872,22 +3950,44 @@ class Table:
         ``extra_meta`` rides in the commit's timeline metadata — the hook that
         lets a consumer persist its source offset atomically with the data it
         derived from that offset (exactly-once across restarts)."""
-        # Materialize the batch ONCE before the op split: both filtered
-        # branches re-evaluate the caller's plan otherwise (an IVM refresh
-        # feeds a multi-join union here), and the downstream per-branch
-        # checkpoints in _apply_cow/_apply_mor then read these blocks instead.
-        df = df.localCheckpoint(eager=False)
-        ups = df.filter(F.col(op_col).isin("I", "U", "+I", "+U")).drop(op_col)
-        dels = df.filter(F.col(op_col).isin("D", "-D")).drop(op_col)
-        try:
-            return self._write_changes(upserts=ups, deletes=dels, op="cdc", extra_meta=extra_meta)
-        finally:
-            # blocks are dead once the commit published (the per-branch
-            # checkpoints in _apply_cow copied what they need) — free now
-            # rather than at some future driver GC (ADVICE r10)
-            free_local_checkpoint(df)
+        return self._write_ops(df, op_col, ["I", "U", "+I", "+U"], ["D", "-D"], "cdc", extra_meta)
 
     # ------------------------------------------------------- unified write path
+
+    def _write_ops(
+        self,
+        df: DataFrame,
+        op_col: str,
+        upsert_ops: list,
+        delete_ops: list,
+        op: str,
+        extra_meta: dict | None = None,
+    ) -> str:
+        """Write a batch whose ``op_col`` marks each row an upsert (a value in
+        ``upsert_ops``) or a delete (``delete_ops``); other rows are dropped.
+
+        A batch with both kinds is materialized ONCE before the split: both
+        filtered branches re-evaluate the caller's plan otherwise (an IVM
+        refresh feeds a multi-join union here, a MERGE its join), and the
+        per-branch checkpoints in _apply_cow/_apply_mor then read these
+        blocks instead."""
+        both = bool(upsert_ops and delete_ops)
+        if both:
+            df = df.localCheckpoint(eager=False)
+
+        def rows(ops: list) -> DataFrame | None:
+            return df.filter(F.col(op_col).isin(*ops)).drop(op_col) if ops else None
+
+        try:
+            return self._write_changes(
+                upserts=rows(upsert_ops), deletes=rows(delete_ops), op=op, extra_meta=extra_meta
+            )
+        finally:
+            if both:
+                # blocks are dead once the commit published (the per-branch
+                # checkpoints in _apply_cow copied what they need) — free now
+                # rather than at some future driver GC (ADVICE r10)
+                free_local_checkpoint(df)
 
     def _write_changes(
         self,

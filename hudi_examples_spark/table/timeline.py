@@ -13,6 +13,7 @@ safety property the reference tests with fault injection.
 
 from __future__ import annotations
 
+import copy
 import json
 import os
 import threading
@@ -100,10 +101,11 @@ class Timeline:
 
     def _dir_signature(self) -> tuple | None:
         """Cheap change detector for the timeline directory: the sorted
-        (name, mtime_ns, size) of every instant file, from one ``scandir``
-        (stat-only — no file is opened). Every mutation path changes it:
-        ``write`` publishes via ``os.replace`` of a freshly written tmp (new
-        inode, new mtime_ns), ``remove``/archive unlink entries, and another
+        (name, mtime_ns, size, inode) of every instant file, from one
+        ``scandir`` (stat-only — no file is opened). Every mutation path
+        changes it: ``write`` publishes via ``os.replace`` of a freshly
+        written tmp, which is a new inode even when a same-size rewrite lands
+        within one mtime tick; ``remove``/archive unlink entries, and another
         PROCESS's writes land through the same rename protocol — so the
         signature is as multi-writer-safe as the directory itself. Returns
         None when the directory does not exist yet."""
@@ -111,9 +113,10 @@ class Timeline:
             with os.scandir(self.dir) as it:
                 return tuple(
                     sorted(
-                        (e.name, e.stat().st_mtime_ns, e.stat().st_size)
+                        (e.name, st.st_mtime_ns, st.st_size, st.st_ino)
                         for e in it
                         if e.name.endswith(".json")
+                        for st in (e.stat(),)
                     )
                 )
         except FileNotFoundError:
@@ -238,17 +241,18 @@ class Timeline:
         JSON each call made per-commit driver cost O(total commits) — O(n²)
         across a many-commit fixture. A signature hit costs one stat-only
         ``scandir``; any write (this process or another — the signature keys
-        on (name, mtime_ns, size), and publishes are tmp+rename so content
-        rewrites always present a new inode/mtime) re-reads from disk.
-        Returned ``Instant`` objects are fresh copies per call so a caller
-        mutating ``meta`` (or the lists) cannot corrupt the cache."""
+        on (name, mtime_ns, size, inode), and publishes are tmp+rename so
+        content rewrites always present a new inode) re-reads from disk.
+        Returned ``Instant`` objects are fresh deep copies per call so a
+        caller mutating ``meta`` (nested values included) or the lists
+        cannot corrupt the cache."""
         sig = self._dir_signature()
         if sig is None:
             return []
         cached = self._instants_cache
         if cached is None or cached[0] != sig:
             out = []
-            for fn in sorted(n for n, _m, _s in sig):
+            for fn in sorted(entry[0] for entry in sig):
                 with open(os.path.join(self.dir, fn)) as f:
                     d = json.load(f)
                 out.append(
@@ -268,7 +272,7 @@ class Timeline:
                 i.action,
                 list(i.files_added),
                 list(i.files_removed),
-                dict(i.meta),
+                copy.deepcopy(i.meta),
                 i.committed_at,
             )
             for i in cached[1]

@@ -49,18 +49,32 @@ _SLOW_TESTS = {
 }
 
 
+_SLOW_SKIPPED = pytest.StashKey[int]()
+
+
 def pytest_collection_modifyitems(config, items):
     if os.environ.get("SPARK_GRAFT_FULL_TESTS"):
         return
     skip = pytest.mark.skip(
         reason="slow-by-default (see conftest); SPARK_GRAFT_FULL_TESTS=1 runs it"
     )
+    skipped = 0
     for item in items:
         mod = item.nodeid.split("::", 1)[0].rsplit("/", 1)[-1]
         name = item.nodeid.split("::", 1)[1] if "::" in item.nodeid else ""
         base = name.split("[", 1)[0]
         if mod in _SLOW_MODULES or f"{mod}::{base}" in _SLOW_TESTS:
             item.add_marker(skip)
+            skipped += 1
+    config.stash[_SLOW_SKIPPED] = skipped
+
+
+def pytest_terminal_summary(terminalreporter, exitstatus, config):
+    skipped = config.stash.get(_SLOW_SKIPPED, 0)
+    if skipped:
+        terminalreporter.write_line(
+            f"{skipped} slow tests skipped by default; SPARK_GRAFT_FULL_TESTS=1 runs them"
+        )
 
 
 @pytest.fixture(scope="session")

@@ -1,8 +1,9 @@
 """Model-based property testing: random DML sequences vs an in-memory oracle.
 
 A table is semantically a dict key → (precombine, row) with latest-wins upsert,
-delete-by-key, overwrite, rollback-of-last-commit, and view-preserving compaction.
-Hypothesis drives random op sequences through BOTH the engine (COW and MOR variants
+delete-by-key, overwrite, rollback-of-last-commit, view-preserving compaction, and
+MERGE clause lists with SQL semantics (DuckDB 1.0 has no MERGE, so the model is
+the oracle there). Hypothesis drives random op sequences through BOTH the engine (COW and MOR variants
 of the same sequence) and the model; final snapshots must agree exactly. This is the
 reference's differential-testing idea (SURVEY §5.1) generalized from fixed scripts
 to the op-sequence space.
@@ -15,13 +16,15 @@ specified semantics.
 
 from __future__ import annotations
 
+import os
 from dataclasses import dataclass
 
 import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from hudi_examples_spark.table import Table, TableConfig
+from hudi_examples_spark.sql import Engine
+from hudi_examples_spark.table import MergeClause, Table, TableConfig
 
 KEYS = ["k0", "k1", "k2", "k3", "k4", "k5"]
 PARTS = ["pa", "pb"]
@@ -32,6 +35,8 @@ SCHEMA = "ts BIGINT, uuid STRING, val DOUBLE, part STRING"
 class Op:
     kind: str
     rows: list
+    clauses: tuple = ()
+    via_sql: bool = False
 
 
 row_st = st.tuples(
@@ -40,6 +45,90 @@ row_st = st.tuples(
     st.integers(min_value=0, max_value=999).map(float),
     st.sampled_from(PARTS),
 )
+
+#: MERGE conditions: name -> (SQL over the target/source aliases, the model's
+#: predicate over (target row, source row)); ``{v}`` is the value column's
+#: current name (rename_val ops change it)
+MERGE_CONDS = {
+    "src_big": ("source.{v} >= 500", lambda t, s: s[2] >= 500),
+    "src_newer": ("source.ts > target.ts", lambda t, s: s[0] > t[0]),
+    "src_pb": ("source.part = 'pb'", lambda t, s: s[3] == "pb"),
+    "tgt_pa": ("target.part = 'pa'", lambda t, s: t[3] == "pa"),
+    "tgt_big": ("target.{v} >= 500", lambda t, s: t[2] >= 500),
+}
+#: MERGE assignments: name -> (target column -> SQL, the model's new row);
+#: the star form (``None``) takes the whole source row
+MERGE_SETS = {
+    "src_val": ({"{v}": "source.{v}"}, lambda t, s: (t[0], t[1], s[2], t[3])),
+    "src_ts_val": ({"ts": "source.ts", "{v}": "source.{v}"}, lambda t, s: (s[0], t[1], s[2], t[3])),
+    "bump": ({"{v}": "target.{v} + 1000"}, lambda t, s: (t[0], t[1], t[2] + 1000, t[3])),
+    # INSERT (cols) VALUES (...), columns in a different order than the table
+    "values": (
+        {"uuid": "source.uuid", "part": "'pb'", "{v}": "source.{v} + 0.5", "ts": "source.ts"},
+        lambda t, s: (s[0], s[1], s[2] + 0.5, "pb"),
+    ),
+}
+#: (when, action) -> (assignment choices, condition choices)
+MERGE_SHAPES = {
+    ("matched", "update"): ([None, "src_val", "src_ts_val", "bump"], [None, "src_big", "src_newer", "tgt_pa"]),
+    ("matched", "delete"): ([None], [None, "src_big", "src_newer", "tgt_pa"]),
+    ("not_matched", "insert"): ([None, "values"], [None, "src_big", "src_pb"]),
+    ("not_matched_by_source", "update"): (["bump"], [None, "tgt_big", "tgt_pa"]),
+    ("not_matched_by_source", "delete"): ([None], [None, "tgt_big", "tgt_pa"]),
+}
+
+
+@dataclass(frozen=True)
+class Clause:
+    """One drawn MERGE clause; ``sets``/``cond`` name MERGE_SETS/MERGE_CONDS."""
+
+    when: str
+    action: str
+    sets: str | None
+    cond: str | None
+
+    def merge_clause(self, v: str) -> MergeClause:
+        sets = None
+        if self.sets:
+            sets = {c.format(v=v): e.format(v=v) for c, e in MERGE_SETS[self.sets][0].items()}
+        cond = MERGE_CONDS[self.cond][0].format(v=v) if self.cond else None
+        return MergeClause(self.when, self.action, sets, cond)
+
+    def sql(self, v: str) -> str:
+        c = self.merge_clause(v)
+        head = {
+            "matched": "WHEN MATCHED",
+            "not_matched": "WHEN NOT MATCHED",
+            "not_matched_by_source": "WHEN NOT MATCHED BY SOURCE",
+        }[self.when] + (f" AND {c.condition}" if c.condition else "")
+        if c.action == "delete":
+            act = "DELETE"
+        elif c.assignments is None:
+            act = "UPDATE SET *" if c.action == "update" else "INSERT *"
+        elif c.action == "update":
+            act = "UPDATE SET " + ", ".join(f"{k} = {e}" for k, e in c.assignments.items())
+        else:
+            act = f"INSERT ({', '.join(c.assignments)}) VALUES ({', '.join(c.assignments.values())})"
+        return f"{head} THEN {act}"
+
+
+clause_st = st.sampled_from(sorted(MERGE_SHAPES)).flatmap(
+    lambda wa: st.builds(
+        Clause,
+        st.just(wa[0]),
+        st.just(wa[1]),
+        st.sampled_from(MERGE_SHAPES[wa][0]),
+        st.sampled_from(MERGE_SHAPES[wa][1]),
+    )
+)
+merge_op_st = st.builds(
+    Op,
+    st.just("merge_clauses"),
+    st.lists(row_st, min_size=1, max_size=3),
+    st.lists(clause_st, min_size=1, max_size=4).map(tuple),
+    st.booleans(),
+)
+
 
 op_st = st.one_of(
     st.builds(Op, st.just("upsert"), st.lists(row_st, min_size=1, max_size=4)),
@@ -51,7 +140,7 @@ op_st = st.one_of(
     st.builds(Op, st.just("log_compact"), st.just([])),
     st.builds(Op, st.just("sched_compact"), st.just([])),
     st.builds(Op, st.just("sched_cluster"), st.just([])),
-    st.builds(Op, st.just("merge_partial"), st.lists(row_st, min_size=1, max_size=3)),
+    merge_op_st,
     st.builds(Op, st.just("update_where"), st.just([])),
     st.builds(Op, st.just("cluster_sort"), st.just([])),
     st.builds(Op, st.just("rename_val"), st.just([])),
@@ -62,6 +151,21 @@ op_st = st.one_of(
     st.builds(Op, st.just("split"), st.just([])),
     st.builds(Op, st.just("drop_part"), st.just([])),
 )
+
+
+def _sql_clauses(clauses):
+    """The clause list in the form Spark's grammar accepts: grouped by kind
+    in matched, not matched, not matched by source order (a row only meets
+    the clauses of its own kind, so grouping changes nothing), without the
+    unreachable clauses after an unconditional one of the same kind."""
+    order = ["matched", "not_matched", "not_matched_by_source"]
+    out, closed = [], set()
+    for c in sorted(clauses, key=lambda c: order.index(c.when)):
+        if c.when not in closed:
+            out.append(c)
+            if c.cond is None:
+                closed.add(c.when)
+    return out
 
 
 def _key_unique(rows):
@@ -107,17 +211,27 @@ class Model:
         if self.history:
             self.state = self.history.pop()
 
-    def merge_partial(self, rows):
-        """MERGE: matched → set (ts, val) from source keeping the current
-        partition, subject to precombine (an older source ts loses, exactly as
-        the engine's upsert merge resolves it); not-matched → insert."""
+    def merge_clauses(self, rows, clauses):
+        """SQL MERGE: every key takes the first clause of its kind (matched,
+        not matched, not matched by source) whose condition holds, and a key
+        no clause takes stays as it is. Updates are subject to precombine
+        (an older ts loses, exactly as the engine's upsert merge resolves
+        it); inserts are new keys."""
         self._snapshot()
-        for ts, uuid, val, part in rows:
-            cur = self.state.get(uuid)
-            if cur is None:
-                self.state[uuid] = (ts, uuid, val, part)
-            elif ts >= cur[0]:
-                self.state[uuid] = (ts, uuid, val, cur[3])
+        src = {r[1]: r for r in rows}
+        for k in sorted(set(self.state) | set(src)):
+            t, s = self.state.get(k), src.get(k)
+            when = "matched" if t and s else "not_matched" if s else "not_matched_by_source"
+            for c in clauses:
+                if c.when != when or (c.cond and not MERGE_CONDS[c.cond][1](t, s)):
+                    continue
+                if c.action == "delete":
+                    del self.state[k]
+                else:
+                    new = MERGE_SETS[c.sets][1](t, s) if c.sets else s
+                    if t is None or new[0] >= t[0]:
+                        self.state[k] = new
+                break
 
     def update_where(self, threshold: float, bump: float):
         self._snapshot()
@@ -149,6 +263,7 @@ def apply_ops(spark, tbl: Table, model: Model, ops: list[Op]):
         return [c for c in tbl.data_cols if c not in ("ts", "uuid", "part")][0]
 
     checkpoints: list[tuple[str, dict]] = []
+    engine: list = [None]  # SQL front door over tbl, made on first use
     saved: list = [None]  # latest savepoint: (instant, history_len, state, ckpt_len)
 
     def ckpt():
@@ -174,21 +289,27 @@ def apply_ops(spark, tbl: Table, model: Model, ops: list[Op]):
             tbl.insert_overwrite(df(rows))
             model.overwrite(rows)
             ckpt()
-        elif op.kind == "merge_partial":
+        elif op.kind == "merge_clauses":
             rows = _key_unique(op.rows)
             v = vname()
-            # merge addresses the CURRENT schema (its partial-update map sets
-            # target columns by name), so the source uses the renamed column
+            # MERGE addresses the CURRENT schema (its assignments and stars
+            # name target columns), so the source uses the renamed column
             src = spark.createDataFrame(
                 rows, f"ts BIGINT, uuid STRING, {v} DOUBLE, part STRING"
             )
-            tbl.merge(
-                src,
-                on={"uuid": "uuid"},
-                when_matched={"ts": "__src_ts", v: f"__src_{v}"},
-                when_not_matched="insert_all",
-            )
-            model.merge_partial(rows)
+            if op.via_sql:
+                if engine[0] is None:
+                    engine[0] = Engine(spark, os.path.join(os.path.dirname(tbl.base), "wh"))
+                    engine[0].register("t", tbl)
+                src.createOrReplaceTempView("merge_src")
+                engine[0].sql(
+                    "MERGE INTO t AS target USING merge_src AS source "
+                    "ON target.uuid = source.uuid "
+                    + " ".join(c.sql(v) for c in _sql_clauses(op.clauses))
+                )
+            else:
+                tbl.merge(src, on={"uuid": "uuid"}, clauses=[c.merge_clause(v) for c in op.clauses])
+            model.merge_clauses(rows, op.clauses)
             ckpt()
         elif op.kind == "update_where":
             v = vname()
@@ -296,9 +417,28 @@ def apply_ops(spark, tbl: Table, model: Model, ops: list[Op]):
     return checkpoints
 
 
+def _check_against_model(tbl: Table, model: Model, checkpoints: list, ops: list[Op]) -> None:
+    # positional tuples: rename_val may change the val column's NAME, but
+    # field order is stable, so tuples line up with the model regardless
+    cols = tbl.data_cols
+    got = sorted(tuple(r) for r in tbl.read().select(*cols).collect())
+    assert got == model.rows(), f"ops={ops}\nengine={got}\nmodel={model.rows()}"
+    # time-travel invariant: read(as_of=instant_i) reproduces the model state
+    # right after op i (sample first/middle/last to bound test cost)
+    sample = {0, len(checkpoints) // 2, len(checkpoints) - 1} if checkpoints else set()
+    for i in sorted(sample):
+        instant, state = checkpoints[i]
+        tt = sorted(tuple(r) for r in tbl.read(as_of=instant).select(*cols).collect())
+        expect = sorted(state.values())
+        assert tt == expect, (
+            f"time-travel divergence at ckpt {i} (instant {instant}):\n"
+            f"ops={ops}\nengine={tt}\nmodel={expect}"
+        )
+
+
 @settings(
     # PROP_EXAMPLES=60 for soak runs; 10 keeps the default suite fast
-    max_examples=int(__import__("os").environ.get("PROP_EXAMPLES", "10")),
+    max_examples=int(os.environ.get("PROP_EXAMPLES", "10")),
     deadline=None,
     suppress_health_check=list(HealthCheck),
 )
@@ -322,22 +462,7 @@ def test_random_dml_sequences_match_model(spark, tmp_path_factory, ops, table_ty
         tbl.create_record_index()
     model = Model()
     checkpoints = apply_ops(spark, tbl, model, ops)
-    # positional tuples: rename_val may change the val column's NAME, but
-    # field order is stable, so tuples line up with the model regardless
-    cols = tbl.data_cols
-    got = sorted(tuple(r) for r in tbl.read().select(*cols).collect())
-    assert got == model.rows(), f"ops={ops}\nengine={got}\nmodel={model.rows()}"
-    # time-travel invariant: read(as_of=instant_i) reproduces the model state
-    # right after op i (sample first/middle/last to bound test cost)
-    sample = {0, len(checkpoints) // 2, len(checkpoints) - 1} if checkpoints else set()
-    for i in sorted(sample):
-        instant, state = checkpoints[i]
-        tt = sorted(tuple(r) for r in tbl.read(as_of=instant).select(*cols).collect())
-        expect = sorted(state.values())
-        assert tt == expect, (
-            f"time-travel divergence at ckpt {i} (instant {instant}):\n"
-            f"ops={ops}\nengine={tt}\nmodel={expect}"
-        )
+    _check_against_model(tbl, model, checkpoints, ops)
     if table_type == "cow_rli":
         # index equivalence after whatever the sequence did: re-certify if a
         # rollback invalidated it, then point reads must equal filtered scans
@@ -346,6 +471,7 @@ def test_random_dml_sequences_match_model(spark, tmp_path_factory, ops, table_ty
             t2.rebuild_record_index()
         from pyspark.sql import functions as F
 
+        cols = tbl.data_cols
         for k in KEYS[:3]:
             via_idx = sorted(tuple(r) for r in t2.lookup_key(k).select(*cols).collect())
             via_scan = sorted(
@@ -353,3 +479,32 @@ def test_random_dml_sequences_match_model(spark, tmp_path_factory, ops, table_ty
                 for r in t2.read().filter(F.col(cols[1]) == k).select(*cols).collect()
             )
             assert via_idx == via_scan, f"RLI divergence for {k}: ops={ops}"
+
+
+@settings(
+    max_examples=int(os.environ.get("PROP_EXAMPLES", "10")),
+    deadline=None,
+    suppress_health_check=list(HealthCheck),
+)
+@given(
+    ops=st.lists(
+        st.one_of(
+            st.builds(Op, st.just("upsert"), st.lists(row_st, min_size=2, max_size=5)),
+            merge_op_st,
+        ),
+        min_size=2,
+        max_size=4,
+    )
+)
+@pytest.mark.parametrize("partition_by", [["part"], []], ids=["partitioned", "flat"])
+@pytest.mark.parametrize("table_type", ["cow", "mor"])
+def test_random_merge_clauses_match_model(spark, tmp_path_factory, ops, table_type, partition_by):
+    """MERGE-heavy sequences: random clause lists through Table.merge and
+    the SQL front door against the model, partitioned and not."""
+    tmp_path = tmp_path_factory.mktemp(f"merge_{table_type}")
+    cfg = TableConfig(
+        record_key=["uuid"], precombine="ts", partition_by=partition_by, table_type=table_type
+    )
+    tbl = Table.create(spark, str(tmp_path / "t"), SCHEMA, cfg)
+    model = Model()
+    _check_against_model(tbl, model, apply_ops(spark, tbl, model, ops), ops)

@@ -367,3 +367,80 @@ def test_call_run_bootstrap(engine, spark, tmp_path):
         == 5
     )
     assert "boot_t" in engine.table_names()
+
+
+# --------------------------------------------------------------------------
+# MERGE clause semantics: clauses run in order, the first whose condition
+# holds acts, and a row no clause takes stays as it is. Target rows 1-3,
+# source rows 2-4 (2 and 3 matched, 4 new).
+
+MERGE_SRC = (
+    "(SELECT 2 AS id, 'B' AS v, 21 AS n, 2L AS ts "
+    "UNION ALL SELECT 3, 'C', 31, 2L UNION ALL SELECT 4, 'D', 41, 2L)"
+)
+BEFORE = [(1, "a", 10, 1), (2, "b", 20, 1), (3, "c", 30, 1)]
+
+
+@pytest.fixture(params=["cow", "mor"])
+def merge_target(engine, request):
+    engine.sql(
+        "CREATE TABLE m (id INT, v STRING, n INT, ts BIGINT) USING hudi "
+        f"TBLPROPERTIES (primaryKey = 'id', preCombineField = 'ts', type = '{request.param}')"
+    )
+    engine.sql("INSERT INTO m VALUES (1, 'a', 10, 1), (2, 'b', 20, 1), (3, 'c', 30, 1)")
+    return engine
+
+
+def _merged(engine, clauses: str, head: str = "MERGE INTO m AS t USING {src} AS s") -> list:
+    engine.sql(head.format(src=MERGE_SRC) + " ON t.id = s.id " + clauses)
+    return sorted(tuple(r) for r in engine.sql("SELECT id, v, n, ts FROM m").collect())
+
+
+def test_merge_insert_only_keeps_matched_rows(merge_target):
+    got = _merged(merge_target, "WHEN NOT MATCHED THEN INSERT *")
+    assert got == BEFORE + [(4, "D", 41, 2)]
+
+
+def test_merge_update_only_inserts_nothing(merge_target):
+    got = _merged(merge_target, "WHEN MATCHED THEN UPDATE SET *")
+    assert got == [(1, "a", 10, 1), (2, "B", 21, 2), (3, "C", 31, 2)]
+
+
+def test_merge_conditional_delete(merge_target):
+    got = _merged(merge_target, "WHEN MATCHED AND s.n > 25 THEN DELETE")
+    assert got == [(1, "a", 10, 1), (2, "b", 20, 1)]
+
+
+def test_merge_insert_column_list_values(merge_target):
+    got = _merged(
+        merge_target, "WHEN NOT MATCHED THEN INSERT (ts, id, v) VALUES (s.ts, s.id, lower(s.v))"
+    )
+    assert got == BEFORE + [(4, "d", None, 2)]
+
+
+def test_merge_conditional_update_all(merge_target):
+    got = _merged(
+        merge_target, "WHEN MATCHED AND s.n > 25 THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"
+    )
+    assert got == [(1, "a", 10, 1), (2, "b", 20, 1), (3, "C", 31, 2), (4, "D", 41, 2)]
+
+
+def test_merge_aliases_without_as(merge_target):
+    got = _merged(
+        merge_target,
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *",
+        head="MERGE INTO m t USING {src} s",
+    )
+    assert got == [(1, "a", 10, 1), (2, "B", 21, 2), (3, "C", 31, 2), (4, "D", 41, 2)]
+
+
+def test_unsupported_statements_raise(engine):
+    engine.sql("CREATE TABLE u (id INT, ts BIGINT) TBLPROPERTIES (primaryKey = 'id')")
+    for bad in (
+        "DROP VIEW some_view",
+        "TRUNCATE TABLE u",
+        "MERGE INTO u AS t USING u AS s ON t.id > s.id WHEN MATCHED THEN DELETE",
+        "SELEC 1",
+    ):
+        with pytest.raises(ValueError, match="unsupported"):
+            engine.sql(bad)

@@ -9,7 +9,7 @@ from __future__ import annotations
 
 import pytest
 
-from hudi_examples_spark.table import Table, TableConfig
+from hudi_examples_spark.table import MergeClause, Table, TableConfig
 
 TRIPS_SCHEMA = "ts BIGINT, uuid STRING, rider STRING, driver STRING, fare DOUBLE, city STRING"
 
@@ -121,7 +121,11 @@ def test_merge_partial_update(spark, tmp_path):
     tbl = make_table(spark, tmp_path)
     tbl.insert(trips_df(spark))
     src = spark.createDataFrame([("334e26e9", 123.45)], "uuid STRING, new_fare DOUBLE")
-    tbl.merge(src, on={"uuid": "uuid"}, when_matched={"fare": "__src_new_fare"}, when_not_matched=None)
+    tbl.merge(
+        src,
+        on={"uuid": "uuid"},
+        clauses=[MergeClause("matched", "update", {"fare": "source.new_fare"})],
+    )
     row = tbl.read().filter("uuid = '334e26e9'").collect()[0]
     assert row["fare"] == 123.45 and row["rider"] == "rider-A"  # other cols kept
     assert tbl.count() == 8
@@ -132,7 +136,7 @@ def test_merge_matched_delete(spark, tmp_path):
     tbl = make_table(spark, tmp_path)
     tbl.insert(trips_df(spark))
     src = spark.createDataFrame([("334e26e9",), ("nope",)], "uuid STRING")
-    tbl.merge(src, on={"uuid": "uuid"}, when_matched="delete", when_not_matched=None)
+    tbl.merge(src, on={"uuid": "uuid"}, clauses=[MergeClause("matched", "delete")])
     assert tbl.count() == 7
     assert tbl.read().filter("uuid = '334e26e9'").count() == 0
 

@@ -4,6 +4,8 @@ or a single row — the states every long-lived table passes through first."""
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from hudi_examples_spark.table import Table, TableConfig
@@ -75,3 +77,35 @@ def test_incremental_and_cdc_on_empty_window(spark, empty):
     # window starting at the latest instant: no changes after it
     assert empty.table_changes(start=latest).count() == 0
     assert empty.table_changes_cdc(start=latest).count() == 0
+
+
+def _table_files(base: str) -> list[str]:
+    return sorted(
+        os.path.relpath(os.path.join(root, fn), base)
+        for root, _dirs, fns in os.walk(base)
+        if ".staging" not in root
+        for fn in fns
+        if fn.endswith(".parquet")
+    )
+
+
+def test_large_corrupt_staged_file_fails_before_any_rename(spark, empty, monkeypatch):
+    """Every staged footer is read before promotion: a corrupt part file of
+    64 KB or more fails the write while the table directory is untouched."""
+    from pyspark.sql.readwriter import DataFrameWriter
+
+    empty.upsert(spark.createDataFrame([(1, "a", 1.0, "p")], SCHEMA))
+    before = _table_files(empty.base)
+    original = DataFrameWriter.parquet
+
+    def write_then_corrupt(self, path, *args, **kwargs):
+        original(self, path, *args, **kwargs)
+        with open(os.path.join(path, "part-99999-corrupt.parquet"), "wb") as f:
+            f.write(os.urandom(70_000))
+
+    monkeypatch.setattr(DataFrameWriter, "parquet", write_then_corrupt)
+    with pytest.raises(Exception):
+        empty.upsert(spark.createDataFrame([(2, "b", 2.0, "p")], SCHEMA))
+    monkeypatch.undo()
+    assert _table_files(empty.base) == before
+    assert sorted(tuple(r) for r in empty.read().collect()) == [(1, "a", 1.0, "p")]

@@ -208,3 +208,26 @@ def test_clean_keep_latest_by_hours(spark, tmp_path):
 
     with pytest.raises(ValueError, match="commits|hours"):
         t2.clean(policy="versions")
+
+
+def test_instants_cache_sees_same_size_rewrite_within_one_tick(tmp_path):
+    """A rewrite of an instant file with the same size inside one mtime tick
+    must still invalidate the cached instants: the publish's rename is a new
+    inode even when (name, mtime_ns, size) repeat."""
+    tl = Timeline(str(tmp_path))
+    inst = new_instant()
+    tl.write(Instant(inst, "commit", ["a.parquet"], [], {"v": "a"}, committed_at=1.0))
+    path = os.path.join(tl.dir, f"{inst}.commit.json")
+    st = os.stat(path)
+    assert tl.instants()[0].meta == {"v": "a"}
+    tl.write(Instant(inst, "commit", ["a.parquet"], [], {"v": "b"}, committed_at=1.0))
+    os.utime(path, ns=(st.st_atime_ns, st.st_mtime_ns))  # same tick
+    assert os.stat(path).st_size == st.st_size
+    assert tl.instants()[0].meta == {"v": "b"}
+
+
+def test_instants_copies_nested_meta(tmp_path):
+    tl = Timeline(str(tmp_path))
+    tl.write(Instant(new_instant(), "commit", ["a.parquet"], [], {"plan": {"files": ["x"]}}))
+    tl.instants()[0].meta["plan"]["files"].append("mutated")
+    assert tl.instants()[0].meta == {"plan": {"files": ["x"]}}

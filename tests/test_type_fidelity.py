@@ -27,7 +27,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
-from hudi_examples_spark.table import Table, TableConfig
+from hudi_examples_spark.table import MergeClause, Table, TableConfig
 
 SCHEMA = StructType(
     [
@@ -278,8 +278,7 @@ def test_sql_literal_types_conform_through_dml(spark, tmp_path):
         tbl.update_where("k = 'a'", {"v": "1.0"})  # decimal literal into DOUBLE
         tbl.merge(
             spark.createDataFrame([("b", 200)], "k STRING, v BIGINT"),  # long into DOUBLE
-            when_matched={"v": "__src_v"},
-            when_not_matched=None,
+            clauses=[MergeClause("matched", "update", {"v": "source.v"})],
         )
         got = {r["k"]: r["v"] for r in tbl.read().collect()}
         assert got == {"a": 1.0, "b": 200.0}
