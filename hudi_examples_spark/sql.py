@@ -39,7 +39,7 @@ _SHOW_INDEXES = re.compile(r"SHOW\s+INDEXES\s+(?:FROM|ON|IN)\s+(\w+)\s*$", re.I)
 _TIME_TRAVEL = re.compile(r"FROM\s+(\w+)\s+TIMESTAMP\s+AS\s+OF\s+'([^']+)'", re.I)
 _TVF = re.compile(r"\b(hudi_table_changes|hudi_metadata)\s*\(([^)]*)\)", re.I)
 
-_MERGE_ACTIONS = {
+_MERGE_ACTION_OF_CLASS = {
     "DeleteAction": "delete",
     "UpdateAction": "update",
     "UpdateStarAction": "update",
@@ -499,15 +499,14 @@ class Engine:
     @staticmethod
     def _merge_clause(when: str, action) -> MergeClause:
         kind = _kind(action)
-        if kind not in _MERGE_ACTIONS:
+        if kind not in _MERGE_ACTION_OF_CLASS:
             raise ValueError(f"unsupported MERGE action {kind}")
         cond = action.condition()
         assignments = None
         if kind in ("UpdateAction", "InsertAction"):
             assignments = {_column(a.key()): a.value().sql() for a in _seq(action.assignments())}
-        return MergeClause(
-            when, _MERGE_ACTIONS[kind], assignments, cond.get().sql() if cond.isDefined() else None
-        )
+        condition = cond.get().sql() if cond.isDefined() else None
+        return MergeClause(when, _MERGE_ACTION_OF_CLASS[kind], assignments, condition)
 
     # --------------------------------------------------------------- CALL procs
 
