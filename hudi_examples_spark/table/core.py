@@ -3728,7 +3728,11 @@ class Table:
           that can actually hold its keys (the bulk-load analogue of
           ``cluster_sort``; at 100 TB this is the difference between a
           sorted initial load that stays prunable forever and one that needs
-          a full clustering pass later)."""
+          a full clustering pass later). It writes
+          ``max(defaultParallelism, 8)`` range-partitioned files — the same
+          rule as ``cluster_sort`` — so the count never falls to one file on
+          a small host: a single file's key range spans every key, and no
+          keyed write could prune it."""
         if sort_mode not in ("none", "partition_sort", "global_sort"):
             raise ValueError(
                 f"sort_mode must be none|partition_sort|global_sort, got {sort_mode!r}"
@@ -3738,7 +3742,7 @@ class Table:
         if dedup and self.config.record_key:
             out = self._latest_wins(out)
         if sort_mode == "global_sort" and self.config.record_key:
-            n = max(self.spark.sparkContext.defaultParallelism // 4, 1)
+            n = max(self.spark.sparkContext.defaultParallelism, 8)
             rels = self._write_files(out, instant, range_key_layout=n)
         elif sort_mode == "partition_sort" and self.config.record_key:
             sort_cols = [F.col(c) for c in self.config.partition_by] + [F.col(META_KEY)]
