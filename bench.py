@@ -75,19 +75,6 @@ HEADLINE_V3 = [
     "stream_minhash_dedup",
 ]
 
-#: Historical calibration anchor: micro_agg_sec from BENCH_r04.json, recorded
-#: at loadavg 4.1. DEAD as a live reference since round 5: the host floor
-#: moved to ~0.19-0.25 at ANY load (hypervisor steal invisible to guest
-#: loadavg — PLANS.md has the all-day measurement), so ratios against it
-#: conflate host-era drift with run-to-run contention. Kept for cross-era
-#: context only.
-MICRO_AGG_REF_R4 = 0.089
-
-#: r5/r6 era anchor: the hypervisor-steal era's observed floor (0.219 from
-#: the committed r5 quiet-window run). That era ENDED during round 7 — kept
-#: for cross-era context only, like the r4 constant above.
-MICRO_AGG_REF_R5R6 = 0.219
-
 #: Live calibration anchor (third host era, measured round 7): 10 back-to-
 #: back idle micro-ops gave [0.186, 0.184, 0.171, 0.149, 0.147, 0.163,
 #: 0.182, 0.144, 0.146] → floor 0.144 at loadavg <1 — between the r4 fast

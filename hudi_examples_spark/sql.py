@@ -296,41 +296,25 @@ class Engine:
         expression, generation, and validity (invalid = rollback invalidated
         it; probes fall back to scans until rebuilt)."""
         rows = []
-        rmeta = tbl._record_index_meta()
-        if rmeta is not None:
-            rows.append(
-                (
-                    "record_index",
-                    "record_index",
-                    ",".join(tbl.config.record_key),
-                    int(rmeta.get("gen", 0)),
-                    bool(rmeta.get("valid", True)),
-                )
-            )
-        for name in tbl.secondary_index_cols():
+        for name in tbl.index_names():
             meta = tbl._index_meta(name)
-            if meta is None:
-                continue
-            kind = (
-                "secondary_index"
-                if meta["expr"].strip() in tbl.schema.names
-                else "expression_index"
-            )
-            rows.append(
-                (name, kind, meta["expr"], int(meta.get("gen", 0)), bool(meta.get("valid", True)))
-            )
+            if meta is not None:
+                rows.append(
+                    (
+                        name,
+                        tbl._index_type(name, meta),
+                        meta["expr"],
+                        int(meta["gen"]),
+                        bool(meta["valid"]),
+                    )
+                )
         return self.spark.createDataFrame(
             rows,
             "indexName STRING, indexType STRING, expr STRING, generation INT, valid BOOLEAN",
         )
 
     def _drop_index(self, plan, s: str) -> None:
-        tbl = self._table_of(plan)
-        index = plan.indexName()
-        if index.lower() == "record_index":
-            tbl.drop_record_index()
-        else:
-            tbl.drop_secondary_index(index)
+        self._table_of(plan).drop_index(plan.indexName())
 
     # ---------------------------------------------------------------------- DDL
 
@@ -680,10 +664,7 @@ class Engine:
         if proc == "rebuild_index":
             if not arg:
                 raise ValueError("rebuild_index requires the index name")
-            if arg.lower() == "record_index":
-                tbl.rebuild_record_index()
-            else:
-                tbl.rebuild_index(arg)
+            tbl.rebuild_index(arg)
             return None
         if proc == "run_archival":
             tbl.archive_timeline(retain_instants=int(arg) if arg else 20)

@@ -39,6 +39,7 @@ from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
 from dataclasses import fields as dataclass_fields
 
+from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType, StringType, StructField, StructType
@@ -86,8 +87,11 @@ def _no_aqe(spark: SparkSession):
     data-scale shuffle width just schedules empty tasks; r10 measured the
     width pin at ~40% of each planning job's wall-clock at local scale, and
     at cluster scale the per-task scheduling overhead grows, not shrinks.
-    Safe because engine writes are driver-sequential (the only in-process
-    threads are the footer-stat readers, which never touch SQL conf)."""
+    The toggle is session-wide, not scoped to the calling thread: two
+    threads toggling one session can interleave and leave AQE off for good.
+    Each in-process writer thread therefore needs a session of its own —
+    ``ServiceScheduler`` runs its passes on ``spark.newSession()``; the
+    footer-stat reader threads never touch SQL conf."""
     prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
     prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -786,17 +790,12 @@ class Table:
             stamp_status, stamp_detail = "ok", ""
         rows.append(("timeline_completion_stamps", stamp_status, stamp_detail))
         bad_idx = []
-        for name in self.secondary_index_cols():
+        for name in self.index_names():
             meta = self._index_meta(name)
-            if meta is not None and meta.get("valid") and not os.path.isdir(
+            if meta is not None and meta["valid"] and not os.path.isdir(
                 self._index_data_dir(name, meta)
             ):
                 bad_idx.append(name)
-        rmeta = self._record_index_meta()
-        if rmeta is not None and rmeta.get("valid") and not os.path.isdir(
-            self._record_index_data_dir(rmeta)
-        ):
-            bad_idx.append("_record")
         rows.append(
             ("index_meta_coherent", "ok" if not bad_idx else "fail",
              "" if not bad_idx else f"valid meta, missing data dir: {bad_idx}")
@@ -1393,9 +1392,332 @@ class Table:
         hit = set(keys.rdd.mapPartitions(probe).distinct().collect())
         return sorted(hit | set(unknown))
 
-    # ------------------------------------------------------- secondary index
+    # ---------------------------------------------------------------- indexes
+    #
+    # One generational protocol serves every index. An index is a dir holding
+    # ``meta.json`` and generation dirs (``data`` = generation 0, then
+    # ``data_gNNNN``), each a base build plus one ``append_*`` dir per commit.
+    # A kind supplies only its entries (``_index_entries``) and the column its
+    # build sorts on: value indexes (secondary/expression, ``_index/<name>/``)
+    # map (val, key), the record index (``_record_index/``) maps (key, rel).
 
     INDEX_DIR = "_index"
+    RECORD_INDEX_DIR = "_record_index"
+    #: reserved name of the record index in ``index_names`` / ``rebuild_index``
+    #: / ``drop_index`` and in SQL
+    RECORD_INDEX = "record_index"
+
+    def index_names(self) -> list[str]:
+        """Every index of the table: the record index (if built) first, then
+        the secondary/expression indexes by name."""
+        rec = os.path.exists(os.path.join(self._index_dir(self.RECORD_INDEX), "meta.json"))
+        return ([self.RECORD_INDEX] if rec else []) + self.secondary_index_cols()
+
+    def secondary_index_cols(self) -> list[str]:
+        """Names of the secondary/expression (value) indexes."""
+        d = os.path.join(self.base, self.INDEX_DIR)
+        if not os.path.isdir(d):
+            return []
+        return sorted(
+            c
+            for c in os.listdir(d)
+            if not c.startswith(".")  # .trash-* from drop_index
+            and os.path.exists(os.path.join(d, c, "meta.json"))
+        )
+
+    def _index_dir(self, name: str) -> str:
+        if name == self.RECORD_INDEX:
+            return os.path.join(self.base, self.RECORD_INDEX_DIR)
+        return os.path.join(self.base, self.INDEX_DIR, name)
+
+    def _index_type(self, name: str, meta: dict) -> str:
+        """SHOW INDEXES' type: record_index, or secondary_index for a bare
+        column and expression_index for anything else."""
+        if name == self.RECORD_INDEX:
+            return "record_index"
+        return "secondary_index" if meta["expr"].strip() in self.schema.names else "expression_index"
+
+    def _index_meta(self, name: str) -> dict | None:
+        p = os.path.join(self._index_dir(name), "meta.json")
+        if not os.path.exists(p):
+            return None
+        with open(p) as f:
+            meta = json.load(f)
+        # the record index is defined by the record key; plain
+        # pre-expression value metas carry only "col"
+        meta.setdefault(
+            "expr",
+            ",".join(self.config.record_key)
+            if name == self.RECORD_INDEX
+            else meta.get("col", name),
+        )
+        meta.setdefault("gen", 0)
+        meta.setdefault("valid", True)
+        return meta
+
+    def _write_index_meta(self, name: str, meta: dict) -> None:
+        p = os.path.join(self._index_dir(name), "meta.json")
+        tmp = p + ".tmp"
+        with open(tmp, "w") as f:
+            json.dump(meta, f)
+        os.replace(tmp, p)
+
+    def _index_data_dir(self, name: str, meta: dict | None = None) -> str:
+        """Current data directory of an index. Generation 0 is the legacy
+        ``data`` path; every rebuild bumps the generation and points the meta
+        at a fresh ``data_g{N}`` dir so the swap is one atomic meta replace —
+        concurrent readers mid-scan of the old generation never hit a vanished
+        path (old generations are swept later by ``heal``, age-gated)."""
+        meta = meta if meta is not None else (self._index_meta(name) or {})
+        gen = meta.get("gen", 0)
+        sub = "data" if gen == 0 else f"data_g{gen:04d}"
+        return os.path.join(self._index_dir(name), sub)
+
+    def _index_append_dir(self, data_dir: str) -> str:
+        """Unique subdirectory for one commit's index entries.
+
+        Concurrent writers may maintain the same index at the same moment; a
+        shared ``mode("append")`` into one directory is NOT safe — Hadoop's
+        FileOutputCommitter stages every job under the same ``_temporary/0``
+        path, so one job's commit sweeps the other's in-flight attempt dirs
+        (found by tests/test_services_soak.py). Per-commit subdirectories
+        give every append its own committer scope, exactly like log files in
+        a file group; readers glob the generation recursively."""
+        import uuid as _uuid
+
+        return os.path.join(data_dir, f"append_{_uuid.uuid4().hex[:16]}")
+
+    def _read_index_entries(self, name: str, meta: dict | None = None) -> DataFrame:
+        """The current generation's entries — recursive lookup because
+        appends live in per-commit subdirectories."""
+        return (
+            self.spark.read.option("recursiveFileLookup", "true")
+            .parquet(self._index_data_dir(name, meta))
+        )
+
+    def _index_entries(
+        self,
+        name: str,
+        meta: dict,
+        rels: list[str],
+        partial_cols: list[str] | None = None,
+        snapshot: bool = False,
+    ) -> DataFrame | None:
+        """The kind hook of the protocol: the entries of the data files
+        ``rels`` — (key, rel) pairs for the record index (``_record_entries_for``),
+        non-null (val, key) pairs for a value index. ``snapshot`` (a build)
+        derives a value index from the merged snapshot instead, so the fresh
+        generation holds only current values. None when there is nothing to
+        write: no parquet file, or a partial-update commit (``partial_cols``)
+        that provides none of a value index's columns — its values are
+        unchanged and the existing entries stay complete."""
+        if name == self.RECORD_INDEX:
+            return self._record_entries_for(rels)
+        if partial_cols is not None and not self._index_expr_refs(meta["expr"]) <= set(
+            partial_cols
+        ):
+            return None
+        src = self.read(with_meta=True) if snapshot else self._read_files(rels, with_deleted=False)
+        return (
+            src.select(F.expr(meta["expr"]).alias("val"), F.col(META_KEY).alias("key"))
+            .where(F.col("val").isNotNull())
+        )
+
+    def _append_index_entries(
+        self, name: str, meta: dict, rels: list[str], partial_cols: list[str] | None = None
+    ) -> None:
+        """Write the entries of ``rels`` as one more ``append_*`` dir of the
+        generation ``meta`` names."""
+        entries = self._index_entries(name, meta, rels, partial_cols) if rels else None
+        if entries is None:
+            return
+        # _no_aqe (r10): an exchange-free plan (column-pruned scan of the
+        # commit's files → project → write); AQE only splits it into extra
+        # stage-jobs (measured 2 → 1 job per commit), with no shuffle to
+        # coalesce.
+        with _no_aqe(self.spark):
+            entries.write.mode("overwrite").parquet(
+                self._index_append_dir(self._index_data_dir(name, meta))
+            )
+
+    def _build_index(self, name: str, meta: dict) -> None:
+        """Build a generation of an index — generation 0 for a create (``meta``
+        without ``gen``), the next one for a rebuild — and publish it.
+
+        Concurrency-safe, unlike a naive dir swap: the fresh mapping is built
+        into a NEW generation directory off-lock (the expensive scan), then
+        under the timeline lock we (a) catch up entries of every live file the
+        build did not cover and (b) swap by atomically replacing meta.json to
+        point at the new generation. The catch-up is a FILE delta, not an
+        instant delta: a slow writer whose instant id predates the build
+        snapshot can publish between the build's read and this locked swap
+        (its publish guard still saw the old generation), and an id-based
+        filter misses exactly that writer — caught once by test_record_index's
+        writer+rebuild storm under heavy host contention. A writer that
+        publishes after we release sees the new generation in its own locked
+        publish guard (``_index_publish_guard``) and re-appends into it, so
+        no mapping is ever lost. Duplicate entries are superset-safe. The old
+        generation stays on disk for in-flight readers; ``heal`` sweeps
+        superseded generations age-gated."""
+        gen = meta.get("gen", -1) + 1
+        fresh = self._index_data_dir(name, {"gen": gen})
+        shutil.rmtree(fresh, ignore_errors=True)
+        snap = self.latest_instant() or ""
+        # captured BEFORE the read, so a file publishing mid-build lands in the
+        # catch-up delta — at worst indexed twice, superset-safe
+        built = sorted(self.timeline.live_files()[0])
+        entries = self._index_entries(name, meta, built, snapshot=True)
+        if entries is None:
+            entries = self.spark.createDataFrame([], "key STRING, rel STRING")
+        col = "key" if name == self.RECORD_INDEX else "val"
+        n = max(self.spark.sparkContext.defaultParallelism // 4, 1)
+        (
+            entries.repartitionByRange(n, col)
+            .sortWithinPartitions(col)
+            .write.mode("overwrite")
+            .parquet(fresh)
+        )
+        lock = os.path.join(self.base, TIMELINE_DIR, "_lock")
+        os.makedirs(os.path.dirname(lock), exist_ok=True)
+        fd = _acquire_lock(lock, self.LOCK_TTL_SECONDS, 30.0)
+        try:
+            late = sorted(set(self.timeline.live_files()[0]) - set(built))
+            self._append_index_entries(name, {**meta, "gen": gen}, late)
+            meta.update(
+                {"gen": gen, "valid": True, "rebuilt_as_of" if gen else "built_as_of": snap}
+            )
+            self._write_index_meta(name, meta)
+        finally:
+            _release_lock(fd, lock)
+
+    def rebuild_index(self, name: str) -> None:
+        """Compact an index's append-only superset back to the exact current
+        mapping (drops stale values of updated rows, entries of deleted rows
+        and of dead files) and clear any invalidation marker left by
+        ``rollback`` — Hudi's async indexer. ``name`` is a secondary/expression
+        index or ``record_index``. One generational build (``_build_index``):
+        concurrent writers and readers are safe throughout."""
+        name = self.RECORD_INDEX if name.lower() == self.RECORD_INDEX else name
+        meta = self._index_meta(name)
+        if meta is None:
+            raise ValueError(f"no index {name!r}")
+        self._build_index(name, meta)
+
+    def drop_index(self, name: str) -> None:
+        """Drop an index (a secondary/expression index or ``record_index``) by
+        RENAME to a dot-prefixed trash dir beside it (atomic disappearance
+        from ``index_names``): an rmtree of the live dir would yank files out
+        from under a concurrent reader mid-scan. ``heal`` sweeps the trash
+        age-gated, like superseded generations."""
+        import uuid as _uuid
+
+        name = self.RECORD_INDEX if name.lower() == self.RECORD_INDEX else name
+        d = self._index_dir(name)
+        if not os.path.isdir(d):
+            return
+        trash = os.path.join(os.path.dirname(d), f".trash-{name}-{_uuid.uuid4().hex[:8]}")
+        try:
+            os.rename(d, trash)
+        except OSError:
+            shutil.rmtree(d, ignore_errors=True)  # cross-device fallback
+
+    def _maintain_indexes(
+        self, rels: list[str], partial_cols: list[str] | None = None, record: bool = False
+    ) -> None:
+        """Append the entries of files about to be published — one
+        distributed column-pruned job per index over ONLY the commit's files.
+        Runs before the commit publishes: a crash in between leaves superset
+        entries (harmless), never a missing mapping.
+
+        Value indexes are maintained from the data-write call sites; the
+        record index (``record=True``) at the top of BOTH publish paths, so
+        every file-adding commit — upserts, bulk loads, MOR logs, compaction,
+        clustering, splits, which move keys to new files that (value → key)
+        indexes never notice — keeps its (key → file) mapping complete; a
+        publish that then loses its OCC race leaves entries for never-live
+        files, dropped by the probe's liveness intersect.
+
+        Partial-update commits (``partial_cols`` set) maintain a value index
+        only when its expression's referenced columns are ALL provided
+        (entries computable from the log rows). A MIXED expression (some
+        provided, some absent) cannot be maintained from either side;
+        ``update_partial`` rejects that combination up front.
+
+        Each maintained kind and index generation goes into the commit's one
+        pending-append note, which the locked publish re-checks
+        (``_index_publish_guard``)."""
+        # the record-index call at publish joins the note that the value-index
+        # call at the data-write site opened for the same files
+        pend = getattr(self, "_pending_index_appends", None)
+        if pend is None or pend["rels"] != list(rels):
+            pend = self._pending_index_appends = {
+                "rels": list(rels),
+                "partial_cols": list(partial_cols) if partial_cols is not None else None,
+                "kinds": set(),
+                "gens": {},
+            }
+        pend["kinds"].add("record" if record else "value")
+        for name in [self.RECORD_INDEX] if record else self.secondary_index_cols():
+            meta = self._index_meta(name)
+            if meta is None:
+                continue
+            pend["gens"][name] = meta["gen"]
+            self._maintain_index(name, meta, rels, partial_cols)
+
+    def _maintain_index(
+        self, name: str, meta: dict, rels: list[str], partial_cols: list[str] | None
+    ) -> None:
+        try:
+            self._append_index_entries(name, meta, rels, partial_cols)
+        except AnalysisException:
+            # the expression no longer analyzes (a schema change slipped past
+            # the rename/drop guards — e.g. a stale handle's evolution). A
+            # silent skip would leave a VALID-flagged index missing this
+            # commit's mappings: wrong lookup results. Invalidate instead —
+            # lookups fall back to scans until a rebuild re-certifies, the
+            # same contract as rollback.
+            meta["valid"] = False
+            self._write_index_meta(name, meta)
+
+    def _index_publish_guard(self) -> None:
+        """Run inside the locked publish, after the commit lands: an index
+        rebuilt (generation bump) or created since this write appended its
+        entries got them in a superseded generation, or not at all — re-
+        append into the current one. Rebuild/create swap generations only
+        under this same lock, so the check cannot miss an interleaving; the
+        re-append is a rare O(commit) job, and duplicates are superset-safe.
+        Only indexes of a kind this commit maintained are checked."""
+        pend = getattr(self, "_pending_index_appends", None)
+        self._pending_index_appends = None
+        if pend is None:
+            return
+        for name in self.index_names():
+            if ("record" if name == self.RECORD_INDEX else "value") not in pend["kinds"]:
+                continue
+            meta = self._index_meta(name)
+            if meta is not None and meta["gen"] != pend["gens"].get(name):
+                self._maintain_index(name, meta, pend["rels"], pend["partial_cols"])
+
+    def _publish_with_index_guard(self, inst: Instant) -> None:
+        """Publish an append-only commit (bulk insert / MOR log) that skips
+        OCC conflict checks but still needs the brief timeline lock: the
+        commit write and the index-generation re-check must be one atomic
+        step relative to ``_build_index``'s locked swap — that also covers an
+        index CREATED concurrently on a previously index-less table. The lock
+        hold is two renames plus a JSON stat in the common case; the
+        re-append job only runs on an actual interleave."""
+        if inst.files_added:
+            self._maintain_indexes(inst.files_added, record=True)
+        lock = os.path.join(self.base, TIMELINE_DIR, "_lock")
+        os.makedirs(os.path.dirname(lock), exist_ok=True)
+        fd = _acquire_lock(lock, self.LOCK_TTL_SECONDS, 30.0)
+        try:
+            self.timeline.write(inst)
+            self._index_publish_guard()
+        finally:
+            _release_lock(fd, lock)
+
+    # ------------------------------------------------------- secondary index
 
     def create_secondary_index(self, col: str) -> None:
         """Hudi 1.0 secondary index: a (value → record key) mapping for a
@@ -1427,188 +1749,18 @@ class Table:
         a function, per the Hudi 1.0 SQL surface. Same maintenance/lookup
         machinery as the plain secondary index (which is just ``expr = col``):
         a complete-superset (value → record key) dataset, compacted by
-        ``rebuild_index``, queried via ``lookup_indexed``."""
+        ``rebuild_index``, queried via ``lookup_indexed``. Every value index is
+        created here; ``record_index`` is reserved."""
         if not self.config.record_key:
             raise ValueError("secondary index requires a record key")
+        self._check_index_name(name)
+        self._build_index(name, {"name": name, "expr": expr})
+
+    def _check_index_name(self, name: str) -> None:
         if not _INDEX_NAME_RE.match(name):
             raise ValueError(f"index name must be alnum/underscore, got {name!r}")
-        d = os.path.join(self.base, self.INDEX_DIR, name)
-        os.makedirs(d, exist_ok=True)
-        snap = self.latest_instant() or ""
-        built = self._write_index_data(expr, os.path.join(d, "data"))
-        # Publish the meta under the timeline lock, catching up commits that
-        # landed after the snapshot read: a concurrent writer either published
-        # before we took the lock (the catch-up append derives its entries) or
-        # publishes after meta exists (its own publish-time index guard sees
-        # the new index and appends) — no window loses a mapping.
-        lock = os.path.join(self.base, TIMELINE_DIR, "_lock")
-        os.makedirs(os.path.dirname(lock), exist_ok=True)
-        fd = _acquire_lock(lock, self.LOCK_TTL_SECONDS, 30.0)
-        try:
-            self._index_catch_up(expr, os.path.join(d, "data"), set(built))
-            self._write_index_meta(
-                name,
-                {"name": name, "expr": expr, "built_as_of": snap, "gen": 0, "valid": True},
-            )
-        finally:
-            _release_lock(fd, lock)
-
-    def _index_meta(self, name: str) -> dict | None:
-        p = os.path.join(self.base, self.INDEX_DIR, name, "meta.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            meta = json.load(f)
-        # plain pre-expression metas carry only "col"
-        meta.setdefault("expr", meta.get("col", name))
-        meta.setdefault("gen", 0)
-        meta.setdefault("valid", True)
-        return meta
-
-    def _write_index_meta(self, name: str, meta: dict) -> None:
-        p = os.path.join(self.base, self.INDEX_DIR, name, "meta.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, p)
-
-    def _index_data_dir(self, name: str, meta: dict | None = None) -> str:
-        """Current data directory of an index. Generation 0 is the legacy
-        ``data`` path; every rebuild bumps the generation and points the meta
-        at a fresh ``data_g{N}`` dir so the swap is one atomic meta replace —
-        concurrent readers mid-scan of the old generation never hit a vanished
-        path (old generations are swept later by ``heal``, age-gated)."""
-        meta = meta if meta is not None else (self._index_meta(name) or {})
-        gen = meta.get("gen", 0)
-        sub = "data" if gen == 0 else f"data_g{gen:04d}"
-        return os.path.join(self.base, self.INDEX_DIR, name, sub)
-
-    def _index_append_dir(self, data_dir: str) -> str:
-        """Unique subdirectory for one commit's (value, key) entries.
-
-        Concurrent writers may maintain the same index at the same moment; a
-        shared ``mode("append")`` into one directory is NOT safe — Hadoop's
-        FileOutputCommitter stages every job under the same ``_temporary/0``
-        path, so one job's commit sweeps the other's in-flight attempt dirs
-        (found by tests/test_services_soak.py). Per-commit subdirectories
-        give every append its own committer scope, exactly like log files in
-        a file group; readers glob the generation recursively."""
-        import uuid as _uuid
-
-        return os.path.join(data_dir, f"append_{_uuid.uuid4().hex[:16]}")
-
-    def _read_index_entries(self, name: str, meta: dict | None = None) -> DataFrame:
-        """The current generation's (val, key) dataset — recursive lookup
-        because appends live in per-commit subdirectories."""
-        return (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .parquet(self._index_data_dir(name, meta))
-        )
-
-    def _index_catch_up(self, expr: str, data_dir: str, built_rels: set[str]) -> None:
-        """Append (value, key) entries of every live file the fresh build did
-        NOT cover into ``data_dir``. Used under the timeline lock by index
-        build/rebuild to close the snapshot-to-swap race. FILE-delta, not
-        instant-delta: a slow writer whose instant id predates the build
-        snapshot can publish between the build's read and this locked swap
-        (its publish guard still saw the old generation) — an id-based
-        filter misses it, the set difference cannot (same fix as
-        ``_record_index_catch_up``). Duplicate entries are superset-safe
-        (``lookup`` re-applies the predicate). O(delta), not O(table)."""
-        live = set(self.timeline.live_files()[0])
-        rels = sorted(live - built_rels)
-        if not rels:
-            return
-        entries = (
-            self._read_files(rels, with_deleted=False)
-            .select(F.expr(expr).alias("val"), F.col(META_KEY).alias("key"))
-            .where(F.col("val").isNotNull())
-        )
-        entries.write.mode("overwrite").parquet(self._index_append_dir(data_dir))
-
-    def _write_index_data(self, expr: str, data_dir: str) -> list[str]:
-        """Build the full (value, key) mapping from the current snapshot;
-        returns the live rel list the snapshot was planned from (captured
-        BEFORE the read, so a file publishing mid-build lands in the
-        catch-up delta — at worst indexed twice, superset-safe)."""
-        built = sorted(self.timeline.live_files()[0])
-        entries = (
-            self.read(with_meta=True)
-            .select(F.expr(expr).alias("val"), F.col(META_KEY).alias("key"))
-            .where(F.col("val").isNotNull())
-        )
-        n = max(self.spark.sparkContext.defaultParallelism // 4, 1)
-        (
-            entries.repartitionByRange(n, "val")
-            .sortWithinPartitions("val")
-            .write.mode("overwrite")
-            .parquet(data_dir)
-        )
-        return built
-
-    def secondary_index_cols(self) -> list[str]:
-        d = os.path.join(self.base, self.INDEX_DIR)
-        if not os.path.isdir(d):
-            return []
-        return sorted(
-            c
-            for c in os.listdir(d)
-            if not c.startswith(".")  # .trash-* from drop_secondary_index
-            and os.path.exists(os.path.join(d, c, "meta.json"))
-        )
-
-    def drop_secondary_index(self, col: str) -> None:
-        """Drop by RENAME to a dot-prefixed trash dir (atomic disappearance
-        from ``secondary_index_cols``): an rmtree of the live dir would yank
-        files out from under a concurrent reader mid-scan. ``heal`` sweeps
-        the trash age-gated, like superseded generations."""
-        import uuid as _uuid
-
-        d = os.path.join(self.base, self.INDEX_DIR, col)
-        if not os.path.isdir(d):
-            return
-        trash = os.path.join(
-            self.base, self.INDEX_DIR, f".trash-{col}-{_uuid.uuid4().hex[:8]}"
-        )
-        try:
-            os.rename(d, trash)
-        except OSError:
-            shutil.rmtree(d, ignore_errors=True)  # cross-device fallback
-
-    def rebuild_index(self, name: str) -> None:
-        """Compact the append-only superset back to the exact current mapping
-        (drops stale values of updated rows and entries of deleted rows) and
-        clear any invalidation marker left by ``rollback``.
-
-        Concurrency-safe, unlike a naive dir swap: the fresh mapping is built
-        into a NEW generation directory off-lock (the expensive scan), then
-        under the timeline lock we (a) catch up entries of any commit
-        published after the snapshot read — whose writer appended into the old
-        generation — and (b) swap by atomically replacing meta.json to point
-        at the new generation. A writer whose append raced the swap but who
-        publishes after we release detects the generation bump inside its own
-        locked publish (``_publish_with_index_guard``) and re-appends into the
-        current generation, so no (value, key) mapping is ever lost. The old
-        generation stays on disk for in-flight readers; ``heal`` sweeps
-        superseded generations age-gated."""
-        meta = self._index_meta(name)
-        if meta is None:
-            raise ValueError(f"no secondary index {name}")
-        d = os.path.join(self.base, self.INDEX_DIR, name)
-        snap = self.latest_instant() or ""
-        new_gen = meta.get("gen", 0) + 1
-        fresh = os.path.join(d, f"data_g{new_gen:04d}")
-        shutil.rmtree(fresh, ignore_errors=True)
-        built = self._write_index_data(meta["expr"], fresh)
-        lock = os.path.join(self.base, TIMELINE_DIR, "_lock")
-        os.makedirs(os.path.dirname(lock), exist_ok=True)
-        fd = _acquire_lock(lock, self.LOCK_TTL_SECONDS, 30.0)
-        try:
-            self._index_catch_up(meta["expr"], fresh, set(built))
-            meta.update({"gen": new_gen, "valid": True, "rebuilt_as_of": snap})
-            self._write_index_meta(name, meta)
-        finally:
-            _release_lock(fd, lock)
+        if name.lower() == self.RECORD_INDEX:
+            raise ValueError(f"index name {name!r} is reserved for the record index")
 
     def _index_expr_refs(self, expr: str) -> set[str]:
         """Schema columns an index expression references (identifier match)."""
@@ -1636,111 +1788,6 @@ class Table:
                 f"index(es) {holders}; DROP INDEX first"
             )
 
-    def _maintain_indexes(self, rels: list[str], partial_cols: list[str] | None = None) -> None:
-        """Append the (value, key) pairs of files just written to every
-        secondary/expression index — one distributed column-pruned job per
-        index over ONLY the commit's files. Runs before the commit publishes:
-        a crash in between leaves superset entries (harmless), never a missing
-        mapping.
-
-        Partial-update commits (``partial_cols`` set) maintain an index only
-        when its expression's referenced columns are ALL provided (entries
-        computable from the log rows) — an all-absent index needs nothing
-        (values unchanged, existing entries stay complete). A MIXED expression
-        (some provided, some absent) cannot be maintained from either side;
-        ``update_partial`` rejects that combination up front."""
-        names = self.secondary_index_cols()
-        self._pending_index_appends = {
-            "rels": list(rels),
-            "partial_cols": list(partial_cols) if partial_cols is not None else None,
-            "gens": {},
-        }
-        if not names or not rels:
-            return
-        df = self._read_files(rels, with_deleted=False)
-        for name in names:
-            meta = self._index_meta(name)
-            if meta is None:
-                continue
-            self._pending_index_appends["gens"][name] = meta.get("gen", 0)
-            if partial_cols is not None:
-                refs = self._index_expr_refs(meta["expr"])
-                if not refs <= set(partial_cols):
-                    continue  # all-absent: values unchanged, index still complete
-            try:
-                entries = df.select(
-                    F.expr(meta["expr"]).alias("val"), F.col(META_KEY).alias("key")
-                )
-            except Exception:
-                # the expression no longer analyzes (a schema change slipped
-                # past the rename/drop guards — e.g. a stale handle's
-                # evolution). A silent skip would leave a VALID-flagged index
-                # missing this commit's mappings: wrong lookup results.
-                # Invalidate instead — lookups fall back to scans until a
-                # rebuild re-certifies, the same contract as rollback.
-                meta["valid"] = False
-                self._write_index_meta(name, meta)
-                continue
-            # _no_aqe (r10): exchange-free plan (column-pruned scan of the
-            # commit's files → project → write); AQE only adds stage-jobs.
-            with _no_aqe(self.spark):
-                (
-                    entries.where(F.col("val").isNotNull())
-                    .write.mode("overwrite")
-                    .parquet(self._index_append_dir(self._index_data_dir(name, meta)))
-                )
-
-    def _index_publish_guard(self) -> None:
-        """Run inside the locked publish, after the commit lands: if any index
-        was rebuilt (generation bump) or created since this write appended its
-        (value, key) pairs, those pairs went to a superseded generation — re-
-        append into the current one. Rebuild/create swap generations only
-        under this same lock, so the check cannot miss an interleaving; the
-        re-append is a rare O(commit) job, and duplicates are superset-safe."""
-        pend = getattr(self, "_pending_index_appends", None)
-        if pend is not None:
-            self._pending_index_appends = None
-            current = {}
-            for name in self.secondary_index_cols():
-                meta = self._index_meta(name)
-                if meta is not None:
-                    current[name] = meta.get("gen", 0)
-            if current != pend["gens"]:
-                self._maintain_indexes(pend["rels"], partial_cols=pend["partial_cols"])
-                self._pending_index_appends = None
-        # same re-check for the record index: a rebuild (or a create on a
-        # previously index-less table) that swapped generations after our
-        # append landed means the entries went to a superseded dir — re-append
-        # into the current generation (duplicates are superset-safe)
-        rpend = getattr(self, "_pending_record_append", None)
-        if rpend is not None:
-            self._pending_record_append = None
-            rmeta = self._record_index_meta()
-            rgen = rmeta.get("gen") if rmeta is not None else None
-            if rgen != rpend["gen"]:
-                self._maintain_record_index(rpend["rels"])
-                self._pending_record_append = None
-
-    def _publish_with_index_guard(self, inst: Instant) -> None:
-        """Publish an append-only commit (bulk insert / MOR log) that skips
-        OCC conflict checks but still needs the brief timeline lock: the
-        commit write and the index-generation re-check must be one atomic
-        step relative to ``rebuild_index``'s (and ``create_*_index``'s)
-        locked swap — that also covers an index CREATED concurrently on a
-        previously index-less table. The lock hold is two renames plus a
-        JSON stat in the common case; the re-append job only runs on an
-        actual interleave."""
-        if inst.files_added:
-            self._maintain_record_index(inst.files_added)
-        lock = os.path.join(self.base, TIMELINE_DIR, "_lock")
-        os.makedirs(os.path.dirname(lock), exist_ok=True)
-        fd = _acquire_lock(lock, self.LOCK_TTL_SECONDS, 30.0)
-        try:
-            self.timeline.write(inst)
-            self._index_publish_guard()
-        finally:
-            _release_lock(fd, lock)
-
     def lookup(self, col: str, value) -> DataFrame:
         """Index-backed equality point read on a non-key column.
 
@@ -1762,12 +1809,13 @@ class Table:
         index, or any index whose defining expression IS the column (SQL DDL
         names indexes freely). Indexes invalidated by ``rollback`` never
         serve auto-routing — callers silently fall back to the scan path."""
-        meta = self._index_meta(col)
-        if meta is not None:
-            return col if meta.get("valid", True) else None
-        for name in self.secondary_index_cols():
+        names = self.secondary_index_cols()
+        if col in names:
+            meta = self._index_meta(col)
+            return col if meta and meta["valid"] else None
+        for name in names:
             meta = self._index_meta(name)
-            if meta and meta["expr"].strip() == col and meta.get("valid", True):
+            if meta and meta["expr"].strip() == col and meta["valid"]:
                 return name
         return None
 
@@ -1782,10 +1830,10 @@ class Table:
         never indexed, so the superset contract is broken) answers with a
         full predicate scan instead — correct, just unpruned — until
         ``rebuild_index`` / ``run_services`` restores it."""
-        meta = self._index_meta(name)
+        meta = self._index_meta(name) if name != self.RECORD_INDEX else None
         if meta is None:
             raise ValueError(f"no secondary index {name}")
-        if not meta.get("valid", True):
+        if not meta["valid"]:
             self.last_index_lookup = {"invalid_fallback": True}
             return self.read().filter(F.expr(meta["expr"]) == F.lit(value))
         idx = self._read_index_entries(name, meta)
@@ -1813,8 +1861,6 @@ class Table:
 
     # --------------------------------------------------- record-level index
 
-    RECORD_INDEX_DIR = "_record_index"
-
     def create_record_index(self) -> None:
         """Hudi 1.0 record-level index (RLI, ``hoodie.metadata.record.index
         .enable`` / ``CREATE INDEX record_index ON t (key)``): a global
@@ -1823,17 +1869,17 @@ class Table:
         the step past range pruning (helps only clustered keys) and bloom
         probing (per-candidate-file work, FP-prone at scale). Hudi stores
         this mapping in the metadata table's ``record_index`` partition; here
-        it is a key-sorted parquet dataset under ``_record_index/`` probed by
-        a semi join of the batch keys (AQE picks broadcast when the batch is
-        small, a shuffled join when it is not).
+        it is one more index of the generational protocol, a key-sorted
+        parquet dataset under ``_record_index/`` probed by a semi join of the
+        batch keys (AQE picks broadcast when the batch is small, a shuffled
+        join when it is not).
 
         Same durability contract as the secondary indexes: a COMPLETE
-        SUPERSET. Every commit that adds data files — writes, MOR log
-        appends, compaction, clustering, bucket splits — appends its (key,
-        file) pairs before publishing (``_maintain_record_index`` runs at the
-        top of both publish paths), and probes intersect entries with the
-        LIVE file set, so entries of superseded or never-published files cost
-        nothing but bounded index size. ``rebuild_record_index`` compacts the
+        SUPERSET. Every commit that adds data files appends its (key, file)
+        pairs before publishing (``_maintain_indexes`` at the top of both
+        publish paths), and probes intersect entries with the LIVE file set,
+        so entries of superseded or never-published files cost nothing but
+        bounded index size. ``rebuild_index("record_index")`` compacts the
         superset; ``rollback`` of a replace commit invalidates the index
         (resurrected files may predate it) and ``run_services`` re-certifies.
 
@@ -1844,63 +1890,7 @@ class Table:
         than a driver OOM when a bulk batch carries too many keys. Maintenance is O(commit), distributed."""
         if not self.config.record_key:
             raise ValueError("record index requires a record key")
-        d = os.path.join(self.base, self.RECORD_INDEX_DIR)
-        os.makedirs(d, exist_ok=True)
-        snap = self.latest_instant() or ""
-        built = self._write_record_index_data(os.path.join(d, "data"))
-        # same locked create protocol as the secondary indexes: catch up
-        # every live file the build did not index (file-delta — closes the
-        # slow-writer race an instant-id filter misses), then publish the
-        # meta — a concurrent writer either published before the lock
-        # (catch-up owns its entries) or publishes after meta exists (its
-        # publish-time maintenance sees the index)
-        lock = os.path.join(self.base, TIMELINE_DIR, "_lock")
-        os.makedirs(os.path.dirname(lock), exist_ok=True)
-        fd = _acquire_lock(lock, self.LOCK_TTL_SECONDS, 30.0)
-        try:
-            self._record_index_catch_up(os.path.join(d, "data"), set(built))
-            self._write_record_index_meta(
-                {"built_as_of": snap, "gen": 0, "valid": True}
-            )
-        finally:
-            _release_lock(fd, lock)
-
-    def drop_record_index(self) -> None:
-        """Drop by rename-to-trash (same protocol as ``drop_secondary_index``
-        — atomic disappearance, heal sweeps the trash age-gated)."""
-        import uuid as _uuid
-
-        d = os.path.join(self.base, self.RECORD_INDEX_DIR)
-        if not os.path.isdir(d):
-            return
-        trash = os.path.join(self.base, f".trash-record-{_uuid.uuid4().hex[:8]}")
-        try:
-            os.rename(d, trash)
-        except OSError:
-            shutil.rmtree(d, ignore_errors=True)
-
-    def _record_index_meta(self) -> dict | None:
-        p = os.path.join(self.base, self.RECORD_INDEX_DIR, "meta.json")
-        if not os.path.exists(p):
-            return None
-        with open(p) as f:
-            meta = json.load(f)
-        meta.setdefault("gen", 0)
-        meta.setdefault("valid", True)
-        return meta
-
-    def _write_record_index_meta(self, meta: dict) -> None:
-        p = os.path.join(self.base, self.RECORD_INDEX_DIR, "meta.json")
-        tmp = p + ".tmp"
-        with open(tmp, "w") as f:
-            json.dump(meta, f)
-        os.replace(tmp, p)
-
-    def _record_index_data_dir(self, meta: dict | None = None) -> str:
-        meta = meta if meta is not None else (self._record_index_meta() or {})
-        gen = meta.get("gen", 0)
-        sub = "data" if gen == 0 else f"data_g{gen:04d}"
-        return os.path.join(self.base, self.RECORD_INDEX_DIR, sub)
+        self._build_index(self.RECORD_INDEX, {})
 
     def _record_entries_for(self, rels: list[str]) -> DataFrame | None:
         """(key, rel) pairs of the given data files — ONE column-pruned
@@ -1953,93 +1943,6 @@ class Table:
             out = part if out is None else out.unionByName(part)
         return out
 
-    def _write_record_index_data(self, data_dir: str) -> list[str]:
-        """Build the full mapping from the CURRENT live files; returns the
-        rel list actually indexed so the locked catch-up can compute the
-        exact file delta."""
-        live = sorted(self.timeline.live_files()[0])
-        entries = self._record_entries_for(live)
-        if entries is None:
-            entries = self.spark.createDataFrame([], "key STRING, rel STRING")
-        n = max(self.spark.sparkContext.defaultParallelism // 4, 1)
-        (
-            entries.repartitionByRange(n, "key")
-            .sortWithinPartitions("key")
-            .write.mode("overwrite")
-            .parquet(data_dir)
-        )
-        return live
-
-    def _record_index_catch_up(self, data_dir: str, built_rels: set[str]) -> None:
-        """Append entries of every live file the fresh build did NOT index —
-        the locked build/rebuild race-closer. FILE-delta, not instant-delta:
-        a slow writer whose instant id PREDATES the build snapshot can
-        publish between the build's live-file read and this locked swap (its
-        publish guard still saw the old generation, so it re-appended
-        nowhere), and an id-based "commits since snapshot" filter misses
-        exactly that writer — caught once by test_record_index's
-        writer+rebuild storm under heavy host contention. The set difference
-        against what the build actually indexed cannot miss anyone."""
-        live = set(self.timeline.live_files()[0])
-        rels = sorted(live - built_rels)
-        if not rels:
-            return
-        entries = self._record_entries_for(rels)
-        if entries is not None:
-            entries.write.mode("overwrite").parquet(self._index_append_dir(data_dir))
-
-    def rebuild_record_index(self) -> None:
-        """Compact the append-only superset to the exact live (key → file)
-        mapping and clear any rollback invalidation — the same generational
-        locked-swap protocol as ``rebuild_index`` (fresh dir off-lock, locked
-        catch-up + atomic meta replace; writers that raced the swap re-append
-        via the publish guard; heal sweeps old generations age-gated)."""
-        meta = self._record_index_meta()
-        if meta is None:
-            raise ValueError("no record index")
-        d = os.path.join(self.base, self.RECORD_INDEX_DIR)
-        snap = self.latest_instant() or ""
-        new_gen = meta.get("gen", 0) + 1
-        fresh = os.path.join(d, f"data_g{new_gen:04d}")
-        shutil.rmtree(fresh, ignore_errors=True)
-        built = self._write_record_index_data(fresh)
-        lock = os.path.join(self.base, TIMELINE_DIR, "_lock")
-        os.makedirs(os.path.dirname(lock), exist_ok=True)
-        fd = _acquire_lock(lock, self.LOCK_TTL_SECONDS, 30.0)
-        try:
-            self._record_index_catch_up(fresh, set(built))
-            meta.update({"gen": new_gen, "valid": True, "rebuilt_as_of": snap})
-            self._write_record_index_meta(meta)
-        finally:
-            _release_lock(fd, lock)
-
-    def _maintain_record_index(self, rels: list[str]) -> None:
-        """Append the (key, file) pairs of files about to be published. Runs
-        at the top of BOTH publish paths, so every file-adding commit —
-        upserts, bulk loads, MOR logs, compaction, clustering, splits — keeps
-        the mapping complete; a publish that then loses its OCC race leaves
-        entries for never-live files (dropped by the probe's liveness
-        intersect). The pending-generation note lets the locked publish
-        re-append if a rebuild swapped generations in between."""
-        meta = self._record_index_meta()
-        self._pending_record_append = {
-            "rels": list(rels),
-            "gen": meta.get("gen") if meta is not None else None,
-        }
-        if meta is None or not rels:
-            return
-        entries = self._record_entries_for(rels)
-        if entries is not None:
-            # _no_aqe (r10): this plan has no exchange at any scale — a
-            # column-pruned scan of the commit's own files into a broadcast
-            # join with the O(files) name map, straight into the write — so
-            # AQE can only split it into extra stage-jobs (measured 2 → 1
-            # job per commit); there is no shuffle for it to coalesce.
-            with _no_aqe(self.spark):
-                entries.write.mode("overwrite").parquet(
-                    self._index_append_dir(self._record_index_data_dir(meta))
-                )
-
     def _record_index_candidates(
         self, rels: list[str], keys_df: DataFrame
     ) -> list[str] | None:
@@ -2048,13 +1951,12 @@ class Table:
         range/bloom pruning). One semi join of the batch keys against
         the key-sorted index scan; only matched FILE NAMES return to the
         driver, intersected with the caller's live scope."""
-        meta = self._record_index_meta()
-        if meta is None or not meta.get("valid", True):
+        meta = self._index_meta(self.RECORD_INDEX)
+        if meta is None or not meta["valid"]:
             return None
-        data_dir = self._record_index_data_dir(meta)
-        if not os.path.isdir(data_dir):
+        if not os.path.isdir(self._index_data_dir(self.RECORD_INDEX, meta)):
             return None
-        entries = self.spark.read.option("recursiveFileLookup", "true").parquet(data_dir)
+        entries = self._read_index_entries(self.RECORD_INDEX, meta)
         keys = keys_df.select(F.col(META_KEY).cast("string").alias("key"))
         # no forced broadcast: a write batch's key set is usually tiny (AQE
         # broadcasts it from its runtime size), but a 100 TB-scale bulk
@@ -2076,11 +1978,11 @@ class Table:
         """True when probes will actually serve (valid meta + present data
         dir) — the same conditions ``_record_index_candidates`` requires, so
         routing through ``lookup_key`` can never fall back into a loop."""
-        meta = self._record_index_meta()
+        meta = self._index_meta(self.RECORD_INDEX)
         return bool(
             meta
-            and meta.get("valid", True)
-            and os.path.isdir(self._record_index_data_dir(meta))
+            and meta["valid"]
+            and os.path.isdir(self._index_data_dir(self.RECORD_INDEX, meta))
         )
 
     def lookup_key(self, value) -> DataFrame:
@@ -4693,7 +4595,7 @@ class Table:
             # new files, which (value→key) indexes never notice but a
             # (key→file) index must). A publish that then loses the OCC race
             # leaves superset entries only.
-            self._maintain_record_index(inst.files_added)
+            self._maintain_indexes(inst.files_added, record=True)
         lock = os.path.join(self.base, TIMELINE_DIR, "_lock")
         os.makedirs(os.path.dirname(lock), exist_ok=True)
         # crash recovery (Hudi FileSystemBasedLockProvider expiry): locks past
@@ -5075,10 +4977,12 @@ class Table:
         elif kind == "secondary":
             if not name or name not in self.schema.names:
                 raise ValueError(f"secondary indexing needs an existing column, got {name!r}")
+            self._check_index_name(name)
             meta = {"kind": kind, "name": name, "expr": name}
         elif kind == "expression":
             if not name or not expr:
                 raise ValueError("expression indexing needs name and expr")
+            self._check_index_name(name)
             meta = {"kind": kind, "name": name, "expr": expr}
         else:
             raise ValueError(f"unknown indexing kind {kind!r}")
@@ -5113,22 +5017,15 @@ class Table:
         if not pending:
             return None
         plan = pending[0]
-        kind = plan.meta["kind"]
-        if kind == "record_index":
-            if self._record_index_meta() is None:
-                self.create_record_index()
-            else:
-                self.rebuild_record_index()
-            built = "record_index"
+        name = plan.meta.get("name", self.RECORD_INDEX)
+        if self._index_meta(name) is not None:
+            self.rebuild_index(name)
+        elif name == self.RECORD_INDEX:
+            self.create_record_index()
         else:
-            name = plan.meta["name"]
-            if self._index_meta(name) is None:
-                self.create_expression_index(name, plan.meta["expr"])
-            else:
-                self.rebuild_index(name)
-            built = name
+            self.create_expression_index(name, plan.meta["expr"])
         self.timeline.remove(plan.instant)
-        return built
+        return name
 
     def _late_publishers(self, plan: Instant) -> list[str]:
         """Completed data instants minted BEFORE the plan that were not on the
@@ -5284,39 +5181,24 @@ class Table:
             except ConcurrentWriteConflict:
                 report["indexing_plan_executed"] = None
         rebuilt = []
-        names = self.secondary_index_cols()
-        rmeta = self._record_index_meta()
+        names = self.index_names()
         live_rows = 0
-        if names or rmeta is not None:
+        if names:
             live_rows = self._footer_rows(
                 os.path.join(self.base, r) for r in self.timeline.live_files()[0]
             )
-        if rmeta is not None:
-            if not rmeta.get("valid", True):
-                self.rebuild_record_index()  # rollback invalidated it
-                rebuilt.append("_record")
-            else:
-                n_entries = self._footer_rows(
-                    self._index_parquet_files(self._record_index_data_dir(rmeta))
-                )
-                if live_rows and n_entries > index_bloat_ratio * live_rows:
-                    self.rebuild_record_index()
-                    rebuilt.append("_record")
-        if names:
-            for name in names:
-                meta = self._index_meta(name)
-                if meta is None:
-                    continue
-                if not meta.get("valid", True):
-                    self.rebuild_index(name)  # rollback invalidated it
-                    rebuilt.append(name)
-                    continue
+        for name in names:
+            meta = self._index_meta(name)
+            if meta is None:
+                continue
+            if meta["valid"]:
                 n_entries = self._footer_rows(
                     self._index_parquet_files(self._index_data_dir(name, meta))
                 )
-                if live_rows and n_entries > index_bloat_ratio * live_rows:
-                    self.rebuild_index(name)
-                    rebuilt.append(name)
+                if not (live_rows and n_entries > index_bloat_ratio * live_rows):
+                    continue
+            self.rebuild_index(name)  # rollback invalidated it, or superset bloat
+            rebuilt.append(name)
         report["indexes_rebuilt"] = rebuilt
         report["archived"] = self.archive_timeline(retain_instants=archive_retain)
         return report
@@ -5760,20 +5642,16 @@ class Table:
             # false for replace commits). Mark every index invalid: lookups
             # and scan auto-routing fall back to full-predicate scans (always
             # correct) until rebuild_index / run_services re-certifies them.
-            for name in self.secondary_index_cols():
-                meta = self._index_meta(name)
-                if meta is not None and meta.get("valid", True):
-                    meta.update({"valid": False, "invalidated_by": rb})
-                    self._write_index_meta(name, meta)
-            # the record index breaks the same way: a resurrected file may
+            # The record index breaks the same way: a resurrected file may
             # predate the index build (or the latest rebuild compacted its
             # entries away as dead) — its keys would locate to nothing, and a
-            # lossy location prune is a LOST UPDATE, not bounded extra IO.
-            # Invalidate; probes fall back to range/bloom until re-certified.
-            rmeta = self._record_index_meta()
-            if rmeta is not None and rmeta.get("valid", True):
-                rmeta.update({"valid": False, "invalidated_by": rb})
-                self._write_record_index_meta(rmeta)
+            # lossy location prune is a LOST UPDATE, not bounded extra IO;
+            # its probes fall back to range/bloom until re-certified.
+            for name in self.index_names():
+                meta = self._index_meta(name)
+                if meta is not None and meta["valid"]:
+                    meta.update({"valid": False, "invalidated_by": rb})
+                    self._write_index_meta(name, meta)
         return rb
 
     def heal(self, min_age_seconds: float = 0.0) -> list[str]:
@@ -5852,7 +5730,7 @@ class Table:
                     self.STATS_DIR,
                     self.BLOOMS_DIR,
                 )
-                and not d.startswith(".trash-record-")
+                and not d.startswith(".trash-")
             ]
             for fn in fns:
                 if not fn.endswith(".parquet"):
@@ -5868,67 +5746,34 @@ class Table:
         # in-flight readers) and dropped-index trash dirs — age-gated by the
         # lock TTL at minimum
         gen_age = max(min_age_seconds, self.LOCK_TTL_SECONDS)
-        idx_root = os.path.join(self.base, self.INDEX_DIR)
-        if os.path.isdir(idx_root):
-            for sub in sorted(os.listdir(idx_root)):
-                if not sub.startswith(".trash-"):
-                    continue
-                p = os.path.join(idx_root, sub)
-                if os.path.isdir(p) and _older(p, gen_age):
-                    shutil.rmtree(p, ignore_errors=True)
-                    removed.append(os.path.join(self.INDEX_DIR, sub))
-        def _gen_of(sub: str) -> int | None:
-            """Generation number encoded in a data dir name (``data`` = 0,
-            ``data_gNNNN`` = N); None for anything else."""
-            if sub == "data":
-                return 0
-            if sub.startswith("data_g"):
-                try:
-                    return int(sub[len("data_g") :])
-                except ValueError:
-                    return None
-            return None
 
-        for name in self.secondary_index_cols():
+        def _sweep(rel: str) -> None:
+            p = os.path.join(self.base, rel)
+            if os.path.isdir(p) and _older(p, gen_age):
+                shutil.rmtree(p, ignore_errors=True)
+                removed.append(rel)
+
+        for root in (self.INDEX_DIR, ""):  # drop_index renames beside the index
+            if os.path.isdir(os.path.join(self.base, root)):
+                for sub in sorted(os.listdir(os.path.join(self.base, root))):
+                    if sub.startswith(".trash-"):
+                        _sweep(os.path.join(root, sub))
+        for name in self.index_names():
             meta = self._index_meta(name)
             if meta is None:
                 continue
-            d = os.path.join(self.base, self.INDEX_DIR, name)
-            cur_gen = int(meta.get("gen", 0))
+            d = self._index_dir(name)
             for sub in sorted(os.listdir(d)):
-                g = _gen_of(sub)
-                # only sweep generations strictly LOWER than current: a gen
+                # generation of a data dir (``data`` = 0, ``data_gNNNN`` = N).
+                # Only generations strictly LOWER than current are swept: a gen
                 # ABOVE current belongs to an in-flight rebuild whose off-lock
                 # build phase may exceed the age gate (it is a full table
                 # scan) — rmtree'ing it would let the subsequent locked swap
                 # mark a gutted dir valid and silently break the superset
                 # lookup contract (advisor, round 5)
-                if g is None or g >= cur_gen:
-                    continue
-                p = os.path.join(d, sub)
-                if os.path.isdir(p) and _older(p, gen_age):
-                    shutil.rmtree(p, ignore_errors=True)
-                    removed.append(os.path.join(self.INDEX_DIR, name, sub))
-        # record-index housekeeping: superseded generations + dropped trash
-        rmeta = self._record_index_meta()
-        if rmeta is not None:
-            d = os.path.join(self.base, self.RECORD_INDEX_DIR)
-            cur_gen = int(rmeta.get("gen", 0))
-            for sub in sorted(os.listdir(d)):
-                g = _gen_of(sub)
-                if g is None or g >= cur_gen:  # future gens: in-flight rebuild
-                    continue
-                p = os.path.join(d, sub)
-                if os.path.isdir(p) and _older(p, gen_age):
-                    shutil.rmtree(p, ignore_errors=True)
-                    removed.append(os.path.join(self.RECORD_INDEX_DIR, sub))
-        for sub in sorted(os.listdir(self.base)):
-            if not sub.startswith(".trash-record-"):
-                continue
-            p = os.path.join(self.base, sub)
-            if os.path.isdir(p) and _older(p, gen_age):
-                shutil.rmtree(p, ignore_errors=True)
-                removed.append(sub)
+                m = _re.fullmatch(r"data(?:_g(\d+))?", sub)
+                if m and int(m[1] or 0) < meta["gen"]:
+                    _sweep(os.path.relpath(os.path.join(d, sub), self.base))
         return removed
 
     # ------------------------------------------------------------- versioning

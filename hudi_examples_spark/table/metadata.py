@@ -125,25 +125,22 @@ def metadata_df(tbl, part: str) -> DataFrame:
             rows, "file_name STRING, num_bits BIGINT, num_hashes BIGINT, num_keys BIGINT"
         )
     if part == "record_index":
-        meta = tbl._record_index_meta()
+        meta = tbl._index_meta(tbl.RECORD_INDEX)
         if meta is None:
             raise ValueError(
                 "record_index metadata partition requires the record-level "
                 "index: CALL create_record_index / Table.create_record_index()"
             )
-        if not meta.get("valid", True):
+        if not meta["valid"]:
             raise ValueError(
                 "record index is invalidated (rollback resurrected unindexed "
-                "files) — rebuild via run_services()/rebuild_record_index()"
+                "files) — rebuild via run_services()/rebuild_index('record_index')"
             )
-        data_dir = tbl._record_index_data_dir(meta)
         live = set(tbl.timeline.live_files()[0])
         from pyspark.sql import functions as F
 
-        df = (
-            spark.read.option("recursiveFileLookup", "true")
-            .parquet(data_dir)
-            .select(F.col("key").alias("record_key"), F.col("rel").alias("file_name"))
+        df = tbl._read_index_entries(tbl.RECORD_INDEX, meta).select(
+            F.col("key").alias("record_key"), F.col("rel").alias("file_name")
         )
         # same live-intersection the probe applies: the index is a complete
         # SUPERSET; only mappings into live files are current locations.

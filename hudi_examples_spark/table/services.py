@@ -9,11 +9,14 @@ table per cadence, ``clusteringjob.properties``). The inline half lives in
 (``compact_every``); this module is the async half.
 
 Spark-first shape: a daemon thread invoking :meth:`Table.run_services` on a
-cadence. Every pass opens a FRESH ``Table`` handle (each pass plans against
-the latest published timeline — never a stale snapshot), and every pass is
-best-effort: services tolerate losing OCC races to concurrent writers and a
-failing pass is recorded, never raised into the host (a maintenance daemon
-must not take down the ingest process it rides in). Safe against live
+cadence, on a session of its own (``spark.newSession()``: same SparkContext,
+separate SQL conf) so the passes' conf toggles around their planning queries
+never reach the host's writer session. Every pass opens a FRESH ``Table``
+handle (each pass plans against the latest published timeline — never a
+stale snapshot), and every pass is best-effort: services tolerate losing
+OCC races to concurrent writers and a failing pass is recorded, never
+raised into the host (a maintenance daemon must not take down the ingest
+process it rides in). Safe against live
 writers by construction — ``run_services`` age-gates heal and publishes
 every rewrite through the same OCC path writers use (proven cross-process
 in ``tests/test_services_soak.py``; the in-process cadence is proven in
@@ -62,7 +65,9 @@ class ServiceScheduler:
         max_passes: int | None = None,
         **policy,
     ) -> None:
-        self.spark = spark
+        # one session for every pass: its conf toggles (``_no_aqe``,
+        # ``_static_exec``) stay off the caller's session
+        self.spark = spark.newSession()
         self.base = base
         self.interval_seconds = float(interval_seconds)
         self.max_passes = max_passes

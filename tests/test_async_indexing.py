@@ -36,10 +36,10 @@ def tbl(spark, tmp_path):
 
 
 def test_schedule_then_execute_builds_record_index(tbl):
-    assert tbl._record_index_meta() is None
+    assert tbl._index_meta("record_index") is None
     plan = tbl.schedule_indexing("record_index")
     assert [i.instant for i in tbl.pending_indexings()] == [plan]
-    assert tbl._record_index_meta() is None  # schedule builds nothing
+    assert tbl._index_meta("record_index") is None  # schedule builds nothing
     assert tbl.run_indexing() == "record_index"
     assert tbl.pending_indexings() == []
     assert tbl._record_index_ready()

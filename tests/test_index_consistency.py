@@ -36,6 +36,35 @@ def _rows(spark, *triples):
     return spark.createDataFrame(list(triples), "id STRING, val STRING, ts LONG")
 
 
+#: the protocol tests run once per index kind: a value (secondary) index on
+#: ``val`` and the record index on ``id``
+KINDS = ["value", "record"]
+
+
+def _index(tbl, kind):
+    """Create an index of ``kind`` on ``tbl``; returns its name."""
+    if kind == "record":
+        tbl.create_record_index()
+        return "record_index"
+    tbl.create_secondary_index("val")
+    return "val"
+
+
+def _lookup(tbl, kind, key, val):
+    """Point read through the index of ``kind``: by record key or by value."""
+    return tbl.lookup_key(key) if kind == "record" else tbl.lookup("val", val)
+
+
+def _served(tbl, kind):
+    """Whether the index answered: a keyed write records its record-index
+    probe; a value lookup records its pruning evidence (an invalid index
+    routes to a plain scan, or records ``invalid_fallback`` instead)."""
+    if kind == "record":
+        return (tbl.last_key_prune or {}).get("record_index") is True
+    evidence = getattr(tbl, "last_index_lookup", None) or {}
+    return "scanned" in evidence and "invalid_fallback" not in evidence
+
+
 def test_rollback_invalidates_index_and_lookup_stays_correct(spark, tbl):
     # the advisor's exact repro: insert A, upsert to B, index, rollback.
     tbl.insert(_rows(spark, ("k1", "A", 1)))
@@ -67,19 +96,34 @@ def test_rollback_of_pure_insert_keeps_index_valid(spark, tbl):
     assert tbl.lookup("val", "C").count() == 0
 
 
-def test_run_services_rebuilds_invalidated_index(spark, tbl):
-    tbl.insert(_rows(spark, ("k1", "A", 1), ("k2", "C", 1)))
-    up = tbl.upsert(_rows(spark, ("k1", "B", 2)))
-    tbl.create_secondary_index("val")
-    tbl.rollback(up)
-    assert tbl._index_meta("val")["valid"] is False
-    report = tbl.run_services()
-    assert "val" in report["indexes_rebuilt"]
-    meta = tbl._index_meta("val")
+@pytest.mark.parametrize("kind", KINDS)
+def test_run_services_rebuilds_invalidated_index(spark, tbl, kind):
+    # two file groups, so keyed writes plan by key pruning
+    tbl.bulk_insert(_rows(spark, ("k1", "A", 1)))
+    tbl.bulk_insert(_rows(spark, ("k2", "C", 1)))
+    up = tbl.upsert(_rows(spark, ("k1", "B", 2)))  # replace commit
+    name = _index(tbl, kind)
+    tbl.rollback(up)  # resurrects the replaced file
+    meta = tbl._index_meta(name)
+    assert meta["valid"] is False and meta["invalidated_by"]
+    # an invalid index never serves: keyed writes plan by range/bloom and
+    # lookups scan — same rows
+    t = Table(spark, tbl.base)
+    t.upsert(_rows(spark, ("k2", "C2", 3)))
+    assert _lookup(t, kind, "k1", "A").count() == 1
+    assert not _served(t, kind)
+    report = Table(spark, tbl.base).run_services()
+    assert name in report["indexes_rebuilt"]
+    meta = tbl._index_meta(name)
     assert meta["valid"] is True and meta["gen"] == 1
     # the rebuilt index serves the resurrected version WITH pruning again
-    assert tbl.lookup("val", "A").count() == 1
-    assert "invalid_fallback" not in (tbl.last_index_lookup or {})
+    t = Table(spark, tbl.base)
+    t.upsert(_rows(spark, ("k2", "C3", 4)))
+    assert _lookup(t, kind, "k1", "A").count() == 1
+    assert _served(t, kind)
+    # resurrected rows are back and updated rows carry the latest version
+    rows = {r["id"]: (r["val"], r["ts"]) for r in Table(spark, tbl.base).read().collect()}
+    assert rows == {"k1": ("A", 1), "k2": ("C3", 4)}
 
 
 def test_restore_to_savepoint_invalidates_index(spark, tbl):
@@ -93,31 +137,57 @@ def test_restore_to_savepoint_invalidates_index(spark, tbl):
     assert tbl._index_meta("val")["valid"] is False
 
 
-def test_rebuild_swaps_generation_and_heal_sweeps_old(spark, tbl):
+@pytest.mark.parametrize("kind", KINDS)
+def test_rebuild_swaps_generation_and_heal_sweeps_old(spark, tbl, kind):
     tbl.insert(_rows(spark, ("k1", "A", 1), ("k2", "C", 1)))
-    tbl.create_secondary_index("val")
-    old_dir = tbl._index_data_dir("val")
-    tbl.rebuild_index("val")
-    new_dir = tbl._index_data_dir("val")
+    name = _index(tbl, kind)
+    old_dir = tbl._index_data_dir(name)
+    tbl.rebuild_index(name)
+    new_dir = tbl._index_data_dir(name)
     assert new_dir != old_dir
     # the superseded generation survives the swap (in-flight readers)...
     assert os.path.isdir(old_dir)
-    assert tbl.lookup("val", "A").count() == 1
+    assert _lookup(tbl, kind, "k1", "A").count() == 1
     # ...until heal sweeps it, age-gated by the lock TTL
     tbl.LOCK_TTL_SECONDS = 0.0
     removed = tbl.heal()
-    assert any("_index/val/data" in r for r in removed)
+    gen0 = {"value": "_index/val/data", "record": "_record_index/data"}[kind]
+    assert gen0 in removed
     assert not os.path.isdir(old_dir)
-    assert tbl.lookup("val", "A").count() == 1
+    assert _lookup(tbl, kind, "k1", "A").count() == 1
 
 
-def test_publish_guard_reappends_after_generation_bump(spark, tbl):
+@pytest.mark.parametrize("kind", KINDS)
+def test_heal_never_sweeps_future_generations(spark, tbl, kind):
+    """An IN-FLIGHT rebuild's NEW generation dir (gen > meta's current) must
+    survive heal even past the age gate: sweeping it would let the rebuild's
+    subsequent locked swap mark a gutted dir valid and silently break the
+    superset lookup contract. Only strictly-LOWER generations are sweepable."""
+    tbl.insert(_rows(spark, ("k1", "A", 1), ("k2", "C", 1)))
+    name = _index(tbl, kind)
+    tbl.rebuild_index(name)  # current gen -> 1, gen0 superseded
+    d = tbl._index_dir(name)
+    future = os.path.join(d, "data_g0002")  # an in-flight rebuild's build dir
+    os.makedirs(future, exist_ok=True)
+    with open(os.path.join(future, "part-00000.parquet"), "wb") as f:
+        f.write(b"x")
+    gen0 = os.path.join(d, "data")
+    old = time.time() - 7200
+    for p in (future, gen0):
+        os.utime(p, (old, old))
+    tbl.heal(min_age_seconds=1.0)
+    assert os.path.isdir(future), "future generation swept mid-rebuild"
+    assert not os.path.isdir(gen0), "superseded gen0 should be reclaimed"
+
+
+@pytest.mark.parametrize("kind", KINDS)
+def test_publish_guard_reappends_after_generation_bump(spark, tbl, kind):
     """A writer whose index append raced a rebuild re-appends into the new
     generation inside its locked publish — simulated deterministically by
     staging the pending-append record, bumping the generation, then running
     the guard the publish path runs."""
     tbl.insert(_rows(spark, ("k1", "A", 1)))
-    tbl.create_secondary_index("val")
+    name = _index(tbl, kind)
     inst = tbl.insert(_rows(spark, ("k2", "D", 1)))
     rels = [
         r
@@ -126,13 +196,15 @@ def test_publish_guard_reappends_after_generation_bump(spark, tbl):
         for r in i.files_added
     ]
     # writer state as of its append: generation 0
-    tbl._pending_index_appends = {"rels": rels, "partial_cols": None, "gens": {"val": 0}}
-    tbl.rebuild_index("val")  # concurrent maintenance swaps to generation 1
-    n_before = tbl._read_index_entries("val").count()
+    tbl._pending_index_appends = {
+        "rels": rels, "partial_cols": None, "kinds": {kind}, "gens": {name: 0}
+    }
+    tbl.rebuild_index(name)  # concurrent maintenance swaps to generation 1
+    n_before = tbl._read_index_entries(name).count()
     tbl._index_publish_guard()
-    n_after = tbl._read_index_entries("val").count()
-    assert n_after > n_before  # (value, key) pairs re-derived into the new gen
-    assert tbl.lookup("val", "D").count() == 1
+    n_after = tbl._read_index_entries(name).count()
+    assert n_after > n_before  # entries re-derived into the new generation
+    assert _lookup(tbl, kind, "k2", "D").count() == 1
 
 
 def test_heal_age_gate_protects_inflight_files(spark, tbl):
@@ -197,25 +269,24 @@ def test_call_run_services_front_door(spark, tmp_path):
     assert {"healed", "cleaned", "indexes_rebuilt", "archived"} <= services
 
 
-def test_drop_index_leaves_trash_for_readers_then_heal_sweeps(spark, tbl):
+@pytest.mark.parametrize("kind", KINDS)
+def test_drop_index_leaves_trash_for_readers_then_heal_sweeps(spark, tbl, kind):
     tbl.insert(_rows(spark, ("k1", "A", 1)))
-    tbl.create_secondary_index("val")
-    data_dir = tbl._index_data_dir("val")
-    tbl.drop_secondary_index("val")
-    assert tbl.secondary_index_cols() == []
-    assert tbl._index_meta("val") is None
+    name = _index(tbl, kind)
+    data_dir = tbl._index_data_dir(name)
+    tbl.drop_index(name)
+    assert tbl.index_names() == [] and tbl.secondary_index_cols() == []
+    assert tbl._index_meta(name) is None
     # the dataset itself survives the drop (renamed, not rmtree'd) so an
     # in-flight reader finishes cleanly...
-    idx_root = os.path.join(tbl.base, tbl.INDEX_DIR)
-    trash = [d for d in os.listdir(idx_root) if d.startswith(".trash-val-")]
+    trash_root = os.path.dirname(tbl._index_dir(name))
+    trash = [d for d in os.listdir(trash_root) if d.startswith(f".trash-{name}-")]
     assert len(trash) == 1 and not os.path.isdir(data_dir)
     # ...and heal reclaims it once aged past the gate
     tbl.LOCK_TTL_SECONDS = 0.0
     removed = tbl.heal()
-    assert any(".trash-val-" in r for r in removed)
-    assert not os.listdir(idx_root) or not any(
-        d.startswith(".trash-") for d in os.listdir(idx_root)
-    )
+    assert any(f".trash-{name}-" in r for r in removed)
+    assert not any(d.startswith(".trash-") for d in os.listdir(trash_root))
 
 
 # --------------------------------------------------------------------------

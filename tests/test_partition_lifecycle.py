@@ -87,7 +87,7 @@ def test_delete_partition_validation_and_index_invalidation(spark, tmp_path):
     # DROP itself only removes rows — the index stays valid and exact
     t.create_record_index()
     t.delete_partition({"seg": "s1"})
-    assert (t._record_index_meta() or {}).get("valid") is True
+    assert (t._index_meta("record_index") or {}).get("valid") is True
     live = sorted(t.timeline.live_files()[0])
     cand = t._record_index_candidates(
         live,
@@ -97,7 +97,7 @@ def test_delete_partition_validation_and_index_invalidation(spark, tmp_path):
         assert "seg=s1" not in r
     t2 = Table(spark, t.base)
     t2.rollback()
-    assert (t2._record_index_meta() or {}).get("valid") is False
+    assert (t2._index_meta("record_index") or {}).get("valid") is False
 
 
 def test_partition_ttl_service(spark, tmp_path):

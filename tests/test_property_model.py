@@ -467,8 +467,8 @@ def test_random_dml_sequences_match_model(spark, tmp_path_factory, ops, table_ty
         # index equivalence after whatever the sequence did: re-certify if a
         # rollback invalidated it, then point reads must equal filtered scans
         t2 = Table(spark, tbl.base)
-        if not (t2._record_index_meta() or {}).get("valid", True):
-            t2.rebuild_record_index()
+        if not (t2._index_meta("record_index") or {}).get("valid", True):
+            t2.rebuild_index("record_index")
         from pyspark.sql import functions as F
 
         cols = tbl.data_cols

@@ -10,7 +10,6 @@ a no-index replay.
 from __future__ import annotations
 
 import os
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -144,39 +143,16 @@ def test_mor_logs_and_compaction_stay_complete(spark, tmp_path):
     assert rows == [(i, 4.0, 4) for i in range(3)]
 
 
-def test_rollback_invalidates_and_services_rebuild(spark, tbl):
-    t2 = Table(spark, tbl.base)
-    t2.delete(spark.range(0, 10).select(F.col("id").alias("k")))  # replace commit
-    t3 = Table(spark, tbl.base)
-    t3.rollback()  # resurrects replaced files
-    meta = t3._record_index_meta()
-    assert meta is not None and meta["valid"] is False
-
-    # invalid index never serves probes — fallback to range/bloom planning
-    t4 = Table(spark, tbl.base)
-    t4.upsert(_batch(spark, 2, 0, 5))
-    assert "record_index" not in (t4.last_key_prune or {})
-
-    rep = Table(spark, tbl.base).run_services()
-    assert "_record" in rep["indexes_rebuilt"]
-    t5 = Table(spark, tbl.base)
-    t5.upsert(_batch(spark, 3, 0, 5))
-    assert t5.last_key_prune.get("record_index") is True
-    # resurrected rows are back and updated rows carry the latest version
-    rows = {r["k"]: r["v"] for r in Table(spark, tbl.base).read().filter(F.col("k") < 10).collect()}
-    assert rows == {**{k: 4 for k in range(5)}, **{k: 1 for k in range(5, 10)}}
-
-
 def test_rebuild_compacts_superset(spark, tbl):
     for b in range(1, 4):
         Table(spark, tbl.base).upsert(_batch(spark, b, 0, 100))
     t = Table(spark, tbl.base)
-    before = t._footer_rows(t._index_parquet_files(t._record_index_data_dir()))
-    t.rebuild_record_index()
+    before = t._footer_rows(t._index_parquet_files(t._index_data_dir("record_index")))
+    t.rebuild_index("record_index")
     t2 = Table(spark, tbl.base)
-    after = t2._footer_rows(t2._index_parquet_files(t2._record_index_data_dir()))
+    after = t2._footer_rows(t2._index_parquet_files(t2._index_data_dir("record_index")))
     assert after == 600 < before  # exact live mapping, one entry per live row
-    meta = t2._record_index_meta()
+    meta = t2._index_meta("record_index")
     assert meta["gen"] == 1 and meta["valid"] is True
     # old generation swept age-gated, never eagerly
     gen0 = os.path.join(t2.base, t2.RECORD_INDEX_DIR, "data")
@@ -225,26 +201,6 @@ def test_lookup_key_point_read_and_scan_routing(spark, tbl):
     m2 = Table(spark, mt.base)
     assert [(r["val"], r["v"]) for r in m2.lookup_key(3).collect()] == [(9.0, 2)]
     assert [(r["val"], r["v"]) for r in m2.lookup_key(50).collect()] == [(1.0, 1)]
-
-
-def test_publish_guard_reappends_record_entries(spark, tbl):
-    """A writer whose (key, file) append raced a rebuild re-appends into the
-    new generation inside its locked publish — staged deterministically like
-    the secondary-index guard test."""
-    inst = Table(spark, tbl.base).upsert(_batch(spark, 9, 0, 10))
-    t = Table(spark, tbl.base)
-    rels = [
-        r
-        for i in t.timeline.completed_data_instants()
-        if i.instant == inst
-        for r in i.files_added
-    ]
-    t._pending_record_append = {"rels": rels, "gen": 0}
-    t.rebuild_record_index()  # concurrent maintenance swaps to generation 1
-    n_before = t._footer_rows(t._index_parquet_files(t._record_index_data_dir()))
-    t._index_publish_guard()
-    n_after = t._footer_rows(t._index_parquet_files(t._record_index_data_dir()))
-    assert n_after > n_before  # pairs re-derived into the new generation
 
 
 def _rli_writer_proc(base: str, residue: int, out) -> None:
@@ -303,7 +259,7 @@ def _rli_services_proc(base: str, out) -> None:
     try:
         for _ in range(3):
             time.sleep(0.6)
-            Table(spark, base).rebuild_record_index()
+            Table(spark, base).rebuild_index("record_index")
         out.put(("rebuilds", 3))
     except BaseException:
         import traceback
@@ -358,7 +314,7 @@ def test_concurrent_writers_and_rebuilds_keep_mapping_exact(spark, tmp_path):
     assert results[0] == 3 and results[1] == 3 and results["rebuilds"] == 3, results
 
     final = Table(spark, base)
-    assert (final._record_index_meta() or {}).get("valid") is True
+    assert (final._index_meta("record_index") or {}).get("valid") is True
     # exactness probe over a key sample spanning both writers' residues
     live = sorted(final.timeline.live_files()[0])
     cand = final._record_index_candidates(live, _keys(spark, 0, 40))
@@ -391,40 +347,47 @@ def test_sql_ddl_and_drop(spark, tmp_path):
     sess.sql("INSERT INTO rt VALUES (1, 1.0, 1), (2, 2.0, 1)")
     sess.sql("CREATE INDEX record_index ON rt (k)")
     tbl = sess.table("rt")
-    assert (tbl._record_index_meta() or {}).get("valid") is True
+    assert (tbl._index_meta("record_index") or {}).get("valid") is True
     # column list must match the record key
     with pytest.raises(ValueError):
         sess.sql("CREATE INDEX record_index ON rt (val)")
     sess.sql("CALL rebuild_index('rt', 'record_index')")
-    assert (Table(spark, tbl.base)._record_index_meta() or {}).get("gen") == 1
+    assert (Table(spark, tbl.base)._index_meta("record_index") or {}).get("gen") == 1
     shown = {
         r["indexName"]: (r["indexType"], r["generation"], r["valid"])
         for r in sess.sql("SHOW INDEXES FROM rt").collect()
     }
     assert shown["record_index"] == ("record_index", 1, True)
     sess.sql("DROP INDEX record_index ON rt")
-    assert Table(spark, tbl.base)._record_index_meta() is None
+    assert Table(spark, tbl.base)._index_meta("record_index") is None
 
 
-def test_heal_never_sweeps_future_generations(spark, tbl):
-    """An IN-FLIGHT rebuild's NEW generation dir (gen > meta's current) must
-    survive heal even past the age gate: sweeping it would let the rebuild's
-    subsequent locked swap mark a gutted dir valid and silently break the
-    superset lookup contract. Only strictly-LOWER generations are sweepable."""
-    t = Table(spark, tbl.base)
-    t.rebuild_record_index()  # current gen -> 1, gen0 superseded
-    d = os.path.join(t.base, t.RECORD_INDEX_DIR)
-    future = os.path.join(d, "data_g0002")  # an in-flight rebuild's build dir
-    os.makedirs(future, exist_ok=True)
-    with open(os.path.join(future, "part-00000.parquet"), "wb") as f:
-        f.write(b"x")
-    gen0 = os.path.join(d, "data")
-    old = time.time() - 7200
-    for p in (future, gen0):
-        os.utime(p, (old, old))
-    t.heal(min_age_seconds=1.0)
-    assert os.path.isdir(future), "future generation swept mid-rebuild"
-    assert not os.path.isdir(gen0), "superseded gen0 should be reclaimed"
+def test_record_index_name_is_reserved(spark, tmp_path):
+    """``record_index`` names the record index in every index verb, so no
+    value index may take it: a secondary index of that name would shadow the
+    record index in DROP INDEX / CALL rebuild_index."""
+    from hudi_examples_spark.sql import Engine
+
+    sess = Engine(spark, str(tmp_path / "wh"))
+    sess.sql(
+        "CREATE TABLE rt (k BIGINT, val DOUBLE, v INT) USING hudi "
+        "TBLPROPERTIES (primaryKey = 'k', preCombineField = 'v')"
+    )
+    sess.sql("INSERT INTO rt VALUES (1, 1.0, 1), (2, 2.0, 1)")
+    tbl = sess.table("rt")
+    with pytest.raises(ValueError, match="reserved"):
+        sess.sql("CREATE INDEX record_index ON rt USING secondary_index(val)")
+    with pytest.raises(ValueError, match="reserved"):
+        tbl.create_expression_index("Record_Index", "val * 2")
+    with pytest.raises(ValueError, match="reserved"):
+        tbl.schedule_indexing("expression", name="record_index", expr="val * 2")
+    assert tbl.index_names() == [] and tbl.pending_indexings() == []
+    # the record index itself answers to the name in every verb
+    sess.sql("CREATE INDEX record_index ON rt (k)")
+    sess.sql("CALL rebuild_index('rt', 'record_index')")
+    assert Table(spark, tbl.base)._index_meta("record_index")["gen"] == 1
+    sess.sql("DROP INDEX record_index ON rt")
+    assert Table(spark, tbl.base).index_names() == []
 
 
 def test_lookup_key_raced_invalidation_keeps_evidence(spark, tbl):
@@ -432,9 +395,9 @@ def test_lookup_key_raced_invalidation_keeps_evidence(spark, tbl):
     probe, lookup_key falls back to a col-stats scan — the pruning-evidence
     attribute must still be set (a fresh handle used to AttributeError)."""
     t = Table(spark, tbl.base)
-    meta = t._record_index_meta()
+    meta = t._index_meta("record_index")
     meta["valid"] = False
-    t._write_record_index_meta(meta)
+    t._write_index_meta("record_index", meta)
     # simulate the race on a FRESH handle: candidates probe sees invalid meta
     t2 = Table(spark, tbl.base)
     rows = t2.lookup_key(7).collect()

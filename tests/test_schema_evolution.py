@@ -286,10 +286,10 @@ def test_rename_drop_of_indexed_column_rejected(spark, tbl):
         tbl.rename_column("fare", "price")
     with pytest.raises(ValueError, match="referenced by secondary"):
         tbl.drop_columns(["fare"])
-    tbl.drop_secondary_index("fare")
+    tbl.drop_index("fare")
     with pytest.raises(ValueError, match="fare_band"):
         tbl.rename_column("fare", "price")  # the expression index still holds it
-    tbl.drop_secondary_index("fare_band")
+    tbl.drop_index("fare_band")
     tbl.rename_column("fare", "price")
     assert "price" in tbl.schema.names
 

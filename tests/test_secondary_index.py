@@ -118,7 +118,7 @@ def test_unindexed_column_falls_back_to_scan(indexed_table):
 
 def test_drop_index(indexed_table):
     assert indexed_table.secondary_index_cols() == ["cat"]
-    indexed_table.drop_secondary_index("cat")
+    indexed_table.drop_index("cat")
     assert indexed_table.secondary_index_cols() == []
     assert indexed_table.lookup("cat", "c7").count() == 100  # scan fallback
 

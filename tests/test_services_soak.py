@@ -280,7 +280,7 @@ def test_run_services_during_write_storm(spark, tmp_path):
         assert via_index == via_scan, f"index incomplete for {tv}"
 
     # --- record-index completeness after the storm -------------------------
-    rmeta = conc2._record_index_meta()
+    rmeta = conc2._index_meta("record_index")
     assert rmeta is not None and rmeta["valid"] is True
     for k in (0, 1, N_ROWS - 1):
         via_rli = sorted(map(tuple, conc2.lookup_key(k).collect()))
