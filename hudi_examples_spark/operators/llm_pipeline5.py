@@ -36,6 +36,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from hudi_examples_spark.functions.text import words
+from hudi_examples_spark.operators.llm_pipeline import _docs_shingled
 from hudi_examples_spark.operators.spec import QuerySpec
 from hudi_examples_spark.sources.readers import load_sf_table as t
 
@@ -50,20 +51,6 @@ def _docs(spark: SparkSession, sf: str) -> DataFrame:
     return t(spark, sf, "documents").repartition(n)
 
 
-def _docs_shingled3(spark: SparkSession, sf: str) -> DataFrame:
-    """(doc_id, sh): distinct word 3-grams, with the word array PROJECTED into
-    a real column before shingling — inlining words() into the element_at
-    lambdas makes Catalyst re-evaluate the split per array element, O(words²)
-    per row (see functions/text.py:shingles_from)."""
-    from hudi_examples_spark.functions.text import shingles_from
-
-    return (
-        _docs(spark, sf)
-        .select("doc_id", words("text").alias("__ws"))
-        .select("doc_id", F.array_distinct(shingles_from(F.col("__ws"), 3)).alias("sh"))
-    )
-
-
 def pipe_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     """Benchmark decontamination by n-gram overlap.
 
@@ -72,14 +59,14 @@ def pipe_decontaminate(spark: SparkSession, sf: str) -> DataFrame:
     side is only ever scanned and hash-joined against a small dimension, the
     exact shape that survives a 1000× train-corpus scale-up.
     """
-    d = _docs_shingled3(spark, sf)
+    d = _docs_shingled(spark, sf, 3)
     ev = F.broadcast(
         d.filter(F.col("doc_id") % EVAL_MOD == 0)
-        .select(F.explode("sh").alias("g"))
+        .select(F.explode("shingles").alias("g"))
         .distinct()
     )
     train = d.filter(F.col("doc_id") % EVAL_MOD != 0).select(
-        "doc_id", F.explode_outer("sh").alias("g")
+        "doc_id", F.explode_outer("shingles").alias("g")
     )
     hits = train.join(ev, "g", "left_semi").groupBy("doc_id").agg(
         F.count(F.lit(1)).alias("n_overlap")

@@ -520,7 +520,7 @@ class Engine:
         consistent snapshot copy (O(files) hardlink clone or plain parquet).
         The sort/zorder forms are
         incremental: already-in-layout partitions are skipped (see
-        ``Table._cluster_rewrite``)."""
+        ``Table._clustering_plan``)."""
         proc = ".".join(_seq(plan.procedure().nameParts())).lower()
         args = []
         for a in _seq(plan.args()):
@@ -600,10 +600,7 @@ class Engine:
             # of rewriting inline; 'execute' runs the oldest pending plan
             if cols and cols[0].lower() == "schedule":
                 tbl.schedule_clustering(
-                    cols[1:],
-                    zorder=proc.endswith("zorder"),
-                    hilbert=proc.endswith("hilbert"),
-                    build=build,
+                    cols[1:], strategy=proc.removeprefix("run_clustering_"), build=build
                 )
             elif cols and cols[0].lower() in ("execute", "run"):
                 tbl.run_clustering()

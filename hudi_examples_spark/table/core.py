@@ -2153,44 +2153,15 @@ class Table:
                 if self.config.record_key == [col] and self._record_index_ready():
                     out = self.lookup_key(val)
                     self.last_scan = dict(self.last_record_lookup)
-                    rest = None
-                    for c2, op2, v2 in filters:
-                        if (c2, op2, v2) == (col, op, val):
-                            continue
-                        cc = F.col(c2)
-                        cond = {
-                            "=": cc == v2,
-                            "<": cc < v2,
-                            "<=": cc <= v2,
-                            ">": cc > v2,
-                            ">=": cc >= v2,
-                        }[op2]
-                        rest = cond if rest is None else (rest & cond)
-                    return out.filter(rest) if rest is not None else out
-                name = self._index_for(col)
-                if name is None:
-                    continue
-                out = self.lookup_indexed(name, val)
-                self.last_scan = dict(self.last_index_lookup)
-                rest = None
-                for c2, op2, v2 in filters:
-                    if (c2, op2, v2) == (col, op, val):
+                else:
+                    name = self._index_for(col)
+                    if name is None:
                         continue
-                    cc = F.col(c2)
-                    cond = {
-                        "=": cc == v2,
-                        "<": cc < v2,
-                        "<=": cc <= v2,
-                        ">": cc > v2,
-                        ">=": cc >= v2,
-                    }[op2]
-                    rest = cond if rest is None else (rest & cond)
+                    out = self.lookup_indexed(name, val)
+                    self.last_scan = dict(self.last_index_lookup)
+                rest = _filter_cond(filters, skip=(col, op, val))
                 return out.filter(rest) if rest is not None else out
-        conds = None
-        for col, op, val in filters or []:
-            c = F.col(col)
-            cond = {"=": c == val, "<": c < val, "<=": c <= val, ">": c > val, ">=": c >= val}[op]
-            conds = cond if conds is None else (conds & cond)
+        conds = _filter_cond(filters)
         files, _ = self.timeline.live_files(normalize_as_of(as_of) if as_of else None)
         log_rels = sorted(r for r, (_, a) in files.items() if a == "deltacommit")
         if not filters or not self.config.stats_cols:
@@ -2264,8 +2235,9 @@ class Table:
         (one os.stat per live file — no data reads, no snapshot job);
         execution is a pure copy (rows keep their original
         ``_hoodie_commit``), so commits landing between plan and publish
-        still supersede the output at read time and the publish conflicts
-        only within the rewritten partitions.
+        still supersede the output at read time and the publish uses
+        file-scoped OCC — only a concurrent remover of its input files
+        aborts it.
 
         Streaming ingest at 100 TB produces exactly this pathology — many
         small per-trigger files per partition — and consolidating them is
@@ -2337,6 +2309,7 @@ class Table:
             ),
             since=latest,
             partitions={self._partition_of(r) for r in rewrite},
+            occ_scope="files",
         )
         return instant
 
@@ -2350,12 +2323,7 @@ class Table:
         re-clustering with a different ``n_files`` is a real rewrite, not an
         incremental no-op (passing None resolves against the current
         parallelism — a changed cluster size then legitimately re-lays-out)."""
-        n = n_files or max(self.spark.sparkContext.defaultParallelism, 8)
-        return self._cluster_rewrite(
-            [F.col(c) for c in cols],
-            n,
-            {"operation": "cluster_sort", "sort_cols": cols, "target_files": n},
-        )
+        return self._cluster_now(self._clustering_layout("sort", cols, n_files))
 
     def cluster_zorder(
         self,
@@ -2372,21 +2340,7 @@ class Table:
         min/max agg; ``build="sample"`` uses rank-based approxQuantile
         boundaries (Hudi's sample build) so skewed dimensions keep their
         pruning power. The interleave is pure JVM bit arithmetic."""
-        z = self._zorder_expr(self.read(), cols, bits, build)
-        n = n_files or max(self.spark.sparkContext.defaultParallelism, 8)
-        return self._cluster_rewrite(
-            [z],
-            n,
-            # bits and build are part of the layout identity: a different
-            # quantization is a different layout, never an incremental no-op
-            {
-                "operation": "cluster_zorder",
-                "zorder_cols": cols,
-                "zorder_bits": bits,
-                "zorder_build": build,
-                "target_files": n,
-            },
-        )
+        return self._cluster_now(self._clustering_layout("zorder", cols, n_files, bits, build))
 
     def cluster_hilbert(
         self,
@@ -2401,19 +2355,7 @@ class Table:
         neighbours, so per-file bucket ranges come out tighter than the
         morton interleave's z-jumps and ``scan`` prunes at least as well on
         every listed dimension."""
-        z = self._hilbert_expr(self.read(), cols, bits, build)
-        n = n_files or max(self.spark.sparkContext.defaultParallelism, 8)
-        return self._cluster_rewrite(
-            [z],
-            n,
-            {
-                "operation": "cluster_hilbert",
-                "hilbert_cols": cols,
-                "hilbert_bits": bits,
-                "hilbert_build": build,
-                "target_files": n,
-            },
-        )
+        return self._cluster_now(self._clustering_layout("hilbert", cols, n_files, bits, build))
 
     @staticmethod
     def _bucket_exprs(
@@ -2490,46 +2432,117 @@ class Table:
 
         return hilbert_udf(len(cols), bits)(*cls._bucket_exprs(df, cols, bits, build))
 
-    def _cluster_rewrite(self, sort_exprs: list, n_files: int | None, meta: dict) -> str | None:
-        """Layout rewrite, published under OCC (table services take the same
-        lock as writers — Hudi requires this for clustering): any commit
-        landing after our snapshot aborts the publish instead of being
-        silently clobbered by the replacecommit.
-
-        Incremental (Hudi schedules clustering per file group, never per
-        table): a live file is already *in layout* iff the commit that added
-        it was a clustering replacecommit with this same layout spec
-        (operation + columns), and a partition needs rewriting iff it holds
-        at least one out-of-layout live file. Only violating partitions are
-        read and rewritten — at 100 TB a table with 1% churned partitions
-        re-clusters ~1% of its bytes — and the publish conflicts only with
-        commits touching those partitions. A fully-in-layout table is a
-        no-op (returns None). MOR tables with live log files fall back to a
-        full rewrite: a log row may supersede a base row in ANOTHER
-        partition, so partition-scoped base rewrites could resurrect stale
-        versions under newer commit times — compact first to get the
-        incremental path. (cluster_zorder's quantization bounds are
-        recomputed from the current table, so an incremental pass interleaves
-        against fresh bounds — per-file min/max stats stay truthful either
-        way, which is all ``scan`` pruning relies on.)"""
+    def _clustering_layout(
+        self,
+        strategy: str,
+        cols: list[str],
+        n_files: int | None = None,
+        bits: int = 8,
+        build: str = "uniform",
+    ) -> dict:
+        """The layout spec of one clustering ``strategy`` (``"sort"``,
+        ``"zorder"`` or ``"hilbert"``): what a plan pins, what its
+        replacecommit records, and the identity ``_layout_violations`` checks
+        live files against. Curve bits and build and the resolved target file
+        count are part of it — a different quantization or file count is a
+        different layout, never an incremental no-op."""
         if self.config.n_buckets or self.config.bucket_ranges:
             raise ValueError("sort/zorder clustering conflicts with bucket-index routing")
-        old_files, latest = self.timeline.live_files()
-        log_rels = [r for r, (_, a) in old_files.items() if a == "deltacommit"]
-        layout_sig = dict(meta)
-        viol_parts: set[str] | None = None
-        if not log_rels:
-            v = self._layout_violations(layout_sig, old_files)
+        n = n_files or max(self.spark.sparkContext.defaultParallelism, 8)
+        if strategy == "sort":
+            return {"operation": "cluster_sort", "sort_cols": list(cols), "target_files": n}
+        if strategy not in ("zorder", "hilbert"):
+            raise ValueError(f"unknown clustering strategy {strategy!r}")
+        return {
+            "operation": f"cluster_{strategy}",
+            f"{strategy}_cols": list(cols),
+            f"{strategy}_bits": bits,
+            f"{strategy}_build": build,
+            "target_files": n,
+        }
+
+    def _layout_sort_exprs(self, layout: dict, df: DataFrame) -> list:
+        """A layout's range-sort expressions over ``df``, the rows being
+        rewritten: the sort columns, or one curve position whose quantization
+        bounds come from ``df`` itself (per-file min/max stats stay truthful
+        whatever the bounds, which is all ``scan`` pruning relies on)."""
+        if layout["operation"] == "cluster_sort":
+            return [F.col(c) for c in layout["sort_cols"]]
+        s = layout["operation"].removeprefix("cluster_")
+        curve = self._zorder_expr if s == "zorder" else self._hilbert_expr
+        return [
+            curve(df, layout[f"{s}_cols"], layout[f"{s}_bits"], layout.get(f"{s}_build", "uniform"))
+        ]
+
+    def _clustering_plan(self, layout: dict) -> Instant | None:
+        """Plan one clustering against the current snapshot, unwritten: the
+        out-of-layout files to rewrite and their partitions, or None when the
+        table is fully in layout (one timeline walk, no data IO).
+
+        Incremental (Hudi schedules clustering per file group, never per
+        table): a partition needs rewriting iff it holds at least one
+        out-of-layout live file, so at 100 TB a table with 1% churned
+        partitions re-clusters ~1% of its bytes. MOR tables with live log
+        files plan a full rewrite instead (``partitions`` None): a log row may
+        supersede a base row in ANOTHER partition, so partition-scoped base
+        rewrites could resurrect stale versions — compact first to get the
+        incremental plan. ``schedule_clustering`` never writes a full plan."""
+        files, _ = self.timeline.live_files()
+        if any(a == "deltacommit" for _, a in files.values()):
+            rewrite, parts = sorted(files), None
+        else:
+            v = self._layout_violations(layout, files)
             if v is None:
                 return None
-            rewrite, viol_parts = v
-        else:
-            rewrite = sorted(old_files)
+            rewrite, parts = v[0], sorted(v[1])
+        return Instant(
+            new_instant(),
+            "clusteringplan",
+            [],
+            [],
+            {
+                "operation": "clustering_schedule",
+                "layout": layout,
+                "rewrite": rewrite,
+                "partitions": parts,
+            },
+        )
+
+    def _cluster_now(self, layout: dict) -> str | None:
+        """Inline clustering: the plan ``schedule_clustering`` would cut,
+        held in memory and executed at once (Hudi's ``--mode
+        scheduleAndExecute``)."""
+        plan = self._clustering_plan(layout)
+        return None if plan is None else self._execute_clustering(plan)
+
+    def _execute_clustering(self, plan: Instant) -> str | None:
+        """Execute one clustering plan, scheduled or inline: snapshot the
+        planned files, range-sort them on the layout, write, publish one
+        replacecommit. Table services take the same lock as writers (Hudi
+        requires this for clustering).
+
+        Validation: every planned file must still be live — a COW rewrite,
+        compaction, ``delete_partition``, rollback, or competing clusterer
+        that replaced any of them voids the plan (returns None). New files
+        added since the plan — base or log, any partition — are fine for a
+        base-only plan: the rewrite is a pure copy that preserves per-row
+        commit instants, so newer commits supersede it at read exactly as
+        they did the original files, and the publish uses file-scoped OCC —
+        only a concurrent remover of planned files aborts. A full-rewrite
+        plan bakes the log merge into its output, so it conflicts with any
+        commit after its snapshot."""
+        files, latest = self.timeline.live_files()
+        rewrite, parts = plan.meta["rewrite"], plan.meta["partitions"]
+        if parts is None and set(files) != set(rewrite):
+            raise ConcurrentWriteConflict("full-table rewrite conflicts with a concurrent commit")
+        if not set(rewrite) <= set(files):
+            return None
+        layout = plan.meta["layout"]
         instant = new_instant()
-        current = self._snapshot_of(old_files, rewrite)
-        n = n_files or max(self.spark.sparkContext.defaultParallelism, 8)
+        current = self._snapshot_of(files, rewrite)
+        sort_exprs = self._layout_sort_exprs(layout, current)
         out = (
-            current.repartitionByRange(n, *sort_exprs)
+            current.repartitionByRange(layout["target_files"], *sort_exprs)
             .sortWithinPartitions(*sort_exprs)
             .select(*current.columns)  # drop any helper sort expression
         )
@@ -2539,17 +2552,16 @@ class Table:
                 instant,
                 "replacecommit",
                 rels,
-                rewrite,
+                sorted(rewrite),
                 {
-                    **meta,
+                    **layout,
                     "numOutputFileGroups": len(rels),
-                    "numPartitionsRewritten": len(viol_parts) if viol_parts is not None else -1,
+                    "numPartitionsRewritten": len(parts) if parts is not None else -1,
                 },
             ),
             since=latest,
-            # scoped conflict set when incremental; a full rewrite conflicts
-            # with any concurrent commit
-            partitions=viol_parts,
+            partitions=None if parts is None else set(parts),
+            occ_scope="files" if parts is not None else "partition",
         )
         return instant
 
@@ -2577,8 +2589,7 @@ class Table:
         self,
         cols: list[str],
         n_files: int | None = None,
-        zorder: bool = False,
-        hilbert: bool = False,
+        strategy: str = "sort",
         bits: int = 8,
         build: str = "uniform",
     ) -> str | None:
@@ -2586,10 +2597,11 @@ class Table:
         for async clustering — the reference enables exactly this split with
         ``hoodie.clustering.async.enabled=true`` and a plan-strategy class,
         ``flink/src/main/resources/clusteringjob.properties:1,12``): the plan
-        pins the exact out-of-layout files to
-        rewrite and the target layout, so a different process — the async
-        clustering job, ``run_services`` — executes it later with
-        :meth:`run_clustering` while writers keep committing.
+        pins the exact out-of-layout files to rewrite and the target layout
+        of ``strategy`` (``"sort"``, ``"zorder"`` or ``"hilbert"``), so a
+        different process — the async clustering job, ``run_services`` —
+        executes it later with :meth:`run_clustering` while writers keep
+        committing.
 
         Plans cover BASE files only: with live MOR logs present this returns
         None (compact first — ``run_services`` orders compaction before
@@ -2599,52 +2611,11 @@ class Table:
         between schedule and execute still supersedes the re-laid-out base at
         read time and execution conflicts only with a REMOVER of planned
         files. Returns None too when the table is already fully in layout."""
-        if self.config.n_buckets or self.config.bucket_ranges:
-            raise ValueError("sort/zorder clustering conflicts with bucket-index routing")
-        if zorder and hilbert:
-            raise ValueError("pick one layout strategy: zorder or hilbert")
-        n = n_files or max(self.spark.sparkContext.defaultParallelism, 8)
-        if zorder:
-            layout = {
-                "operation": "cluster_zorder",
-                "zorder_cols": cols,
-                "zorder_bits": bits,
-                "zorder_build": build,
-                "target_files": n,
-            }
-        elif hilbert:
-            layout = {
-                "operation": "cluster_hilbert",
-                "hilbert_cols": cols,
-                "hilbert_bits": bits,
-                "hilbert_build": build,
-                "target_files": n,
-            }
-        else:
-            layout = {"operation": "cluster_sort", "sort_cols": cols, "target_files": n}
-        old_files, _ = self.timeline.live_files()
-        if any(a == "deltacommit" for _, a in old_files.values()):
+        plan = self._clustering_plan(self._clustering_layout(strategy, cols, n_files, bits, build))
+        if plan is None or plan.meta["partitions"] is None:
             return None
-        v = self._layout_violations(layout, old_files)
-        if v is None:
-            return None
-        rewrite, viol_parts = v
-        instant = new_instant()
-        self.timeline.write(
-            Instant(
-                instant,
-                "clusteringplan",
-                [],
-                [],
-                {
-                    "operation": "clustering_schedule",
-                    "layout": layout,
-                    "rewrite": rewrite,
-                    "partitions": sorted(viol_parts),
-                },
-            )
-        )
-        return instant
+        self.timeline.write(plan)
+        return plan.instant
 
     def pending_clusterings(self) -> list[Instant]:
         """Scheduled-but-not-executed clustering plans, oldest first."""
@@ -2656,75 +2627,24 @@ class Table:
     def run_clustering(self, plan_instant: str | None = None) -> str | None:
         """Execute a scheduled clustering plan (the async clustering job half
         of Hudi's schedule/execute split; execution-strategy analogue of
-        ``clusteringjob.properties:8`` run as its own job).
+        ``clusteringjob.properties:8`` run as its own job) with the executor
+        the inline ``cluster_*`` calls use. A voided plan is discarded
+        (returns None; the next ``schedule_clustering`` plans against current
+        state); a lost OCC race leaves it pending for the next run."""
+        plan = self._next_plan(self.pending_clusterings(), plan_instant)
+        if plan is None:
+            return None
+        out = self._execute_clustering(plan)
+        self.timeline.remove(plan.instant)  # executed, or stale and discarded
+        return out
 
-        Validation: every planned file must still be live — a COW rewrite,
-        compaction, ``delete_partition``, rollback, or competing clusterer
-        that replaced any of them voids the plan (discarded, returns None;
-        the next ``schedule_clustering`` plans against current state). New
-        files added since the plan — base or log, any partition — are fine:
-        the rewrite is a pure copy that preserves per-row commit instants, so
-        newer commits supersede it at read exactly as they did the original
-        files. The publish uses file-scoped OCC: only a concurrent remover of
-        planned files aborts."""
-        pending = self.pending_clusterings()
+    @staticmethod
+    def _next_plan(pending: list[Instant], plan_instant: str | None) -> Instant | None:
+        """The plan a ``run_*`` executor runs: ``plan_instant`` if it is
+        pending, else the oldest pending plan."""
         if plan_instant is not None:
             pending = [i for i in pending if i.instant == plan_instant]
-        if not pending:
-            return None
-        plan = pending[0]
-        files, latest = self.timeline.live_files()
-        rewrite = list(plan.meta["rewrite"])
-        if not set(rewrite) <= set(files):
-            self.timeline.remove(plan.instant)  # stale plan — discard
-            return None
-        layout = plan.meta["layout"]
-        instant = new_instant()
-        current = self._snapshot_of(files, rewrite)
-        if layout["operation"] == "cluster_zorder":
-            sort_exprs = [
-                self._zorder_expr(
-                    current,
-                    layout["zorder_cols"],
-                    layout["zorder_bits"],
-                    layout.get("zorder_build", "uniform"),
-                )
-            ]
-        elif layout["operation"] == "cluster_hilbert":
-            sort_exprs = [
-                self._hilbert_expr(
-                    current,
-                    layout["hilbert_cols"],
-                    layout["hilbert_bits"],
-                    layout.get("hilbert_build", "uniform"),
-                )
-            ]
-        else:
-            sort_exprs = [F.col(c) for c in layout["sort_cols"]]
-        out = (
-            current.repartitionByRange(layout["target_files"], *sort_exprs)
-            .sortWithinPartitions(*sort_exprs)
-            .select(*current.columns)
-        )
-        rels = self._write_files(out, instant, preserve_layout=True)
-        self._publish_occ(
-            Instant(
-                instant,
-                "replacecommit",
-                rels,
-                sorted(rewrite),
-                {
-                    **layout,
-                    "numOutputFileGroups": len(rels),
-                    "numPartitionsRewritten": len(plan.meta["partitions"]),
-                },
-            ),
-            since=latest,
-            partitions=set(plan.meta["partitions"]),
-            occ_scope="files",
-        )
-        self.timeline.remove(plan.instant)
-        return instant
+        return pending[0] if pending else None
 
     @staticmethod
     def _partition_of_relpath(rel: str) -> dict[str, str]:
@@ -3727,12 +3647,18 @@ class Table:
             # version is a log row in THIS partition may still hold an older
             # base version elsewhere — dropping the log alone would re-expose
             # it. Compaction resolves every chain to one base row in the key's
-            # CURRENT partition (O(pending logs), partition-scoped), making
+            # CURRENT partition (O(pending logs), per file group), making
             # the drop logically exact; log-free MOR tables skip straight to
             # the metadata-only drop. (Hudi keeps this exact the other way,
             # with update.partition.path delete records at move time.)
             self.compact()
         files, latest = self.timeline.live_files()
+        if any(a == "deltacommit" for (_i, a) in files.values()):
+            # compaction publishes beside log appends, so a log that landed
+            # while it ran (or a voided plan) leaves a chain the drop could cut
+            raise ConcurrentWriteConflict(
+                f"live log files remain after compacting for delete_partition {path!r}"
+            )
         doomed = sorted(r for r in files if self._partition_of(r) == path)
         if not doomed:
             raise ValueError(f"no live files in partition {path!r}")
@@ -4585,9 +4511,11 @@ class Table:
         and retry the whole operation from a fresh snapshot.
 
         ``occ_scope="files"`` narrows conflict detection to file overlap only
-        (skip the partition-level check): used by async compaction, whose
-        merged output is correct under concurrent log APPENDS by commit-time
-        ordering — only a concurrent remover of its input files conflicts.
+        (skip the partition-level check): used by compaction and by every
+        base-only clustering copy, scheduled or inline — their output keeps
+        each row's commit instant, so it stays correct under concurrent
+        APPENDS by commit-time ordering and only a concurrent remover of
+        their input files conflicts.
         """
         if inst.files_added:
             # record-index maintenance rides EVERY file-adding publish
@@ -4663,11 +4591,12 @@ class Table:
 
     # ------------------------------------------------------------- services
 
-    def _compaction_plan(self, max_io_bytes: int | None = None) -> dict | None:
-        """Plan one compaction against the CURRENT snapshot: which live log
-        files to resolve and which base files they pull into the merge.
+    def _compaction_plan(self, max_io_bytes: int | None = None) -> Instant | None:
+        """Plan one compaction against the CURRENT snapshot, unwritten: which
+        live log files to resolve and which base files they pull into the
+        merge.
 
-        Partition-scoped (Hudi compacts per file group, never per table —
+        Per file group (Hudi compacts per file group, never per table —
         ``DeltaStreamerExample.scala:48-55``, ``flink/.README.md:57-69``): only
         file groups (hive-partition [+ ``__bucket``] dirs) holding live log
         files are merged and rewritten; every untouched base file is carried
@@ -4679,7 +4608,7 @@ class Table:
         without key-range stats that check conservatively degrades to a full
         compaction. ``known_instants`` snapshots the completed timeline so an
         executor can detect late-publishing writers minted before the plan."""
-        files, latest = self.timeline.live_files()
+        files, _ = self.timeline.live_files()
         log_rels = sorted(r for r, (_, a) in files.items() if a == "deltacommit")
         if not log_rels:
             return None
@@ -4727,28 +4656,58 @@ class Table:
         if outside:
             logs_keys = self._read_files(log_rels, with_deleted=True).select(META_KEY)
             moved = self._prune_files_by_keys(outside, logs_keys)
-        return {
-            "log_rels": log_rels,
-            "merge_base": sorted(set(in_dirs) | set(moved)),
-            "latest": latest,
-            "known_instants": sorted(
-                i.instant for i in self.timeline.completed_data_instants()
-            ),
-        }
+        known = sorted(i.instant for i in self.timeline.completed_data_instants())
+        return Instant(
+            new_instant(),
+            "compactionplan",
+            [],
+            [],
+            {
+                "operation": "compaction_schedule",
+                "log_rels": log_rels,
+                "merge_base": sorted(set(in_dirs) | set(moved)),
+                "known_instants": known,
+            },
+        )
 
-    def _execute_compaction(
-        self, plan: dict, since: str, occ_scope: str, precondition=None
-    ) -> str:
-        """Merge exactly the plan's files into fresh base files (one
-        replacecommit). Merged rows KEEP their original ``_hoodie_commit``
-        (``_with_meta`` preserves an existing meta column), so log files
-        appended AFTER the plan was cut still supersede the compacted base at
-        read time — the property that makes scheduled compaction non-blocking
-        for writers."""
-        log_rels, merge_base = plan["log_rels"], plan["merge_base"]
+    def _execute_compaction(self, plan: Instant) -> str | None:
+        """Execute one compaction plan, scheduled (:meth:`run_compaction`) or
+        inline (:meth:`compact`): merge exactly the plan's files into fresh
+        base files (one replacecommit). Merged rows KEEP their original
+        ``_hoodie_commit`` (``_with_meta`` preserves an existing meta column),
+        so log files appended AFTER the plan was cut still supersede the
+        compacted base at read time — the property that makes compaction
+        non-blocking for writers.
+
+        Validation before the merge, because the table may have moved on
+        since the plan was cut (a voided plan returns None):
+
+        - every planned file must still be live — a clustering pass,
+          ``delete_partition``, rollback, or competing compactor that replaced
+          any of them voids the plan;
+        - no completed data instant minted BEFORE the plan may have published
+          AFTER it (``known_instants`` delta): such a late writer's log rows
+          can predate a tombstone epoch inside the plan, and compacting the
+          tombstone away would resurrect them.
+
+        The publish uses file-scoped OCC (``occ_scope="files"``): log files
+        appended after the plan — the normal state of affairs under live
+        writers — are no conflict; only a concurrent REMOVER of planned files
+        aborts. The late-publisher check is re-run under the publish lock,
+        closing the window between validation and publish."""
+        log_rels, merge_base = plan.meta["log_rels"], plan.meta["merge_base"]
         touched = sorted(set(merge_base) | set(log_rels))
+        files, latest = self.timeline.live_files()
+        if self._late_publishers(plan) or not set(touched) <= set(files):
+            return None
+
+        def _still_valid():
+            if self._late_publishers(plan):
+                raise ConcurrentWriteConflict(
+                    "late-publishing writer landed during plan execution"
+                )
+
         instant = new_instant()
-        files, _ = self.timeline.live_files()
         wp = self._partial_in(files, log_rels)
         base = self._read_files(merge_base, with_deleted=True, with_partial=wp)
         logs = self._read_files(log_rels, with_deleted=True, with_partial=wp)
@@ -4772,22 +4731,21 @@ class Table:
                     ),
                 },
             ),
-            since=since,
+            since=latest,
             partitions={self._partition_of(r) for r in touched},
-            occ_scope=occ_scope,
-            precondition=precondition,
+            occ_scope="files",
+            precondition=_still_valid,
         )
         return instant
 
     def compact(self) -> str | None:
-        """M14: inline compaction — plan against the current snapshot and
-        execute immediately (one replacecommit), under partition-scoped OCC.
-        For the async schedule/execute split a separate process would run, see
-        :meth:`schedule_compaction` / :meth:`run_compaction`."""
+        """M14: inline compaction — the plan :meth:`schedule_compaction` would
+        cut, held in memory and executed at once by the executor
+        :meth:`run_compaction` uses (Hudi's ``--mode scheduleAndExecute``).
+        Returns the replacecommit instant, or None when there is nothing live
+        to compact or the plan was voided before it ran."""
         plan = self._compaction_plan()
-        if plan is None:
-            return None
-        return self._execute_compaction(plan, since=plan["latest"], occ_scope="partition")
+        return None if plan is None else self._execute_compaction(plan)
 
     def compact_logs(self, min_logs_per_partition: int = 4) -> str | None:
         """Hudi 1.0 LOG compaction (``hoodie.log.compaction.enable``): stitch
@@ -4874,22 +4832,8 @@ class Table:
         plan = self._compaction_plan(max_io_bytes=max_io_bytes)
         if plan is None:
             return None
-        instant = new_instant()
-        self.timeline.write(
-            Instant(
-                instant,
-                "compactionplan",
-                [],
-                [],
-                {
-                    "operation": "compaction_schedule",
-                    "log_rels": plan["log_rels"],
-                    "merge_base": plan["merge_base"],
-                    "known_instants": plan["known_instants"],
-                },
-            )
-        )
-        return instant
+        self.timeline.write(plan)
+        return plan.instant
 
     def pending_compactions(self) -> list[Instant]:
         """Scheduled-but-not-executed compaction plans, oldest first."""
@@ -4902,55 +4846,17 @@ class Table:
         """Execute a scheduled compaction plan (Hudi's async HoodieCompactor
         half of the schedule/execute split — the reference runs exactly this
         job standalone: ``flink/.README.md:63-70``, ``--mode
-        scheduleAndExecute`` over ``clusteringjob.properties``).
-
-        Validation before the merge, because the table moved on since the
-        plan was cut:
-
-        - every planned file must still be live — a clustering pass,
-          ``delete_partition``, rollback, or competing compactor that replaced
-          any of them voids the plan (discarded, returns None; the next
-          ``schedule_compaction`` picks up the current state);
-        - no completed data instant minted BEFORE the plan may have published
-          AFTER it (``known_instants`` delta): such a late writer's log rows
-          can predate a tombstone epoch inside the plan, and compacting the
-          tombstone away would resurrect them — the plan is discarded rather
-          than risk it.
-
-        The publish uses file-scoped OCC (``occ_scope="files"``): log files
-        appended after the plan — the normal state of affairs under live
-        writers — are no conflict (their rows supersede the compacted base by
-        commit ordering); only a concurrent REMOVER of planned files aborts."""
-        pending = self.pending_compactions()
-        if plan_instant is not None:
-            pending = [i for i in pending if i.instant == plan_instant]
-        if not pending:
+        scheduleAndExecute`` over ``clusteringjob.properties``) with the
+        executor inline :meth:`compact` uses (``_execute_compaction``
+        documents its validation and OCC scope). A voided plan is discarded
+        (returns None; the next ``schedule_compaction`` picks up the current
+        state); a lost OCC race leaves it pending — the next run revalidates
+        it."""
+        plan = self._next_plan(self.pending_compactions(), plan_instant)
+        if plan is None:
             return None
-        plan = pending[0]
-        files, latest = self.timeline.live_files()
-        touched = set(plan.meta["log_rels"]) | set(plan.meta["merge_base"])
-        if self._late_publishers(plan) or not touched <= set(files):
-            self.timeline.remove(plan.instant)  # stale plan — discard
-            return None
-
-        def _still_valid():
-            # re-evaluated UNDER the publish lock: a late writer landing
-            # between the validation above and the publish would otherwise
-            # slip its pre-tombstone-epoch rows past the compacted base
-            if self._late_publishers(plan):
-                raise ConcurrentWriteConflict(
-                    "late-publishing writer landed during plan execution"
-                )
-
-        try:
-            out = self._execute_compaction(
-                plan.meta, since=latest, occ_scope="files", precondition=_still_valid
-            )
-        except ConcurrentWriteConflict:
-            # a remover (or late publisher) landed mid-merge; leave the plan
-            # pending — the next run revalidates and discards it if stale
-            raise
-        self.timeline.remove(plan.instant)
+        out = self._execute_compaction(plan)
+        self.timeline.remove(plan.instant)  # executed, or stale and discarded
         return out
 
     def schedule_indexing(
@@ -5011,12 +4917,9 @@ class Table:
         construction — absent index → build, present index → generational
         rebuild — so re-running after a crash or an OCC loss is safe; the
         plan instant is removed only after the build publishes."""
-        pending = self.pending_indexings()
-        if plan_instant is not None:
-            pending = [i for i in pending if i.instant == plan_instant]
-        if not pending:
+        plan = self._next_plan(self.pending_indexings(), plan_instant)
+        if plan is None:
             return None
-        plan = pending[0]
         name = plan.meta.get("name", self.RECORD_INDEX)
         if self._index_meta(name) is not None:
             self.rebuild_index(name)
@@ -5263,30 +5166,7 @@ class Table:
         ``split_bucket``)."""
         if self.config.bucket_ranges:
             return self.convert_to_ranges(n_buckets)
-        instant = new_instant()
-        old_files, latest = self.timeline.live_files()
-        old_n = self.config.n_buckets
-        self.config.n_buckets = n_buckets
-        self._save_props()
-        try:
-            snapshot = self.read(with_meta=True)
-            rels = self._write_files(snapshot, instant)
-            self._publish_occ(
-                Instant(
-                    instant,
-                    "replacecommit",
-                    rels,
-                    sorted(old_files),
-                    {"operation": "clustering", "numOutputFileGroups": n_buckets},
-                ),
-                since=latest,
-                partitions=None,  # full-table rewrite conflicts with any concurrent commit
-            )
-        except BaseException:
-            self.config.n_buckets = old_n
-            self._save_props()
-            raise
-        return instant
+        return self._rebucket(n_buckets, None)
 
     def _range_bucket_expr(self):
         """Ring position of the record key → owning bucket's lower boundary."""
@@ -5316,11 +5196,17 @@ class Table:
         """Migrate modulo bucket routing to consistent-hash ranges: one full
         rewrite (the LAST full rewrite — every resize afterwards is a
         per-bucket ``split_bucket``) with ``n_buckets`` equal ring ranges."""
+        return self._rebucket(None, [i * BUCKET_RING // n_buckets for i in range(n_buckets)])
+
+    def _rebucket(self, n_buckets: int | None, bucket_ranges: list[int] | None) -> str:
+        """Full-table rewrite under new bucket routing — ``n_buckets`` modulo
+        buckets or ``bucket_ranges`` ring ranges — published as one
+        replacecommit that conflicts with any concurrent commit. The routing
+        change is saved before the write and restored if it fails."""
         instant = new_instant()
         old_files, latest = self.timeline.live_files()
-        old_ranges, old_n = self.config.bucket_ranges, self.config.n_buckets
-        self.config.bucket_ranges = [i * BUCKET_RING // n_buckets for i in range(n_buckets)]
-        self.config.n_buckets = None
+        old = (self.config.n_buckets, self.config.bucket_ranges)
+        self.config.n_buckets, self.config.bucket_ranges = n_buckets, bucket_ranges
         self._save_props()
         try:
             snapshot = self.read(with_meta=True)
@@ -5331,13 +5217,16 @@ class Table:
                     "replacecommit",
                     rels,
                     sorted(old_files),
-                    {"operation": "clustering", "numOutputFileGroups": n_buckets},
+                    {
+                        "operation": "clustering",
+                        "numOutputFileGroups": n_buckets or len(bucket_ranges),
+                    },
                 ),
                 since=latest,
                 partitions=None,
             )
         except BaseException:
-            self.config.bucket_ranges, self.config.n_buckets = old_ranges, old_n
+            self.config.n_buckets, self.config.bucket_ranges = old
             self._save_props()
             raise
         return instant
@@ -5919,6 +5808,19 @@ def _stats_json(v):
     if isinstance(v, decimal.Decimal):
         return float(v)
     return v
+
+
+def _filter_cond(filters: list[tuple] | None, skip: tuple | None = None):
+    """AND of ``(col, op, value)`` predicates (op in =, <, <=, >, >=) as one
+    Column, leaving out every predicate equal to ``skip``; None when empty."""
+    conds = None
+    for col, op, val in filters or []:
+        if (col, op, val) == skip:
+            continue
+        c = F.col(col)
+        cond = {"=": c == val, "<": c < val, "<=": c <= val, ">": c > val, ">=": c >= val}[op]
+        conds = cond if conds is None else (conds & cond)
+    return conds
 
 
 def _file_may_match(per_col: dict | None, filters: list[tuple]) -> bool:

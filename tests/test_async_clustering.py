@@ -91,11 +91,11 @@ def test_zorder_plan_roundtrip(spark, tmp_path):
     tbl = make_table(spark, tmp_path)
     _bulk(spark, tbl, 0, 90)
     before = tbl.read()
-    plan = tbl.schedule_clustering(["fare", "ts"], n_files=4, zorder=True, bits=4)
+    plan = tbl.schedule_clustering(["fare", "ts"], n_files=4, strategy="zorder", bits=4)
     assert plan is not None
     assert tbl.run_clustering() is not None
     assert_same(tbl.read(), before)
-    assert tbl.schedule_clustering(["fare", "ts"], n_files=4, zorder=True, bits=4) is None
+    assert tbl.schedule_clustering(["fare", "ts"], n_files=4, strategy="zorder", bits=4) is None
 
 
 def test_run_services_executes_pending_plan(spark, tmp_path):

@@ -106,7 +106,7 @@ def test_async_hilbert_schedule_execute(spark, tmp_path):
     )
     tbl.insert(df.repartition(8))
     before = sorted(map(tuple, tbl.read().collect()))
-    plan = tbl.schedule_clustering(["x", "y"], n_files=8, hilbert=True)
+    plan = tbl.schedule_clustering(["x", "y"], n_files=8, strategy="hilbert")
     assert plan is not None
     pending = tbl.pending_clusterings()
     assert pending and pending[0].meta["layout"]["operation"] == "cluster_hilbert"

@@ -177,6 +177,47 @@ def test_mor_drop_compacts_move_chains_first(spark, tmp_path):
     assert all(seg == "s0" and val == 1.0 for seg, val in rows.values())
 
 
+def test_mor_drop_refuses_a_log_landing_during_its_compaction(spark, tmp_path):
+    """Compaction publishes beside log appends, so a log can land while
+    delete_partition's compaction runs; the drop must then refuse (that log
+    may hold a move chain again) rather than cut it."""
+    from hudi_examples_spark.table.core import ConcurrentWriteConflict
+    from tests.test_concurrency import _interleave
+
+    t = Table.create(
+        spark,
+        str(tmp_path / "t"),
+        SCHEMA,
+        TableConfig(**{**CFG, "table_type": "mor"}),
+    )
+
+    def one(k, val, seg, v):
+        return spark.createDataFrame([(k, val, seg, v)], SCHEMA)
+
+    t.insert(
+        spark.range(10).select(
+            F.col("id").alias("k"),
+            F.lit(1.0).alias("val"),
+            F.lit("s0").alias("seg"),
+            F.lit(1).alias("v"),
+        )
+    )
+    t.upsert(one(0, 9.0, "s1", 2))  # k=0 moves to s1 through a log
+    writer = Table(spark, t.base)
+    # k=1 moves to s1 while the drop's compaction runs
+    dropper = _interleave(Table(spark, t.base), lambda: writer.upsert(one(1, 7.0, "s1", 2)))
+    with pytest.raises(ConcurrentWriteConflict, match="live log"):
+        dropper.delete_partition({"seg": "s1"})
+    rows = {r["k"]: (r["seg"], r["val"]) for r in Table(spark, t.base).read().collect()}
+    assert rows[0] == ("s1", 9.0) and rows[1] == ("s1", 7.0) and len(rows) == 10
+
+    # a retry compacts the new log too, then drops both moved keys outright
+    Table(spark, t.base).delete_partition({"seg": "s1"})
+    rows = {r["k"]: (r["seg"], r["val"]) for r in Table(spark, t.base).read().collect()}
+    assert set(rows) == set(range(2, 10))
+    assert all(seg == "s0" and val == 1.0 for seg, val in rows.values())
+
+
 def test_sql_drop_partition(spark, tmp_path):
     from hudi_examples_spark.sql import Engine
 

@@ -60,10 +60,11 @@ def test_scheduler_services_run_alongside_writes(spark, tmp_path):
         clean_retain=5,
         archive_retain=2 * MAX_BATCHES,
     )
-    # passes run during every upsert; a compaction whose partitions take a
-    # log meanwhile loses its OCC race, so after each upsert the writer waits
-    # for two more passes (the second starts after the write) and keeps
-    # writing (at least 5 batches) until a pass has compacted
+    # passes run during every upsert; a compaction planned while an upsert
+    # is in flight is voided when that upsert publishes (a late publisher),
+    # so after each upsert the writer waits for two more passes (the second
+    # starts after the write) and keeps writing (at least 5 batches) until a
+    # pass has compacted
     batches = 0
     with sched:
         while batches < 5 or (
