@@ -1870,9 +1870,10 @@ class Table:
         probing (per-candidate-file work, FP-prone at scale). Hudi stores
         this mapping in the metadata table's ``record_index`` partition; here
         it is one more index of the generational protocol, a key-sorted
-        parquet dataset under ``_record_index/`` probed by a semi join of the
-        batch keys (AQE picks broadcast when the batch is small, a shuffled
-        join when it is not).
+        parquet dataset under ``_record_index/``. A point read probes it on
+        the driver (``_record_index_probe``); keyed-write planning, whose
+        keys arrive as a DataFrame of any size, semi-joins them against it
+        (``_record_index_candidates``).
 
         Same durability contract as the secondary indexes: a COMPLETE
         SUPERSET. Every commit that adds data files appends its (key, file)
@@ -1887,7 +1888,8 @@ class Table:
         key-sorted so point probes prune by footer min/max; a batch probe is
         one semi join against a two-column columnar scan — always cheaper
         than opening data files, and it degrades to a shuffled join rather
-        than a driver OOM when a bulk batch carries too many keys. Maintenance is O(commit), distributed."""
+        than a driver OOM when a bulk batch carries too many keys.
+        Maintenance is O(commit), distributed."""
         if not self.config.record_key:
             raise ValueError("record index requires a record key")
         self._build_index(self.RECORD_INDEX, {})
@@ -1943,29 +1945,40 @@ class Table:
             out = part if out is None else out.unionByName(part)
         return out
 
-    def _record_index_candidates(
-        self, rels: list[str], keys_df: DataFrame
-    ) -> list[str] | None:
-        """Exact holder files of the batch keys via the record index, or None
-        when the index is absent/invalidated (callers fall back to
-        range/bloom pruning). One semi join of the batch keys against
-        the key-sorted index scan; only matched FILE NAMES return to the
-        driver, intersected with the caller's live scope."""
+    def _record_index_data_dir(self) -> str | None:
+        """The record index's current generation dir, or None when the index
+        is absent or invalidated or its dir is gone — the one condition under
+        which both probes serve, so routing through ``lookup_key`` can never
+        fall back into a loop."""
         meta = self._index_meta(self.RECORD_INDEX)
         if meta is None or not meta["valid"]:
             return None
-        if not os.path.isdir(self._index_data_dir(self.RECORD_INDEX, meta)):
+        d = self._index_data_dir(self.RECORD_INDEX, meta)
+        return d if os.path.isdir(d) else None
+
+    def _record_index_ready(self) -> bool:
+        return self._record_index_data_dir() is not None
+
+    def _record_index_candidates(
+        self, rels: list[str], keys_df: DataFrame
+    ) -> list[str] | None:
+        """Exact holder files of a keyed write's batch keys via the record
+        index, or None when the index does not serve (callers fall back to
+        range/bloom pruning). One semi join of the batch keys against the
+        key-sorted index scan; only matched FILE NAMES return to the driver,
+        intersected with the caller's live scope."""
+        d = self._record_index_data_dir()
+        if d is None:
             return None
-        entries = self._read_index_entries(self.RECORD_INDEX, meta)
+        entries = self.spark.read.option("recursiveFileLookup", "true").parquet(d)
         keys = keys_df.select(F.col(META_KEY).cast("string").alias("key"))
         # no forced broadcast: a write batch's key set is usually tiny (AQE
         # broadcasts it from its runtime size), but a 100 TB-scale bulk
         # ingest can carry more distinct keys than a driver can broadcast —
         # the probe must degrade to a shuffled join, not an OOM.
-        # No pre-join distinct on the probe side (r10): a LEFT SEMI join is
+        # No pre-join distinct on the probe side: a LEFT SEMI join is
         # set-semantic over the build side, so deduping first only adds a
-        # full exchange of the batch keys — measured as 2 extra AQE stage-
-        # jobs on every RLI write's planning pass.
+        # full exchange of the batch keys.
         hit = (
             entries.join(keys, "key", "leftsemi")
             .select("rel")
@@ -1974,46 +1987,78 @@ class Table:
         )
         return sorted({r["rel"] for r in hit} & set(rels))
 
-    def _record_index_ready(self) -> bool:
-        """True when probes will actually serve (valid meta + present data
-        dir) — the same conditions ``_record_index_candidates`` requires, so
-        routing through ``lookup_key`` can never fall back into a loop."""
-        meta = self._index_meta(self.RECORD_INDEX)
-        return bool(
-            meta
-            and meta["valid"]
-            and os.path.isdir(self._index_data_dir(self.RECORD_INDEX, meta))
-        )
+    def _record_index_probe(self, rels: list[str], keys: list[str]) -> list[str] | None:
+        """Exact holder files of a few literal keys, read on the driver with
+        no Spark job: the generation's parquet files (``_index_parquet_files``
+        lists what Spark's reader would), row groups whose footer min/max on
+        ``key`` cannot hold a probed key skipped, only ``(key, rel)`` read.
+        The base build is range-partitioned and key-sorted, so its footers
+        leave one base file per key; per-commit appends are small, and
+        ``run_services`` rebuilds the generation once they bloat it. Same
+        result and the same None as ``_record_index_candidates``."""
+        d = self._record_index_data_dir()
+        if d is None:
+            return None
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        want = sorted(set(keys))
+        hit: set[str] = set()
+        for path in self._index_parquet_files(d):
+            with pq.ParquetFile(path) as pf:
+                md = pf.metadata
+                ki = md.schema.names.index("key")
+                groups = []
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(ki).statistics
+                    if st is not None and st.has_min_max:
+                        i = bisect.bisect_left(want, st.min)
+                        if i == len(want) or want[i] > st.max:
+                            continue
+                    groups.append(g)
+                if not groups:
+                    continue
+                tb = pf.read_row_groups(groups, columns=["key", "rel"])
+            tb = tb.filter(pc.is_in(tb["key"], value_set=pa.array(want, pa.string())))
+            hit.update(tb["rel"].to_pylist())
+        return sorted(hit & set(rels))
 
     def lookup_key(self, value) -> DataFrame:
         """Point read by RECORD KEY through the record-level index — Hudi's
-        RLI read path: the probe resolves the key to its holder files
-        (typically ONE, at any table size) and only those are read. MOR
-        safety: the index holds an entry for EVERY live file carrying a
-        version of the key — logs and delete tombstones included — so the
-        precombine merge window sees all versions. Falls back to the
-        col-stats/range scan path when the index is absent or invalidated.
-        Pruning evidence at ``last_record_lookup``."""
+        RLI read path. The driver probes the index for ``str(value)``
+        (``_record_index_probe``: footer-pruned pyarrow reads of the current
+        generation, no Spark job) and resolves the key to its holder files —
+        typically ONE, at any table size; only those are read, so the read
+        itself is the one Spark job. MOR safety: the index holds an entry for
+        EVERY live file carrying a version of the key — logs and delete
+        tombstones included — so the precombine merge window sees all
+        versions. Falls back to the col-stats/range scan path when the index
+        is absent or invalidated. Pruning evidence at
+        ``last_record_lookup``."""
         if len(self.config.record_key) != 1:
             raise ValueError("lookup_key requires a single-column record key")
         kcol = self.config.record_key[0]
         files, _ = self.timeline.live_files()
-        keys = self.spark.createDataFrame([(str(value),)], f"{META_KEY} STRING")
-        cand = self._record_index_candidates(sorted(files), keys)
+        cand = self._record_index_probe(sorted(files), [str(value)])
         if cand is None:
             out = self.scan([(kcol, "=", value)])
             # keep the pruning evidence attribute live even on this raced
             # fallback (index invalidated between the caller's readiness
             # check and the probe): scan()'s fast path copies
             # last_record_lookup unconditionally, and a fresh Table handle
-            # would otherwise AttributeError (advisor, round 5)
+            # would otherwise AttributeError
             self.last_record_lookup = dict(
                 getattr(self, "last_scan", {"total": len(files), "scanned": len(files)})
             )
             return out
         self.last_record_lookup = {"total": len(files), "scanned": len(cand)}
         if not cand:
-            return self.read().limit(0)
+            # an empty frame, not an empty read: listing more than 32 live
+            # files is itself a Spark job
+            return self._empty().drop(*META_COLS)
         df = self._snapshot_of(files, cand).drop(*META_COLS)
         return df.filter(F.col(kcol) == F.lit(value))
 
@@ -5108,14 +5153,19 @@ class Table:
 
     @staticmethod
     def _index_parquet_files(data_dir: str) -> list[str]:
-        if not os.path.isdir(data_dir):
-            return []
-        return [
-            os.path.join(root, fn)
-            for root, _, fns in os.walk(data_dir)
-            for fn in fns
-            if fn.endswith(".parquet")
-        ]
+        """The parquet files of an index generation that Spark's reader sees:
+        every path component below ``data_dir`` starting with ``_`` or ``.``
+        is hidden (a committer's in-flight ``_temporary``, ``_SUCCESS``,
+        ``.crc`` checksums)."""
+        out = []
+        for root, dirs, fns in os.walk(data_dir):
+            dirs[:] = [x for x in dirs if not x.startswith(("_", "."))]
+            out.extend(
+                os.path.join(root, fn)
+                for fn in fns
+                if fn.endswith(".parquet") and not fn.startswith(("_", "."))
+            )
+        return out
 
     @staticmethod
     def _footer_rows(paths) -> int:

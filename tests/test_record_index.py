@@ -203,6 +203,105 @@ def test_lookup_key_point_read_and_scan_routing(spark, tbl):
     assert [(r["val"], r["v"]) for r in m2.lookup_key(50).collect()] == [(1.0, 1)]
 
 
+def _point_fixture(spark, path, table_type):
+    """Keys 0-199 in two bulk loads; keys 0-4 updated and 10-11 deleted after
+    the index is built (a live log and a tombstone log on MOR, base rewrites
+    on COW)."""
+    t = Table.create(
+        spark,
+        path,
+        "k BIGINT, val DOUBLE, v INT",
+        TableConfig(record_key=["k"], precombine="v", table_type=table_type),
+    )
+    for lo in (0, 100):
+        t.bulk_insert(
+            spark.range(lo, lo + 100).select(
+                F.col("id").alias("k"), F.lit(1.0).alias("val"), F.lit(1).alias("v")
+            )
+        )
+    t.create_record_index()
+    Table(spark, path).upsert(
+        spark.range(5).select(
+            F.col("id").alias("k"), F.lit(9.0).alias("val"), F.lit(2).alias("v")
+        )
+    )
+    Table(spark, path).delete(spark.range(10, 12).select(F.col("id").alias("k")))
+    return Table(spark, path)
+
+
+@pytest.mark.parametrize("table_type", ["cow", "mor"])
+def test_point_reads_plan_without_a_spark_job(spark, tmp_path, table_type):
+    """A literal key resolves to its holder files on the driver: lookup_key
+    and scan()'s key-equality routing launch no Spark job before the
+    action, and return the rows of an unindexed snapshot read."""
+    t = _point_fixture(spark, str(tmp_path / table_type), table_type)
+    logs = [r for r, (_, a) in t.timeline.live_files()[0].items() if a == "deltacommit"]
+    assert bool(logs) == (table_type == "mor")
+    sc = spark.sparkContext
+    # only in a base file, updated after the build, deleted, absent
+    for key in (150, 3, 10, 10_000):
+        want = sorted(map(tuple, t.read().filter(F.col("k") == key).collect()))
+        for name, read in (
+            ("lookup_key", lambda: t.lookup_key(key)),
+            ("scan", lambda: t.scan([("k", "=", key)])),
+        ):
+            group = f"rli-point-planning-{table_type}-{key}-{name}"
+            sc.setJobGroup(group, "must stay empty")
+            try:
+                df = read()
+                assert sc.statusTracker().getJobIdsForGroup(group) == [], (key, name)
+            finally:
+                sc.setJobGroup(None, None)
+            assert sorted(map(tuple, df.collect())) == want
+        ev = t.last_record_lookup
+        assert ev["scanned"] < ev["total"] and (key != 10_000 or ev["scanned"] == 0)
+
+
+def _plant_hidden(gen_dir: str, rel: str, keys: list[str]) -> None:
+    """Files Spark's reader never sees: an in-flight committer output whose
+    entries name a live file, a ``_SUCCESS`` marker and a checksum."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    tmp = os.path.join(gen_dir, "append_planted", "_temporary", "0")
+    os.makedirs(tmp, exist_ok=True)
+    pq.write_table(
+        pa.table({"key": keys, "rel": [rel] * len(keys)}),
+        os.path.join(tmp, "part-00000-planted.parquet"),
+    )
+    for name in ("_SUCCESS", ".part-00000-planted.crc"):
+        with open(os.path.join(gen_dir, name), "w") as f:
+            f.write("not parquet")
+
+
+def test_driver_probe_matches_semi_join(spark, tbl):
+    """The driver probe and the keyed-write semi join return the same
+    candidates — over a generation of several appends and over its rebuild —
+    and both ignore hidden paths in the generation dir."""
+    for b in range(1, 4):
+        Table(spark, tbl.base).upsert(_batch(spark, b, 100 * b, 100 * b + 150))
+    Table(spark, tbl.base).delete(spark.range(20, 25).select(F.col("id").alias("k")))
+    present, deleted, absent = ["7", "150", "599"], ["20", "24"], ["10000", "x"]
+
+    def check(t):
+        live = sorted(t.timeline.live_files()[0])
+        _plant_hidden(t._record_index_data_dir(), live[0], deleted + absent)
+        for keys in [[k] for k in present + deleted + absent] + [present + deleted + absent]:
+            got = t._record_index_probe(live, keys)
+            keys_df = spark.createDataFrame([(k,) for k in keys], "_hoodie_record_key STRING")
+            assert got == t._record_index_candidates(live, keys_df), keys
+            assert bool(got) == bool(set(keys) & set(present)), keys
+
+    t = Table(spark, tbl.base)
+    # one append per upsert and one for the delete
+    assert sum(n.startswith("append_") for n in os.listdir(t._record_index_data_dir())) >= 4
+    check(t)
+    t.rebuild_index("record_index")
+    t2 = Table(spark, tbl.base)
+    assert t2._index_meta("record_index")["gen"] == 1
+    check(t2)
+
+
 def _rli_writer_proc(base: str, residue: int, out) -> None:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
