@@ -10,6 +10,13 @@ overridable via env/args. ``spark.sql.shuffle.partitions`` defaults to 2x local 
 for tests; on a real cluster AQE coalescing makes the static number mostly irrelevant
 as long as it is *high enough*, so production callers should pass ``shuffle_partitions``
 ~2-3x total executor cores.
+
+The table layer never writes SQL conf on the session it is given, this one or the
+driver's plain session alike. Its planning collects and partitioned writes run
+statically on a private ``cloneSession()`` (``table/core.py:_engine_session``),
+which copies this session's runtime conf and pins only AQE off (and, for
+planning, the shuffle width). The shuffle width set here still caps the
+keyed rewrite's two exchanges and sizes every query that keeps AQE.
 """
 
 from __future__ import annotations

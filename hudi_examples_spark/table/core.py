@@ -23,26 +23,31 @@ Scale design (100 TB):
 - The only driver-side collect in the write path is the distinct partition list of
   the incoming batch (bounded by partition cardinality, not data size).
 - Merge/dedup use hash-partitioned window functions keyed on the record key — one
-  shuffle, AQE-skew-handled; incoming-vs-existing resolution happens in the same pass.
+  shuffle; incoming-vs-existing resolution, deletes included, happens in the same
+  pass (``_merge_cow``), sized and run statically on an engine session
+  (``_engine_session``).
 - Readers get an explicit live-file list (no directory LIST storms) with
   ``basePath`` so hive partition columns survive and partition pruning still applies.
 """
 
 from __future__ import annotations
 
+import functools
 import json
+import math
 import os
 import re as _re
 import shutil
 import time as _time
-from contextlib import contextmanager
 from dataclasses import asdict, dataclass, field
 from dataclasses import fields as dataclass_fields
 
+from py4j.java_gateway import JavaClass
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import ArrayType, BooleanType, StringType, StructField, StructType
+from pyspark.sql.window import Window
 
 
 #: printable ASCII minus backslash and single quote — values outside this set
@@ -60,6 +65,11 @@ def _sql_str_lit(s: str) -> str:
     return f"decode(unhex('{s.encode('utf-8').hex()}'),'UTF-8')"
 
 
+def _sql_ident(name: str) -> str:
+    """A column name as a backquoted Spark SQL identifier."""
+    return "`" + name.replace("`", "``") + "`"
+
+
 def _sql_map_lit(items) -> str:
     """(key, value) pairs as a Spark SQL ``map(...)`` literal string (values
     may be str or int). One F.expr parse replaces 2N F.lit py4j round-trips —
@@ -72,62 +82,70 @@ def _sql_map_lit(items) -> str:
     return "map(" + ",".join(parts) + ")"
 
 
-@contextmanager
-def _no_aqe(spark: SparkSession):
-    """Disable AQE — and narrow the exchange — for one tiny driver-side
-    planning query.
-
-    AQE materializes every query stage as its own Spark job; for the
-    metadata-sized collects in the write path (partition location, key-range
-    pruning — dozens of rows) that's 3-5 driver round-trips where a static
-    plan needs one. Data-path queries keep AQE. The shuffle width is pinned
-    small for the same reason AQE would have coalesced it: every exchange in
-    a planning query carries only DISTINCT metadata values (partition paths,
-    file names — partial aggregation runs upstream of the exchange), so the
-    data-scale shuffle width just schedules empty tasks; r10 measured the
-    width pin at ~40% of each planning job's wall-clock at local scale, and
-    at cluster scale the per-task scheduling overhead grows, not shrinks.
-    The toggle is session-wide, not scoped to the calling thread: two
-    threads toggling one session can interleave and leave AQE off for good.
-    Each in-process writer thread therefore needs a session of its own —
-    ``ServiceScheduler`` runs its passes on ``spark.newSession()``; the
-    footer-stat reader threads never touch SQL conf."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    spark.conf.set("spark.sql.shuffle.partitions", "8")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
+#: shuffle width of the engine's planning queries: every exchange in one
+#: carries only DISTINCT metadata values (partition paths, file names —
+#: partial aggregation runs upstream of the exchange), so a data-scale width
+#: would just schedule empty tasks
+PLANNING_SHUFFLE_PARTITIONS = 8
 
 
-@contextmanager
-def _static_exec(spark: SparkSession):
-    """Disable AQE for one DATA-path write whose plan cannot benefit from it,
-    keeping the session's configured (scale-parameterized) shuffle width.
+def _engine_session(spark: SparkSession, planning: bool = False):
+    """A private JVM session for one engine query: ``cloneSession()`` of the
+    caller's session with AQE pinned off. The only place the engine writes
+    SQL conf — on the clone, never on the caller's session.
 
-    AQE materializes every query stage as its own Spark job — 3-4 driver
-    round-trips per commit where a static plan needs one (r10 measured this
-    as the dominant cost of the many-commit lifecycle fixtures). A join-free
-    write plan (MOR log append, bulk load, CDC log, merge without deletes)
-    gives AQE nothing to decide: its hash-on-partition-value exchange cannot
-    be skew-split (one hive partition is one hash key in any case), the
-    file-per-dir layout is identical with or without post-shuffle coalescing
-    (the partitionBy writer splits per dir either way), and there is no join
-    strategy to adapt. Plans WITH joins keep AQE — the runtime broadcast
-    decision for delete anti-joins matters at cluster scale. Unlike
-    ``_no_aqe`` (metadata collects), the shuffle width is NOT pinned: it
-    stays ``spark.sql.shuffle.partitions``, which production callers size to
-    their cluster (session.py docstring)."""
-    prev = spark.conf.get("spark.sql.adaptive.enabled", "true")
-    spark.conf.set("spark.sql.adaptive.enabled", "false")
-    try:
-        yield
-    finally:
-        spark.conf.set("spark.sql.adaptive.enabled", prev)
-from pyspark.sql.window import Window
+    Why static: AQE materializes every query stage as its own Spark job, so
+    a metadata-sized planning collect or a small commit's rewrite pays 3-6
+    driver round-trips where a static plan needs one. The engine-planned
+    queries give AQE nothing to decide: their exchanges are sized by the
+    driver (the planning width, a keyed rewrite's key width) or hash on a
+    hive-partition value, which lands wholly in one task either way.
+    ``planning`` also pins the shuffle width to
+    ``PLANNING_SHUFFLE_PARTITIONS``; otherwise the clone keeps the caller's.
+
+    A clone (not ``newSession()``) keeps the caller's RUNTIME conf — time
+    zone, parquet flags, shuffle width — so a query means the same thing on
+    both sessions; it costs about 0.6 ms (about 1 ms for a whole
+    ``_static``, measured on a 4-core host). The caller's conf is never
+    touched, so concurrent writers on one session (a host and its
+    ``ServiceScheduler``) cannot leave each other's AQE off."""
+    clone = spark._jsparkSession.cloneSession()
+    conf = clone.conf()
+    conf.set("spark.sql.adaptive.enabled", "false")
+    if planning:
+        conf.set("spark.sql.shuffle.partitions", str(PLANNING_SHUFFLE_PARTITIONS))
+    return clone
+
+
+def _on_session(jss, df: DataFrame) -> DataFrame:
+    """``df``'s analyzed plan as a DataFrame of the JVM session ``jss``. The
+    plan moves as it is — a checkpointed batch (``LogicalRDD``), a temp-view
+    join or a file scan resolve nothing again there."""
+    of_rows = _of_rows(df._jdf._gateway_client)
+    return DataFrame(of_rows(jss, df._jdf.queryExecution().analyzed()), df.sparkSession)
+
+
+def _static(df: DataFrame, planning: bool = False) -> DataFrame:
+    """``df`` on a fresh ``_engine_session``: an action on the result runs
+    as one static Spark job."""
+    return _on_session(_engine_session(df.sparkSession, planning), df)
+
+
+def _checkpoint(df: DataFrame) -> DataFrame:
+    """A lazy ``localCheckpoint`` of ``df``, planned statically and handed
+    back on ``df``'s own session. A checkpoint builds its physical plan when
+    it is called, and under AQE that runs the stage job of every exchange in
+    the batch's plan right then (a MERGE's join: 3 jobs); planned statically,
+    the whole plan runs inside the first job that reads the blocks."""
+    ckpt = _static(df).localCheckpoint(eager=False)
+    return _on_session(df.sparkSession._jsparkSession, ckpt)
+
+
+@functools.lru_cache(maxsize=1)
+def _of_rows(gateway_client):
+    """The JVM ``classic.Dataset.ofRows``, resolved once per gateway instead
+    of a py4j round-trip per package segment and per member lookup."""
+    return JavaClass("org.apache.spark.sql.classic.Dataset", gateway_client).ofRows
 
 
 #: integer widening lattice for Hudi-style type promotion
@@ -815,29 +833,33 @@ class Table:
     def data_cols(self) -> list[str]:
         return list(self.schema.names)
 
-    def _key_expr(self):
-        if not self.config.record_key:
-            return None
-        return F.concat_ws(":", *[F.col(k).cast("string") for k in self.config.record_key])
+    def _key_sql(self) -> str:
+        """The record key (``_hoodie_record_key``) of a row of the declared
+        columns, as SQL text: one parse JVM-side where the Column form paid
+        several py4j round-trips per key column."""
+        return "concat_ws(':', " + ", ".join(
+            f"CAST({_sql_ident(k)} AS STRING)" for k in self.config.record_key
+        ) + ")"
 
-    def _partition_expr(self):
+    def _partition_sql(self) -> str:
+        """The hive partition path (``_hoodie_partition_path``) of a row, as
+        SQL text (see ``_key_sql``)."""
         if not self.config.partition_by:
-            return F.lit("")
-        return F.concat_ws(
-            "/",
-            *[
-                F.concat(F.lit(f"{c}="), F.col(c).cast("string"))
-                for c in self.config.partition_by
-            ],
-        )
+            return "''"
+        return "concat_ws('/', " + ", ".join(
+            f"concat({_sql_str_lit(f'{c}=')}, CAST({_sql_ident(c)} AS STRING))"
+            for c in self.config.partition_by
+        ) + ")"
 
     def _with_meta(self, df: DataFrame, instant: str) -> DataFrame:
-        key = self._key_expr()
-        return df.select(
-            F.lit(instant).alias(META_COMMIT) if META_COMMIT not in df.columns else F.col(META_COMMIT),
-            (key if key is not None else F.lit(None).cast("string")).alias(META_KEY),
-            self._partition_expr().alias(META_PARTITION),
-            *self.data_cols,
+        # one selectExpr parse JVM-side, not py4j round-trips per Column
+        commit = _sql_ident(META_COMMIT) if META_COMMIT in df.columns else _sql_str_lit(instant)
+        key = self._key_sql() if self.config.record_key else "CAST(NULL AS STRING)"
+        return df.selectExpr(
+            f"{commit} AS {_sql_ident(META_COMMIT)}",
+            f"{key} AS {_sql_ident(META_KEY)}",
+            f"{self._partition_sql()} AS {_sql_ident(META_PARTITION)}",
+            *map(_sql_ident, self.data_cols),
         )
 
     def _empty(self, with_deleted: bool = False, with_partial: bool = False) -> DataFrame:
@@ -877,6 +899,8 @@ class Table:
         instant: str,
         preserve_layout: bool = False,
         range_key_layout: int | None = None,
+        single_task: bool = False,
+        dirs: int | None = None,
     ) -> list[str]:
         """Write one commit's files into hive-style partition dirs:
         ``{base}/{col=val}/{instant}_{n}.parquet`` (Hudi's own layout shape).
@@ -886,6 +910,12 @@ class Table:
         readers (manifest-driven) never see partial state. Layout control:
         repartition by (partition cols[, key bucket]) bounds files per hive dir —
         the small-file knob of ``consistent_hashing.sql:39-40`` as shuffle planning.
+        ``single_task``: the caller's plan is already one partition (a small
+        keyed commit, see ``_merge_cow``); that task writes every hive dir
+        itself, one file each, with no exchange. ``dirs``: how many hive dirs
+        the commit writes, known from planning; it sizes the partition
+        exchange (capped at ``spark.sql.shuffle.partitions``) in place of the
+        session width.
         """
         if self.config.table_type == "mor" and META_DELETED not in df.columns:
             # every MOR file carries the tombstone flag so mixed base+log file lists
@@ -931,38 +961,37 @@ class Table:
             df = df.repartitionByRange(max(range_key_layout, 1), *exprs).sortWithinPartitions(
                 *exprs
             )
-        elif parts:
-            df = df.repartition(*[F.col(c) for c in parts])
+        elif parts and not single_task:
+            if dirs:
+                cap = int(self.spark.conf.get("spark.sql.shuffle.partitions"))
+                df = df.repartition(min(dirs, cap), *parts)
+            else:
+                df = df.repartition(*parts)
+        # Engine-session rule: a write whose layout the engine plans into
+        # hive-partition (or bucket) dirs runs as one static job on an engine
+        # session (``_static``). AQE would turn every exchange into a Spark
+        # job of its own, and there is nothing for it to adapt: each
+        # partition value lands wholly in one task, so the file-per-dir layout
+        # is the same with or without coalescing, and the exchanges upstream
+        # are sized by the driver. UNPARTITIONED writes keep AQE on the
+        # caller's session: there the final exchange width IS the output file
+        # count, and AQE's partition coalescing is the scale-adaptive file
+        # sizing (without it a 32-wide merge exchange emitted up to 32 tiny
+        # files per commit — measured as the expression-index fixture growing
+        # 4 → 35 files). Caller-planned layouts (preserve_layout /
+        # range_key_layout) keep AQE too — their exchange shapes were chosen
+        # by the caller and coalescing is part of the small-file clustering
+        # contract.
+        if write_parts and not preserve_layout and not range_key_layout:
+            df = _static(df)
         staging = os.path.join(self.base, ".staging", instant)
         writer = df.write.mode("overwrite")
         if self.config.max_records_per_file:
             writer = writer.option("maxRecordsPerFile", self.config.max_records_per_file)
         if write_parts:
             writer = writer.partitionBy(*write_parts)
-        # Join-free PARTITIONED plans run statically (r10): AQE turns every
-        # exchange into its own Spark job, and a hash-on-partition-value
-        # exchange gives it nothing to adapt — each partition value lands
-        # wholly in one task, so the file-per-dir layout is identical with or
-        # without coalescing. UNPARTITIONED writes keep AQE: there the final
-        # exchange width IS the output file count, and AQE's partition
-        # coalescing is the scale-adaptive file sizing (without it a 32-wide
-        # merge exchange emitted up to 32 tiny files per commit — measured as
-        # the expression-index fixture growing 4 → 35 files). Caller-planned
-        # layouts (preserve_layout / range_key_layout) keep AQE untouched —
-        # their exchange shapes were chosen by the caller and coalescing
-        # behavior is part of the small-file clustering contract.
-        static_ok = (
-            bool(write_parts)
-            and not preserve_layout
-            and not range_key_layout
-            and "Join" not in df._jdf.queryExecution().analyzed().toString()
-        )
         try:
-            if static_ok:
-                with _static_exec(self.spark):
-                    writer.parquet(staging)
-            else:
-                writer.parquet(staging)
+            writer.parquet(staging)
         finally:
             if unpersist_after_write is not None:
                 unpersist_after_write.unpersist()
@@ -1531,14 +1560,12 @@ class Table:
         entries = self._index_entries(name, meta, rels, partial_cols) if rels else None
         if entries is None:
             return
-        # _no_aqe (r10): an exchange-free plan (column-pruned scan of the
-        # commit's files → project → write); AQE only splits it into extra
-        # stage-jobs (measured 2 → 1 job per commit), with no shuffle to
-        # coalesce.
-        with _no_aqe(self.spark):
-            entries.write.mode("overwrite").parquet(
-                self._index_append_dir(self._index_data_dir(name, meta))
-            )
+        # static: an exchange-free plan (column-pruned scan of the commit's
+        # files → project → write); AQE only splits it into extra stage-jobs
+        # (measured 2 → 1 job per commit), with no shuffle to coalesce
+        _static(entries).write.mode("overwrite").parquet(
+            self._index_append_dir(self._index_data_dir(name, meta))
+        )
 
     def _build_index(self, name: str, meta: dict) -> None:
         """Build a generation of an index — generation 0 for a create (``meta``
@@ -2120,37 +2147,24 @@ class Table:
         # the post-probe file-name distinct is tiny — skipping it saves one
         # full exchange of the batch on EVERY keyed write's planning pass
         keys = keys_df.select(F.col(META_KEY).cast("string").alias("__k"))
-        with _no_aqe(self.spark):
-            if len(ranged) <= self.RANGE_LITERAL_MAX:
-                # literal-array probe (r10): same inner-join semantics, no
-                # broadcast-build job (see _plan_keyed_write)
-                hit = (
-                    keys.select(
-                        F.explode(
-                            F.filter(
-                                self._range_literal_array(ranged),
-                                lambda s: (F.col("__k") >= s["lo"])
-                                & (F.col("__k") <= s["hi"]),
-                            )
-                        ).alias("__s")
+        if len(ranged) <= self.RANGE_LITERAL_MAX:
+            # literal-array probe (r10): same inner-join semantics, no
+            # broadcast-build job (see _plan_keyed_write)
+            probe = keys.select(
+                F.explode(
+                    F.filter(
+                        self._range_literal_array(ranged),
+                        lambda s: (F.col("__k") >= s["lo"]) & (F.col("__k") <= s["hi"]),
                     )
-                    .select(F.col("__s.rel").alias("rel"))
-                    .distinct()
-                    .collect()
-                )
-            else:
-                rng = self.spark.createDataFrame(
-                    ranged, "rel STRING, lo STRING, hi STRING"
-                )
-                hit = (
-                    keys.join(
-                        F.broadcast(rng),
-                        (F.col("__k") >= F.col("lo")) & (F.col("__k") <= F.col("hi")),
-                    )
-                    .select("rel")
-                    .distinct()
-                    .collect()
-                )
+                ).alias("__s")
+            ).select(F.col("__s.rel").alias("rel"))
+        else:
+            rng = self.spark.createDataFrame(ranged, "rel STRING, lo STRING, hi STRING")
+            probe = keys.join(
+                F.broadcast(rng),
+                (F.col("__k") >= F.col("lo")) & (F.col("__k") <= F.col("hi")),
+            ).select("rel")
+        hit = _static(probe.distinct(), planning=True).collect()
         kept = sorted({r["rel"] for r in hit} | set(unknown))
         n_range = len(kept)
         if self.config.bloom_index:
@@ -2781,11 +2795,12 @@ class Table:
             # written files' values; pure projections, collapse into the scan.
             repl = {
                 META_COMMIT: F.coalesce(F.col(META_COMMIT), F.lit(bi)),
-                META_PARTITION: F.coalesce(F.col(META_PARTITION), self._partition_expr()),
+                META_PARTITION: F.expr(
+                    f"coalesce({_sql_ident(META_PARTITION)}, {self._partition_sql()})"
+                ),
             }
-            key = self._key_expr()
-            if key is not None:
-                repl[META_KEY] = F.coalesce(F.col(META_KEY), key)
+            if self.config.record_key:
+                repl[META_KEY] = F.expr(f"coalesce({_sql_ident(META_KEY)}, {self._key_sql()})")
             df = df.withColumns(repl)
         return df
 
@@ -3771,7 +3786,11 @@ class Table:
             ("not_matched_by_source" in kinds, "not_matched" in kinds)
         ]
         joined = (
+            # a sort-merge join: the batch is checkpointed on a static plan
+            # (``_write_ops``), where a broadcast would be a Spark job of its
+            # own; AQE would shuffle both sides before converting it anyway
             self.read()
+            .hint("merge")
             .withColumn("__merge_t", F.lit(True))
             .alias(ta)
             .join(
@@ -3845,25 +3864,28 @@ class Table:
 
         A batch with both kinds is materialized ONCE before the split: both
         filtered branches re-evaluate the caller's plan otherwise (an IVM
-        refresh feeds a multi-join union here, a MERGE its join), and the
-        per-branch checkpoints in _apply_cow/_apply_mor then read these
-        blocks instead."""
+        refresh feeds a multi-join union here, a MERGE its join), and
+        _apply_cow then reads these blocks without checkpointing each
+        branch again."""
         both = bool(upsert_ops and delete_ops)
         if both:
-            df = df.localCheckpoint(eager=False)
+            df = _checkpoint(df)
 
         def rows(ops: list) -> DataFrame | None:
             return df.filter(F.col(op_col).isin(*ops)).drop(op_col) if ops else None
 
         try:
             return self._write_changes(
-                upserts=rows(upsert_ops), deletes=rows(delete_ops), op=op, extra_meta=extra_meta
+                upserts=rows(upsert_ops),
+                deletes=rows(delete_ops),
+                op=op,
+                extra_meta=extra_meta,
+                checkpointed=both,
             )
         finally:
             if both:
-                # blocks are dead once the commit published (the per-branch
-                # checkpoints in _apply_cow copied what they need) — free now
-                # rather than at some future driver GC (ADVICE r10)
+                # blocks are dead once the commit published — free now rather
+                # than at some future driver GC (ADVICE r10)
                 free_local_checkpoint(df)
 
     def _write_changes(
@@ -3872,7 +3894,9 @@ class Table:
         deletes: DataFrame | None,
         op: str,
         extra_meta: dict | None = None,
+        checkpointed: bool = False,
     ) -> str:
+        """``checkpointed``: the batches already read checkpoint blocks."""
         if not self.config.record_key and upserts is not None and deletes is None:
             # pk-less tables degrade upsert to append (reference's pkless matrix rows
             # — ``spark_sql_testing.sh:87-93``); pk-less deletes fall through and are
@@ -3904,7 +3928,7 @@ class Table:
             return self._apply_mor(instant, upserts, deletes, op, extra_meta)
         # COW, and pk-less MOR deletes (no key ⇒ tombstones can't address rows;
         # a full-row anti-join rewrite is the only correct form)
-        return self._apply_cow(instant, upserts, deletes, op, extra_meta)
+        return self._apply_cow(instant, upserts, deletes, op, extra_meta, checkpointed)
 
     def _batch_keys(self, *dfs: DataFrame) -> DataFrame | None:
         """Distinct ``_hoodie_record_key`` values across the incoming batches,
@@ -3917,7 +3941,7 @@ class Table:
             if df is None:
                 continue
             if all(c in df.columns for c in self.config.record_key):
-                k = df.select(self._key_expr().alias(META_KEY))
+                k = df.selectExpr(f"{self._key_sql()} AS {_sql_ident(META_KEY)}")
             elif META_KEY in df.columns:
                 k = df.select(META_KEY)
             else:
@@ -3962,7 +3986,7 @@ class Table:
                 continue
             ps = []
             if all(c in df.columns for c in self.config.partition_by):
-                ps.append(df.select(self._partition_expr().alias("p")).distinct())
+                ps.append(df.selectExpr(f"{self._partition_sql()} AS p").distinct())
             elif not global_index:
                 # partition-scoped index + a batch without partition columns
                 # (delete-by-key): no way to locate — treat all as touched
@@ -3974,7 +3998,7 @@ class Table:
             ):
                 files, _ = self.timeline.live_files()
                 if files:
-                    keys = df.select(self._key_expr().alias(META_KEY)).distinct()
+                    keys = df.selectExpr(f"{self._key_sql()} AS {_sql_ident(META_KEY)}").distinct()
                     if len(files) > self.KEY_PRUNE_MIN_FILES:
                         rels = self._prune_files_by_keys(sorted(files), keys)
                         via_rli = bool(
@@ -4019,8 +4043,7 @@ class Table:
                 paths = p if paths is None else paths.unionByName(p)
         if paths is None:
             return set()
-        with _no_aqe(self.spark):
-            return {r["p"] for r in paths.collect()}
+        return {r["p"] for r in _static(paths, planning=True).collect()}
 
     #: max per-file key ranges shipped as a literal struct array in planning
     #: probes (beyond this the expression tree would bloat analysis/codegen —
@@ -4044,22 +4067,24 @@ class Table:
 
     def _plan_keyed_write(
         self, rels: list[str], upserts: DataFrame | None, deletes: DataFrame | None
-    ) -> tuple[set[str], list[str]] | None:
+    ) -> tuple[set[str], list[str], int] | None:
         """ONE planning job for the common keyed-COW write (r10): the batch's
         distinct partition paths AND the key-range candidate files come back
         from a single collect — the old shape paid one Spark job for each,
         and both evaluated the same incoming-batch subtree. Returns
-        (batch_parts, candidate_rels), or None when this planner cannot run
-        (missing key/partition columns) — the caller then falls back to the
-        split jobs; bloom-indexed and record-indexed tables keep their richer
-        dedicated paths.
+        (batch_parts, candidate_rels, batch_rows), or None when this planner
+        cannot run (missing key/partition columns) — the caller then falls
+        back to the split jobs; bloom-indexed and record-indexed tables keep
+        their richer dedicated paths. ``batch_rows`` bounds the batch's row
+        count from above (a key in k overlapping ranges counts k times); it
+        sizes the rewrite's key exchange.
 
         Shape: (key, partition) rows LEFT-join the broadcast per-file
         key-range table — every batch partition survives the join (null
-        ``rel``), every range-hit (partition, file) pair lands once; the
-        exchange carries only distinct pairs (partial aggregation runs
-        upstream), so the collect is O(batch partitions + candidate files)
-        at any scale. Pruning semantics are identical to
+        ``rel``), every range-hit (partition, file) pair lands once, with
+        its row count; the exchange carries only distinct pairs (partial
+        aggregation runs upstream), so the collect is O(batch partitions +
+        candidate files) at any scale. Pruning semantics are identical to
         ``_prune_files_by_keys``'s range phase: files without recorded
         ranges are always kept."""
         kps = []
@@ -4067,22 +4092,19 @@ class Table:
             if d is None:
                 continue
             if all(c in d.columns for c in self.config.record_key):
-                key = self._key_expr()
+                key = self._key_sql()
             elif META_KEY in d.columns:
-                key = F.col(META_KEY)
+                key = _sql_ident(META_KEY)
             else:
                 return None
             if not all(c in d.columns for c in self.config.partition_by):
                 return None
             kps.append(
-                d.select(
-                    key.cast("string").alias("__k"),
-                    self._partition_expr().alias("__p"),
-                )
+                d.selectExpr(f"CAST({key} AS STRING) AS __k", f"{self._partition_sql()} AS __p")
             )
         if not kps:
             return None
-        kp = kps[0] if len(kps) == 1 else kps[0].unionByName(kps[1])
+        kp = kps[0] if len(kps) == 1 else kps[0].union(kps[1])
         stats = self._load_file_stats()
         ranged, unknown = [], []
         for r in rels:
@@ -4091,56 +4113,39 @@ class Table:
                 ranged.append((r, str(kr[0]), str(kr[1])))
             else:
                 unknown.append(r)
-        with _no_aqe(self.spark):
-            if not ranged:
-                parts = {r["__p"] for r in kp.select("__p").distinct().collect()}
-                kept = list(rels)
-            elif len(ranged) <= self.RANGE_LITERAL_MAX:
-                # bounded range count (r10): the per-file ranges ride as a
-                # LITERAL struct array probed by a higher-order filter — the
-                # broadcast-join form paid a whole extra Spark job just to
-                # build its tiny broadcast (createDataFrame parallelizes the
-                # local list over defaultParallelism slices). explode_outer
-                # keeps no-match rows exactly like the left join did.
-                rows = (
-                    kp.select(
-                        "__p",
-                        F.explode_outer(
-                            F.filter(
-                                self._range_literal_array(ranged),
-                                lambda s: (F.col("__k") >= s["lo"])
-                                & (F.col("__k") <= s["hi"]),
-                            )
-                        ).alias("__s"),
+        if not ranged:
+            probe = kp.selectExpr("__p", "CAST(NULL AS STRING) AS rel")
+        elif len(ranged) <= self.RANGE_LITERAL_MAX:
+            # bounded range count (r10): the per-file ranges ride as a
+            # LITERAL struct array probed by a higher-order filter — the
+            # broadcast-join form paid a whole extra Spark job just to build
+            # its tiny broadcast (createDataFrame parallelizes the local list
+            # over defaultParallelism slices). explode_outer keeps no-match
+            # rows exactly like the left join did.
+            probe = kp.select(
+                "__p",
+                F.explode_outer(
+                    F.filter(
+                        self._range_literal_array(ranged),
+                        lambda s: (F.col("__k") >= s["lo"]) & (F.col("__k") <= s["hi"]),
                     )
-                    .select("__p", F.col("__s.rel").alias("rel"))
-                    .distinct()
-                    .collect()
-                )
-                parts = {r["__p"] for r in rows}
-                kept = sorted(
-                    {r["rel"] for r in rows if r["rel"] is not None} | set(unknown)
-                )
-            else:
-                rng = self.spark.createDataFrame(
-                    ranged, "rel STRING, lo STRING, hi STRING"
-                )
-                rows = (
-                    kp.join(
-                        F.broadcast(rng),
-                        (F.col("__k") >= F.col("lo")) & (F.col("__k") <= F.col("hi")),
-                        "left",
-                    )
-                    .select("__p", "rel")
-                    .distinct()
-                    .collect()
-                )
-                parts = {r["__p"] for r in rows}
-                kept = sorted(
-                    {r["rel"] for r in rows if r["rel"] is not None} | set(unknown)
-                )
+                ).alias("__s"),
+            ).selectExpr("__p", "__s.rel AS rel")
+        else:
+            rng = self.spark.createDataFrame(ranged, "rel STRING, lo STRING, hi STRING")
+            probe = kp.join(
+                F.broadcast(rng),
+                (F.col("__k") >= F.col("lo")) & (F.col("__k") <= F.col("hi")),
+                "left",
+            ).select("__p", "rel")
+        rows = _static(probe.groupBy("__p", "rel").count(), planning=True).collect()
+        parts = {r["__p"] for r in rows}
+        if ranged:
+            kept = sorted({r["rel"] for r in rows if r["rel"] is not None} | set(unknown))
+        else:
+            kept = list(rels)
         self.last_key_prune = {"total": len(rels), "candidates": len(kept)}
-        return parts, kept
+        return parts, kept, sum(r["count"] for r in rows)
 
     def _apply_cow(
         self,
@@ -4149,10 +4154,11 @@ class Table:
         deletes: DataFrame | None,
         op: str,
         extra_meta: dict | None = None,
+        checkpointed: bool = False,
     ) -> str:
         files, _latest = self.timeline.live_files()
         _batch_ckpts: list[DataFrame] = []
-        if files and (upserts is not None or deletes is not None):
+        if files and (upserts is not None or deletes is not None) and not checkpointed:
             # Materialize the incoming batch ONCE (r10, guide §1.2/§2.4): a
             # keyed COW write evaluates the batch subtree in up to four
             # separate jobs (batch-partition collect, key-range prune,
@@ -4168,10 +4174,10 @@ class Table:
             # lifecycles (CDC fixtures). Empty-table inserts never reach
             # this branch, so the initial-load path pays nothing.
             if upserts is not None:
-                upserts = upserts.localCheckpoint(eager=False)
+                upserts = _checkpoint(upserts)
                 _batch_ckpts.append(upserts)
             if deletes is not None:
-                deletes = deletes.localCheckpoint(eager=False)
+                deletes = _checkpoint(deletes)
                 _batch_ckpts.append(deletes)
         keys_df = self._batch_keys(upserts, deletes)
         if files and keys_df is not None:
@@ -4198,10 +4204,10 @@ class Table:
                 combined = self._plan_keyed_write(sorted(files), upserts, deletes)
             rli_defer = False
             if combined is not None:
-                batch_parts, touched_rels = combined
+                batch_parts, touched_rels, batch_rows = combined
                 via_rli = False
             else:
-                batch_parts = None
+                batch_parts = batch_rows = None
                 dfs = [d for d in (upserts, deletes) if d is not None]
                 can_parts = bool(self.config.partition_by) and all(
                     all(c in d.columns for c in self.config.partition_by)
@@ -4209,14 +4215,9 @@ class Table:
                 )
 
                 def _collect_batch_parts() -> set:
-                    with _no_aqe(self.spark):
-                        return {
-                            r["p"]
-                            for d in dfs
-                            for r in d.select(self._partition_expr().alias("p"))
-                            .distinct()
-                            .collect()
-                        }
+                    ps = [d.selectExpr(f"{self._partition_sql()} AS p") for d in dfs]
+                    p = ps[0] if len(ps) == 1 else ps[0].union(ps[1])
+                    return {r["p"] for r in _static(p.distinct(), planning=True).collect()}
 
                 # Defer the batch-partition collect on RLI plans (r10): the
                 # record index resolves candidates EXACTLY, so the only
@@ -4277,14 +4278,14 @@ class Table:
                     if self._partition_path_of(r) not in batch_parts
                 ]
                 if outside:
-                    hits = (
+                    probe = (
                         self._read_files(outside, with_deleted=False)
                         .select(META_KEY, F.input_file_name().alias("__f"))
                         .join(keys_df, META_KEY, "leftsemi")
                         .select("__f")
                         .distinct()
-                        .collect()
                     )
+                    hits = _static(probe, planning=True).collect()
                     confirmed = {
                         r for r in outside for h in hits if h["__f"].endswith(r)
                     }
@@ -4306,6 +4307,7 @@ class Table:
                 touched = None  # unpartitioned: conservative full-table footprint
         else:
             rli_defer = False
+            batch_rows = None
             # pk-less batches (or no derivable keys): partition-scope via the
             # legacy location filter, full rewrite within touched partitions
             touched = self._touched_partition_filter(upserts, deletes) if files else None
@@ -4323,29 +4325,30 @@ class Table:
             self._write_conflict_marker(instant, touched_rels, touched)
             self._early_conflict_check(instant, touched_rels, touched)
             marker_hb = self._marker_heartbeat(instant)
+        # the merge's width is sized from planning facts where the one-job
+        # planner ran; otherwise its exchange keeps the session width
+        key_width = (
+            None if batch_rows is None else self._key_exchange_width(touched_rels, batch_rows)
+        )
         try:
             existing = self._read_files(touched_rels, with_deleted=False)
-
-            survivors = existing
-            if deletes is not None:
-                if self.config.record_key:
-                    del_keys = deletes.select(
-                        self._key_expr().alias(META_KEY) if META_KEY not in deletes.columns else F.col(META_KEY)
-                    ).distinct()
-                    survivors = survivors.join(del_keys, META_KEY, "left_anti")
-                else:
-                    # pk-less table: delete by full-row match
-                    survivors = survivors.join(
+            if self.config.record_key:
+                merged = self._merge_cow(existing, upserts, deletes, instant, key_width)
+            else:
+                # pk-less table: delete by full-row match
+                merged = existing
+                if deletes is not None:
+                    merged = merged.join(
                         deletes.select(*self.data_cols), self.data_cols, "left_anti"
                     )
-
-            if upserts is not None:
-                incoming = self._with_meta(upserts, instant)
-                merged = self._latest_wins(survivors.unionByName(incoming))
-            else:
-                merged = survivors
-
-            rels = self._write_files(merged, instant)
+                if upserts is not None:
+                    merged = merged.unionByName(self._with_meta(upserts, instant))
+            rels = self._write_files(
+                merged,
+                instant,
+                single_task=key_width == 1,
+                dirs=None if key_width is None else max(len(touched), 1),
+            )
             if rli_defer and touched is not None:
                 # deferred footprint completion: the batch's partitions are
                 # exactly the written files' partitions (plus the candidate
@@ -4369,6 +4372,72 @@ class Table:
             # accumulates block-manager entries for every batch (ADVICE r10)
             for _d in _batch_ckpts:
                 free_local_checkpoint(_d)
+
+    #: what one task of a keyed rewrite's key exchange takes on: candidate
+    #: parquet bytes (AQE's default advisory partition size) and batch rows
+    KEY_TASK_FILE_BYTES = 64 << 20
+    KEY_TASK_BATCH_ROWS = 1_000_000
+
+    def _key_exchange_width(self, rels: list[str], batch_rows: int) -> int:
+        """Width of a keyed rewrite's key exchange, decided on the driver
+        from what planning already knows — the candidate files' bytes and
+        the batch's row bound — in place of AQE's runtime coalescing; capped
+        at the caller's ``spark.sql.shuffle.partitions``."""
+        size = sum(os.path.getsize(os.path.join(self.base, r)) for r in rels)
+        n = math.ceil(size / self.KEY_TASK_FILE_BYTES + batch_rows / self.KEY_TASK_BATCH_ROWS)
+        if n <= 1:
+            return 1
+        return min(n, int(self.spark.conf.get("spark.sql.shuffle.partitions")))
+
+    def _merge_cow(
+        self,
+        existing: DataFrame,
+        upserts: DataFrame | None,
+        deletes: DataFrame | None,
+        instant: str,
+        key_width: int | None,
+    ) -> DataFrame:
+        """A keyed COW commit's merge in ONE key-window pass. The rewritten
+        file groups' stored rows (tag 0), the batch's upserts (tag 1) and one
+        tombstone per delete row (tag 2) union; a window drops the stored
+        rows of every key with a tombstone and the tombstones themselves, and
+        ``_latest_wins`` resolves what is left. A delete thus removes the
+        stored versions of its key, and a same-batch upsert of that key
+        survives whatever its precombine — the semantics of an anti join of
+        the stored rows against the delete keys, without a join in the plan.
+        ``key_width`` sizes the key exchange (None: the window's own exchange
+        at the session's shuffle width). At 1 there is no exchange: the
+        union coalesces to ONE task, which merges and then writes the whole
+        commit (``_write_files(single_task=True)``) — two shuffle stages
+        fewer for a commit small enough that the key exchange would have
+        had a single reducer anyway."""
+        tagged = [existing.selectExpr("*", "0 AS __tag")]
+        if upserts is not None:
+            tagged.append(self._with_meta(upserts, instant).selectExpr("*", "1 AS __tag"))
+        if deletes is not None:
+            key = _sql_ident(META_KEY) if META_KEY in deletes.columns else self._key_sql()
+            tagged.append(
+                deletes.selectExpr(
+                    *(f"NULL AS {_sql_ident(c)}" for c in (META_COMMIT, META_PARTITION)),
+                    f"{key} AS {_sql_ident(META_KEY)}",
+                    *(f"NULL AS {_sql_ident(c)}" for c in self.data_cols),
+                    "2 AS __tag",
+                )
+            )
+        merged = tagged[0]
+        for t in tagged[1:]:
+            merged = merged.unionByName(t)
+        if key_width == 1:
+            merged = merged.coalesce(1)
+        elif key_width:
+            merged = merged.repartition(key_width, META_KEY)
+        if deletes is not None:
+            merged = merged.selectExpr(
+                "*", f"max(__tag) OVER (PARTITION BY {_sql_ident(META_KEY)}) AS __del"
+            ).filter("__tag = 1 OR __del < 2")
+        if upserts is not None:
+            merged = self._latest_wins(merged)
+        return merged.drop("__tag", "__del")
 
     def _apply_mor(
         self,
@@ -5407,7 +5476,8 @@ class Table:
     def release_savepoint(self, instant: str) -> None:
         for i in self.timeline.instants():
             if i.action == "savepoint" and i.meta.get("target") == instant:
-                i.meta["released"] = True
+                # instants share their read-only meta with the timeline cache
+                i.meta = {**i.meta, "released": True}
                 self.timeline.write(i)
 
     def restore_to_savepoint(self, instant: str) -> list[str]:

@@ -9,9 +9,9 @@ table per cadence, ``clusteringjob.properties``). The inline half lives in
 (``compact_every``); this module is the async half.
 
 Spark-first shape: a daemon thread invoking :meth:`Table.run_services` on a
-cadence, on a session of its own (``spark.newSession()``: same SparkContext,
-separate SQL conf) so the passes' conf toggles around their planning queries
-never reach the host's writer session. Every pass opens a FRESH ``Table``
+cadence, on the host's own session — the engine writes no SQL conf on it
+(its static queries run on private clones), so passes see the host's runtime
+conf and leave it as they found it. Every pass opens a FRESH ``Table``
 handle (each pass plans against the latest published timeline — never a
 stale snapshot), and every pass is best-effort: services tolerate losing
 OCC races to concurrent writers and a failing pass is recorded, never
@@ -65,9 +65,7 @@ class ServiceScheduler:
         max_passes: int | None = None,
         **policy,
     ) -> None:
-        # one session for every pass: its conf toggles (``_no_aqe``,
-        # ``_static_exec``) stay off the caller's session
-        self.spark = spark.newSession()
+        self.spark = spark
         self.base = base
         self.interval_seconds = float(interval_seconds)
         self.max_passes = max_passes

@@ -13,7 +13,6 @@ safety property the reference tests with fault injection.
 
 from __future__ import annotations
 
-import copy
 import json
 import os
 import threading
@@ -57,6 +56,41 @@ def normalize_as_of(ts: str) -> str:
         except ValueError:
             continue
     raise ValueError(f"unrecognized as-of timestamp: {ts!r}")
+
+
+def _readonly(*_args, **_kwargs):
+    raise TypeError("timeline metadata is read-only; copy it to change it")
+
+
+class _FrozenDict(dict):
+    """A ``dict`` that refuses mutation: parsed instant metadata, shared by
+    every ``Timeline.instants()`` caller. Still a ``dict`` for reads, JSON
+    and equality; a writer builds a new dict (``{**meta, k: v}``)."""
+
+    __setitem__ = __delitem__ = clear = pop = popitem = setdefault = update = _readonly
+    __ior__ = _readonly
+
+    def __reduce__(self):
+        return (_FrozenDict, (dict(self),))
+
+
+class _FrozenList(list):
+    """A ``list`` that refuses mutation (see ``_FrozenDict``)."""
+
+    __setitem__ = __delitem__ = append = extend = insert = pop = remove = _readonly
+    clear = sort = reverse = __iadd__ = __imul__ = _readonly
+
+    def __reduce__(self):
+        return (_FrozenList, (list(self),))
+
+
+def _freeze(v):
+    """``v`` (parsed JSON) with every dict and list made read-only."""
+    if isinstance(v, dict):
+        return _FrozenDict((k, _freeze(x)) for k, x in v.items())
+    if isinstance(v, list):
+        return _FrozenList(_freeze(x) for x in v)
+    return v
 
 
 @dataclass
@@ -243,9 +277,11 @@ class Timeline:
         ``scandir``; any write (this process or another — the signature keys
         on (name, mtime_ns, size, inode), and publishes are tmp+rename so
         content rewrites always present a new inode) re-reads from disk.
-        Returned ``Instant`` objects are fresh deep copies per call so a
-        caller mutating ``meta`` (nested values included) or the lists
-        cannot corrupt the cache."""
+        Returned ``Instant`` objects are fresh per call with fresh file
+        lists; ``meta`` is parsed once into read-only structures
+        (``_FrozenDict``/``_FrozenList``) shared with the cache, so a caller
+        that mutates it gets a ``TypeError`` instead of corrupting the cache
+        — and no call pays a deep copy. A writer copies first."""
         sig = self._dir_signature()
         if sig is None:
             return []
@@ -261,7 +297,7 @@ class Timeline:
                         d["action"],
                         d.get("files_added", []),
                         d.get("files_removed", []),
-                        d.get("meta", {}),
+                        _freeze(d.get("meta", {})),
                         d.get("committed_at"),
                     )
                 )
@@ -272,7 +308,7 @@ class Timeline:
                 i.action,
                 list(i.files_added),
                 list(i.files_removed),
-                copy.deepcopy(i.meta),
+                i.meta,
                 i.committed_at,
             )
             for i in cached[1]

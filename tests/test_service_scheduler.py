@@ -92,11 +92,10 @@ def test_scheduler_services_run_alongside_writes(spark, tmp_path):
 
 
 def test_scheduler_passes_leave_writer_session_conf_alone(spark, tmp_path):
-    """Service passes toggle AQE and the shuffle width around their planning
-    queries; on the writer's own session a pass interleaving with a write's
-    toggle could leave AQE off for good. The scheduler runs on a session of
-    its own, so a fast cadence beside MOR upserts leaves the writer session
-    with its configured conf."""
+    """Service passes run static planning queries beside the writer's
+    upserts on the same session; they pin AQE off and narrow the shuffle
+    width only on private clones, so a fast cadence beside MOR upserts
+    leaves the writer session with its configured conf."""
     tbl = Table.create(spark, str(tmp_path / "t"), SCHEMA, TableConfig(**CFG))
     tbl.insert(_batch(spark, 0))
     # record-index maintenance and rebuilds toggle the conf on both sides
@@ -114,6 +113,29 @@ def test_scheduler_passes_leave_writer_session_conf_alone(spark, tmp_path):
     assert [spark.conf.get(k) for k in conf] == configured
     rows = Table(spark, tbl.base).read().collect()
     assert len(rows) == N and {r["v"] for r in rows} == {9}
+
+
+def test_scheduler_passes_see_host_runtime_conf(spark, tmp_path, monkeypatch):
+    """Passes run on the host's session, so a runtime SQL conf set on the
+    host (here the time zone) is what a pass's table handle sees."""
+    tbl = Table.create(spark, str(tmp_path / "t"), SCHEMA, TableConfig(**CFG))
+    tbl.insert(_batch(spark, 0))
+    seen = []
+    run_services = Table.run_services
+
+    def spy(self, **policy):
+        seen.append(self.spark.conf.get("spark.sql.session.timeZone"))
+        return run_services(self, **policy)
+
+    monkeypatch.setattr(Table, "run_services", spy)
+    tz = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "Asia/Tokyo")
+    try:
+        sched = ServiceScheduler(spark, tbl.base, interval_seconds=3600)
+        assert sched.run_once() is not None and sched.errors == []
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", tz)
+    assert seen == ["Asia/Tokyo"]
 
 
 def test_scheduler_lifecycle_and_run_once(spark, tmp_path):

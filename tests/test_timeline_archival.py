@@ -226,8 +226,23 @@ def test_instants_cache_sees_same_size_rewrite_within_one_tick(tmp_path):
     assert tl.instants()[0].meta == {"v": "b"}
 
 
-def test_instants_copies_nested_meta(tmp_path):
+def test_instants_meta_is_read_only(tmp_path):
+    """Instant meta is shared with the instants cache, not copied per call:
+    a mutation at any depth raises and never reaches the cache, and a writer
+    that copies first publishes its change."""
     tl = Timeline(str(tmp_path))
     tl.write(Instant(new_instant(), "commit", ["a.parquet"], [], {"plan": {"files": ["x"]}}))
-    tl.instants()[0].meta["plan"]["files"].append("mutated")
+    meta = tl.instants()[0].meta
+    for mutate in (
+        lambda: meta["plan"]["files"].append("mutated"),
+        lambda: meta["plan"].update(files=[]),
+        lambda: meta.__setitem__("released", True),
+        lambda: meta.pop("plan"),
+    ):
+        with pytest.raises(TypeError):
+            mutate()
     assert tl.instants()[0].meta == {"plan": {"files": ["x"]}}
+    inst = tl.instants()[0]
+    inst.meta = {**inst.meta, "released": True}
+    tl.write(inst)
+    assert tl.instants()[0].meta == {"plan": {"files": ["x"]}, "released": True}
