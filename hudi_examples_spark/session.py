@@ -15,8 +15,11 @@ The table layer never writes SQL conf on the session it is given, this one or th
 driver's plain session alike. Its planning collects and partitioned writes run
 statically on a private ``cloneSession()`` (``table/core.py:_engine_session``),
 which copies this session's runtime conf and pins only AQE off (and, for
-planning, the shuffle width). The shuffle width set here still caps the
-keyed rewrite's two exchanges and sizes every query that keeps AQE.
+planning, the shuffle width). Plans that still hold a caller's join or
+aggregate stay on this session under its AQE. The AQE settings here keep
+their meaning for the static rewrite too: its key exchange gets one reducer per
+``advisoryPartitionSizeInBytes`` of estimated shuffle data, capped at the
+shuffle width set here.
 """
 
 from __future__ import annotations

@@ -99,8 +99,9 @@ def _engine_session(spark: SparkSession, planning: bool = False):
     driver round-trips where a static plan needs one. The engine-planned
     queries give AQE nothing to decide: their exchanges are sized by the
     driver (the planning width, a keyed rewrite's key width) or hash on a
-    hive-partition value, which lands wholly in one task either way.
-    ``planning`` also pins the shuffle width to
+    hive-partition value, which lands wholly in one task either way. What
+    the engine does NOT build — a caller's join or aggregate — stays on the
+    caller's session (``_adaptive``). ``planning`` also pins the shuffle width to
     ``PLANNING_SHUFFLE_PARTITIONS``; otherwise the clone keeps the caller's.
 
     A clone (not ``newSession()``) keeps the caller's RUNTIME conf — time
@@ -131,14 +132,67 @@ def _static(df: DataFrame, planning: bool = False) -> DataFrame:
     return _on_session(_engine_session(df.sparkSession, planning), df)
 
 
-def _checkpoint(df: DataFrame) -> DataFrame:
-    """A lazy ``localCheckpoint`` of ``df``, planned statically and handed
-    back on ``df``'s own session. A checkpoint builds its physical plan when
-    it is called, and under AQE that runs the stage job of every exchange in
-    the batch's plan right then (a MERGE's join: 3 jobs); planned statically,
-    the whole plan runs inside the first job that reads the blocks."""
+def _checkpoint(df: DataFrame, static: bool | None = None) -> DataFrame:
+    """A lazy ``localCheckpoint`` of ``df``, handed back on ``df``'s own
+    session. A checkpoint builds its physical plan when it is called, and
+    under AQE that runs the stage job of every exchange in the batch's plan
+    right then; planned statically, the whole plan runs inside the first job
+    that reads the blocks. ``static`` (default: ``df`` holds no join or
+    aggregate, ``_adaptive``) picks the static plan on an engine session;
+    otherwise the caller's session plans it, with whatever AQE it runs."""
+    if static is None:
+        static = not _adaptive(df)
+    if not static:
+        return df.localCheckpoint(eager=False)
     ckpt = _static(df).localCheckpoint(eager=False)
     return _on_session(df.sparkSession._jsparkSession, ckpt)
+
+
+def _adaptive(df: DataFrame) -> bool:
+    """Whether ``df``'s plan holds a join or an aggregate (distinct
+    included): the operators whose exchanges AQE shapes from runtime sizes
+    (skew-join splits, broadcast conversion, partition coalescing). A plan
+    holding one — a caller's source not yet checkpointed, an IVM refresh's
+    joins, a pk-less delete's anti join — runs on the caller's session; a
+    static plan would fix those choices from estimates before any stage
+    ran. Reads the plan's tree-pattern bits; no plan walk."""
+    plan = df._jdf.queryExecution().analyzed()
+    return any(plan.containsPattern(p) for p in _adaptive_patterns(df._jdf._gateway_client))
+
+
+@functools.lru_cache(maxsize=1)
+def _adaptive_patterns(gateway_client) -> tuple:
+    tp = JavaClass("org.apache.spark.sql.catalyst.trees.TreePattern", gateway_client)
+    return tp.JOIN(), tp.AGGREGATE(), tp.DISTINCT_LIKE()
+
+
+@functools.lru_cache(maxsize=1)
+def _byte_string(gateway_client):
+    """Spark's own parser of byte-size conf values ("64MB", "67108864b")."""
+    return JavaClass("org.apache.spark.network.util.JavaUtils", gateway_client).byteStringAsBytes
+
+
+#: parquet footer row counts by (path, size, mtime_ns). Table files are
+#: never rewritten in place, so an entry cannot go stale; ``_write_files``
+#: fills it for every file it promotes, so a keyed commit's candidate files
+#: (mostly the previous commits' output) cost no footer read
+_FILE_ROWS: dict[tuple, int] = {}
+
+
+def _remember_rows(st: os.stat_result, path: str, rows: int) -> None:
+    if len(_FILE_ROWS) >= 1 << 16:
+        _FILE_ROWS.clear()
+    _FILE_ROWS[(path, st.st_size, st.st_mtime_ns)] = rows
+
+
+def _file_rows(path: str, st: os.stat_result) -> int:
+    rows = _FILE_ROWS.get((path, st.st_size, st.st_mtime_ns))
+    if rows is None:
+        import pyarrow.parquet as pq
+
+        rows = pq.read_metadata(path).num_rows
+        _remember_rows(st, path, rows)
+    return rows
 
 
 @functools.lru_cache(maxsize=1)
@@ -973,16 +1027,19 @@ class Table:
         # job of its own, and there is nothing for it to adapt: each
         # partition value lands wholly in one task, so the file-per-dir layout
         # is the same with or without coalescing, and the exchanges upstream
-        # are sized by the driver. UNPARTITIONED writes keep AQE on the
-        # caller's session: there the final exchange width IS the output file
-        # count, and AQE's partition coalescing is the scale-adaptive file
-        # sizing (without it a 32-wide merge exchange emitted up to 32 tiny
-        # files per commit — measured as the expression-index fixture growing
-        # 4 → 35 files). Caller-planned layouts (preserve_layout /
-        # range_key_layout) keep AQE too — their exchange shapes were chosen
-        # by the caller and coalescing is part of the small-file clustering
-        # contract.
-        if write_parts and not preserve_layout and not range_key_layout:
+        # are the engine's key windows, sized by the driver. A plan that
+        # still holds a join or aggregate (``_adaptive``: a caller's source
+        # written without a checkpoint, a pk-less delete's anti join) keeps
+        # AQE on the caller's session, for its skew splits and runtime
+        # broadcasts. UNPARTITIONED writes keep AQE too: there the final
+        # exchange width IS the output file count, and AQE's partition
+        # coalescing is the scale-adaptive file sizing (without it a 32-wide
+        # merge exchange emitted up to 32 tiny files per commit — measured as
+        # the expression-index fixture growing 4 → 35 files). Caller-planned
+        # layouts (preserve_layout / range_key_layout) keep AQE as well —
+        # their exchange shapes were chosen by the caller and coalescing is
+        # part of the small-file clustering contract.
+        if write_parts and not preserve_layout and not range_key_layout and not _adaptive(df):
             df = _static(df)
         staging = os.path.join(self.base, ".staging", instant)
         writer = df.write.mode("overwrite")
@@ -1002,7 +1059,7 @@ class Table:
         # table dir is still untouched, never mid-promotion with some files
         # already moved (orphans). read_metadata opens and closes the footer
         # (no leaked handle).
-        keep: list[tuple[str, str]] = []
+        keep: list[tuple[str, str, int]] = []
         for root, _dirs, fns in os.walk(staging):
             for fn in sorted(fns):
                 if not fn.endswith(".parquet"):
@@ -1014,16 +1071,18 @@ class Table:
                 # emits one) never become table files: they would inflate the
                 # file listing forever and carry no footer stats for the
                 # key-range index.
-                if pq.read_metadata(src).num_rows == 0:
+                rows = pq.read_metadata(src).num_rows
+                if rows == 0:
                     continue
-                keep.append((root, src))
+                keep.append((root, src, rows))
         rels: list[str] = []
-        for n, (root, src) in enumerate(keep):
+        for n, (root, src, rows) in enumerate(keep):
             relpart = os.path.relpath(root, staging)
             dest_dir = self.base if relpart == "." else os.path.join(self.base, relpart)
             os.makedirs(dest_dir, exist_ok=True)
             dest = os.path.join(dest_dir, f"{instant}_{n:05d}.parquet")
             os.replace(src, dest)
+            _remember_rows(os.stat(dest), dest, rows)
             rels.append(os.path.relpath(dest, self.base))
         shutil.rmtree(staging, ignore_errors=True)
         rels = sorted(rels)
@@ -3785,20 +3844,7 @@ class Table:
         how = {(False, False): "inner", (True, False): "left", (False, True): "right", (True, True): "full"}[
             ("not_matched_by_source" in kinds, "not_matched" in kinds)
         ]
-        joined = (
-            # a sort-merge join: the batch is checkpointed on a static plan
-            # (``_write_ops``), where a broadcast would be a Spark job of its
-            # own; AQE would shuffle both sides before converting it anyway
-            self.read()
-            .hint("merge")
-            .withColumn("__merge_t", F.lit(True))
-            .alias(ta)
-            .join(
-                source.withColumn("__merge_s", F.lit(True)).alias(sa),
-                [F.col(f"{ta}.`{t}`") == F.col(f"{sa}.`{s}`") for t, s in on.items()],
-                how,
-            )
-        )
+        joined = self._merge_join(source, on, how, aliases)
         scope = {
             "matched": "__merge_t IS NOT NULL AND __merge_s IS NOT NULL",
             "not_matched": "__merge_t IS NULL",
@@ -3838,6 +3884,34 @@ class Table:
             [i for i, c in enumerate(clauses) if c.action != "delete"],
             [i for i, c in enumerate(clauses) if c.action == "delete"],
             op="merge",
+            # the join is the engine's own, on the record key (one target row
+            # per key: nothing for a skew split); the SOURCE decides whether
+            # the batch is planned statically (``_checkpoint``)
+            static=not _adaptive(source),
+        )
+
+    def _merge_join(
+        self, source: DataFrame, on: dict[str, str], how: str, aliases: tuple[str, str]
+    ) -> DataFrame:
+        """The target ⋈ source join of a MERGE, flagged per side
+        (``__merge_t`` / ``__merge_s``). The planner picks the strategy: an
+        inner or left join may broadcast a small source. A right or full
+        join preserves the source, so the source can never be the broadcast
+        side; those joins sort-merge, which keeps a small target from
+        becoming a broadcast job of its own when the join is planned
+        statically."""
+        ta, sa = aliases
+        target = self.read()
+        if how in ("right", "full"):
+            target = target.hint("merge")
+        return (
+            target.withColumn("__merge_t", F.lit(True))
+            .alias(ta)
+            .join(
+                source.withColumn("__merge_s", F.lit(True)).alias(sa),
+                [F.col(f"{ta}.`{t}`") == F.col(f"{sa}.`{s}`") for t, s in on.items()],
+                how,
+            )
         )
 
     def write_cdc(self, df: DataFrame, op_col: str = "_op", extra_meta: dict | None = None) -> str:
@@ -3858,6 +3932,7 @@ class Table:
         delete_ops: list,
         op: str,
         extra_meta: dict | None = None,
+        static: bool | None = None,
     ) -> str:
         """Write a batch whose ``op_col`` marks each row an upsert (a value in
         ``upsert_ops``) or a delete (``delete_ops``); other rows are dropped.
@@ -3866,10 +3941,11 @@ class Table:
         filtered branches re-evaluate the caller's plan otherwise (an IVM
         refresh feeds a multi-join union here, a MERGE its join), and
         _apply_cow then reads these blocks without checkpointing each
-        branch again."""
+        branch again. ``static``: how the checkpoint is planned
+        (``_checkpoint``)."""
         both = bool(upsert_ops and delete_ops)
         if both:
-            df = _checkpoint(df)
+            df = _checkpoint(df, static)
 
         def rows(ops: list) -> DataFrame | None:
             return df.filter(F.col(op_col).isin(*ops)).drop(op_col) if ops else None
@@ -3881,6 +3957,7 @@ class Table:
                 op=op,
                 extra_meta=extra_meta,
                 checkpointed=both,
+                static=static,
             )
         finally:
             if both:
@@ -3895,8 +3972,10 @@ class Table:
         op: str,
         extra_meta: dict | None = None,
         checkpointed: bool = False,
+        static: bool | None = None,
     ) -> str:
-        """``checkpointed``: the batches already read checkpoint blocks."""
+        """``checkpointed``: the batches already read checkpoint blocks;
+        ``static``: how ``_apply_cow`` plans their checkpoints otherwise."""
         if not self.config.record_key and upserts is not None and deletes is None:
             # pk-less tables degrade upsert to append (reference's pkless matrix rows
             # — ``spark_sql_testing.sh:87-93``); pk-less deletes fall through and are
@@ -3928,7 +4007,7 @@ class Table:
             return self._apply_mor(instant, upserts, deletes, op, extra_meta)
         # COW, and pk-less MOR deletes (no key ⇒ tombstones can't address rows;
         # a full-row anti-join rewrite is the only correct form)
-        return self._apply_cow(instant, upserts, deletes, op, extra_meta, checkpointed)
+        return self._apply_cow(instant, upserts, deletes, op, extra_meta, checkpointed, static)
 
     def _batch_keys(self, *dfs: DataFrame) -> DataFrame | None:
         """Distinct ``_hoodie_record_key`` values across the incoming batches,
@@ -4155,6 +4234,7 @@ class Table:
         op: str,
         extra_meta: dict | None = None,
         checkpointed: bool = False,
+        static: bool | None = None,
     ) -> str:
         files, _latest = self.timeline.live_files()
         _batch_ckpts: list[DataFrame] = []
@@ -4174,10 +4254,10 @@ class Table:
             # lifecycles (CDC fixtures). Empty-table inserts never reach
             # this branch, so the initial-load path pays nothing.
             if upserts is not None:
-                upserts = _checkpoint(upserts)
+                upserts = _checkpoint(upserts, static)
                 _batch_ckpts.append(upserts)
             if deletes is not None:
-                deletes = _checkpoint(deletes)
+                deletes = _checkpoint(deletes, static)
                 _batch_ckpts.append(deletes)
         keys_df = self._batch_keys(upserts, deletes)
         if files and keys_df is not None:
@@ -4325,15 +4405,17 @@ class Table:
             self._write_conflict_marker(instant, touched_rels, touched)
             self._early_conflict_check(instant, touched_rels, touched)
             marker_hb = self._marker_heartbeat(instant)
-        # the merge's width is sized from planning facts where the one-job
-        # planner ran; otherwise its exchange keeps the session width
-        key_width = (
-            None if batch_rows is None else self._key_exchange_width(touched_rels, batch_rows)
-        )
         try:
             existing = self._read_files(touched_rels, with_deleted=False)
+            # the merge's width is sized from planning facts where the one-job
+            # planner ran; otherwise its exchange keeps the session width
+            key_width, one_task = (
+                (None, False)
+                if batch_rows is None
+                else self._key_exchange_width(touched_rels, batch_rows, existing)
+            )
             if self.config.record_key:
-                merged = self._merge_cow(existing, upserts, deletes, instant, key_width)
+                merged = self._merge_cow(existing, upserts, deletes, instant, key_width, one_task)
             else:
                 # pk-less table: delete by full-row match
                 merged = existing
@@ -4373,21 +4455,44 @@ class Table:
             for _d in _batch_ckpts:
                 free_local_checkpoint(_d)
 
-    #: what one task of a keyed rewrite's key exchange takes on: candidate
-    #: parquet bytes (AQE's default advisory partition size) and batch rows
-    KEY_TASK_FILE_BYTES = 64 << 20
-    KEY_TASK_BATCH_ROWS = 1_000_000
+    def _key_exchange_width(
+        self, rels: list[str], batch_rows: int, existing: DataFrame
+    ) -> tuple[int, bool]:
+        """Width of a keyed rewrite's key exchange, decided on the driver in
+        place of AQE's runtime coalescing, in AQE's own unit: the caller's
+        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` of shuffle data
+        per reducer. The exchange carries every row of the candidate files
+        (footer row counts) and of the batch (planning's row bound), each
+        costed the way Spark's optimizer costs a row of known count and
+        unknown size: 8 bytes plus the schema's default column sizes. Capped
+        at the caller's ``spark.sql.shuffle.partitions``.
 
-    def _key_exchange_width(self, rels: list[str], batch_rows: int) -> int:
-        """Width of a keyed rewrite's key exchange, decided on the driver
-        from what planning already knows — the candidate files' bytes and
-        the batch's row bound — in place of AQE's runtime coalescing; capped
-        at the caller's ``spark.sql.shuffle.partitions``."""
-        size = sum(os.path.getsize(os.path.join(self.base, r)) for r in rels)
-        n = math.ceil(size / self.KEY_TASK_FILE_BYTES + batch_rows / self.KEY_TASK_BATCH_ROWS)
-        if n <= 1:
-            return 1
-        return min(n, int(self.spark.conf.get("spark.sql.shuffle.partitions")))
+        Also returns whether a one-reducer commit SCANS in that task too, with
+        no exchange at all: when its candidate files fit one file split by
+        Spark's own packing cost (bytes plus ``openCostInBytes`` per file
+        within ``maxPartitionBytes``). Spark would still split such a scan
+        across idle cores, which saves nothing measurable at this size: a
+        150k-row, 3.2 MB candidate set merged in 0.72 s scanning in one task
+        and 0.74 s scanning in parallel (4 cores)."""
+        rows, scan = batch_rows, 0
+        for r in rels:
+            path = os.path.join(self.base, r)
+            st = os.stat(path)
+            scan += st.st_size
+            rows += _file_rows(path, st)
+        row_bytes = 8 + existing._jdf.schema().defaultSize()
+        conf = self.spark.conf
+        size_of = _byte_string(existing._jdf._gateway_client)
+        advisory = size_of(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
+        n = max(1, math.ceil(rows * row_bytes / advisory))
+        n = min(n, int(conf.get("spark.sql.shuffle.partitions")))
+        one_task = n == 1 and scan + len(rels) * size_of(
+            conf.get("spark.sql.files.openCostInBytes")
+        ) <= size_of(conf.get("spark.sql.files.maxPartitionBytes"))
+        self.last_key_exchange = {
+            "rows": rows, "bytes": rows * row_bytes, "width": n, "one_task": one_task,
+        }
+        return n, one_task
 
     def _merge_cow(
         self,
@@ -4396,6 +4501,7 @@ class Table:
         deletes: DataFrame | None,
         instant: str,
         key_width: int | None,
+        one_task: bool = False,
     ) -> DataFrame:
         """A keyed COW commit's merge in ONE key-window pass. The rewritten
         file groups' stored rows (tag 0), the batch's upserts (tag 1) and one
@@ -4406,11 +4512,10 @@ class Table:
         survives whatever its precombine — the semantics of an anti join of
         the stored rows against the delete keys, without a join in the plan.
         ``key_width`` sizes the key exchange (None: the window's own exchange
-        at the session's shuffle width). At 1 there is no exchange: the
-        union coalesces to ONE task, which merges and then writes the whole
-        commit (``_write_files(single_task=True)``) — two shuffle stages
-        fewer for a commit small enough that the key exchange would have
-        had a single reducer anyway."""
+        at the session's shuffle width). At 1, ONE task merges and then
+        writes the whole commit (``_write_files(single_task=True)``), one
+        shuffle stage fewer; with ``one_task`` the union coalesces into it
+        with no exchange at all, so the commit is a single stage."""
         tagged = [existing.selectExpr("*", "0 AS __tag")]
         if upserts is not None:
             tagged.append(self._with_meta(upserts, instant).selectExpr("*", "1 AS __tag"))
@@ -4428,7 +4533,7 @@ class Table:
         for t in tagged[1:]:
             merged = merged.unionByName(t)
         if key_width == 1:
-            merged = merged.coalesce(1)
+            merged = merged.coalesce(1) if one_task else merged.repartition(1)
         elif key_width:
             merged = merged.repartition(key_width, META_KEY)
         if deletes is not None:

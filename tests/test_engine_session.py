@@ -7,6 +7,7 @@ semantics of a delete (checked against a dict model)."""
 from __future__ import annotations
 
 import ast
+import math
 import pathlib
 import uuid
 
@@ -14,6 +15,7 @@ import pytest
 from pyspark.sql import functions as F
 
 from hudi_examples_spark.table import MergeClause, Table, TableConfig
+from hudi_examples_spark.table.core import _adaptive, _static
 
 SCHEMA = "id STRING, ts BIGINT, day STRING, v STRING"
 COLS = ["id", "ts", "day", "v"]
@@ -49,13 +51,17 @@ def _snapshot(t: Table) -> dict:
 
 
 @pytest.fixture(params=["one_task", "key_exchange"])
-def layout(request, monkeypatch):
+def layout(request, spark):
     """Both rewrite layouts: the one task a small commit merges and writes
-    in, and the key exchange a larger commit gets (forced here by sizing a
-    key-exchange task at one batch row)."""
+    in, and the key exchange a larger commit gets (forced here by an AQE
+    advisory partition size of 1 KiB on the caller's session, which the
+    key width is measured in)."""
+    key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    before = spark.conf.get(key)
     if request.param == "key_exchange":
-        monkeypatch.setattr(Table, "KEY_TASK_BATCH_ROWS", 1)
-    return request.param
+        spark.conf.set(key, "1k")
+    yield request.param
+    spark.conf.set(key, before)
 
 
 def _jobs(spark, name: str, fn) -> list[int]:
@@ -141,6 +147,81 @@ def test_outside_candidates_confirmed_in_one_static_job(spark, tmp_path):
     model.update((r[0], r) for r in ups)
     rows = Table(spark, t.base).read().select("id", "ts", "day", "v").collect()
     assert {r["id"]: tuple(r) for r in rows} == model
+
+
+def test_key_width_is_measured_in_the_callers_advisory_size(spark, tmp_path):
+    """The key exchange gets one reducer per advisory partition size of
+    estimated shuffle data, capped at the shuffle width; a one-reducer
+    commit scans in that task only while its candidates fit one file split
+    (``maxPartitionBytes``), and otherwise scans in a stage of its own."""
+    t, model = _cow(spark, str(tmp_path / "t"))
+    keys = (
+        "spark.sql.adaptive.advisoryPartitionSizeInBytes",
+        "spark.sql.files.maxPartitionBytes",
+    )
+    before = {k: spark.conf.get(k) for k in keys}
+    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    rounds = []
+    try:
+        for conf in ({}, {keys[0]: "1k"}, {keys[1]: "1k"}):
+            for k, v in before.items():
+                spark.conf.set(k, conf.get(k, v))
+            ups = [_row(k, len(rounds) + 1, "u") for k in range(300, 310)]
+            stages = _jobs(spark, "width", lambda: t.upsert(_df(spark, ups)))
+            rounds.append((dict(t.last_key_exchange), stages))
+            model.update((r[0], r) for r in ups)
+    finally:
+        for k, v in before.items():
+            spark.conf.set(k, v)
+    (small, small_jobs), (wide, wide_jobs), (split, split_jobs) = rounds
+    assert small["width"] == 1 and small["one_task"] and small_jobs[-1] == 1
+    assert wide["width"] == min(math.ceil(wide["bytes"] / 1024), width) > 1
+    assert wide_jobs[-1] == 3
+    assert split["width"] == 1 and not split["one_task"] and split_jobs[-1] == 2
+    _check(spark, t, model)
+
+
+def test_merge_join_broadcasts_a_small_source_unless_it_is_preserved(spark, tmp_path):
+    """Planned statically, an inner or left MERGE join broadcasts a source
+    whose plan-time size is small (a file scan here) instead of shuffling
+    the target; a right or full join, whose source side is preserved,
+    sort-merges."""
+    t, _ = _cow(spark, str(tmp_path / "t"))
+    _df(spark, [_row(k, 3, "m") for k in range(5)]).write.parquet(str(tmp_path / "src"))
+    src = spark.read.parquet(str(tmp_path / "src"))
+
+    def plan(how: str) -> str:
+        joined = t._merge_join(src, {"id": "id"}, how, ("target", "source"))
+        return _static(joined)._jdf.queryExecution().executedPlan().toString()
+
+    for how in ("inner", "left"):
+        assert "BroadcastHashJoin" in plan(how) and "SortMergeJoin" not in plan(how), how
+    for how in ("right", "full"):
+        assert "SortMergeJoin" in plan(how) and "Broadcast" not in plan(how), how
+
+
+def test_sources_with_joins_or_aggregates_keep_aqe(spark, tmp_path):
+    """A source that joins or aggregates is planned on the caller's session
+    with its AQE (the aggregate's stage runs as a job of its own when the
+    batch is checkpointed); a plain source is planned statically."""
+    rows = _df(spark, [_row(k, 1, "u") for k in range(300, 320)])
+    other = _df(spark, [_row(k, 1) for k in range(300, 305)])
+    assert not any(_adaptive(d) for d in (rows, rows.filter("ts > 0"), rows.localCheckpoint(False)))
+    assert all(
+        _adaptive(d)
+        for d in (
+            rows.join(other.select("id"), "id"),
+            rows.groupBy("id").count(),
+            rows.distinct(),
+            rows.dropDuplicates(["id"]),
+        )
+    )
+    t, model = _cow(spark, str(tmp_path / "t"))
+    agg = rows.groupBy("id", "day").agg(F.max("ts").alias("ts"), F.max("v").alias("v"))
+    jobs = _jobs(spark, "aggregate-source", lambda: t.upsert(agg))
+    assert len(jobs) > 2, jobs
+    model.update((r[0], r) for r in rows.select(*COLS).collect())
+    _check(spark, t, model)
 
 
 def test_engine_leaves_caller_conf_alone(spark, tmp_path):
