@@ -101,8 +101,9 @@ def _engine_session(spark: SparkSession, planning: bool = False):
     driver (the planning width, a keyed rewrite's key width) or hash on a
     hive-partition value, which lands wholly in one task either way. What
     the engine does NOT build — a caller's join or aggregate — stays on the
-    caller's session (``_adaptive``). ``planning`` also pins the shuffle width to
-    ``PLANNING_SHUFFLE_PARTITIONS``; otherwise the clone keeps the caller's.
+    caller's session (``_adaptive``). ``planning`` also pins the shuffle
+    width to ``PLANNING_SHUFFLE_PARTITIONS``; otherwise the clone keeps the
+    caller's.
 
     A clone (not ``newSession()``) keeps the caller's RUNTIME conf — time
     zone, parquet flags, shuffle width — so a query means the same thing on
@@ -4409,13 +4410,13 @@ class Table:
             existing = self._read_files(touched_rels, with_deleted=False)
             # the merge's width is sized from planning facts where the one-job
             # planner ran; otherwise its exchange keeps the session width
-            key_width, one_task = (
-                (None, False)
+            key_width = (
+                None
                 if batch_rows is None
                 else self._key_exchange_width(touched_rels, batch_rows, existing)
             )
             if self.config.record_key:
-                merged = self._merge_cow(existing, upserts, deletes, instant, key_width, one_task)
+                merged = self._merge_cow(existing, upserts, deletes, instant, key_width)
             else:
                 # pk-less table: delete by full-row match
                 merged = existing
@@ -4455,25 +4456,27 @@ class Table:
             for _d in _batch_ckpts:
                 free_local_checkpoint(_d)
 
-    def _key_exchange_width(
-        self, rels: list[str], batch_rows: int, existing: DataFrame
-    ) -> tuple[int, bool]:
+    def _key_exchange_width(self, rels: list[str], batch_rows: int, existing: DataFrame) -> int:
         """Width of a keyed rewrite's key exchange, decided on the driver in
-        place of AQE's runtime coalescing, in AQE's own unit: the caller's
-        ``spark.sql.adaptive.advisoryPartitionSizeInBytes`` of shuffle data
-        per reducer. The exchange carries every row of the candidate files
-        (footer row counts) and of the batch (planning's row bound), each
-        costed the way Spark's optimizer costs a row of known count and
-        unknown size: 8 bytes plus the schema's default column sizes. Capped
-        at the caller's ``spark.sql.shuffle.partitions``.
+        place of AQE's runtime coalescing: the larger of two counts Spark
+        makes itself, capped at the caller's ``spark.sql.shuffle.partitions``.
 
-        Also returns whether a one-reducer commit SCANS in that task too, with
-        no exchange at all: when its candidate files fit one file split by
-        Spark's own packing cost (bytes plus ``openCostInBytes`` per file
-        within ``maxPartitionBytes``). Spark would still split such a scan
-        across idle cores, which saves nothing measurable at this size: a
-        150k-row, 3.2 MB candidate set merged in 0.72 s scanning in one task
-        and 0.74 s scanning in parallel (4 cores)."""
+        - Reducers: estimated shuffle data over the caller's
+          ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, AQE's unit. The
+          exchange carries every row of the candidate files (footer row
+          counts) and of the batch (planning's bound, which counts a batch
+          row once per candidate file whose key range holds it), each costed
+          the way Spark's optimizer costs a row of known count and unknown
+          size: 8 bytes plus the schema's default column sizes.
+        - Scan splits: the candidate files packed as Spark packs a file scan,
+          bytes plus ``spark.sql.files.openCostInBytes`` per file, over
+          ``spark.sql.files.maxPartitionBytes``.
+
+        Width 1 is one task that scans, merges and writes (``_merge_cow``);
+        Spark would still spread such a scan over idle cores, which saved
+        nothing measurable: a 150k-row, 3.2 MB candidate set merged in
+        0.72 s scanning in one task and 0.74 s ahead of one reducer (4
+        cores)."""
         rows, scan = batch_rows, 0
         for r in rels:
             path = os.path.join(self.base, r)
@@ -4483,16 +4486,17 @@ class Table:
         row_bytes = 8 + existing._jdf.schema().defaultSize()
         conf = self.spark.conf
         size_of = _byte_string(existing._jdf._gateway_client)
-        advisory = size_of(conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes"))
-        n = max(1, math.ceil(rows * row_bytes / advisory))
+        reducers = rows * row_bytes / size_of(
+            conf.get("spark.sql.adaptive.advisoryPartitionSizeInBytes")
+        )
+        open_cost = size_of(conf.get("spark.sql.files.openCostInBytes"))
+        splits = (scan + len(rels) * open_cost) / size_of(
+            conf.get("spark.sql.files.maxPartitionBytes")
+        )
+        n = math.ceil(max(reducers, splits, 1))
         n = min(n, int(conf.get("spark.sql.shuffle.partitions")))
-        one_task = n == 1 and scan + len(rels) * size_of(
-            conf.get("spark.sql.files.openCostInBytes")
-        ) <= size_of(conf.get("spark.sql.files.maxPartitionBytes"))
-        self.last_key_exchange = {
-            "rows": rows, "bytes": rows * row_bytes, "width": n, "one_task": one_task,
-        }
-        return n, one_task
+        self.last_key_exchange = {"rows": rows, "bytes": rows * row_bytes, "width": n}
+        return n
 
     def _merge_cow(
         self,
@@ -4501,7 +4505,6 @@ class Table:
         deletes: DataFrame | None,
         instant: str,
         key_width: int | None,
-        one_task: bool = False,
     ) -> DataFrame:
         """A keyed COW commit's merge in ONE key-window pass. The rewritten
         file groups' stored rows (tag 0), the batch's upserts (tag 1) and one
@@ -4512,10 +4515,11 @@ class Table:
         survives whatever its precombine — the semantics of an anti join of
         the stored rows against the delete keys, without a join in the plan.
         ``key_width`` sizes the key exchange (None: the window's own exchange
-        at the session's shuffle width). At 1, ONE task merges and then
-        writes the whole commit (``_write_files(single_task=True)``), one
-        shuffle stage fewer; with ``one_task`` the union coalesces into it
-        with no exchange at all, so the commit is a single stage."""
+        at the session's shuffle width). At 1 there is no exchange: the
+        union coalesces to ONE task, which merges and then writes the whole
+        commit (``_write_files(single_task=True)``) — two shuffle stages
+        fewer for a commit small enough that the key exchange would have
+        had a single reducer anyway."""
         tagged = [existing.selectExpr("*", "0 AS __tag")]
         if upserts is not None:
             tagged.append(self._with_meta(upserts, instant).selectExpr("*", "1 AS __tag"))
@@ -4533,7 +4537,7 @@ class Table:
         for t in tagged[1:]:
             merged = merged.unionByName(t)
         if key_width == 1:
-            merged = merged.coalesce(1) if one_task else merged.repartition(1)
+            merged = merged.coalesce(1)
         elif key_width:
             merged = merged.repartition(key_width, META_KEY)
         if deletes is not None:

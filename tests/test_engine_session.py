@@ -149,18 +149,18 @@ def test_outside_candidates_confirmed_in_one_static_job(spark, tmp_path):
     assert {r["id"]: tuple(r) for r in rows} == model
 
 
-def test_key_width_is_measured_in_the_callers_advisory_size(spark, tmp_path):
+def test_key_width_counts_reducers_and_scan_splits_as_spark_would(spark, tmp_path):
     """The key exchange gets one reducer per advisory partition size of
-    estimated shuffle data, capped at the shuffle width; a one-reducer
-    commit scans in that task only while its candidates fit one file split
-    (``maxPartitionBytes``), and otherwise scans in a stage of its own."""
+    estimated shuffle data, or one per file split of the candidate scan if
+    that is more, capped at the shuffle width; at width 1 one task scans,
+    merges and writes."""
     t, model = _cow(spark, str(tmp_path / "t"))
     keys = (
         "spark.sql.adaptive.advisoryPartitionSizeInBytes",
         "spark.sql.files.maxPartitionBytes",
     )
     before = {k: spark.conf.get(k) for k in keys}
-    width = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    cap = int(spark.conf.get("spark.sql.shuffle.partitions"))
     rounds = []
     try:
         for conf in ({}, {keys[0]: "1k"}, {keys[1]: "1k"}):
@@ -168,16 +168,16 @@ def test_key_width_is_measured_in_the_callers_advisory_size(spark, tmp_path):
                 spark.conf.set(k, conf.get(k, v))
             ups = [_row(k, len(rounds) + 1, "u") for k in range(300, 310)]
             stages = _jobs(spark, "width", lambda: t.upsert(_df(spark, ups)))
-            rounds.append((dict(t.last_key_exchange), stages))
+            rounds.append((dict(t.last_key_exchange), stages[-1]))
             model.update((r[0], r) for r in ups)
     finally:
         for k, v in before.items():
             spark.conf.set(k, v)
-    (small, small_jobs), (wide, wide_jobs), (split, split_jobs) = rounds
-    assert small["width"] == 1 and small["one_task"] and small_jobs[-1] == 1
-    assert wide["width"] == min(math.ceil(wide["bytes"] / 1024), width) > 1
-    assert wide_jobs[-1] == 3
-    assert split["width"] == 1 and not split["one_task"] and split_jobs[-1] == 2
+    (small, small_stages), (wide, wide_stages), (split, split_stages) = rounds
+    assert small["width"] == 1 and small_stages == 1
+    assert wide["width"] == min(math.ceil(wide["bytes"] / 1024), cap) > 1
+    assert split["bytes"] < 1 << 20 and split["width"] > 1
+    assert wide_stages == split_stages == 3
     _check(spark, t, model)
 
 
