@@ -1754,7 +1754,7 @@ def bench_phases():
         meta = next(
             i.meta for i in tbl.timeline.completed_data_instants() if i.instant == inst
         )
-        n_parts = len({tbl._partition_of(r) for r in tbl.timeline.live_files()[0]})
+        n_parts = len({tbl._partition_path_of(r) for r in tbl.timeline.live_files()[0]})
         tbl.last_cluster_meta = {
             "partitions_total": n_parts,
             "partitions_rewritten": meta.get("numPartitionsRewritten"),

@@ -394,7 +394,7 @@ class Engine:
 
     def _show_partitions(self, plan, s: str) -> DataFrame:
         tbl = self._table_of(plan)
-        parts = sorted({tbl._partition_of(r) for r in tbl.timeline.live_files()[0]} - {""})
+        parts = sorted({tbl._partition_path_of(r) for r in tbl.timeline.live_files()[0]} - {""})
         return self.spark.createDataFrame([(p,) for p in parts], "partition STRING")
 
     # ---------------------------------------------------------------------- DML

@@ -2159,13 +2159,26 @@ class Table:
 
         return metadata_df(self, part)
 
+    def _key_ranges(self, rels: list[str]) -> tuple[list[tuple[str, str, str]], list[str]]:
+        """(rel, lo, hi) string record-key ranges of the files that recorded
+        one, and the files that did not (always kept by a key prune)."""
+        stats = self._load_file_stats()
+        ranged, unknown = [], []
+        for r in rels:
+            kr = (stats.get(r) or {}).get(META_KEY)
+            if kr is not None:
+                ranged.append((r, str(kr[0]), str(kr[1])))
+            else:
+                unknown.append(r)
+        return ranged, unknown
+
     def _prune_files_by_keys(self, rels: list[str], keys_df: DataFrame) -> list[str]:
         """Drop files whose recorded record-key [min, max] range cannot contain
         any key in ``keys_df`` (a DataFrame with a ``_hoodie_record_key``
         column). This is the range-pruning phase of Hudi's bloom index: the
-        per-file key ranges (bounded metadata, broadcast) are range-joined
-        against the incoming keys JVM-side, and only matching file names come
-        back to the driver. Files with no recorded range are always kept —
+        per-file key ranges (bounded metadata) probe the incoming keys
+        JVM-side (``_range_hits``), and only matching file names come back
+        to the driver. Files with no recorded range are always kept —
         pruning is never lossy. With keys clustered per file (sequential ids,
         sorted bulk loads) this makes keyed-write planning O(touched files);
         with uniformly random keys it degrades to the full list, exactly like
@@ -2185,47 +2198,15 @@ class Table:
                 "record_index": True,
             }
             return ri
-        stats = self._load_file_stats()
-        ranged, unknown = [], []
-        for r in rels:
-            kr = (stats.get(r) or {}).get(META_KEY)
-            if kr is not None:
-                ranged.append((r, str(kr[0]), str(kr[1])))
-            else:
-                unknown.append(r)
-        if not ranged:
-            kept = list(rels)
-            if self.config.bloom_index:
-                kept = self._bloom_prune(kept, keys_df)
-            self.last_key_prune = {
-                "total": len(rels),
-                "candidates": len(kept),
-                **({"bloom_pruned": len(rels) - len(kept)} if self.config.bloom_index else {}),
-            }
-            return kept
-        # no pre-join distinct: the range probe tolerates duplicate keys and
-        # the post-probe file-name distinct is tiny — skipping it saves one
-        # full exchange of the batch on EVERY keyed write's planning pass
-        keys = keys_df.select(F.col(META_KEY).cast("string").alias("__k"))
-        if len(ranged) <= self.RANGE_LITERAL_MAX:
-            # literal-array probe (r10): same inner-join semantics, no
-            # broadcast-build job (see _plan_keyed_write)
-            probe = keys.select(
-                F.explode(
-                    F.filter(
-                        self._range_literal_array(ranged),
-                        lambda s: (F.col("__k") >= s["lo"]) & (F.col("__k") <= s["hi"]),
-                    )
-                ).alias("__s")
-            ).select(F.col("__s.rel").alias("rel"))
-        else:
-            rng = self.spark.createDataFrame(ranged, "rel STRING, lo STRING, hi STRING")
-            probe = keys.join(
-                F.broadcast(rng),
-                (F.col("__k") >= F.col("lo")) & (F.col("__k") <= F.col("hi")),
-            ).select("rel")
-        hit = _static(probe.distinct(), planning=True).collect()
-        kept = sorted({r["rel"] for r in hit} | set(unknown))
+        ranged, kept = self._key_ranges(rels)
+        if ranged:
+            # no pre-probe distinct: the range probe tolerates duplicate keys
+            # and the post-probe file-name distinct is tiny — skipping it
+            # saves one full exchange of the batch on every planning pass
+            probe, hits = self._range_hits(keys_df, ranged)
+            probe = probe.selectExpr(f"explode({hits}) AS rel")
+            hit = _static(probe.distinct(), planning=True).collect()
+            kept = sorted({r["rel"] for r in hit} | set(kept))
         n_range = len(kept)
         if self.config.bloom_index:
             # filter phase: range-survivors whose bloom rules every key out drop
@@ -2377,7 +2358,7 @@ class Table:
             except OSError:
                 continue  # raced a cleaner; the publish re-validates
             if sz < small_limit:
-                cand.setdefault(self._partition_of(r), []).append((sz, r))
+                cand.setdefault(self._partition_path_of(r), []).append((sz, r))
         bins: list[list[str]] = []
         for part in sorted(cand):
             part_bins: list[list] = []  # [remaining_bytes, [rels]]
@@ -2427,7 +2408,7 @@ class Table:
                 },
             ),
             since=latest,
-            partitions={self._partition_of(r) for r in rewrite},
+            partitions={self._partition_path_of(r) for r in rewrite},
             occ_scope="files",
         )
         return instant
@@ -2698,10 +2679,10 @@ class Table:
             m = inst_meta.get(old_files[rel][0]) or {}
             return all(m.get(k) == v for k, v in layout_sig.items())
 
-        viol_parts = {self._partition_of(r) for r in old_files if not _in_layout(r)}
+        viol_parts = {self._partition_path_of(r) for r in old_files if not _in_layout(r)}
         if not viol_parts:
             return None
-        rewrite = sorted(r for r in old_files if self._partition_of(r) in viol_parts)
+        rewrite = sorted(r for r in old_files if self._partition_path_of(r) in viol_parts)
         return rewrite, viol_parts
 
     def schedule_clustering(
@@ -3272,11 +3253,6 @@ class Table:
     #: manifest carries sizes for free — never a per-file HEAD storm).
     CDC_PRUNE_MIN_BYTES = 64 * 1024 * 1024
 
-    #: below this many live files a keyed write's location scan just reads
-    #: them all — the pruning join is a Spark job whose fixed cost only pays
-    #: for itself once the table has real file counts
-    KEY_PRUNE_MIN_FILES = 32
-
     def _merge_mor_pruned(
         self, base_rels: list[str], log_rels: list[str], with_partial: bool = False
     ) -> DataFrame:
@@ -3779,7 +3755,7 @@ class Table:
             raise ConcurrentWriteConflict(
                 f"live log files remain after compacting for delete_partition {path!r}"
             )
-        doomed = sorted(r for r in files if self._partition_of(r) == path)
+        doomed = sorted(r for r in files if self._partition_path_of(r) == path)
         if not doomed:
             raise ValueError(f"no live files in partition {path!r}")
         instant = new_instant()
@@ -3982,6 +3958,14 @@ class Table:
             # — ``spark_sql_testing.sh:87-93``); pk-less deletes fall through and are
             # resolved by full-row anti join in _apply_cow.
             return self.insert(upserts, extra_meta=extra_meta)
+        if self.config.record_key and deletes is not None and META_KEY not in deletes.columns:
+            # a keyed delete addresses rows by key; without one it could
+            # only fail deep inside the rewrite, after its planning jobs ran
+            missing = [c for c in self.config.record_key if c not in deletes.columns]
+            if missing:
+                raise ValueError(
+                    f"delete batch lacks the record key column(s) {missing} and {META_KEY}"
+                )
         # adopt any concurrent writer's schema evolution BEFORE planning the
         # rewrite: a stale handle that skipped this would rebuild touched
         # files through its old column list and erase the evolved column's
@@ -4010,27 +3994,6 @@ class Table:
         # a full-row anti-join rewrite is the only correct form)
         return self._apply_cow(instant, upserts, deletes, op, extra_meta, checkpointed, static)
 
-    def _batch_keys(self, *dfs: DataFrame) -> DataFrame | None:
-        """Distinct ``_hoodie_record_key`` values across the incoming batches,
-        or None when any batch can't yield keys (pk-less table, missing key
-        columns) — callers then fall back to partition-scope planning."""
-        if not self.config.record_key:
-            return None
-        keys = None
-        for df in dfs:
-            if df is None:
-                continue
-            if all(c in df.columns for c in self.config.record_key):
-                k = df.selectExpr(f"{self._key_sql()} AS {_sql_ident(META_KEY)}")
-            elif META_KEY in df.columns:
-                k = df.select(META_KEY)
-            else:
-                return None
-            keys = k if keys is None else keys.unionByName(k)
-        # not distinct-ed: every consumer (range/bloom prune) tolerates
-        # duplicates, and the exchange would cost more than the re-tests
-        return keys
-
     def _partition_path_of(self, rel: str) -> str:
         """Hive partition path of a file (``seg=A`` / ``a=1/b=2``), ignoring
         ``__bucket`` routing dirs — driver-side string work, no jobs."""
@@ -4040,192 +4003,157 @@ class Table:
             if k in self.config.partition_by
         )
 
-    def _touched_partition_filter(self, *dfs: DataFrame):
-        """Distinct partition paths of the incoming batches → predicate over live
-        files. The only collect in the write path (bounded by partition count).
-
-        Partition location is GLOBAL-index style by default (Hudi GLOBAL_SIMPLE
-        with ``update.partition.path``): a keyed batch touches BOTH its own
-        partition paths and the partitions its keys currently live in, found by
-        joining keys against a column-pruned (key, partition) meta scan — so an
-        upsert that changes a record's partition column moves the record instead
-        of duplicating it, and delete-by-key works without partition columns.
-        (MOR reads get the same guarantee from the key-window merge; this keeps
-        COW snapshots identical.) The location scan is pruned by the per-file
-        record-key ranges (``_prune_files_by_keys``) before any file opens, so
-        its cost is O(files whose key range overlaps the batch), not O(table).
-        ``index_type="partition"`` skips the location scan entirely and trusts
-        the batch's own partition values (Hudi SIMPLE, non-global).
-        """
+    def _touched_partition_filter(self, *dfs: DataFrame) -> set[str] | None:
+        """Distinct partition paths of a pk-less commit's batches, in one
+        collect bounded by the partition count; None (every partition
+        touched) for an unpartitioned table or a batch without the
+        partition columns. Keyed commits locate through
+        ``_plan_keyed_write`` instead."""
         if not self.config.partition_by:
-            return None  # unpartitioned: all files touched
-        global_index = self.config.index_type == "global"
-        paths = None
+            return None
+        ps = []
         for df in dfs:
             if df is None:
                 continue
-            ps = []
-            if all(c in df.columns for c in self.config.partition_by):
-                ps.append(df.selectExpr(f"{self._partition_sql()} AS p").distinct())
-            elif not global_index:
-                # partition-scoped index + a batch without partition columns
-                # (delete-by-key): no way to locate — treat all as touched
+            if not all(c in df.columns for c in self.config.partition_by):
                 return None
-            if (
-                global_index
-                and self.config.record_key
-                and all(c in df.columns for c in self.config.record_key)
-            ):
-                files, _ = self.timeline.live_files()
-                if files:
-                    keys = df.selectExpr(f"{self._key_sql()} AS {_sql_ident(META_KEY)}").distinct()
-                    if len(files) > self.KEY_PRUNE_MIN_FILES:
-                        rels = self._prune_files_by_keys(sorted(files), keys)
-                        via_rli = bool(
-                            (getattr(self, "last_key_prune", None) or {}).get(
-                                "record_index"
-                            )
-                        )
-                    else:
-                        rels = sorted(files)
-                        via_rli = False
-                    if rels and via_rli:
-                        # record-index candidates are exact: every candidate
-                        # file holds ≥1 batch key, so its partition IS a
-                        # touched partition — derived from the file path,
-                        # zero data reads
-                        ps.append(
-                            self.spark.createDataFrame(
-                                [(self._partition_path_of(r),) for r in rels],
-                                "p STRING",
-                            ).distinct()
-                        )
-                    elif rels:
-                        existing = self._read_files(rels, with_deleted=False).select(
-                            META_KEY, META_PARTITION
-                        )
-                        ps.append(
-                            existing.join(keys, META_KEY)
-                            .select(F.col(META_PARTITION).alias("p"))
-                            .distinct()
-                        )
-                    else:
-                        # key ranges prove no live file holds any incoming key:
-                        # the location result is known-empty without a scan
-                        ps.append(
-                            self.spark.createDataFrame([], "p STRING")
-                        )
-            if not ps:
-                return None  # cannot locate: treat all partitions as touched
-            for p in ps:
-                # no cross-batch distinct: each ps is already distinct and the
-                # driver-side set() below dedupes — saves one exchange per write
-                paths = p if paths is None else paths.unionByName(p)
-        if paths is None:
+            ps.append(df.selectExpr(f"{self._partition_sql()} AS p"))
+        if not ps:
             return set()
-        return {r["p"] for r in _static(paths, planning=True).collect()}
+        p = ps[0] if len(ps) == 1 else ps[0].union(ps[1])
+        return {r["p"] for r in _static(p.distinct(), planning=True).collect()}
 
     #: max per-file key ranges shipped as a literal struct array in planning
     #: probes (beyond this the expression tree would bloat analysis/codegen —
-    #: the broadcast-join form takes over, amortized against a genuinely
-    #: large planning problem)
+    #: the broadcast form takes over, amortized against a genuinely large
+    #: planning problem)
     RANGE_LITERAL_MAX = 256
 
-    @staticmethod
-    def _range_literal_array(ranged: list[tuple[str, str, str]]):
-        """(rel, lo, hi) triples as a literal array<struct> expression — zero
-        Spark jobs to 'build', unlike a broadcast relation. Built as ONE SQL
-        string parsed JVM-side: the Column-API form paid ~4 py4j round-trips
-        per file (array/struct/lit/alias), ~0.3 s of pure driver latency per
-        write at 20 files — a measurable slice of every commit."""
-        parts = ",".join(
-            f"named_struct('rel',{_sql_str_lit(r)},"
-            f"'lo',{_sql_str_lit(lo)},'hi',{_sql_str_lit(hi)})"
-            for r, lo, hi in ranged
-        )
-        return F.expr(f"array({parts})")
+    def _range_hits(
+        self, df: DataFrame, ranged: list[tuple[str, str, str]]
+    ) -> tuple[DataFrame, str]:
+        """SQL of the array of the ``rel`` of every (rel, lo, hi) file range
+        that holds a row's ``_hoodie_record_key`` as a string, and the frame to
+        evaluate it over. Up to ``RANGE_LITERAL_MAX`` ranges ride in the
+        expression as a literal array — zero Spark jobs to build, where a
+        broadcast relation pays one. Beyond that ``df`` is crossed with the
+        ranges as one broadcast row. SQL text parsed JVM-side, because the
+        Column-API form paid py4j round trips per file and per operator
+        (~0.3 s of driver latency per write at 20 files)."""
+        if len(ranged) <= self.RANGE_LITERAL_MAX:
+            ranges = "array({})".format(
+                ",".join(
+                    f"named_struct('rel',{_sql_str_lit(r)},"
+                    f"'lo',{_sql_str_lit(lo)},'hi',{_sql_str_lit(hi)})"
+                    for r, lo, hi in ranged
+                )
+            )
+        else:
+            rng = self.spark.createDataFrame(
+                [(ranged,)], "__r ARRAY<STRUCT<rel: STRING, lo: STRING, hi: STRING>>"
+            )
+            df, ranges = df.crossJoin(F.broadcast(rng)), "__r"
+        k = f"CAST({_sql_ident(META_KEY)} AS STRING)"
+        return df, f"transform(filter({ranges}, s -> {k} >= s.lo AND {k} <= s.hi), s -> s.rel)"
 
     def _plan_keyed_write(
         self, rels: list[str], upserts: DataFrame | None, deletes: DataFrame | None
-    ) -> tuple[set[str], list[str], int] | None:
-        """ONE planning job for the common keyed-COW write (r10): the batch's
-        distinct partition paths AND the key-range candidate files come back
-        from a single collect — the old shape paid one Spark job for each,
-        and both evaluated the same incoming-batch subtree. Returns
-        (batch_parts, candidate_rels, batch_rows), or None when this planner
-        cannot run (missing key/partition columns) — the caller then falls
-        back to the split jobs; bloom-indexed and record-indexed tables keep
-        their richer dedicated paths. ``batch_rows`` bounds the batch's row
-        count from above (a key in k overlapping ranges counts k times); it
-        sizes the rewrite's key exchange.
+    ) -> tuple[set[str] | None, list[str], int]:
+        """The tag-location step of every keyed COW commit: ONE planning
+        collect returns the batch's distinct partition paths, the candidate
+        files that may hold a batch key, and the batch's row count. Returns
+        (batch_parts, candidate_rels, batch_rows); ``batch_parts`` is None
+        for an unpartitioned table or when a batch lacks the partition
+        columns (a delete by key), and ``batch_rows`` sizes the rewrite's
+        key exchange.
 
-        Shape: (key, partition) rows LEFT-join the broadcast per-file
-        key-range table — every batch partition survives the join (null
-        ``rel``), every range-hit (partition, file) pair lands once, with
-        its row count; the exchange carries only distinct pairs (partial
-        aggregation runs upstream), so the collect is O(batch partitions +
-        candidate files) at any scale. Pruning semantics are identical to
-        ``_prune_files_by_keys``'s range phase: files without recorded
-        ranges are always kept."""
-        kps = []
-        for d in (upserts, deletes):
-            if d is None:
-                continue
-            if all(c in d.columns for c in self.config.record_key):
-                key = self._key_sql()
-            elif META_KEY in d.columns:
-                key = _sql_ident(META_KEY)
-            else:
-                return None
-            if not all(c in d.columns for c in self.config.partition_by):
-                return None
-            kps.append(
-                d.selectExpr(f"CAST({key} AS STRING) AS __k", f"{self._partition_sql()} AS __p")
+        Location is GLOBAL-index style by default (Hudi GLOBAL_SIMPLE with
+        ``update.partition.path``): candidates may sit in any partition, so
+        an upsert that changes a record's partition column moves the record
+        instead of duplicating it, and a delete by key needs no partition
+        columns. Candidates come from the record index when it serves
+        (exact, so the range probe is skipped), otherwise from the per-file
+        key ranges (``_range_hits``; files without a recorded range are
+        always kept). Then, one step each:
+        - ``index_type="partition"`` keeps only candidates inside the
+          batch's partitions (Hudi SIMPLE: a partition-changing upsert
+          leaves the old row in place);
+        - the bloom index drops range survivors whose filter rules every
+          key out;
+        - range/bloom candidates outside the batch's partitions are usually
+          lexicographic false positives of the string key range (a numeric
+          key "5" overlaps ranges in every partition), and a needless
+          rewrite both costs IO and marks a clustered partition dirty. A
+          key-column-pruned read confirms them: a moved row's real holder
+          file survives (the global index's partition move), false
+          positives drop. Record-index candidates are real holders already.
+
+        Shape: each (key, partition) row is exploded over the files whose
+        range holds it (outer, so a row with no hit keeps its partition)
+        and grouped by (partition, file), so the exchange carries only
+        distinct pairs and the collect is O(batch partitions + candidate
+        files) at any scale. A row counts once, at its first hit."""
+        batches = [d for d in (upserts, deletes) if d is not None]
+        parted = bool(self.config.partition_by) and all(
+            all(c in d.columns for c in self.config.partition_by) for d in batches
+        )
+        part = self._partition_sql() if parted else "CAST(NULL AS STRING)"
+        kps = [
+            d.selectExpr(
+                "CAST({} AS STRING) AS {}".format(
+                    self._key_sql()
+                    if all(c in d.columns for c in self.config.record_key)
+                    else _sql_ident(META_KEY),
+                    _sql_ident(META_KEY),
+                ),
+                f"{part} AS __p",
             )
-        if not kps:
-            return None
+            for d in batches
+        ]
+        # (key, partition) rows; keyed by META_KEY, they are the batch keys too
         kp = kps[0] if len(kps) == 1 else kps[0].union(kps[1])
-        stats = self._load_file_stats()
-        ranged, unknown = [], []
-        for r in rels:
-            kr = (stats.get(r) or {}).get(META_KEY)
-            if kr is not None:
-                ranged.append((r, str(kr[0]), str(kr[1])))
-            else:
-                unknown.append(r)
-        if not ranged:
-            probe = kp.selectExpr("__p", "CAST(NULL AS STRING) AS rel")
-        elif len(ranged) <= self.RANGE_LITERAL_MAX:
-            # bounded range count (r10): the per-file ranges ride as a
-            # LITERAL struct array probed by a higher-order filter — the
-            # broadcast-join form paid a whole extra Spark job just to build
-            # its tiny broadcast (createDataFrame parallelizes the local list
-            # over defaultParallelism slices). explode_outer keeps no-match
-            # rows exactly like the left join did.
-            probe = kp.select(
-                "__p",
-                F.explode_outer(
-                    F.filter(
-                        self._range_literal_array(ranged),
-                        lambda s: (F.col("__k") >= s["lo"]) & (F.col("__k") <= s["hi"]),
-                    )
-                ).alias("__s"),
-            ).selectExpr("__p", "__s.rel AS rel")
-        else:
-            rng = self.spark.createDataFrame(ranged, "rel STRING, lo STRING, hi STRING")
-            probe = kp.join(
-                F.broadcast(rng),
-                (F.col("__k") >= F.col("lo")) & (F.col("__k") <= F.col("hi")),
-                "left",
-            ).select("__p", "rel")
-        rows = _static(probe.groupBy("__p", "rel").count(), planning=True).collect()
-        parts = {r["__p"] for r in rows}
+        cand = self._record_index_candidates(rels, kp)
+        exact = cand is not None
+        ranged, unknown = ([], []) if exact else self._key_ranges(rels)
         if ranged:
-            kept = sorted({r["rel"] for r in rows if r["rel"] is not None} | set(unknown))
+            probe, hits = self._range_hits(kp, ranged)
+            probe = probe.selectExpr("__p", f"posexplode_outer({hits}) AS (__i, rel)")
         else:
-            kept = list(rels)
-        self.last_key_prune = {"total": len(rels), "candidates": len(kept)}
-        return parts, kept, sum(r["count"] for r in rows)
+            probe = kp.selectExpr("__p", "NULL AS __i", "CAST(NULL AS STRING) AS rel")
+        rows = _static(
+            probe.groupBy("__p", "rel").agg(F.expr("count_if(coalesce(__i, 0) = 0) AS n")),
+            planning=True,
+        ).collect()
+        parts = {r["__p"] for r in rows} if parted else None
+        if not exact:
+            cand = sorted({r["rel"] for r in rows if r["rel"] is not None} | set(unknown))
+        total = len(rels)
+        if self.config.index_type == "partition" and parts is not None:
+            total = sum(self._partition_path_of(r) in parts for r in rels)
+            cand = [r for r in cand if self._partition_path_of(r) in parts]
+        prune = {"record_index": True} if exact else {}
+        if self.config.bloom_index and not exact:
+            kept = self._bloom_prune(cand, kp)
+            prune["bloom_pruned"] = len(cand) - len(kept)
+            cand = kept
+        self.last_key_prune = {"total": total, "candidates": len(cand), **prune}
+        outside = (
+            []
+            if parts is None or exact
+            else [r for r in cand if self._partition_path_of(r) not in parts]
+        )
+        if outside:
+            probe = (
+                self._read_files(outside, with_deleted=False)
+                .select(META_KEY, F.input_file_name().alias("__f"))
+                .join(kp, META_KEY, "leftsemi")
+                .select("__f")
+                .distinct()
+            )
+            found = _static(probe, planning=True).collect()
+            false_hits = {r for r in outside if not any(h["__f"].endswith(r) for h in found)}
+            cand = [r for r in cand if r not in false_hits]
+        return parts, cand, sum(r["n"] for r in rows)
 
     def _apply_cow(
         self,
@@ -4242,11 +4170,11 @@ class Table:
         if files and (upserts is not None or deletes is not None) and not checkpointed:
             # Materialize the incoming batch ONCE (r10, guide §1.2/§2.4): a
             # keyed COW write evaluates the batch subtree in up to four
-            # separate jobs (batch-partition collect, key-range prune,
-            # outside-partition confirmation, the merge+rewrite itself), and
-            # each re-ran the caller's full source plan — scans, filters,
-            # unions — from scratch. One localCheckpoint pins the batch's
-            # O(micro-batch) rows to executor blocks so every planning job
+            # separate jobs (the planning collect, a record-index or bloom
+            # probe, the outside-partition confirmation, the merge+rewrite
+            # itself), and each re-ran the caller's full source plan — scans,
+            # filters, unions — from scratch. One localCheckpoint pins the
+            # batch's O(micro-batch) rows to executor blocks so every job
             # reads those instead (Hudi itself persists the incoming
             # workload profile for the same reason). Lazy (eager=False): the
             # FIRST planning job materializes the blocks as a side effect —
@@ -4260,137 +4188,30 @@ class Table:
             if deletes is not None:
                 deletes = _checkpoint(deletes, static)
                 _batch_ckpts.append(deletes)
-        keys_df = self._batch_keys(upserts, deletes)
-        if files and keys_df is not None:
-            # Key-first planning (Hudi COW upsert granularity): ONE range/bloom
-            # prune finds the file groups that may HOLD an incoming or deleted
-            # key — they are exactly the rewrite set. Pure inserts land in new
-            # files; every other file group stays live untouched. This replaces
-            # the partition-location SCAN (which had to open candidate files to
-            # find key partitions) with pure planning metadata: the difference
-            # between rewriting a 1 TB partition and rewriting the 3 files a
-            # 1000-row upsert actually hits. Pruning is lossless (files without
-            # stats are always kept), so the merge still sees every version of
-            # every incoming key — including rows MOVING partitions under the
-            # global index (their old-partition file is in the candidate set).
-            combined = None
-            if (
-                self.config.partition_by
-                and self.config.index_type != "partition"
-                and not self.config.bloom_index
-                and len(files) > 1
-                and not self._record_index_ready()
-            ):
-                # common path: partition collect + range prune as ONE job
-                combined = self._plan_keyed_write(sorted(files), upserts, deletes)
-            rli_defer = False
-            if combined is not None:
-                batch_parts, touched_rels, batch_rows = combined
-                via_rli = False
-            else:
-                batch_parts = batch_rows = None
-                dfs = [d for d in (upserts, deletes) if d is not None]
-                can_parts = bool(self.config.partition_by) and all(
-                    all(c in d.columns for c in self.config.partition_by)
-                    for d in dfs
-                )
-
-                def _collect_batch_parts() -> set:
-                    ps = [d.selectExpr(f"{self._partition_sql()} AS p") for d in dfs]
-                    p = ps[0] if len(ps) == 1 else ps[0].union(ps[1])
-                    return {r["p"] for r in _static(p.distinct(), planning=True).collect()}
-
-                # Defer the batch-partition collect on RLI plans (r10): the
-                # record index resolves candidates EXACTLY, so the only
-                # remaining consumer of batch_parts is the OCC footprint —
-                # and that is derivable from the files actually written
-                # (every surviving batch row lands in a written file; a
-                # batch partition whose rows ALL lose the precombine merge
-                # changes nothing there, and its keys' holder files are in
-                # touched_rels, so key conflicts are still caught). Early
-                # conflict detection still collects up front: its marker
-                # must declare the footprint BEFORE the merge runs.
-                rli_defer = (
-                    can_parts
-                    and self.config.index_type != "partition"
-                    and not self.config.early_conflict_detection
-                    and self._record_index_ready()
-                )
-                if can_parts and not rli_defer:
-                    batch_parts = _collect_batch_parts()
-                if self.config.index_type == "partition" and batch_parts is not None:
-                    # non-global index: trust the batch's own partition values
-                    # and never look elsewhere (Hudi SIMPLE contract — a
-                    # partition-changing upsert leaves the old row in place)
-                    scope = [
-                        r for r in files if self._partition_path_of(r) in batch_parts
-                    ]
-                else:
-                    scope = sorted(files)
-                if len(scope) > 1:
-                    touched_rels = self._prune_files_by_keys(sorted(scope), keys_df)
-                    via_rli = bool(
-                        (getattr(self, "last_key_prune", None) or {}).get(
-                            "record_index"
-                        )
-                    )
-                else:
-                    touched_rels = list(scope)
-                    via_rli = False
-                if rli_defer and not via_rli:
-                    # rare fallback (index invalidated between the readiness
-                    # check and the probe): the confirmation read below and
-                    # the up-front footprint DO need the batch partitions
-                    batch_parts = _collect_batch_parts()
-                    rli_defer = False
-            if batch_parts is not None and not via_rli:
-                # (Record-index candidates are exact — an outside file IS a
-                # real holder of a moving key; the confirmation read below
-                # would only re-prove it, so RLI plans skip it entirely.)
-                # Range/bloom candidates OUTSIDE the batch's own partitions are
-                # usually lexicographic false positives of the string key range
-                # (a numeric key "5" overlaps ranges in every partition), and a
-                # needless rewrite both costs IO and marks a clustered
-                # partition dirty. Verify them with a key-column-pruned read —
-                # a moved row's real holder file survives, FP files drop.
-                outside = [
-                    r
-                    for r in touched_rels
-                    if self._partition_path_of(r) not in batch_parts
-                ]
-                if outside:
-                    probe = (
-                        self._read_files(outside, with_deleted=False)
-                        .select(META_KEY, F.input_file_name().alias("__f"))
-                        .join(keys_df, META_KEY, "leftsemi")
-                        .select("__f")
-                        .distinct()
-                    )
-                    hits = _static(probe, planning=True).collect()
-                    confirmed = {
-                        r for r in outside for h in hits if h["__f"].endswith(r)
-                    }
-                    touched_rels = [
-                        r
-                        for r in touched_rels
-                        if r not in set(outside) or r in confirmed
-                    ]
-            if self.config.partition_by:
-                # OCC footprint: the batch's own partitions plus the partitions
-                # of every candidate file (a superset of the partitions that
-                # hold the keys — derived from file paths, zero extra jobs).
-                # Deferred RLI plans add the batch side AFTER the write, from
-                # the written files' paths — still zero extra jobs.
-                touched = (batch_parts or set()) | {
-                    self._partition_path_of(r) for r in touched_rels
-                }
-            else:
-                touched = None  # unpartitioned: conservative full-table footprint
+        batch_rows = None
+        if files and self.config.record_key:
+            # Key-first planning (Hudi COW upsert granularity): the file
+            # groups that may HOLD an incoming or deleted key are exactly the
+            # rewrite set. Pure inserts land in new files; every other file
+            # group stays live untouched — the difference between rewriting
+            # a 1 TB partition and rewriting the 3 files a 1000-row upsert
+            # actually hits. Pruning is lossless, so the merge still sees
+            # every version of every incoming key — including rows MOVING
+            # partitions under the global index (their old-partition file is
+            # in the candidate set).
+            batch_parts, touched_rels, batch_rows = self._plan_keyed_write(
+                sorted(files), upserts, deletes
+            )
+            # OCC footprint: the batch's own partitions plus the partitions
+            # of every candidate file (derived from file paths, no job);
+            # unpartitioned tables keep the conservative full-table footprint
+            touched = (
+                (batch_parts or set()) | {self._partition_path_of(r) for r in touched_rels}
+                if self.config.partition_by
+                else None
+            )
         else:
-            rli_defer = False
-            batch_rows = None
-            # pk-less batches (or no derivable keys): partition-scope via the
-            # legacy location filter, full rewrite within touched partitions
+            # pk-less batches: partition scope, full rewrite within it
             touched = self._touched_partition_filter(upserts, deletes) if files else None
             if touched is None:
                 touched_rels = list(files.keys())
@@ -4408,11 +4229,12 @@ class Table:
             marker_hb = self._marker_heartbeat(instant)
         try:
             existing = self._read_files(touched_rels, with_deleted=False)
-            # the merge's width is sized from planning facts where the one-job
-            # planner ran; otherwise its exchange keeps the session width
+            # a partitioned keyed commit's merge width is sized from planning
+            # facts; an unpartitioned one keeps the session width, whose AQE
+            # coalescing sizes its output files
             key_width = (
                 None
-                if batch_rows is None
+                if batch_rows is None or not self.config.partition_by
                 else self._key_exchange_width(touched_rels, batch_rows, existing)
             )
             if self.config.record_key:
@@ -4432,11 +4254,6 @@ class Table:
                 single_task=key_width == 1,
                 dirs=None if key_width is None else max(len(touched), 1),
             )
-            if rli_defer and touched is not None:
-                # deferred footprint completion: the batch's partitions are
-                # exactly the written files' partitions (plus the candidate
-                # partitions already in `touched`)
-                touched = touched | {self._partition_path_of(r) for r in rels}
             self._maintain_indexes(rels)
             self._publish_occ(
                 Instant(instant, "commit", rels, touched_rels, {"operation": op, **(extra_meta or {})}),
@@ -4464,8 +4281,7 @@ class Table:
         - Reducers: estimated shuffle data over the caller's
           ``spark.sql.adaptive.advisoryPartitionSizeInBytes``, AQE's unit. The
           exchange carries every row of the candidate files (footer row
-          counts) and of the batch (planning's bound, which counts a batch
-          row once per candidate file whose key range holds it), each costed
+          counts) and of the batch (counted by the planning collect), each costed
           the way Spark's optimizer costs a row of known count and unknown
           size: 8 bytes plus the schema's default column sizes.
         - Scan splits: the candidate files packed as Spark packs a file scan,
@@ -4591,13 +4407,6 @@ class Table:
         return instant
 
     # ----------------------------------------------------- concurrency control
-
-    def _partition_of(self, rel: str) -> str:
-        return "/".join(
-            f"{k}={v}"
-            for k, v in self._partition_of_relpath(rel).items()
-            if k in self.config.partition_by
-        )
 
     #: stale-lock expiry — a publish holds the lock for milliseconds (conflict
     #: scan + one rename), so anything older than this is a dead holder
@@ -4789,7 +4598,7 @@ class Table:
                     raise ConcurrentWriteConflict(
                         f"full-table rewrite conflicts with concurrent instant {other.instant}"
                     )
-                their_parts = {self._partition_of(r) for r in their_files}
+                their_parts = {self._partition_path_of(r) for r in their_files}
                 if partitions & their_parts:
                     raise ConcurrentWriteConflict(
                         f"instant {other.instant} touched partitions {partitions & their_parts}"
@@ -4955,7 +4764,7 @@ class Table:
                 },
             ),
             since=latest,
-            partitions={self._partition_of(r) for r in touched},
+            partitions={self._partition_path_of(r) for r in touched},
             occ_scope="files",
             precondition=_still_valid,
         )
@@ -4994,7 +4803,7 @@ class Table:
         by_part: dict[str, list[str]] = {}
         for r, (_, a) in files.items():
             if a == "deltacommit":
-                by_part.setdefault(self._partition_of(r), []).append(r)
+                by_part.setdefault(self._partition_path_of(r), []).append(r)
         target = sorted(p for p, rs in by_part.items() if len(rs) >= min_logs_per_partition)
         if not target:
             return None
@@ -5220,7 +5029,7 @@ class Table:
             expired = []
             newest: dict[str, str] = {}
             for r, (inst, _a) in self.timeline.live_files()[0].items():
-                p = self._partition_of(r)
+                p = self._partition_path_of(r)
                 if inst > newest.get(p, ""):
                     newest[p] = inst
             now = datetime.now(timezone.utc)
@@ -5280,7 +5089,7 @@ class Table:
                     continue
                 try:
                     if os.path.getsize(os.path.join(self.base, r)) < limit:
-                        p = self._partition_of(r)
+                        p = self._partition_path_of(r)
                         by_part[p] = by_part.get(p, 0) + 1
                 except OSError:
                     continue
@@ -5499,7 +5308,7 @@ class Table:
                     {"operation": "bucket_split", "split": lower, "new_bound": mid},
                 ),
                 since=latest,
-                partitions={self._partition_of(r) for r in base_rels} or {""},
+                partitions={self._partition_path_of(r) for r in base_rels} or {""},
             )
         except BaseException:
             self.config.bucket_ranges = old_ranges

@@ -59,7 +59,7 @@ def _files_rows(tbl) -> list[tuple]:
             nrows = pq.ParquetFile(path).metadata.num_rows
         except OSError:
             size, nrows = -1, -1  # raced with clean(); still listed
-        return (tbl._partition_of(rel), rel, instant, action, size, nrows)
+        return (tbl._partition_path_of(rel), rel, instant, action, size, nrows)
 
     items = sorted(files.items())
     if not items:

@@ -8,9 +8,11 @@ from __future__ import annotations
 
 import ast
 import math
+import os
 import pathlib
 import uuid
 
+import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
 
@@ -36,12 +38,12 @@ def _df(spark, rows, extra: str = ""):
     return spark.createDataFrame(rows, SCHEMA + extra)
 
 
-def _cow(spark, path, **cfg) -> tuple[Table, dict]:
+def _cow(spark, path, keys=range(5 * PER_DAY), **cfg) -> tuple[Table, dict]:
     t = Table.create(
         spark, path, SCHEMA,
         TableConfig(record_key=["id"], precombine="ts", partition_by=["day"], **cfg),
     )
-    rows = [_row(k, 0) for k in range(5 * PER_DAY)]
+    rows = [_row(k, 0) for k in keys]
     t.insert(_df(spark, rows))
     return t, {r[0]: r for r in rows}
 
@@ -77,12 +79,35 @@ def _jobs(spark, name: str, fn) -> list[int]:
     return [len(st.getJobInfo(j).stageIds) for j in sorted(st.getJobIdsForGroup(group))]
 
 
-def test_keyed_partitioned_cow_commit_runs_two_jobs(spark, tmp_path, layout):
+#: Spark jobs of one keyed commit, per index kind of the table
+MAX_JOBS = {
+    "default": 2,
+    "partition_index": 2,
+    "single_file": 2,
+    "bloom": 3,
+    "record_index": 9,
+}
+
+
+@pytest.mark.parametrize("kind", list(MAX_JOBS))
+def test_keyed_partitioned_cow_commit_runs_two_jobs(spark, tmp_path, layout, kind):
     """Planning collect + one static rewrite: upsert-only, delete-only,
-    write_cdc with I/U/D, and a MERGE with a DELETE clause. A small commit's
-    rewrite merges and writes in one stage; a larger one's key and
-    partition exchanges stay inside the same job."""
-    t, model = _cow(spark, str(tmp_path / "t"))
+    write_cdc with I/U/D, and a MERGE with a DELETE clause, for every index
+    kind. A bloom probe adds one job; the record index adds its probe
+    (planned under AQE, which broadcasts the batch keys at runtime) and its
+    entry append after the rewrite. A small commit's rewrite merges and
+    writes in one stage; a larger one's key and partition exchanges stay
+    inside the same job."""
+    t, model = _cow(
+        spark,
+        str(tmp_path / "t"),
+        keys=range(400, 500) if kind == "single_file" else range(5 * PER_DAY),
+        **{"partition_index": {"index_type": "partition"}, "bloom": {"bloom_index": True}}.get(kind, {}),
+    )
+    if kind == "single_file":
+        assert len(t.timeline.live_files()[0]) == 1
+    if kind == "record_index":
+        t.create_record_index()
     ups = [_row(k, 1, "u") for k in range(400, 420)] + [_row(k, 1, "n") for k in range(500, 520)]
     dels = [_row(k, 1) for k in range(420, 425)]
     cdc = (
@@ -106,11 +131,10 @@ def test_keyed_partitioned_cow_commit_runs_two_jobs(spark, tmp_path, layout):
         ),
     }
     jobs = {name: _jobs(spark, name, fn) for name, fn in writes.items()}
-    assert all(len(stages) <= 2 for stages in jobs.values()), jobs
-    if layout == "one_task":
-        assert all(stages[-1] == 1 for stages in jobs.values()), jobs
-    else:
-        assert all(stages[-1] == 3 for stages in jobs.values()), jobs
+    assert all(len(stages) <= MAX_JOBS[kind] for stages in jobs.values()), jobs
+    rewrite = -2 if kind == "record_index" else -1
+    width_rule = 1 if layout == "one_task" else 3
+    assert all(stages[rewrite] == width_rule for stages in jobs.values()), jobs
 
     for r in ups:
         model[r[0]] = r
@@ -142,8 +166,14 @@ def test_outside_candidates_confirmed_in_one_static_job(spark, tmp_path):
     model = {k: (k, 0, f"d{k // 100:03d}", "v") for k in range(1000)}
     t.insert(spark.createDataFrame(list(model.values()), schema))
     ups = [(k, 1, f"d{k // 100:03d}", "u") for k in range(500, 520)]
-    jobs = _jobs(spark, "outside", lambda: Table(spark, t.base).upsert(spark.createDataFrame(ups, schema)))
+    t = Table(spark, t.base)
+    jobs = _jobs(spark, "outside", lambda: t.upsert(spark.createDataFrame(ups, schema)))
     assert len(jobs) <= 3, jobs
+    # the key exchange is sized from each batch row once, however many
+    # string key ranges hold it, plus the confirmed candidates' rows
+    rewritten = t.timeline.completed_data_instants()[-1].files_removed
+    stored = sum(pq.read_metadata(os.path.join(t.base, r)).num_rows for r in rewritten)
+    assert t.last_key_exchange["rows"] == stored + len(ups)
     model.update((r[0], r) for r in ups)
     rows = Table(spark, t.base).read().select("id", "ts", "day", "v").collect()
     assert {r["id"]: tuple(r) for r in rows} == model
@@ -355,9 +385,25 @@ def test_delete_only_batch(spark, tmp_path, layout):
 
 
 def test_delete_keyed_by_record_key_column_only(spark, tmp_path, layout):
+    """A delete without the partition columns plans like any keyed commit:
+    one planning collect and one rewrite at the driver-sized width."""
     t, model = _cow(spark, str(tmp_path / "t"))
     gone = [_key(k) for k in (10, 260, 261)]
-    t.delete(spark.createDataFrame([(k,) for k in gone], "_hoodie_record_key STRING"))
+    batch = spark.createDataFrame([(k,) for k in gone], "_hoodie_record_key STRING")
+    jobs = _jobs(spark, "delete-by-key", lambda: t.delete(batch))
+    assert len(jobs) <= 2 and jobs[-1] == (1 if layout == "one_task" else 3), jobs
     for k in gone:
         del model[k]
+    _check(spark, t, model)
+
+
+def test_keyless_delete_batch_is_rejected_before_any_job(spark, tmp_path):
+    t, model = _cow(spark, str(tmp_path / "t"))
+    batch = spark.createDataFrame([("d001",)], "day STRING")
+
+    def delete():
+        with pytest.raises(ValueError, match=r"\['id'\]"):
+            t.delete(batch)
+
+    assert _jobs(spark, "keyless-delete", delete) == []
     _check(spark, t, model)

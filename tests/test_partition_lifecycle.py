@@ -127,7 +127,7 @@ def test_partition_ttl_service(spark, tmp_path):
 
     newest: dict[str, str] = {}
     for r, (inst, _a) in t.timeline.live_files()[0].items():
-        p = t._partition_of(r)
+        p = t._partition_path_of(r)
         newest[p] = max(newest.get(p, ""), inst)
     ttl = (_age(newest["seg=s0"]) + _age(newest["seg=s1"])) / 2
 

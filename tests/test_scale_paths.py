@@ -86,7 +86,6 @@ def test_partial_compaction_follows_partition_moves(spark, tmp_path):
 
 def test_upsert_location_scan_prunes_by_key_range(spark, tmp_path):
     tbl = make(spark, tmp_path, table_type="cow")
-    tbl.KEY_PRUNE_MIN_FILES = 0  # force the big-table path on a small fixture
     for part in range(8):  # COW: one base commit per partition
         tbl.insert(rows_df(spark, part, range(50)))
     total_live = len(tbl.timeline.live_files()[0])
@@ -156,7 +155,6 @@ def test_cdc_read_opens_o_changes_files(spark, tmp_path):
     tbl = make(spark, tmp_path, table_type="cow")
     tbl.CDC_PRUNE_MIN_FILES = 0  # force the big-table path on a small fixture
     tbl.CDC_PRUNE_MIN_BYTES = 0
-    tbl.KEY_PRUNE_MIN_FILES = 0
     for part in range(6):
         tbl.insert(rows_df(spark, part, range(50)))
     t0 = tbl.latest_instant()

@@ -45,7 +45,7 @@ def test_small_files_consolidate_content_preserved(spark, tmp_path):
     assert len(after_files) < len(before_files)
     # every partition's bins stayed inside the partition
     for r in after_files:
-        assert t2._partition_of(r) in ("seg=s0", "seg=s1")
+        assert t2._partition_path_of(r) in ("seg=s0", "seg=s1")
     assert sorted(map(tuple, t2.read().collect())) == before
     # pure copy: the new files carry the ORIGINAL commit instants
     rewritten = [r for r in after_files if r not in before_files]

@@ -181,7 +181,7 @@ def sweep_clustering(spark, sf_dir) -> dict:
     meta = next(
         i.meta for i in tbl.timeline.completed_data_instants() if i.instant == inst
     )
-    n_parts = len({tbl._partition_of(r) for r in tbl.timeline.live_files()[0]})
+    n_parts = len({tbl._partition_path_of(r) for r in tbl.timeline.live_files()[0]})
     return {
         "partitions_total": n_parts,
         "partitions_rewritten": meta.get("numPartitionsRewritten"),
