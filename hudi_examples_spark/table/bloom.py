@@ -1,10 +1,11 @@
 """Per-file record-key bloom filters — the filter phase of Hudi's BLOOM index.
 
-The table's existing key-range index (``Table._prune_files_by_keys``) is the
-range-pruning phase of Hudi's bloom index: great when keys are clustered per
-file (sequential ids, sorted bulk loads), useless when keys are uniformly
-random (UUIDs) — every file's [min, max] spans the whole key space and the
-location scan degrades to the full file list. Hudi's answer is a bloom filter
+The table's key-range index (``Table._range_hits``, a step of the key
+locator ``Table._locate_keys``) is the range-pruning phase of Hudi's bloom
+index: great when keys are clustered per file (sequential ids, sorted bulk
+loads), useless when keys are uniformly random (UUIDs) — every file's
+[min, max] spans the whole key space and the location scan degrades to the
+full file list. Hudi's answer is a bloom filter
 per base file (``hoodie.index.type=BLOOM``, the default index the reference's
 quickstart writes with — parquet footers carry
 ``org.apache.hudi.bloomfilter``); ours is the same structure in a sidecar.

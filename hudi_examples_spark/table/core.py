@@ -82,10 +82,13 @@ def _sql_map_lit(items) -> str:
     return "map(" + ",".join(parts) + ")"
 
 
-#: shuffle width of the engine's planning queries: every exchange in one
-#: carries only DISTINCT metadata values (partition paths, file names —
-#: partial aggregation runs upstream of the exchange), so a data-scale width
-#: would just schedule empty tasks
+#: shuffle width of the engine's planning queries. Their aggregate exchanges
+#: carry only DISTINCT metadata values (partition paths, file names — partial
+#: aggregation runs upstream of the exchange), so a data-scale width would
+#: just schedule empty tasks. The one exchange that carries data is the key
+#: locator's record-index semi join when it sort-merges: every index entry
+#: and batch key, two short strings each (with a 150k-entry index, 2000-key
+#: upserts planned this way were no slower than under AQE)
 PLANNING_SHUFFLE_PARTITIONS = 8
 
 
@@ -1346,7 +1349,7 @@ class Table:
         files, from a key-column-pruned pyarrow read (no Spark job, no full
         decode — the exact cost Hudi pays generating bootstrap skeleton
         files). Ranges compare lexicographically on both sides
-        (``_prune_files_by_keys`` joins on string bounds), so stringified
+        (``_range_hits`` compares string bounds), so stringified
         integer keys stay consistent even though "10" < "9"."""
         key_cols = self.config.record_key
         if not key_cols or any(
@@ -1578,11 +1581,14 @@ class Table:
 
     def _read_index_entries(self, name: str, meta: dict | None = None) -> DataFrame:
         """The current generation's entries — recursive lookup because
-        appends live in per-commit subdirectories."""
-        return (
-            self.spark.read.option("recursiveFileLookup", "true")
-            .parquet(self._index_data_dir(name, meta))
-        )
+        appends live in per-commit subdirectories. The record index is read
+        with its fixed schema, so no footer-inference job runs first; a value
+        index infers, because the type of its ``val`` follows the index
+        expression and widens under schema evolution."""
+        reader = self.spark.read.option("recursiveFileLookup", "true")
+        if name == self.RECORD_INDEX:
+            reader = reader.schema("key STRING, rel STRING")
+        return reader.parquet(self._index_data_dir(name, meta))
 
     def _index_entries(
         self,
@@ -1923,27 +1929,33 @@ class Table:
         if not meta["valid"]:
             self.last_index_lookup = {"invalid_fallback": True}
             return self.read().filter(F.expr(meta["expr"]) == F.lit(value))
-        idx = self._read_index_entries(name, meta)
         keys = (
-            idx.filter(F.col("val") == value)
+            self._read_index_entries(name, meta)
+            .filter(F.col("val") == value)
             .select(F.col("key").alias(META_KEY))
-            .distinct()
         )
         files, _ = self.timeline.live_files()
         log_rels = sorted(r for r, (_, a) in files.items() if a == "deltacommit")
         base_rels = sorted(r for r in files if r not in set(log_rels))
-        cand = self._prune_files_by_keys(base_rels, keys)
         if log_rels:
-            dropped = [r for r in base_rels if r not in set(cand)]
-            log_keys = self._read_files(log_rels, with_deleted=True).select(META_KEY)
-            cand = sorted(set(cand) | set(self._prune_files_by_keys(dropped, log_keys)))
-        rels = sorted(set(cand) | set(log_rels))
+            # a base row may be the precombine winner over a log row of the
+            # same key (see ``scan``): the logs' keys locate over the base
+            # files in the same collect — "may hold a key" is decided per
+            # key and per file, so the union locates what two calls would
+            keys = keys.unionByName(
+                self._read_files(log_rels, with_deleted=True).select(META_KEY)
+            )
+        rels = sorted(set(self._locate_keys(base_rels, keys)[1]) | set(log_rels))
         self.last_index_lookup = {
             "total": len(files),
             "scanned": len(rels),
             "pruned": len(files) - len(rels),
         }
-        df = self._snapshot_of(files, rels).drop(*META_COLS) if rels else self.read().limit(0)
+        if not rels:
+            # an empty frame, not an empty read: listing more than 32 live
+            # files is itself a Spark job
+            return self._empty().drop(*META_COLS)
+        df = self._snapshot_of(files, rels).drop(*META_COLS)
         return df.filter(F.expr(meta["expr"]) == F.lit(value))
 
     # --------------------------------------------------- record-level index
@@ -1958,9 +1970,10 @@ class Table:
         this mapping in the metadata table's ``record_index`` partition; here
         it is one more index of the generational protocol, a key-sorted
         parquet dataset under ``_record_index/``. A point read probes it on
-        the driver (``_record_index_probe``); keyed-write planning, whose
-        keys arrive as a DataFrame of any size, semi-joins them against it
-        (``_record_index_candidates``).
+        the driver (``_record_index_probe``); every other key location —
+        keyed-write planning, whose keys arrive as a DataFrame of any size,
+        and the read, CDC and compaction paths — semi-joins the keys against
+        it inside the key locator's planning collect (``_locate_keys``).
 
         Same durability contract as the secondary indexes: a COMPLETE
         SUPERSET. Every commit that adds data files appends its (key, file)
@@ -1973,9 +1986,11 @@ class Table:
 
         100 TB shape: the index is O(rows) but TWO short string columns,
         key-sorted so point probes prune by footer min/max; a batch probe is
-        one semi join against a two-column columnar scan — always cheaper
-        than opening data files, and it degrades to a shuffled join rather
-        than a driver OOM when a bulk batch carries too many keys.
+        one semi join against a two-column columnar scan, read with its
+        fixed schema, inside a collect the write runs anyway — always
+        cheaper than opening data files. The index is never the broadcast
+        side, and the batch keys are not forced into one, so a bulk batch
+        with too many keys shuffles rather than OOMs the driver.
         Maintenance is O(commit), distributed."""
         if not self.config.record_key:
             raise ValueError("record index requires a record key")
@@ -2046,34 +2061,6 @@ class Table:
     def _record_index_ready(self) -> bool:
         return self._record_index_data_dir() is not None
 
-    def _record_index_candidates(
-        self, rels: list[str], keys_df: DataFrame
-    ) -> list[str] | None:
-        """Exact holder files of a keyed write's batch keys via the record
-        index, or None when the index does not serve (callers fall back to
-        range/bloom pruning). One semi join of the batch keys against the
-        key-sorted index scan; only matched FILE NAMES return to the driver,
-        intersected with the caller's live scope."""
-        d = self._record_index_data_dir()
-        if d is None:
-            return None
-        entries = self.spark.read.option("recursiveFileLookup", "true").parquet(d)
-        keys = keys_df.select(F.col(META_KEY).cast("string").alias("key"))
-        # no forced broadcast: a write batch's key set is usually tiny (AQE
-        # broadcasts it from its runtime size), but a 100 TB-scale bulk
-        # ingest can carry more distinct keys than a driver can broadcast —
-        # the probe must degrade to a shuffled join, not an OOM.
-        # No pre-join distinct on the probe side: a LEFT SEMI join is
-        # set-semantic over the build side, so deduping first only adds a
-        # full exchange of the batch keys.
-        hit = (
-            entries.join(keys, "key", "leftsemi")
-            .select("rel")
-            .distinct()
-            .collect()
-        )
-        return sorted({r["rel"] for r in hit} & set(rels))
-
     def _record_index_probe(self, rels: list[str], keys: list[str]) -> list[str] | None:
         """Exact holder files of a few literal keys, read on the driver with
         no Spark job: the generation's parquet files (``_index_parquet_files``
@@ -2082,7 +2069,8 @@ class Table:
         The base build is range-partitioned and key-sorted, so its footers
         leave one base file per key; per-commit appends are small, and
         ``run_services`` rebuilds the generation once they bloat it. Same
-        result and the same None as ``_record_index_candidates``."""
+        candidates as the key locator's semi join (``_locate_keys``) on the
+        same keys; None when the index does not serve."""
         d = self._record_index_data_dir()
         if d is None:
             return None
@@ -2171,53 +2159,6 @@ class Table:
             else:
                 unknown.append(r)
         return ranged, unknown
-
-    def _prune_files_by_keys(self, rels: list[str], keys_df: DataFrame) -> list[str]:
-        """Drop files whose recorded record-key [min, max] range cannot contain
-        any key in ``keys_df`` (a DataFrame with a ``_hoodie_record_key``
-        column). This is the range-pruning phase of Hudi's bloom index: the
-        per-file key ranges (bounded metadata) probe the incoming keys
-        JVM-side (``_range_hits``), and only matching file names come back
-        to the driver. Files with no recorded range are always kept —
-        pruning is never lossy. With keys clustered per file (sequential ids,
-        sorted bulk loads) this makes keyed-write planning O(touched files);
-        with uniformly random keys it degrades to the full list, exactly like
-        Hudi's range pruning."""
-        if not rels:
-            self.last_key_prune = {"total": 0, "candidates": 0}
-            return []
-        # record-level index: exact (key → file) resolution replaces both
-        # pruning phases when present and valid — the probe is lossless by
-        # the index's completeness contract (every live file's keys are
-        # entered before its commit publishes)
-        ri = self._record_index_candidates(rels, keys_df)
-        if ri is not None:
-            self.last_key_prune = {
-                "total": len(rels),
-                "candidates": len(ri),
-                "record_index": True,
-            }
-            return ri
-        ranged, kept = self._key_ranges(rels)
-        if ranged:
-            # no pre-probe distinct: the range probe tolerates duplicate keys
-            # and the post-probe file-name distinct is tiny — skipping it
-            # saves one full exchange of the batch on every planning pass
-            probe, hits = self._range_hits(keys_df, ranged)
-            probe = probe.selectExpr(f"explode({hits}) AS rel")
-            hit = _static(probe.distinct(), planning=True).collect()
-            kept = sorted({r["rel"] for r in hit} | set(kept))
-        n_range = len(kept)
-        if self.config.bloom_index:
-            # filter phase: range-survivors whose bloom rules every key out drop
-            # too — the index that works when keys are random, not clustered
-            kept = self._bloom_prune(kept, keys_df)
-        self.last_key_prune = {
-            "total": len(rels),
-            "candidates": len(kept),
-            **({"bloom_pruned": n_range - len(kept)} if self.config.bloom_index else {}),
-        }
-        return kept
 
     def scan(self, filters: list[tuple] | None = None, as_of: str | None = None) -> DataFrame:
         """Data-skipping snapshot scan: prune files whose recorded [min, max]
@@ -2314,7 +2255,7 @@ class Table:
             # base file the logs don't touch.
             dropped = [r for r in base_rels if r not in set(keep)]
             log_keys = self._read_files(log_rels, with_deleted=True).select(META_KEY)
-            keep = sorted(set(keep) | set(self._prune_files_by_keys(dropped, log_keys)))
+            keep = sorted(set(keep) | set(self._locate_keys(dropped, log_keys)[1]))
         rels = sorted(set(keep) | set(log_rels))
         self.last_scan = {
             "total": len(files),
@@ -3317,9 +3258,9 @@ class Table:
         """Merged snapshot view over a SUBSET of a snapshot's live files (the
         pruned-read primitive behind the CDC query). Callers must pass a
         subset that is closed over record keys of interest — i.e. every live
-        file that might hold a wanted key (``_prune_files_by_keys`` guarantees
-        this) — or the key-window merge could resolve against missing
-        versions."""
+        file that might hold a wanted key (the key locator ``_locate_keys``
+        guarantees this) — or the key-window merge could resolve against
+        missing versions."""
         base_rels = sorted(r for r in rels if files[r][1] != "deltacommit")
         log_rels = sorted(r for r in rels if files[r][1] == "deltacommit")
         if self.config.table_type == "cow" or not log_rels:
@@ -3574,7 +3515,7 @@ class Table:
                 .localCheckpoint(eager=True)
             )
             # one pruning pass over the union serves both sides (same key set)
-            kept = set(self._prune_files_by_keys(sorted(set(files_lo) | set(files_end)), touched))
+            kept = set(self._locate_keys(sorted(set(files_lo) | set(files_end)), touched)[1])
             before_rels = [r for r in sorted(files_lo) if r in kept]
             after_rels = [r for r in sorted(files_end) if r in kept]
             before_snap = self._snapshot_of(files_lo, before_rels).join(touched, META_KEY, "left_semi")
@@ -4008,7 +3949,7 @@ class Table:
         collect bounded by the partition count; None (every partition
         touched) for an unpartitioned table or a batch without the
         partition columns. Keyed commits locate through
-        ``_plan_keyed_write`` instead."""
+        ``_locate_keys`` instead."""
         if not self.config.partition_by:
             return None
         ps = []
@@ -4056,30 +3997,36 @@ class Table:
         k = f"CAST({_sql_ident(META_KEY)} AS STRING)"
         return df, f"transform(filter({ranges}, s -> {k} >= s.lo AND {k} <= s.hi), s -> s.rel)"
 
-    def _plan_keyed_write(
-        self, rels: list[str], upserts: DataFrame | None, deletes: DataFrame | None
+    def _locate_keys(
+        self, rels: list[str], *batches: DataFrame | None
     ) -> tuple[set[str] | None, list[str], int]:
-        """The tag-location step of every keyed COW commit: ONE planning
-        collect returns the batch's distinct partition paths, the candidate
-        files that may hold a batch key, and the batch's row count. Returns
-        (batch_parts, candidate_rels, batch_rows); ``batch_parts`` is None
-        for an unpartitioned table or when a batch lacks the partition
-        columns (a delete by key), and ``batch_rows`` sizes the rewrite's
-        key exchange.
+        """The tag-location step, and the engine's only key locator: ONE
+        planning collect returns the batches' distinct partition paths, the
+        files of ``rels`` that may hold one of their record keys, and their
+        row count. Returns (batch_parts, candidate_rels, batch_rows);
+        ``batch_parts`` is None for an unpartitioned table or when a batch
+        lacks the partition columns — a delete by key, or the key-only
+        frames (a ``_hoodie_record_key`` column) of the read paths, CDC and
+        compaction planning — and ``batch_rows`` sizes a keyed rewrite's
+        key exchange. Pruning is never lossy: a file that may hold a key is
+        always a candidate.
 
         Location is GLOBAL-index style by default (Hudi GLOBAL_SIMPLE with
         ``update.partition.path``): candidates may sit in any partition, so
         an upsert that changes a record's partition column moves the record
         instead of duplicating it, and a delete by key needs no partition
-        columns. Candidates come from the record index when it serves
-        (exact, so the range probe is skipped), otherwise from the per-file
-        key ranges (``_range_hits``; files without a recorded range are
-        always kept). Then, one step each:
+        columns. Candidates come from the record index when it serves: its
+        current generation is semi-joined against the batch keys inside the
+        collect (exact holder files — with zero data reads, so a pure-insert
+        batch plans to no rewrite), and hits are intersected with ``rels``.
+        Otherwise they come from the per-file key ranges (``_range_hits``,
+        the range-pruning phase of Hudi's bloom index; files without a
+        recorded range are always kept). Then, one step each:
         - ``index_type="partition"`` keeps only candidates inside the
           batch's partitions (Hudi SIMPLE: a partition-changing upsert
           leaves the old row in place);
         - the bloom index drops range survivors whose filter rules every
-          key out;
+          key out (``_bloom_prune``);
         - range/bloom candidates outside the batch's partitions are usually
           lexicographic false positives of the string key range (a numeric
           key "5" overlaps ranges in every partition), and a needless
@@ -4089,11 +4036,19 @@ class Table:
           positives drop. Record-index candidates are real holders already.
 
         Shape: each (key, partition) row is exploded over the files whose
-        range holds it (outer, so a row with no hit keeps its partition)
-        and grouped by (partition, file), so the exchange carries only
-        distinct pairs and the collect is O(batch partitions + candidate
-        files) at any scale. A row counts once, at its first hit."""
-        batches = [d for d in (upserts, deletes) if d is not None]
+        range holds it (outer, so a row with no hit keeps its partition), or
+        unioned with the index hits, and grouped by (partition, file), so
+        the exchange after the semi join carries only distinct pairs and the
+        collect is O(batch partitions + candidate files) at any scale. A row
+        counts once: at its first range hit, and never on the index side.
+        The index is never the broadcast side of the semi join (a left semi
+        join builds on the batch keys), and the batch keys are not forced
+        into a broadcast either: a bulk batch falls back to a shuffle, not
+        to a driver OOM."""
+        batches = [d for d in batches if d is not None]
+        if not rels:
+            self.last_key_prune = {"total": 0, "candidates": 0}
+            return None, [], 0
         parted = bool(self.config.partition_by) and all(
             all(c in d.columns for c in self.config.partition_by) for d in batches
         )
@@ -4111,22 +4066,31 @@ class Table:
             for d in batches
         ]
         # (key, partition) rows; keyed by META_KEY, they are the batch keys too
-        kp = kps[0] if len(kps) == 1 else kps[0].union(kps[1])
-        cand = self._record_index_candidates(rels, kp)
-        exact = cand is not None
+        kp = functools.reduce(DataFrame.union, kps)
+        exact = self._record_index_ready()
         ranged, unknown = ([], []) if exact else self._key_ranges(rels)
         if ranged:
             probe, hits = self._range_hits(kp, ranged)
             probe = probe.selectExpr("__p", f"posexplode_outer({hits}) AS (__i, rel)")
         else:
-            probe = kp.selectExpr("__p", "NULL AS __i", "CAST(NULL AS STRING) AS rel")
+            probe = kp.selectExpr("__p", "CAST(NULL AS INT) AS __i", "CAST(NULL AS STRING) AS rel")
+        if exact:
+            # the index's hits join as rows of no partition that count no
+            # batch row (__i = 1)
+            probe = probe.unionByName(
+                self._read_index_entries(self.RECORD_INDEX)
+                .join(kp.selectExpr(f"{_sql_ident(META_KEY)} AS key"), "key", "leftsemi")
+                .selectExpr("CAST(NULL AS STRING) AS __p", "1 AS __i", "rel")
+            )
         rows = _static(
             probe.groupBy("__p", "rel").agg(F.expr("count_if(coalesce(__i, 0) = 0) AS n")),
             planning=True,
         ).collect()
-        parts = {r["__p"] for r in rows} if parted else None
-        if not exact:
-            cand = sorted({r["rel"] for r in rows if r["rel"] is not None} | set(unknown))
+        # every batch partition has a group that counts a row; an index
+        # hit's group counts none
+        parts = {r["__p"] for r in rows if r["n"]} if parted else None
+        live = set(rels)
+        cand = sorted({r["rel"] for r in rows if r["rel"] in live} | set(unknown))
         total = len(rels)
         if self.config.index_type == "partition" and parts is not None:
             total = sum(self._partition_path_of(r) in parts for r in rels)
@@ -4170,9 +4134,9 @@ class Table:
         if files and (upserts is not None or deletes is not None) and not checkpointed:
             # Materialize the incoming batch ONCE (r10, guide §1.2/§2.4): a
             # keyed COW write evaluates the batch subtree in up to four
-            # separate jobs (the planning collect, a record-index or bloom
-            # probe, the outside-partition confirmation, the merge+rewrite
-            # itself), and each re-ran the caller's full source plan — scans,
+            # separate jobs (the planning collect, a bloom probe, the
+            # outside-partition confirmation, the merge+rewrite itself),
+            # and each re-ran the caller's full source plan — scans,
             # filters, unions — from scratch. One localCheckpoint pins the
             # batch's O(micro-batch) rows to executor blocks so every job
             # reads those instead (Hudi itself persists the incoming
@@ -4199,7 +4163,7 @@ class Table:
             # every version of every incoming key — including rows MOVING
             # partitions under the global index (their old-partition file is
             # in the candidate set).
-            batch_parts, touched_rels, batch_rows = self._plan_keyed_write(
+            batch_parts, touched_rels, batch_rows = self._locate_keys(
                 sorted(files), upserts, deletes
             )
             # OCC footprint: the batch's own partitions plus the partitions
@@ -4687,7 +4651,7 @@ class Table:
         moved: list[str] = []
         if outside:
             logs_keys = self._read_files(log_rels, with_deleted=True).select(META_KEY)
-            moved = self._prune_files_by_keys(outside, logs_keys)
+            moved = self._locate_keys(outside, logs_keys)[1]
         known = sorted(i.instant for i in self.timeline.completed_data_instants())
         return Instant(
             new_instant(),

@@ -85,7 +85,7 @@ MAX_JOBS = {
     "partition_index": 2,
     "single_file": 2,
     "bloom": 3,
-    "record_index": 9,
+    "record_index": 3,
 }
 
 
@@ -93,11 +93,10 @@ MAX_JOBS = {
 def test_keyed_partitioned_cow_commit_runs_two_jobs(spark, tmp_path, layout, kind):
     """Planning collect + one static rewrite: upsert-only, delete-only,
     write_cdc with I/U/D, and a MERGE with a DELETE clause, for every index
-    kind. A bloom probe adds one job; the record index adds its probe
-    (planned under AQE, which broadcasts the batch keys at runtime) and its
-    entry append after the rewrite. A small commit's rewrite merges and
-    writes in one stage; a larger one's key and partition exchanges stay
-    inside the same job."""
+    kind. A bloom probe adds one job; the record index probes inside the
+    planning collect and adds its entry append after the rewrite. A small
+    commit's rewrite merges and writes in one stage; a larger one's key and
+    partition exchanges stay inside the same job."""
     t, model = _cow(
         spark,
         str(tmp_path / "t"),
@@ -177,6 +176,29 @@ def test_outside_candidates_confirmed_in_one_static_job(spark, tmp_path):
     model.update((r[0], r) for r in ups)
     rows = Table(spark, t.base).read().select("id", "ts", "day", "v").collect()
     assert {r["id"]: tuple(r) for r in rows} == model
+
+
+def test_record_index_hits_in_two_files_count_a_batch_row_once(spark, tmp_path):
+    """A key that moved partitions has record-index entries in two files
+    (its old holder, now rewritten, and its new one); the key locator's
+    semi join hits both, yet the key exchange counts each batch row once:
+    the candidates' footer rows plus the batch rows."""
+    t, model = _cow(spark, str(tmp_path / "t"))
+    t.create_record_index()
+    moved = _row(120, 1, "moved", day="d004")
+    t.upsert(_df(spark, [moved]))
+    model[moved[0]] = moved
+    t = Table(spark, t.base)
+    entries = t._read_index_entries(Table.RECORD_INDEX).filter(F.col("key") == _key(120))
+    assert entries.count() == 2
+    ups = [_row(120, 2, "again", day="d004")] + [_row(k, 2, "u") for k in range(300, 305)]
+    t.upsert(_df(spark, ups))
+    assert t.last_key_prune.get("record_index") is True
+    rewritten = t.timeline.completed_data_instants()[-1].files_removed
+    stored = sum(pq.read_metadata(os.path.join(t.base, r)).num_rows for r in rewritten)
+    assert t.last_key_exchange["rows"] == stored + len(ups)
+    model.update((r[0], r) for r in ups)
+    _check(spark, t, model)
 
 
 def test_key_width_counts_reducers_and_scan_splits_as_spark_would(spark, tmp_path):

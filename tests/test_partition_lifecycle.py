@@ -89,10 +89,11 @@ def test_delete_partition_validation_and_index_invalidation(spark, tmp_path):
     t.delete_partition({"seg": "s1"})
     assert (t._index_meta("record_index") or {}).get("valid") is True
     live = sorted(t.timeline.live_files()[0])
-    cand = t._record_index_candidates(
+    cand = t._locate_keys(
         live,
         spark.range(2).select(F.col("id").cast("string").alias("_hoodie_record_key")),
-    )
+    )[1]
+    assert t.last_key_prune.get("record_index") is True
     for r in cand:
         assert "seg=s1" not in r
     t2 = Table(spark, t.base)

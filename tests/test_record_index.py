@@ -48,10 +48,17 @@ def tbl(spark, tmp_path):
     return t
 
 
+def _located(t, live, keys_df):
+    """The key locator's candidates, asserted to come from the record index."""
+    cand = t._locate_keys(live, keys_df)[1]
+    assert t.last_key_prune.get("record_index") is True
+    return cand
+
+
 def test_probe_is_exact_on_live_files(spark, tbl):
     """Candidates from the index == files that truly hold the probed keys."""
     live = sorted(tbl.timeline.live_files()[0])
-    cand = tbl._record_index_candidates(live, _keys(spark, 10, 20))
+    cand = _located(tbl, live, _keys(spark, 10, 20))
     truth = set()
     for r in live:
         ks = {
@@ -66,7 +73,7 @@ def test_probe_is_exact_on_live_files(spark, tbl):
 
     # absent keys resolve to zero candidates — a pure-insert batch plans to
     # NO rewrites, the property range pruning can't give for random keys
-    assert tbl._record_index_candidates(live, _keys(spark, 10_000, 10_050)) == []
+    assert _located(tbl, live, _keys(spark, 10_000, 10_050)) == []
 
 
 def test_upsert_plans_through_rli_and_matches_replay(spark, tbl, tmp_path):
@@ -135,7 +142,7 @@ def test_mor_logs_and_compaction_stay_complete(spark, tmp_path):
     # a (key→file) index cannot skip it)
     m2 = Table(spark, t.base)
     live = sorted(m2.timeline.live_files()[0])
-    cand = m2._record_index_candidates(live, _keys(spark, 0, 5))
+    cand = _located(m2, live, _keys(spark, 0, 5))
     assert cand, "compacted base files missing from the record index"
     for r in cand:
         assert r in set(live)
@@ -275,7 +282,7 @@ def _plant_hidden(gen_dir: str, rel: str, keys: list[str]) -> None:
 
 
 def test_driver_probe_matches_semi_join(spark, tbl):
-    """The driver probe and the keyed-write semi join return the same
+    """The driver probe and the key locator's semi join return the same
     candidates — over a generation of several appends and over its rebuild —
     and both ignore hidden paths in the generation dir."""
     for b in range(1, 4):
@@ -289,7 +296,7 @@ def test_driver_probe_matches_semi_join(spark, tbl):
         for keys in [[k] for k in present + deleted + absent] + [present + deleted + absent]:
             got = t._record_index_probe(live, keys)
             keys_df = spark.createDataFrame([(k,) for k in keys], "_hoodie_record_key STRING")
-            assert got == t._record_index_candidates(live, keys_df), keys
+            assert got == _located(t, live, keys_df), keys
             assert bool(got) == bool(set(keys) & set(present)), keys
 
     t = Table(spark, tbl.base)
@@ -416,7 +423,7 @@ def test_concurrent_writers_and_rebuilds_keep_mapping_exact(spark, tmp_path):
     assert (final._index_meta("record_index") or {}).get("valid") is True
     # exactness probe over a key sample spanning both writers' residues
     live = sorted(final.timeline.live_files()[0])
-    cand = final._record_index_candidates(live, _keys(spark, 0, 40))
+    cand = _located(final, live, _keys(spark, 0, 40))
     truth = set()
     for r in live:
         ks = {

@@ -14,6 +14,8 @@ on key-based indexes only, so this is the non-key extension of J4.
 
 from __future__ import annotations
 
+import uuid
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -41,6 +43,19 @@ def indexed_table(spark, tmp_path):
 
 def _rows(df):
     return sorted(map(tuple, df.collect()))
+
+
+def _jobs(spark, fn):
+    """Stage counts of the Spark jobs ``fn`` launched, and its result."""
+    sc = spark.sparkContext
+    group = f"secondary-index-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, "lookup")
+    try:
+        out = fn()
+    finally:
+        sc.setJobGroup(None, None)
+    st = sc.statusTracker()
+    return [len(st.getJobInfo(j).stageIds) for j in sorted(st.getJobIdsForGroup(group))], out
 
 
 def test_lookup_equals_filter_and_prunes(indexed_table):
@@ -108,6 +123,59 @@ def test_mor_pending_logs(spark, tmp_path):
     assert got.count() == 10
     # superseded base versions of the moved keys must not reappear
     assert tbl.lookup("cat", "c1").count() == 90
+
+
+def test_mor_lookup_locates_index_and_log_keys_in_one_collect(spark, tmp_path):
+    """With live logs, the index's keys and the log keys are located over
+    the base files in one collect: the candidates two separate locations
+    give, the same rows, and two Spark jobs (the value index's schema
+    inference and the locator's collect) where two locations took three."""
+    tbl = Table.create(
+        spark,
+        str(tmp_path / "mor"),
+        SCHEMA,
+        TableConfig(record_key=["id"], precombine="v", table_type="mor"),
+    )
+    tbl.bulk_insert(_df(spark, 0, 400))
+    tbl.create_secondary_index("cat")
+    tbl.upsert(_df(spark, 100, 110, v0=50000, cat="hot"))
+    files = tbl.timeline.live_files()[0]
+    logs = {r for r, (_, a) in files.items() if a == "deltacommit"}
+    base = sorted(set(files) - logs)
+    assert logs
+    for value in ("hot", "c2", "nope"):
+        jobs, got = _jobs(spark, lambda: tbl.lookup("cat", value))
+        assert len(jobs) <= 2, (value, jobs)
+        assert _rows(got) == _rows(tbl.read().filter(F.col("cat") == value))
+        ev = tbl.last_index_lookup
+        keys = (
+            tbl._read_index_entries("cat")
+            .filter(F.col("val") == value)
+            .select(F.col("key").alias("_hoodie_record_key"))
+        )
+        first = set(tbl._locate_keys(base, keys)[1])
+        log_keys = tbl._read_files(sorted(logs), with_deleted=True).select("_hoodie_record_key")
+        second = tbl._locate_keys([r for r in base if r not in first], log_keys)[1]
+        scanned = len(first | set(second) | logs)
+        assert ev == {"total": len(files), "scanned": scanned, "pruned": len(files) - scanned}
+
+
+def test_absent_value_lookup_reads_no_file(spark, tmp_path):
+    """An absent value locates no candidate file and answers with an empty
+    frame of the read schema: no read of the live files, whose listing
+    alone is a Spark job past 32 files."""
+    tbl = Table.create(
+        spark, str(tmp_path / "t"), SCHEMA, TableConfig(record_key=["id"], precombine="v")
+    )
+    tbl.bulk_insert(_df(spark, 0, 400).repartition(40))
+    tbl.create_secondary_index("cat")
+    n = len(tbl.timeline.live_files()[0])
+    assert n > 32
+    jobs, got = _jobs(spark, lambda: tbl.lookup("cat", "nope"))
+    # the value index's schema inference and the locator's collect
+    assert len(jobs) <= 2, jobs
+    assert tbl.last_index_lookup == {"total": n, "scanned": 0, "pruned": n}
+    assert got.schema == tbl.read().schema and got.count() == 0
 
 
 def test_unindexed_column_falls_back_to_scan(indexed_table):
